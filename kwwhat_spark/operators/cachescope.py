@@ -20,6 +20,13 @@ Callers have two contracts:
 
 Tracking holds strong references: the JVM cache outlives the Python
 handle, so a weakref would go dead while the cache lives on.
+
+Every release goes through :func:`release`, which frees a persisted
+DataFrame and an eager ``localCheckpoint`` alike. The two hold their
+blocks differently: ``persist`` registers the plan with the
+CacheManager, which ``unpersist`` drops; a checkpoint's blocks belong
+to the RDD under its ``LogicalRDD`` leaf, and ``DataFrame.unpersist``
+does nothing to them.
 """
 
 from __future__ import annotations
@@ -35,13 +42,34 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
+def checkpoint_rdd(df: DataFrame):
+    """The JVM RDD holding ``df``'s blocks if ``df`` is a local checkpoint
+    (a ``LogicalRDD`` leaf over a locally checkpointed RDD), else None.
+    A frame built from a plain RDD is also a ``LogicalRDD``; its RDD is
+    not ``df``'s to free."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() != "LogicalRDD" or not plan.rdd().isLocallyCheckpointed():
+        return None
+    return plan.rdd()
+
+
+def release(df: DataFrame, blocking: bool = False) -> None:
+    """Free the storage ``df`` holds, whether it was persisted or
+    local-checkpointed."""
+    rdd = checkpoint_rdd(df)
+    if rdd is not None:
+        rdd.unpersist(blocking)
+    else:
+        df.unpersist(blocking=blocking)
+
+
 def release_tracked(blocking: bool = False) -> int:
-    """Unpersist every tracked intermediate; returns how many."""
+    """Release every tracked intermediate; returns how many."""
     n = 0
     while _TRACKED:
         df = _TRACKED.pop()
         try:
-            df.unpersist(blocking=blocking)
+            release(df, blocking=blocking)
             n += 1
         except Exception:  # session already stopped — nothing to free
             pass

@@ -23,6 +23,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from kwwhat_spark.models.base import MODELS, Pipeline
+from kwwhat_spark.operators.cachescope import release
 
 # Merge keys per incremental model (reference per-model `unique_key`).
 UNIQUE_KEYS: dict[str, list[str]] = {
@@ -181,7 +182,10 @@ class ParquetStateStore:
         # Materialize before writing: the partitioned layout overwrites
         # the same directory the lazy plan would still be scanning.
         out = transform(cur).localCheckpoint(eager=True)
-        self.write(name, out, batch_id=self.last_batch_id(name))
+        try:
+            self.write(name, out, batch_id=self.last_batch_id(name))
+        finally:
+            release(out)
 
     def merge(self, name: str, new: DataFrame, keys: list[str], *,
               batch_id: int | None = None) -> None:
@@ -197,8 +201,11 @@ class ParquetStateStore:
         # the version write would otherwise each run the full model plan.
         new = new.localCheckpoint(eager=True)
         keep = existing.join(new.select(*keys).distinct(), keys, "left_anti")
-        self.write(name, keep.unionByName(new.select(*existing.columns)),
-                   batch_id=batch_id)
+        try:
+            self.write(name, keep.unionByName(new.select(*existing.columns)),
+                       batch_id=batch_id)
+        finally:
+            release(new)
 
 
 class PartitionedStateStore(ParquetStateStore):
@@ -323,7 +330,6 @@ class PartitionedStateStore(ParquetStateStore):
             return
         from pyspark.sql import functions as F
 
-        path = self._part_path(name)
         existing = self.read(name)
         if existing is None:
             self.write(name, new, batch_id=batch_id)
@@ -338,7 +344,10 @@ class PartitionedStateStore(ParquetStateStore):
             keep_all = evolved.join(new.select(*keys).distinct(), keys, "left_anti")
             merged = keep_all.unionByName(new.select(*evolved.columns))
             merged = merged.localCheckpoint(eager=True)
-            self.write(name, merged, batch_id=batch_id)
+            try:
+                self.write(name, merged, batch_id=batch_id)
+            finally:
+                release(merged)
             return
         # ONE materialization of the batch plan (VERDICT r8: the merge
         # previously ran it 2-3x — once for the affected-partition
@@ -350,11 +359,22 @@ class PartitionedStateStore(ParquetStateStore):
             .withColumn("_part", F.expr(self.partition_exprs[name]))
             .localCheckpoint(eager=True)
         )
+        try:
+            self._overwrite_partitions(name, newp, keys, batch_id)
+        finally:
+            release(newp)
+
+    def _overwrite_partitions(self, name: str, newp: DataFrame, keys: list[str],
+                              batch_id: int | None) -> None:
+        """Replace the partitions the checkpointed batch ``newp`` touches
+        with their merged rows."""
+        from pyspark.sql import functions as F
+
+        path = self._part_path(name)
         # The batch's partition set: tiny (batch window + buffer dates),
         # driver-safe to collect, and the ONLY state the merge reads.
         affected = [r["_part"] for r in newp.select("_part").distinct().collect()]
         if not affected:
-            newp.unpersist()
             return  # empty batch: no partitions touched, state unchanged
         non_null = [p for p in affected if p is not None]
         pred = F.col("_part").isin(non_null)

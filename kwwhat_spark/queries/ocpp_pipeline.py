@@ -533,8 +533,10 @@ def _mart_pipeline(spark: SparkSession):
 # The four mart entries share one DAG build per session: the first entry
 # computes every mart and pins the RESULTS with an eager localCheckpoint
 # (which survives spark.catalog.clearCache between gate queries, unlike
-# persist), then releases the pipeline's cached intermediates. The other
-# three entries are then O(checkpoint scan).
+# persist), then releases the pipeline's materialised models. The other
+# three entries are then O(checkpoint scan). The Pipeline already
+# checkpoints its non-view marts, but unpersist_all frees those, so each
+# mart gets a checkpoint of its own that outlives the Pipeline.
 _MART_NAMES = (
     "fact_charge_attempts", "fact_visits", "fact_uptime", "fact_interval_data",
 )
@@ -1716,7 +1718,7 @@ def ocpp_chat_bi_pop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ask only aggregates them, so rebuilding the DAG here would double
     # the gate cost of this entry for no coverage.
     for n in ("fact_uptime", "fact_charge_attempts"):
-        pipe._cache[n] = _mart(spark, n)
+        pipe.overrides[n] = _mart(spark, n)
     return bi.period_over_period(
         pipe,
         "What is our average uptime and failed attempt rate lately?",
