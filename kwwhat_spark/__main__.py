@@ -42,8 +42,9 @@ def cmd_build(spark: SparkSession, args) -> int:
         cache_views=("stg_ocpp_logs",),
     )
     names = args.models or [m for m in MODELS if m not in VIEW_MODELS]
-    for name in names:
-        df = pipe.ref(name)
+    # Build every model first, independent branches side by side; the
+    # loop below then only writes and counts finished checkpoints.
+    for name, df in zip(names, pipe.refs(*names)):
         if args.out:
             path = os.path.join(args.out, name)
             df.write.mode("overwrite").parquet(path)

@@ -26,8 +26,7 @@ from kwwhat_spark.models.base import Pipeline, model
 
 @model("fact_charge_attempts")
 def fact_charge_attempts(p: Pipeline) -> DataFrame:
-    preparing_src = p.ref("int_connector_preparing")
-    transactions_src = p.ref("int_transactions")
+    preparing_src, transactions_src = p.refs("int_connector_preparing", "int_transactions")
 
     if p.is_incremental("fact_charge_attempts"):
         from_ts, buffer_from, to_ts = p.incremental_window(

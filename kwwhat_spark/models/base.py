@@ -2,23 +2,45 @@
 manifest (SURVEY §3.1).
 
 A *model* is a named function ``(Pipeline) -> DataFrame``. ``Pipeline``
-resolves ``ref()`` edges lazily with caching, so executing any mart pulls
-exactly its upstream subgraph — the topological order is implicit, like
-dbt's manifest DAG. Full-refresh semantics (every reference model's
-``is_incremental()=false`` branch); the incremental batch runner layers
-on top (kwwhat_spark/plans/incremental.py).
+resolves ``ref()`` edges on demand and remembers each result, so
+building a mart builds exactly its upstream subgraph. A model body
+names every model it reads up front in one ``p.refs(...)`` call, which
+builds the unbuilt ones concurrently: branches that share no data
+(the status, transaction and hardware chains) overlap the way dbt runs
+independent nodes across its threads, and the DAG's width is the only
+bound on how many run at once. Full-refresh semantics (every reference
+model's ``is_incremental()=false`` branch); the incremental batch
+runner layers on top (kwwhat_spark/plans/incremental.py).
+
+The contract that makes concurrent builds the same build as a
+sequential one:
+
+- A model function depends only on pipeline state (sources, vars,
+  overrides, prior state), never on which other models happen to be
+  built already or in which order.
+- Each model is built at most once per Pipeline: a second request,
+  from any thread, waits for the first build and gets its result. A
+  build that raises reaches every waiter and is not remembered, so the
+  next request builds again.
+- ``overrides`` (and ``this_dfs``) change only between top-level calls,
+  never while a build is running. The incremental runner relies on
+  this: it overrides each merged model before it asks for the next.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
+from concurrent.futures import Future
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kwwhat_spark.config import VARS, PipelineVars
 from kwwhat_spark.operators.cachescope import release
+from kwwhat_spark.threads import run_all
 
 MODELS: dict[str, Callable[["Pipeline"], DataFrame]] = {}
 
@@ -67,6 +89,15 @@ class Pipeline:
     # single-node analogue of materializing staging to Delta. Off by
     # default (pure-lazy views, maximal pushdown).
     cache_views: tuple[str, ...] = ()
+    # Builds and driver scalars in flight or done, one Future per key
+    # (see _once); _cache above keeps only the finished models.
+    _builds: dict[str, Future] = field(default_factory=dict, init=False, repr=False)
+    _scalar_cache: dict[tuple, Future] = field(default_factory=dict, init=False, repr=False)
+    _lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False)
+    # Per thread: the Future refs reserved for the build it runs there.
+    _claim: threading.local = field(
+        default_factory=threading.local, init=False, repr=False, compare=False)
 
     def is_incremental(self, name: str) -> bool:
         return name in self.this_dfs
@@ -99,38 +130,121 @@ class Pipeline:
         return self.sources[name]
 
     def ref(self, name: str) -> DataFrame:
+        """The model ``name``, built on first request.
+
+        Thread-safe: concurrent requests for one model build it once,
+        and the others wait for that build (see _once). Overrides win
+        over building. Model bodies ask for what they read with
+        ``refs`` instead: a plain ``ref`` of an unbuilt model builds it
+        there and then, after whatever the body did before, so a second
+        plain ``ref`` in the same body would build its branch serially.
+        """
         if name in self.overrides:
             return self.overrides[name]
-        if name not in self._cache:
-            df = MODELS[name](self)
-            # Non-view models are materialised like dbt tables: an eager
-            # localCheckpoint, so downstream models, checks and chat-BI
-            # read a LogicalRDD leaf, not the model's plan. persist() kept
-            # every upstream plan nested inside each InMemoryRelation, and
-            # Spark re-described those nested plans on every SQL
-            # execution and AQE re-plan. On a 3-charger, 14-day fleet (4
-            # vCPUs) the cut took the quality checks from 10–12 s to
-            # 2.6 s, chat-BI's queries from 6–7 s to 2.0 s and the whole
-            # build from 48 s to 29 s (medians). The trade-off: the
-            # blocks cannot be recomputed, so a lost executor fails the
-            # consumer with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND and the
-            # build reruns from its sources. The reference's views
-            # (stg_*, fact_uptime, fact_charger_commissioned_daily) stay
-            # lazy and collapse into their consumers.
-            if name not in VIEW_MODELS or name in self.cache_views:
-                df = df.localCheckpoint(eager=True)
-            self._cache[name] = df
-        return self._cache[name]
+        df = self._cache.get(name)
+        if df is None:
+            df = self._once(self._builds, name, partial(self._build, name))
+        return df
+
+    def refs(self, *names: str) -> list[DataFrame]:
+        """The models ``names``, in order, the unbuilt ones built
+        concurrently: one thread per model not yet resolved, each going
+        through ``ref`` (so a subclass's ``ref`` sees every build). Any
+        build failure is re-raised here after the others finish. Asks
+        for exactly the models named: nothing is prefetched, so the set
+        built is the set a sequence of ``ref`` calls would build."""
+        # Under one lock: a build already in flight is waited on, not
+        # requested again, and each build this call starts is reserved
+        # for the thread it starts, so no other request slips in between
+        # and asks ref for it a second time.
+        with self._lock:
+            todo = [n for n in dict.fromkeys(names)
+                    if n not in self.overrides and n not in self._cache]
+            running = [self._builds[n] for n in todo if n in self._builds]
+            reserved = {n: self._builds.setdefault(n, Future())
+                        for n in todo if n not in self._builds}
+        run_all([partial(self._reserved_ref, n, fut) for n, fut in reserved.items()])
+        for fut in running:
+            fut.result()
+        return [self.ref(n) for n in names]
+
+    def _reserved_ref(self, name: str, fut: Future) -> DataFrame:
+        """``ref(name)`` as the owner of the Future ``refs`` reserved for
+        it. A subclass's ``ref`` must reach ``Pipeline.ref`` for an
+        unbuilt model; if it never does, the reservation is failed
+        rather than left for waiters to hang on."""
+        self._claim.fut = fut
+        try:
+            return self.ref(name)
+        finally:
+            self._claim.fut = None
+            with self._lock:
+                untaken = not (fut.running() or fut.done())
+                if untaken and self._builds.get(name) is fut:
+                    del self._builds[name]
+            if untaken:
+                fut.set_exception(RuntimeError(f"ref({name!r}) did not build the model"))
+
+    def _build(self, name: str) -> DataFrame:
+        df = MODELS[name](self)
+        # Non-view models are materialised like dbt tables: an eager
+        # localCheckpoint, so downstream models, checks and chat-BI
+        # read a LogicalRDD leaf, not the model's plan. persist() kept
+        # every upstream plan nested inside each InMemoryRelation, and
+        # Spark re-described those nested plans on every SQL
+        # execution and AQE re-plan. On a 3-charger, 14-day fleet (4
+        # vCPUs) the cut took the quality checks from 10–12 s to
+        # 2.6 s, chat-BI's queries from 6–7 s to 2.0 s and the whole
+        # build from 48 s to 29 s (medians). The trade-off: the
+        # blocks cannot be recomputed, so a lost executor fails the
+        # consumer with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND and the
+        # build reruns from its sources. The reference's views
+        # (stg_*, fact_uptime, fact_charger_commissioned_daily) stay
+        # lazy and collapse into their consumers.
+        if name not in VIEW_MODELS or name in self.cache_views:
+            df = df.localCheckpoint(eager=True)
+        self._cache[name] = df
+        return df
+
+    def _once(self, table: dict, key, build: Callable[[], object]):
+        """``build()`` at most once per ``key`` of ``table`` across
+        threads. The first caller builds; later callers wait on its
+        Future. A failure reaches every waiter and leaves no entry, so
+        it is never served as a result and the next call builds again.
+        The lock is held only to find or place the Future, never
+        during a build, so builds of different keys overlap."""
+        with self._lock:
+            fut = table.get(key)
+            if fut is None:
+                fut = table[key] = Future()
+                owner = True
+            else:
+                # refs reserves a Future for the thread it starts.
+                owner = fut is getattr(self._claim, "fut", None) and not (
+                    fut.running() or fut.done())
+            if owner:
+                fut.set_running_or_notify_cancel()
+        if owner:
+            try:
+                fut.set_result(build())
+            except BaseException as e:
+                with self._lock:
+                    if table.get(key) is fut:
+                        del table[key]
+                fut.set_exception(e)
+                raise
+        return fut.result()
 
     def unpersist_all(self) -> None:
         """Free every model this Pipeline materialised. Overrides are the
-        caller's and stay."""
+        caller's and stay. Call it with no build in flight."""
         for df in self._cache.values():
             try:
                 release(df)
             except Exception:  # session already stopped — nothing to free
                 pass
         self._cache.clear()
+        self._builds.clear()
 
     # ------------------------------------------------------------------
     # Batch-window computation (macros/incremental_date_range.sql).
@@ -186,17 +300,16 @@ class Pipeline:
         """Drop all memoized driver scalars (and the DataFrame pins that
         key them). Call after writing beneath a DataFrame object you
         intend to re-query, or to bound memory on a long-lived Pipeline."""
-        if hasattr(self, "_scalar_cache"):
-            self._scalar_cache.clear()
+        self._scalar_cache.clear()
 
     def _scalar_memo(self, df: DataFrame, col: str, kind: str, expr):
-        if not hasattr(self, "_scalar_cache"):
-            self._scalar_cache: dict = {}
-        key = (id(df), col, kind)
-        if key not in self._scalar_cache:
+        # Single-flight like ref: concurrent model bodies that ask for
+        # the same watermark over a shared model run one job.
+        def compute():
             row = df.agg(expr(col).alias("v")).first()
-            self._scalar_cache[key] = (df, row["v"] if row else None)
-        return self._scalar_cache[key][1]
+            return df, row["v"] if row else None
+
+        return self._once(self._scalar_cache, (id(df), col, kind), compute)[1]
 
     def scalar(self, df: DataFrame, col: str):
         """Memoized driver-side MIN(col). Keyed by DataFrame identity —

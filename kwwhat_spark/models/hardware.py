@@ -21,8 +21,8 @@ from kwwhat_spark.models.base import Pipeline, model
 
 @model("int_chargers")
 def int_chargers(p: Pipeline) -> DataFrame:
-    chargers = p.ref("stg_chargers")
-    port_counts = p.ref("int_ports").groupBy("charger_id").agg(
+    chargers, ports = p.refs("stg_chargers", "int_ports")
+    port_counts = ports.groupBy("charger_id").agg(
         F.count("port_id").alias("port_count")
     )
     return chargers.join(port_counts, "charger_id", "left").select(
@@ -32,8 +32,8 @@ def int_chargers(p: Pipeline) -> DataFrame:
 
 @model("int_ports")
 def int_ports(p: Pipeline) -> DataFrame:
-    ports = p.ref("stg_ports")
-    connector_counts = p.ref("int_connectors").groupBy("charger_id", "port_id").agg(
+    ports, connectors = p.refs("stg_ports", "int_connectors")
+    connector_counts = connectors.groupBy("charger_id", "port_id").agg(
         F.count("connector_id").alias("connector_count")
     )
     return ports.join(connector_counts, ["charger_id", "port_id"], "left").select(
@@ -43,14 +43,15 @@ def int_ports(p: Pipeline) -> DataFrame:
 
 @model("int_connectors")
 def int_connectors(p: Pipeline) -> DataFrame:
-    return p.ref("stg_connectors").select(
+    (connectors,) = p.refs("stg_connectors")
+    return connectors.select(
         "charger_id", "port_id", "connector_id", "connector_type"
     )
 
 
 @model("dim_chargers")
 def dim_chargers(p: Pipeline) -> DataFrame:
-    c = p.ref("int_chargers")
+    (c,) = p.refs("int_chargers")
     return c.select(
         surrogate_key("charger_id").alias("charger_key"),
         "charger_id",
@@ -64,7 +65,8 @@ def dim_chargers(p: Pipeline) -> DataFrame:
 
 @model("dim_ports")
 def dim_ports(p: Pipeline) -> DataFrame:
-    return p.ref("int_ports").select(
+    (ports,) = p.refs("int_ports")
+    return ports.select(
         surrogate_key("charger_id", "port_id").alias("port_key"),
         "charger_id",
         "port_id",
@@ -74,8 +76,8 @@ def dim_ports(p: Pipeline) -> DataFrame:
 
 @model("dim_connectors")
 def dim_connectors(p: Pipeline) -> DataFrame:
-    connectors = p.ref("int_connectors")
-    latest = p.ref("int_connector_latest_status").select(
+    connectors, latest = p.refs("int_connectors", "int_connector_latest_status")
+    latest = latest.select(
         "charger_id", "connector_id", "latest_status", "latest_error_code", "latest_status_ts"
     )
     return (
@@ -95,8 +97,9 @@ def dim_connectors(p: Pipeline) -> DataFrame:
 
 @model("dim_locations")
 def dim_locations(p: Pipeline) -> DataFrame:
+    (chargers,) = p.refs("int_chargers")
     return (
-        p.ref("int_chargers")
+        chargers
         .select("location_id")
         .distinct()
         .select(surrogate_key("location_id").alias("location_key"), "location_id")
@@ -134,8 +137,9 @@ def dim_dates(p: Pipeline) -> DataFrame:
 
 @model("fact_location_capacity")
 def fact_location_capacity(p: Pipeline) -> DataFrame:
-    connectors = p.ref("int_connectors").join(
-        F.broadcast(p.ref("int_chargers").select("charger_id", "location_id")),
+    connectors, chargers = p.refs("int_connectors", "int_chargers")
+    connectors = connectors.join(
+        F.broadcast(chargers.select("charger_id", "location_id")),
         "charger_id",
         "left",
     )

@@ -23,6 +23,8 @@ from kwwhat_spark.models.base import Pipeline, model
 
 @model("fact_downtime_daily")
 def fact_downtime_daily(p: Pipeline) -> DataFrame:
+    int_ports, faulted_outages, offline_outages, int_chargers = p.refs(
+        "int_ports", "int_faulted_outages", "int_offline_outages", "int_chargers")
     if p.is_incremental("fact_downtime_daily"):
         from_ts, buffer_from, to_ts = p.incremental_window(
             "fact_downtime_daily", buffer_minutes=p.vars.downtime_buffer_minutes
@@ -31,13 +33,13 @@ def fact_downtime_daily(p: Pipeline) -> DataFrame:
         from_ts, buffer_from, to_ts = p.full_refresh_window(
             buffer_minutes=p.vars.downtime_buffer_minutes
         )
-    ports = p.ref("int_ports").select("charger_id", "port_id")
+    ports = int_ports.select("charger_id", "port_id")
     in_window = (F.col("incremental_ts") > F.lit(buffer_from)) & (
         F.col("incremental_ts") <= F.lit(to_ts)
     )
 
     faulted = (
-        p.ref("int_faulted_outages")
+        faulted_outages
         .filter(in_window)
         .join(F.broadcast(ports), ["charger_id", "port_id"], "inner")
         .select(
@@ -50,7 +52,7 @@ def fact_downtime_daily(p: Pipeline) -> DataFrame:
     # starting inside a faulted window (anti-join with range condition,
     # fact_downtime_daily.sql:47-67).
     offline_raw = (
-        p.ref("int_offline_outages")
+        offline_outages
         .filter(in_window)
         .join(F.broadcast(ports), ["charger_id"], "inner")
         .select(
@@ -106,7 +108,7 @@ def fact_downtime_daily(p: Pipeline) -> DataFrame:
         F.sum("duration_minutes").alias("duration_minutes")
     )
 
-    chargers = p.ref("int_chargers").select("charger_id", "location_id")
+    chargers = int_chargers.select("charger_id", "location_id")
     return final.join(F.broadcast(chargers), "charger_id", "left").select(
         surrogate_key("date_id", "charger_id", "port_id", "reason").alias("downtime_id"),
         surrogate_key("charger_id", "port_id").alias("port_key"),
@@ -124,8 +126,9 @@ def fact_downtime_daily(p: Pipeline) -> DataFrame:
 
 @model("fact_charger_commissioned_daily")
 def fact_charger_commissioned_daily(p: Pipeline) -> DataFrame:
+    (chargers,) = p.refs("int_chargers")
     spans = (
-        p.ref("int_chargers")
+        chargers
         .filter(F.col("commissioned_ts").isNotNull())
         .select(
             "charger_id",
@@ -165,12 +168,14 @@ def fact_charger_commissioned_daily(p: Pipeline) -> DataFrame:
 
 @model("fact_uptime")
 def fact_uptime(p: Pipeline) -> DataFrame:
-    ports = p.ref("int_ports").select("charger_id", "port_id")
-    span_port_days = p.ref("fact_charger_commissioned_daily").join(
+    int_ports, commissioned, downtime, int_chargers = p.refs(
+        "int_ports", "fact_charger_commissioned_daily", "fact_downtime_daily", "int_chargers")
+    ports = int_ports.select("charger_id", "port_id")
+    span_port_days = commissioned.join(
         F.broadcast(ports), "charger_id", "inner"
     ).select("charger_id", "port_id", "date_id", F.col("minutes").alias("minutes_commissioned"))
 
-    downtime = p.ref("fact_downtime_daily").groupBy("date_id", "charger_id", "port_id").agg(
+    downtime = downtime.groupBy("date_id", "charger_id", "port_id").agg(
         F.sum("duration_minutes").alias("total_downtime_minutes")
     )
     with_downtime = span_port_days.join(
@@ -179,7 +184,7 @@ def fact_uptime(p: Pipeline) -> DataFrame:
         "total_downtime_minutes", F.coalesce("total_downtime_minutes", F.lit(0))
     )
 
-    chargers = p.ref("int_chargers").select("charger_id", "location_id")
+    chargers = int_chargers.select("charger_id", "location_id")
     return (
         with_downtime.join(F.broadcast(chargers), "charger_id", "left")
         .filter(F.col("minutes_commissioned") > 0)
@@ -202,7 +207,7 @@ def fact_uptime(p: Pipeline) -> DataFrame:
 
 @model("int_driver_aggregates")
 def int_driver_aggregates(p: Pipeline) -> DataFrame:
-    attempts = p.ref("fact_charge_attempts")
+    (attempts,) = p.refs("fact_charge_attempts")
     if p.is_incremental("int_driver_aggregates"):
         from_ts, _, to_ts = p.incremental_window("int_driver_aggregates", buffer_minutes=30)
     else:
@@ -280,7 +285,7 @@ def int_driver_aggregates(p: Pipeline) -> DataFrame:
 
 @model("dim_drivers")
 def dim_drivers(p: Pipeline) -> DataFrame:
-    aggs = p.ref("int_driver_aggregates")
+    (aggs,) = p.refs("int_driver_aggregates")
     sentinel = p.vars.unknown_driver_sentinel
     known = aggs.filter(F.col("id_tag") != sentinel).select(
         surrogate_key("id_tag").alias("driver_key"),

@@ -117,7 +117,8 @@ def _windowed_logs(p: Pipeline, from_ts, to_ts) -> DataFrame:
 
 @model("int_meter_values")
 def int_meter_values(p: Pipeline) -> DataFrame:
-    logs = p.ref("stg_ocpp_logs")
+    logs, int_transactions, int_connectors, int_chargers = p.refs(
+        "stg_ocpp_logs", "int_transactions", "int_connectors", "int_chargers")
     if p.is_incremental("int_meter_values"):
         from_ts, _, to_ts = p.incremental_window("int_meter_values", buffer_minutes=30)
     else:
@@ -127,7 +128,7 @@ def int_meter_values(p: Pipeline) -> DataFrame:
     windowed = _windowed_logs(p, from_ts, to_ts)
     incremental_ts = p.scalar_max(windowed, "ingested_ts")
 
-    transactions = p.ref("int_transactions").select(
+    transactions = int_transactions.select(
         F.col("charger_id").alias("t_charger_id"),
         F.col("transaction_id").alias("t_transaction_id"),
         F.col("connector_id").alias("t_connector_id"),
@@ -231,8 +232,8 @@ def int_meter_values(p: Pipeline) -> DataFrame:
             )
         )
 
-    connectors = p.ref("int_connectors").select("charger_id", "connector_id", "port_id")
-    chargers = p.ref("int_chargers").select("charger_id", "location_id")
+    connectors = int_connectors.select("charger_id", "connector_id", "port_id")
+    chargers = int_chargers.select("charger_id", "location_id")
     return (
         agg.join(F.broadcast(connectors), ["charger_id", "connector_id"], "left")
         .join(F.broadcast(chargers), ["charger_id"], "left")
@@ -248,8 +249,7 @@ def int_meter_values(p: Pipeline) -> DataFrame:
 
 @model("fact_interval_data")
 def fact_interval_data(p: Pipeline) -> DataFrame:
-    logs = p.ref("stg_ocpp_logs")
-    imv = p.ref("int_meter_values")
+    logs, imv = p.refs("stg_ocpp_logs", "int_meter_values")
     if p.is_incremental("fact_interval_data"):
         from_ts, _, to_ts = p.incremental_window("fact_interval_data", buffer_minutes=30)
     else:

@@ -24,8 +24,7 @@ from kwwhat_spark.models.base import Pipeline, model
 
 @model("int_offline_outages")
 def int_offline_outages(p: Pipeline) -> DataFrame:
-    logs = p.ref("stg_ocpp_logs")
-    chargers = p.ref("int_chargers")
+    logs, chargers = p.refs("stg_ocpp_logs", "int_chargers")
     if p.is_incremental("int_offline_outages"):
         from_ts, _, to_ts = p.incremental_window("int_offline_outages")
     else:
@@ -137,7 +136,7 @@ def int_offline_outages(p: Pipeline) -> DataFrame:
 
 @model("int_faulted_outages")
 def int_faulted_outages(p: Pipeline) -> DataFrame:
-    status_changes = p.ref("int_status_changes")
+    status_changes, int_ports = p.refs("int_status_changes", "int_ports")
     if p.is_incremental("int_faulted_outages"):
         from_ts, _, to_ts = p.incremental_window("int_faulted_outages")
         cap = p.scalar_max(status_changes, "incremental_ts")
@@ -197,7 +196,7 @@ def int_faulted_outages(p: Pipeline) -> DataFrame:
         .agg(F.countDistinct("fp_connector_id").alias("faulted_connector_count"))
     )
 
-    ports = p.ref("int_ports").select("charger_id", "port_id", "connector_count")
+    ports = int_ports.select("charger_id", "port_id", "connector_count")
     all_faulted = counted.join(F.broadcast(ports), ["charger_id", "port_id"], "inner").filter(
         (F.col("faulted_connector_count") == F.col("connector_count"))
         & (F.col("connector_count") > 0)

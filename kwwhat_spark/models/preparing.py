@@ -33,8 +33,8 @@ def _gate(action_set, col):
 
 @model("int_connector_preparing")
 def int_connector_preparing(p: Pipeline) -> DataFrame:
-    status_changes = p.ref("int_status_changes")
-    logs = p.ref("stg_ocpp_logs")
+    status_changes, logs, int_connectors, int_chargers = p.refs(
+        "int_status_changes", "stg_ocpp_logs", "int_connectors", "int_chargers")
     if p.is_incremental("int_connector_preparing"):
         from_ts, buffer_from, to_ts = p.incremental_window(
             "int_connector_preparing", buffer_minutes=30
@@ -289,8 +289,8 @@ def int_connector_preparing(p: Pipeline) -> DataFrame:
             )
         )
 
-    connectors = p.ref("int_connectors").select("charger_id", "connector_id", "port_id")
-    chargers = p.ref("int_chargers").select("charger_id", "location_id")
+    connectors = int_connectors.select("charger_id", "connector_id", "port_id")
+    chargers = int_chargers.select("charger_id", "location_id")
     return (
         agg.join(F.broadcast(connectors), ["charger_id", "connector_id"], "left")
         .join(F.broadcast(chargers), ["charger_id"], "left")

@@ -29,7 +29,7 @@ def _payload_str(path: str, when_actions: list[str] | str):
 
 @model("int_status_changes")
 def int_status_changes(p: Pipeline) -> DataFrame:
-    logs = p.ref("stg_ocpp_logs")
+    logs, int_connectors = p.refs("stg_ocpp_logs", "int_connectors")
     if p.is_incremental("int_status_changes"):
         from_ts, buffer_from, to_ts = p.incremental_window(
             "int_status_changes", buffer_minutes=30
@@ -92,7 +92,7 @@ def int_status_changes(p: Pipeline) -> DataFrame:
         .alias("payload_ts"),
     )
 
-    connectors = p.ref("int_connectors").select("charger_id", "connector_id", "port_id")
+    connectors = int_connectors.select("charger_id", "connector_id", "port_id")
     # Exact-duplicate confirmations collapse BEFORE the window join (the
     # r11 preparing/transactions treatment, extended here): a CALLRESULT
     # contributes only (unique_id, ingested_ts), so copies of that pair
@@ -221,7 +221,7 @@ def int_status_changes(p: Pipeline) -> DataFrame:
 
 @model("int_connector_latest_status")
 def int_connector_latest_status(p: Pipeline) -> DataFrame:
-    changes = p.ref("int_status_changes")
+    (changes,) = p.refs("int_status_changes")
     if p.is_incremental("int_connector_latest_status"):
         from_ts, _, _ = p.incremental_window("int_connector_latest_status")
     else:

@@ -26,7 +26,8 @@ _NUMERIC = "decimal(28,6)"
 
 @model("int_transactions")
 def int_transactions(p: Pipeline) -> DataFrame:
-    logs = p.ref("stg_ocpp_logs")
+    logs, int_connectors, int_chargers = p.refs(
+        "stg_ocpp_logs", "int_connectors", "int_chargers")
     if p.is_incremental("int_transactions"):
         from_ts, _, to_ts = p.incremental_window("int_transactions")
     else:
@@ -304,8 +305,8 @@ def int_transactions(p: Pipeline) -> DataFrame:
         )
     )
 
-    connectors = p.ref("int_connectors").select("charger_id", "connector_id", "port_id")
-    chargers = p.ref("int_chargers").select("charger_id", "location_id")
+    connectors = int_connectors.select("charger_id", "connector_id", "port_id")
+    chargers = int_chargers.select("charger_id", "location_id")
     return (
         final.join(F.broadcast(connectors), ["charger_id", "connector_id"], "left")
         .join(F.broadcast(chargers), ["charger_id"], "left")

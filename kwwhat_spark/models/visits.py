@@ -131,7 +131,8 @@ def _merge_with_buffer(p: Pipeline, new_visits: DataFrame, buffer_from) -> DataF
 
 @model("fact_visits")
 def fact_visits(p: Pipeline) -> DataFrame:
-    attempts_src = p.ref("fact_charge_attempts")
+    attempts_src, dim_connectors, dim_chargers = p.refs(
+        "fact_charge_attempts", "dim_connectors", "dim_chargers")
     if p.is_incremental("fact_visits"):
         from_ts, _, to_ts = p.incremental_window("fact_visits", buffer_minutes=30)
     else:
@@ -140,12 +141,12 @@ def fact_visits(p: Pipeline) -> DataFrame:
     if cap is not None:
         to_ts = min(to_ts, cap)
 
-    dim_connectors = p.ref("dim_connectors").select(
+    dim_connectors = dim_connectors.select(
         F.col("charger_id").alias("c_charger_id"),
         F.col("connector_id").alias("c_connector_id"),
         "port_id",
     )
-    dim_chargers = p.ref("dim_chargers").select(
+    dim_chargers = dim_chargers.select(
         F.col("charger_id").alias("ch_charger_id"), "location_id"
     )
 

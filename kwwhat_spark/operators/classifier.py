@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kwwhat_spark.operators.cachescope import release
+
 BIAS_BUCKET = -1
 SIG_SCALE = 1_000_000
 FREQ_SCALE = 10_000
@@ -163,7 +165,7 @@ def train_logreg(
         )
         for r in grad.collect():  # <= n_buckets+1 rows: bounded driver read
             w[int(r["bucket"])] -= int(r["g"]) // (1 << shifts[rnd])
-    data.unpersist()
+    release(data)
     return w
 
 

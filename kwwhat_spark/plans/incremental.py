@@ -532,6 +532,10 @@ class IncrementalRunner:
             overrides=dict(overrides or {}),
             cache_views=("stg_ocpp_logs",),
         )
+        # One model at a time on purpose: a later model must read the
+        # merged state of an earlier one, so overrides change between
+        # these top-level calls only. Within a call, model bodies still
+        # build their unbuilt upstream concurrently (Pipeline.refs).
         for name in models:
             out = pipe.ref(name)
             self.store.merge(name, out, UNIQUE_KEYS[name])

@@ -19,9 +19,12 @@ from __future__ import annotations
 import datetime as dt
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kwwhat_spark.threads import run_all
 
 
 @dataclass(frozen=True)
@@ -80,66 +83,81 @@ def _violation_expr(check: Check) -> str:
 def run_checks(
     resolve: Callable[[str], DataFrame], checks: list[Check]
 ) -> list[Violation]:
-    """Run every check; return only those with failing rows."""
+    """Run every check; return only those with failing rows, in the
+    order the checks are listed within each model (a model's fused
+    predicate pass first).
+
+    Every model and relationship parent is resolved first, in the
+    caller's thread, so a resolver that builds models builds them
+    there. The check queries share nothing and run concurrently, one
+    thread each."""
     by_model: dict[str, list[Check]] = {}
     for c in checks:
         by_model.setdefault(c.model, []).append(c)
 
-    violations: list[Violation] = []
+    frames: dict[str, DataFrame] = {}
     for model, model_checks in by_model.items():
-        df = resolve(model)
+        for name in [model] + [c.params["to"] for c in model_checks
+                               if c.kind == "relationships"]:
+            if name not in frames:
+                frames[name] = resolve(name)
 
+    queries: list[Callable[[], list[Violation]]] = []
+    for model, model_checks in by_model.items():
+        df = frames[model]
         predicate = [
             c
             for c in model_checks
             if c.kind in ("not_null", "accepted_values", "expression", "accepted_range")
         ]
         if predicate:
-            aggs = [
-                F.sum(
-                    F.when(F.expr(_violation_expr(c)), F.lit(1)).otherwise(F.lit(0))
-                ).alias(f"c{i}")
-                for i, c in enumerate(predicate)
-            ]
-            row = df.agg(*aggs).first()
-            for i, c in enumerate(predicate):
-                n = row[f"c{i}"] or 0
-                if n:
-                    violations.append(Violation(c, int(n)))
-
+            queries.append(partial(_predicate_violations, df, predicate))
         for c in model_checks:
-            if c.kind == "unique":
-                n = (
-                    df.filter(F.col(c.column).isNotNull())
-                    .groupBy(c.column)
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .count()
-                )
-                if n:
-                    violations.append(Violation(c, int(n)))
-            elif c.kind == "unique_combination":
-                cols = c.params["combination_of_columns"]
-                n = df.groupBy(*cols).count().filter(F.col("count") > 1).count()
-                if n:
-                    violations.append(Violation(c, int(n)))
-            elif c.kind == "relationships":
-                parent = resolve(c.params["to"]).select(
-                    F.col(c.params["field"]).alias("__parent_key")
-                )
-                n = (
-                    df.filter(F.col(c.column).isNotNull())
-                    .select(F.col(c.column).alias("__child_key"))
-                    .join(
-                        F.broadcast(parent.distinct()),
-                        F.col("__child_key") == F.col("__parent_key"),
-                        "left_anti",
-                    )
-                    .count()
-                )
-                if n:
-                    violations.append(Violation(c, int(n)))
-    return violations
+            if c.kind in ("unique", "unique_combination", "relationships"):
+                parent = frames[c.params["to"]] if c.kind == "relationships" else None
+                queries.append(partial(_row_violations, df, c, parent))
+    return [v for found in run_all(queries) for v in found]
+
+
+def _predicate_violations(df: DataFrame, predicate: list[Check]) -> list[Violation]:
+    """Every row-predicate check of one model in one aggregation pass."""
+    aggs = [
+        F.sum(
+            F.when(F.expr(_violation_expr(c)), F.lit(1)).otherwise(F.lit(0))
+        ).alias(f"c{i}")
+        for i, c in enumerate(predicate)
+    ]
+    row = df.agg(*aggs).first()
+    return [Violation(c, int(row[f"c{i}"])) for i, c in enumerate(predicate)
+            if row[f"c{i}"]]
+
+
+def _row_violations(df: DataFrame, c: Check, parent: DataFrame | None) -> list[Violation]:
+    """One uniqueness or referential check: its count of bad keys."""
+    if c.kind == "unique":
+        n = (
+            df.filter(F.col(c.column).isNotNull())
+            .groupBy(c.column)
+            .count()
+            .filter(F.col("count") > 1)
+            .count()
+        )
+    elif c.kind == "unique_combination":
+        cols = c.params["combination_of_columns"]
+        n = df.groupBy(*cols).count().filter(F.col("count") > 1).count()
+    else:
+        parent_keys = parent.select(F.col(c.params["field"]).alias("__parent_key"))
+        n = (
+            df.filter(F.col(c.column).isNotNull())
+            .select(F.col(c.column).alias("__child_key"))
+            .join(
+                F.broadcast(parent_keys.distinct()),
+                F.col("__child_key") == F.col("__parent_key"),
+                "left_anti",
+            )
+            .count()
+        )
+    return [Violation(c, int(n))] if n else []
 
 
 def load_checks_yaml(path: str | None = None) -> list[Check]:

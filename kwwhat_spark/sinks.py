@@ -13,11 +13,14 @@ unchanged.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kwwhat_spark.models.base import Pipeline
+from kwwhat_spark.operators.cachescope import release
+from kwwhat_spark.threads import run_all
 
 # Mart -> timestamp/date column that mirrors the reference's cluster_by.
 PARTITION_COLUMN: dict[str, str] = {
@@ -57,13 +60,14 @@ def write_partitioned(df: DataFrame, path: str, ts_col: str | None) -> None:
 
 def write_marts(pipe: Pipeline, out_dir: str, models: list[str] | None = None) -> dict[str, str]:
     """Materialize models under out_dir, date-partitioned where declared.
-    Returns {model: path}."""
+    Returns {model: path}. The models are built together (``refs``),
+    then written concurrently: each write is a few short stages, bound
+    by driver overhead rather than cores."""
     names = models or list(PARTITION_COLUMN)
-    paths = {}
-    for name in names:
-        path = os.path.join(out_dir, name)
-        write_partitioned(pipe.ref(name), path, PARTITION_COLUMN.get(name))
-        paths[name] = path
+    paths = {name: os.path.join(out_dir, name) for name in names}
+    dfs = pipe.refs(*names)
+    run_all([partial(write_partitioned, df, paths[name], PARTITION_COLUMN.get(name))
+             for name, df in zip(names, dfs)])
     return paths
 
 
@@ -107,7 +111,11 @@ def compact_partitioned(
         if sort_col is not None:
             df = df.sortWithinPartitions(sort_col)
         # Materialize before overwriting the directory the plan reads.
-        df.localCheckpoint(eager=True).write.mode("overwrite").parquet(root)
+        snapshot = df.localCheckpoint(eager=True)
+        try:
+            snapshot.write.mode("overwrite").parquet(root)
+        finally:
+            release(snapshot)
         rewritten[root] = len(parts)
         dirs[:] = []  # partition dirs are leaves; don't descend further
     return rewritten

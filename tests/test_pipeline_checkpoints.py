@@ -126,3 +126,29 @@ def test_partitioned_merges_release_every_checkpoint(spark, tmp_path):
     store.merge("int_status_changes", evolved, keys)
     assert _persistent_ids(spark) <= before
     assert store.read("int_status_changes").count() == 12
+
+
+def test_compact_partitioned_releases_its_snapshot(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from kwwhat_spark.sinks import compact_partitioned
+
+    path = str(tmp_path / "frag")
+    spark.range(0, 200).withColumn("_date", F.lit("2025-10-01")).repartition(8) \
+        .write.partitionBy("_date").parquet(path)
+    before = _persistent_ids(spark)
+    assert len(compact_partitioned(spark, path, min_files=4, sort_col="id")) == 1
+    assert _persistent_ids(spark) <= before
+    assert spark.read.parquet(path).count() == 200
+
+
+def test_train_logreg_releases_its_training_set(spark):
+    from kwwhat_spark.operators.classifier import train_logreg
+
+    feats = spark.createDataFrame(
+        [(d, b, 1) for d in range(8) for b in (d % 2, 2)], "doc_id long, bucket int, cnt int")
+    labels = spark.createDataFrame([(d, d % 2) for d in range(8)], "doc_id long, y int")
+    before = _persistent_ids(spark)
+    w = train_logreg(feats, labels, rounds=2, lr_shift=4)
+    assert set(w) == {0, 1, 2}
+    assert _persistent_ids(spark) <= before
