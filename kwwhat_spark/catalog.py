@@ -9,8 +9,6 @@ equivalent of the analytics.duckdb handoff.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-
 from kwwhat_spark.models.base import MODELS, Pipeline
 
 MART_PREFIXES = ("fact_", "dim_")
@@ -29,8 +27,3 @@ def register_marts(pipe: Pipeline, prefix: str = "") -> list[str]:
         names.append(f"{prefix}{name}")
     return names
 
-
-def sql_over_marts(spark: SparkSession, pipe: Pipeline, query: str):
-    """One-call NL-agent surface: ensure marts are registered, run SQL."""
-    register_marts(pipe)
-    return spark.sql(query)

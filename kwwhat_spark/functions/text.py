@@ -36,23 +36,6 @@ def whitespace_token_count(text: Column | str) -> Column:
     return F.size(F.filter(F.split(c, r"\s+"), lambda t: t != ""))
 
 
-def bpe_ish_token_count(text: Column | str) -> Column:
-    """Approximate BPE token count: words + punctuation runs + digit runs,
-    via a GPT-2-style pre-tokenizer regex."""
-    c = _col(text)
-    pattern = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
-    return F.size(F.regexp_extract_all(c, F.lit(pattern), F.lit(0)))
-
-
-def char_shingles(text: Column | str, k: int = 3) -> Column:
-    """All k-character shingles of the string (positional, with repeats)."""
-    c = _col(text)
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(c) - (k - 1), F.lit(1))),
-        lambda i: c.substr(i, F.lit(k)),
-    )
-
-
 def word_shingles(text: Column | str, k: int = 3) -> Column:
     """k-word shingles (space-joined), for MinHash/Jaccard on documents.
 
@@ -101,16 +84,6 @@ def stopword_ratio(text: Column | str) -> Column:
         F.filter(F.split(F.lower(_col(text)), r"\s+"), lambda t: t != ""),
         lambda toks: (
             F.size(F.filter(toks, lambda t: t.isin(_STOPWORDS)))
-            / F.greatest(F.size(toks), F.lit(1))
-        ).cast("double"),
-    )
-
-
-def mean_word_length(text: Column | str) -> Column:
-    return let_(
-        F.filter(F.split(_col(text), r"\s+"), lambda t: t != ""),
-        lambda toks: (
-            F.aggregate(toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t))
             / F.greatest(F.size(toks), F.lit(1))
         ).cast("double"),
     )

@@ -28,17 +28,10 @@ from kwwhat_spark.models.base import Pipeline, model
 def fact_charge_attempts(p: Pipeline) -> DataFrame:
     preparing_src, transactions_src = p.refs("int_connector_preparing", "int_transactions")
 
-    if p.is_incremental("fact_charge_attempts"):
-        from_ts, buffer_from, to_ts = p.incremental_window(
-            "fact_charge_attempts", buffer_minutes=30
-        )
-    else:
-        from_ts, buffer_from, to_ts = p.full_refresh_window(buffer_minutes=30)
-    caps = [
-        p.scalar_max(preparing_src, "incremental_ts"),
-        p.scalar_max(transactions_src, "incremental_ts"),
-    ]
-    to_ts = min([to_ts] + [c for c in caps if c is not None])
+    from_ts, buffer_from, to_ts = p.window(
+        "fact_charge_attempts", buffer_minutes=30,
+        to_caps=[(preparing_src, "incremental_ts"), (transactions_src, "incremental_ts")],
+    )
 
     window_filter = (F.col("ingested_ts") > F.lit(from_ts)) & (
         F.col("ingested_ts") <= F.lit(to_ts)

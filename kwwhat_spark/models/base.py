@@ -29,8 +29,10 @@ sequential one:
 
 from __future__ import annotations
 
+import calendar
+import datetime as dt
 import threading
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from concurrent.futures import Future
 from dataclasses import dataclass, field
 from functools import partial
@@ -105,26 +107,43 @@ class Pipeline:
     def this(self, name: str) -> DataFrame:
         return self.this_dfs[name]
 
-    def incremental_window(
-        self, name: str, buffer_minutes: int = 0
-    ) -> tuple[object, object, object]:
-        """Incremental batch window: from = max(incremental_ts of target),
-        to = from + 3 months, buffer_from = from - buffer
-        (macros/incremental_date_range.sql, is_incremental() path)."""
-        import datetime as dt
+    def window(
+        self,
+        name: str,
+        buffer_minutes: int = 0,
+        from_caps: Iterable[tuple[DataFrame, str]] = (),
+        to_caps: Iterable[tuple[DataFrame, str]] = (),
+    ) -> tuple[dt.datetime, dt.datetime, dt.datetime]:
+        """Model ``name``'s batch window ``(from_ts, buffer_from, to_ts)``
+        (macros/incremental_date_range.sql), every model's one source of
+        it. Computed on the driver, so the window filter is a literal
+        predicate Catalyst can push into the scan (SURVEY §4).
 
-        from_ts = self.scalar_max(self.this(name), "incremental_ts")
-        if from_ts is None:
-            from_ts = dt.datetime.fromisoformat(self.vars.start_processing_date)
-        import calendar
+        - from: in an incremental batch, the prior state's max
+          ``incremental_ts`` (``start_processing_date`` if it has none);
+          in a full refresh, the greatest of ``start_processing_date``
+          and ``scalar(df, col)`` for each ``from_caps`` pair. From-caps
+          are evaluated only in a full refresh.
+        - to: from + ``incremental_window_months`` calendar months, the
+          day clamped to the month's end like dbt.dateadd, then the
+          least of that and ``scalar_max(df, col)`` for each ``to_caps``
+          pair.
+        - buffer_from: from - ``buffer_minutes``.
 
+        Null caps are ignored.
+        """
+        start = dt.datetime.fromisoformat(self.vars.start_processing_date)
+        if self.is_incremental(name):
+            from_ts = self.scalar_max(self.this(name), "incremental_ts") or start
+        else:
+            from_ts = max([start] + _present(self.scalar(df, c) for df, c in from_caps))
         month = from_ts.month - 1 + self.vars.incremental_window_months
         year = from_ts.year + month // 12
         month = month % 12 + 1
         day = min(from_ts.day, calendar.monthrange(year, month)[1])
-        to_ts = from_ts.replace(year=year, month=month, day=day)
-        buffer_from = from_ts - dt.timedelta(minutes=buffer_minutes)
-        return from_ts, buffer_from, to_ts
+        to_ts = min([from_ts.replace(year=year, month=month, day=day)]
+                    + _present(self.scalar_max(df, c) for df, c in to_caps))
+        return from_ts, from_ts - dt.timedelta(minutes=buffer_minutes), to_ts
 
     def source(self, name: str) -> DataFrame:
         return self.sources[name]
@@ -246,36 +265,6 @@ class Pipeline:
         self._cache.clear()
         self._builds.clear()
 
-    # ------------------------------------------------------------------
-    # Batch-window computation (macros/incremental_date_range.sql).
-    # Full-refresh path: from = greatest(*caps), to = from + 3 months,
-    # buffer_from = from - buffer_minutes. Computed on the driver so the
-    # window filter is a literal predicate Catalyst can push into the scan
-    # (SURVEY §4: cleaner than scalar subqueries).
-    # ------------------------------------------------------------------
-    def full_refresh_window(
-        self,
-        extra_from_caps: list[DataFrame | object] = (),
-        buffer_minutes: int = 0,
-    ) -> tuple[object, object, object]:
-        import datetime as dt
-
-        caps = [dt.datetime.fromisoformat(self.vars.start_processing_date)]
-        for cap in extra_from_caps:
-            if cap is not None:
-                caps.append(cap)
-        from_ts = max(caps)
-        # dateadd(month, 3): calendar month arithmetic, like dbt.dateadd.
-        month = from_ts.month - 1 + self.vars.incremental_window_months
-        year = from_ts.year + month // 12
-        month = month % 12 + 1
-        import calendar
-
-        day = min(from_ts.day, calendar.monthrange(year, month)[1])
-        to_ts = from_ts.replace(year=year, month=month, day=day)
-        buffer_from = from_ts - dt.timedelta(minutes=buffer_minutes)
-        return from_ts, buffer_from, to_ts
-
     # Driver-side scalars are memoized per Pipeline by DataFrame
     # IDENTITY: incremental models re-derive the same watermark over the
     # same shared DataFrame object several times per batch (a merged
@@ -290,18 +279,12 @@ class Pipeline:
     # OBJECT-IDENTITY CONTRACT (callers must honor it): a scalar read
     # over mutated storage must go through a NEW DataFrame object — the
     # incremental stores do this (every merge re-reads state into a
-    # fresh read()), so staleness cannot occur there. Any future code
-    # that holds ONE DataFrame object across a write to its underlying
-    # path must call invalidate_scalars() after the write, or it reads
-    # the pre-write watermark forever. Long-lived Pipelines should also
-    # call it periodically: the strong references pin DataFrames (and
-    # their cached plans) for the Pipeline's lifetime.
-    def invalidate_scalars(self) -> None:
-        """Drop all memoized driver scalars (and the DataFrame pins that
-        key them). Call after writing beneath a DataFrame object you
-        intend to re-query, or to bound memory on a long-lived Pipeline."""
-        self._scalar_cache.clear()
-
+    # fresh read()), so staleness cannot occur there. Code that holds ONE
+    # DataFrame object across a write to its underlying path reads the
+    # pre-write watermark forever: re-read the path into a new object,
+    # or use a new Pipeline. The strong references pin DataFrames (and
+    # their cached plans) for the Pipeline's lifetime, so a Pipeline
+    # lives for one build or one batch.
     def _scalar_memo(self, df: DataFrame, col: str, kind: str, expr):
         # Single-flight like ref: concurrent model bodies that ask for
         # the same watermark over a shared model run one job.
@@ -313,8 +296,7 @@ class Pipeline:
 
     def scalar(self, df: DataFrame, col: str):
         """Memoized driver-side MIN(col). Keyed by DataFrame identity —
-        see the object-identity contract on _scalar_memo / use
-        invalidate_scalars() after writing beneath a reused object."""
+        see the object-identity contract on _scalar_memo."""
         return self._scalar_memo(df, col, "min", F.min)
 
     def scalar_max(self, df: DataFrame, col: str):
@@ -323,5 +305,5 @@ class Pipeline:
         return self._scalar_memo(df, col, "max", F.max)
 
 
-def run_model(pipeline: Pipeline, name: str) -> DataFrame:
-    return pipeline.ref(name)
+def _present(values: Iterable) -> list:
+    return [v for v in values if v is not None]

@@ -25,14 +25,9 @@ from kwwhat_spark.models.base import Pipeline, model
 def fact_downtime_daily(p: Pipeline) -> DataFrame:
     int_ports, faulted_outages, offline_outages, int_chargers = p.refs(
         "int_ports", "int_faulted_outages", "int_offline_outages", "int_chargers")
-    if p.is_incremental("fact_downtime_daily"):
-        from_ts, buffer_from, to_ts = p.incremental_window(
-            "fact_downtime_daily", buffer_minutes=p.vars.downtime_buffer_minutes
-        )
-    else:
-        from_ts, buffer_from, to_ts = p.full_refresh_window(
-            buffer_minutes=p.vars.downtime_buffer_minutes
-        )
+    from_ts, buffer_from, to_ts = p.window(
+        "fact_downtime_daily", buffer_minutes=p.vars.downtime_buffer_minutes
+    )
     ports = int_ports.select("charger_id", "port_id")
     in_window = (F.col("incremental_ts") > F.lit(buffer_from)) & (
         F.col("incremental_ts") <= F.lit(to_ts)
@@ -208,10 +203,7 @@ def fact_uptime(p: Pipeline) -> DataFrame:
 @model("int_driver_aggregates")
 def int_driver_aggregates(p: Pipeline) -> DataFrame:
     (attempts,) = p.refs("fact_charge_attempts")
-    if p.is_incremental("int_driver_aggregates"):
-        from_ts, _, to_ts = p.incremental_window("int_driver_aggregates", buffer_minutes=30)
-    else:
-        from_ts, _, to_ts = p.full_refresh_window(buffer_minutes=30)
+    from_ts, _, to_ts = p.window("int_driver_aggregates")
     att = attempts.filter(
         (F.col("incremental_ts") > F.lit(from_ts)) & (F.col("incremental_ts") <= F.lit(to_ts))
     ).select("id_tag", "id_tag_status", "charge_attempt_start_ts", "incremental_ts")

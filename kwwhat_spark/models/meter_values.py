@@ -119,12 +119,8 @@ def _windowed_logs(p: Pipeline, from_ts, to_ts) -> DataFrame:
 def int_meter_values(p: Pipeline) -> DataFrame:
     logs, int_transactions, int_connectors, int_chargers = p.refs(
         "stg_ocpp_logs", "int_transactions", "int_connectors", "int_chargers")
-    if p.is_incremental("int_meter_values"):
-        from_ts, _, to_ts = p.incremental_window("int_meter_values", buffer_minutes=30)
-    else:
-        from_ts, _, to_ts = p.full_refresh_window(
-            extra_from_caps=[p.scalar(logs, "ingested_timestamp")], buffer_minutes=30
-        )
+    from_ts, _, to_ts = p.window(
+        "int_meter_values", from_caps=[(logs, "ingested_timestamp")])
     windowed = _windowed_logs(p, from_ts, to_ts)
     incremental_ts = p.scalar_max(windowed, "ingested_ts")
 
@@ -250,15 +246,11 @@ def int_meter_values(p: Pipeline) -> DataFrame:
 @model("fact_interval_data")
 def fact_interval_data(p: Pipeline) -> DataFrame:
     logs, imv = p.refs("stg_ocpp_logs", "int_meter_values")
-    if p.is_incremental("fact_interval_data"):
-        from_ts, _, to_ts = p.incremental_window("fact_interval_data", buffer_minutes=30)
-    else:
-        from_ts, _, to_ts = p.full_refresh_window(
-            extra_from_caps=[p.scalar(logs, "ingested_timestamp")], buffer_minutes=30
-        )
-    cap = p.scalar_max(imv, "incremental_ts")
-    if cap is not None:
-        to_ts = min(to_ts, cap)
+    from_ts, _, to_ts = p.window(
+        "fact_interval_data",
+        from_caps=[(logs, "ingested_timestamp")],
+        to_caps=[(imv, "incremental_ts")],
+    )
 
     windowed = _windowed_logs(p, from_ts, to_ts)
     incremental_ts = p.scalar_max(windowed, "ingested_ts")

@@ -25,13 +25,8 @@ from kwwhat_spark.models.base import Pipeline, model
 @model("int_offline_outages")
 def int_offline_outages(p: Pipeline) -> DataFrame:
     logs, chargers = p.refs("stg_ocpp_logs", "int_chargers")
-    if p.is_incremental("int_offline_outages"):
-        from_ts, _, to_ts = p.incremental_window("int_offline_outages")
-    else:
-        from_ts, _, to_ts = p.full_refresh_window()
-    cap = p.scalar_max(logs, "ingested_timestamp")
-    if cap is not None:
-        to_ts = min(to_ts, cap)
+    from_ts, _, to_ts = p.window(
+        "int_offline_outages", to_caps=[(logs, "ingested_timestamp")])
 
     context = chargers.filter(
         F.col("commissioned_ts").isNotNull()
@@ -137,13 +132,15 @@ def int_offline_outages(p: Pipeline) -> DataFrame:
 @model("int_faulted_outages")
 def int_faulted_outages(p: Pipeline) -> DataFrame:
     status_changes, int_ports = p.refs("int_status_changes", "int_ports")
-    if p.is_incremental("int_faulted_outages"):
-        from_ts, _, to_ts = p.incremental_window("int_faulted_outages")
-        cap = p.scalar_max(status_changes, "incremental_ts")
-        if cap is not None:
-            to_ts = min(to_ts, cap)
-    else:
-        from_ts, _, to_ts = p.full_refresh_window()
+    # The one model that still asks is_incremental for its window: only
+    # an incremental batch caps to_ts at the upstream watermark. to_ts
+    # also closes the faults still open at the batch end (fault_periods
+    # below), so capping a full refresh would change their to_ts.
+    incremental = p.is_incremental("int_faulted_outages")
+    from_ts, _, to_ts = p.window(
+        "int_faulted_outages",
+        to_caps=[(status_changes, "incremental_ts")] if incremental else (),
+    )
 
     windowed = status_changes.filter(
         (F.col("incremental_ts") > F.lit(from_ts)) & (F.col("incremental_ts") <= F.lit(to_ts))

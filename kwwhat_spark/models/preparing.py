@@ -35,19 +35,12 @@ def _gate(action_set, col):
 def int_connector_preparing(p: Pipeline) -> DataFrame:
     status_changes, logs, int_connectors, int_chargers = p.refs(
         "int_status_changes", "stg_ocpp_logs", "int_connectors", "int_chargers")
-    if p.is_incremental("int_connector_preparing"):
-        from_ts, buffer_from, to_ts = p.incremental_window(
-            "int_connector_preparing", buffer_minutes=30
-        )
-    else:
-        from_ts, buffer_from, to_ts = p.full_refresh_window(buffer_minutes=30)
     # to_timestamp capped by upstream watermarks (int_connector_preparing.sql
     # to_timestamp_caps).
-    caps = [
-        p.scalar_max(status_changes, "incremental_ts"),
-        p.scalar_max(logs, "ingested_timestamp"),
-    ]
-    to_ts = min([to_ts] + [c for c in caps if c is not None])
+    from_ts, buffer_from, to_ts = p.window(
+        "int_connector_preparing", buffer_minutes=30,
+        to_caps=[(status_changes, "incremental_ts"), (logs, "ingested_timestamp")],
+    )
 
     anchors = status_changes.filter(
         (F.col("ingested_ts") >= F.lit(buffer_from))

@@ -30,14 +30,9 @@ def _payload_str(path: str, when_actions: list[str] | str):
 @model("int_status_changes")
 def int_status_changes(p: Pipeline) -> DataFrame:
     logs, int_connectors = p.refs("stg_ocpp_logs", "int_connectors")
-    if p.is_incremental("int_status_changes"):
-        from_ts, buffer_from, to_ts = p.incremental_window(
-            "int_status_changes", buffer_minutes=30
-        )
-    else:
-        from_ts, buffer_from, to_ts = p.full_refresh_window(
-            extra_from_caps=[p.scalar(logs, "ingested_timestamp")], buffer_minutes=30
-        )
+    from_ts, buffer_from, to_ts = p.window(
+        "int_status_changes", buffer_minutes=30, from_caps=[(logs, "ingested_timestamp")]
+    )
 
     ocpp_logs = logs.select(
         "charger_id", "action", "ingested_timestamp", "message_type_id", "payload", "unique_id"
@@ -222,10 +217,7 @@ def int_status_changes(p: Pipeline) -> DataFrame:
 @model("int_connector_latest_status")
 def int_connector_latest_status(p: Pipeline) -> DataFrame:
     (changes,) = p.refs("int_status_changes")
-    if p.is_incremental("int_connector_latest_status"):
-        from_ts, _, _ = p.incremental_window("int_connector_latest_status")
-    else:
-        from_ts, _, _ = p.full_refresh_window()
+    from_ts, _, _ = p.window("int_connector_latest_status")
     source = changes.filter(
         F.col("next_status").isNull() & (F.col("ingested_ts") >= F.lit(from_ts))
     )

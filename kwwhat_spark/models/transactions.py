@@ -28,10 +28,7 @@ _NUMERIC = "decimal(28,6)"
 def int_transactions(p: Pipeline) -> DataFrame:
     logs, int_connectors, int_chargers = p.refs(
         "stg_ocpp_logs", "int_connectors", "int_chargers")
-    if p.is_incremental("int_transactions"):
-        from_ts, _, to_ts = p.incremental_window("int_transactions")
-    else:
-        from_ts, _, to_ts = p.full_refresh_window()
+    from_ts, _, to_ts = p.window("int_transactions")
 
     ocpp_logs = logs.select(
         "charger_id",

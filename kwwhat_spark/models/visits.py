@@ -27,10 +27,6 @@ from kwwhat_spark.functions.core import (
 from kwwhat_spark.models.base import Pipeline, model
 
 
-def _buffer_from(p: Pipeline):
-    return p.incremental_window("fact_visits", buffer_minutes=30)[1]
-
-
 def _merge_with_buffer(p: Pipeline, new_visits: DataFrame, buffer_from) -> DataFrame:
     """Incremental visit extension (fact_visits.sql:277-405): pull back
     recent visits, retro-infer id_tags from adjacent new authorized visits,
@@ -133,13 +129,8 @@ def _merge_with_buffer(p: Pipeline, new_visits: DataFrame, buffer_from) -> DataF
 def fact_visits(p: Pipeline) -> DataFrame:
     attempts_src, dim_connectors, dim_chargers = p.refs(
         "fact_charge_attempts", "dim_connectors", "dim_chargers")
-    if p.is_incremental("fact_visits"):
-        from_ts, _, to_ts = p.incremental_window("fact_visits", buffer_minutes=30)
-    else:
-        from_ts, _, to_ts = p.full_refresh_window(buffer_minutes=30)
-    cap = p.scalar_max(attempts_src, "incremental_ts")
-    if cap is not None:
-        to_ts = min(to_ts, cap)
+    from_ts, buffer_from, to_ts = p.window(
+        "fact_visits", buffer_minutes=30, to_caps=[(attempts_src, "incremental_ts")])
 
     dim_connectors = dim_connectors.select(
         F.col("charger_id").alias("c_charger_id"),
@@ -304,7 +295,7 @@ def fact_visits(p: Pipeline) -> DataFrame:
     )
 
     if p.is_incremental("fact_visits"):
-        new_visits = _merge_with_buffer(p, new_visits, buffer_from=_buffer_from(p))
+        new_visits = _merge_with_buffer(p, new_visits, buffer_from=buffer_from)
 
     return new_visits.select(
         surrogate_key("location_id", "first_charger_id", "first_port_id", "visit_start_ts")

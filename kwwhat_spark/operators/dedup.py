@@ -267,8 +267,10 @@ def _simhash64_votes_fn():
     Bit b of the simhash is set iff strictly more than half of the token
     hashes have bit b set — votes = ones - zeros > 0, exactly the
     expression form's `bit_vote(mask) > 0` (functions/text.simhash64),
-    so the longs are bit-identical, not merely equivalent. Empty token
-    arrays yield simhash 0 (aggregate over an empty array = init 0).
+    so the longs are bit-identical, not merely equivalent. Empty and
+    null token arrays (a null text row) yield simhash 0, as in the
+    expression form: aggregate over an empty array is its init 0, and
+    over a null array null, whose vote CASE falls through to 0.
 
     Why not the expression form: simhash64 runs SIXTY-FOUR F.aggregate
     HOF passes per doc in Catalyst's INTERPRETED evaluator — the same
@@ -286,7 +288,8 @@ def _simhash64_votes_fn():
                 continue
             lists = pdf["toks"].to_numpy()
             lens = np.fromiter(
-                (len(x) for x in lists), dtype=np.int64, count=len(lists)
+                (0 if x is None else len(x) for x in lists),
+                dtype=np.int64, count=len(lists),
             )
             out = np.zeros(len(lists), dtype=np.uint64)
             nonempty = lens > 0
@@ -295,7 +298,7 @@ def _simhash64_votes_fn():
                 # returns a[offs[i]] when offs[i] == offs[i+1]), so the
                 # vote matrix is built over non-empty docs only.
                 flat = np.concatenate(
-                    [np.asarray(x, dtype=np.int64) for x in lists if len(x)]
+                    [np.asarray(x, dtype=np.int64) for x in lists[nonempty]]
                 ).view(np.uint64)
                 lens_ne = lens[nonempty]
                 offs = np.zeros(len(lens_ne), dtype=np.int64)

@@ -199,17 +199,6 @@ def _encode_block(
     return int(zz[0])
 
 
-def _blocks_of(plane: np.ndarray):
-    """Pad a 2-D plane to 8-multiples (edge replicate) and yield its 8x8
-    blocks in raster order, level-shifted to float."""
-    h, w = plane.shape
-    ph, pw = -h % 8, -w % 8
-    padded = np.pad(plane.astype(np.float64) - 128.0, ((0, ph), (0, pw)), mode="edge")
-    for by in range(padded.shape[0] // 8):
-        for bx in range(padded.shape[1] // 8):
-            yield padded[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-
-
 def rgb_to_jfif_ycbcr(rgb: np.ndarray) -> np.ndarray:
     r, g, b = (rgb[..., i].astype(np.float64) for i in range(3))
     y = 0.299 * r + 0.587 * g + 0.114 * b

@@ -200,7 +200,9 @@ def all_pairs_cosine(
     path defines sim over zero norms as 0/0 = NaN and EXCLUDES it —
     divergent only for zero-norm inputs, which the embeddings testdata
     provably lacks (r13: zero zero-norm rows at every SF) and the
-    docstring contract forbids.
+    docstring contract forbids. Null vectors are excluded on both
+    sides, like the expression form, whose null sim fails every
+    threshold compare.
 
     Like brute_force_topk the corpus must fit the driver/broadcast
     (bounded collect guard); the all-pairs O(n²) output contract already
@@ -213,7 +215,8 @@ def all_pairs_cosine(
 
     block_doubles = _ALL_PAIRS_BLOCK_DOUBLES
     max_rows = 2_000_000
-    rows = df.select(id_col, vec_col).limit(max_rows + 1).collect()
+    vecs = df.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
+    rows = vecs.limit(max_rows + 1).collect()
     if len(rows) > max_rows:
         raise ValueError(
             f"all_pairs_cosine corpus exceeds {max_rows} rows; this "
@@ -262,7 +265,7 @@ def all_pairs_cosine(
                     cols[sim_col] = sims[ai, bi]
                 yield pd.DataFrame(cols)
 
-    return df.select(id_col, vec_col).mapInPandas(pairs, schema=schema)
+    return vecs.mapInPandas(pairs, schema=schema)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:

@@ -35,11 +35,6 @@ def _c2(c):
     return F.round(F.col(c) * 100, 0).cast("long")
 
 
-def _sum_exact(expr, scale: float):
-    """Exact integer-unit sum → double at the stated scale."""
-    return F.sum(expr.cast("decimal(28,0)")).cast("double") / F.lit(float(scale))
-
-
 def _dec_final(c: str, scale: int):
     """Final-level exact sum of long partials → double at the scale."""
     return F.sum(F.col(c).cast("decimal(28,0)")).cast("double") / F.lit(float(scale))

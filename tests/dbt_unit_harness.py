@@ -20,6 +20,7 @@ from decimal import Decimal
 from pathlib import Path
 
 import duckdb
+import pytest
 import yaml
 
 REFERENCE = Path("/root/reference")
@@ -118,8 +119,22 @@ INPUT_SCHEMAS: dict[str, str] = {
 }
 
 
-def load_unit_tests(path: Path) -> list[dict]:
-    return yaml.safe_load(path.read_text())["unit_tests"]
+def load_unit_tests(*paths: Path) -> dict[str, dict]:
+    """The unit tests of every given unit_tests.yml, by name. A file
+    that is absent (no reference checkout) contributes nothing."""
+    return {
+        t["name"]: t
+        for path in paths
+        if path.exists()
+        for t in yaml.safe_load(path.read_text())["unit_tests"]
+    }
+
+
+def unit_test_params(names: list[str]) -> list:
+    """Parametrize values for the YAML-driven cases: ``names``, or, when
+    no unit test was loaded, one case that skips and says why."""
+    return names or [pytest.param(None, id="no_unit_tests_yml", marks=pytest.mark.skip(
+        reason=f"no unit_tests.yml under {REFERENCE / 'models'}"))]
 
 
 def _prep_sql(sql: str) -> str:

@@ -27,12 +27,13 @@ from tests.dbt_unit_harness import (
     input_name,
     load_unit_tests,
     rows_match,
+    unit_test_params,
 )
 
 INTERMEDIATE = Path("/root/reference/models/intermediate/unit_tests.yml")
 MARTS = Path("/root/reference/models/marts/unit_tests.yml")
 
-ALL_TESTS = {t["name"]: t for t in load_unit_tests(INTERMEDIATE) + load_unit_tests(MARTS)}
+ALL_TESTS = load_unit_tests(INTERMEDIATE, MARTS)
 
 # The reference disables this one upstream (marts/unit_tests.yml:1272-1273,
 # config.enabled: false) — and it IS broken as written: the new batch's
@@ -59,7 +60,7 @@ INCREMENTAL_TESTS = sorted(
 )
 
 
-@pytest.mark.parametrize("name", INCREMENTAL_TESTS)
+@pytest.mark.parametrize("name", unit_test_params(INCREMENTAL_TESTS))
 def test_dbt_incremental_unit(spark, name):
     t = ALL_TESTS[name]
     overrides: dict = {}

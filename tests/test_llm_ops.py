@@ -470,7 +470,9 @@ def test_all_pairs_cosine_matches_expression(spark):
     expression form (self-join + aggregate/zip_with cosine, rounded
     HALF_UP to 6) pair-for-pair. Compared at threshold -1.0 so EVERY
     pair's rounded sim is checked (the 0.95 entries emit few/no rows at
-    test scale), plus the thresholded survivor set, plus empty input."""
+    test scale), plus the thresholded survivor set, plus empty input.
+    A null vector pairs with nothing: its expression sim is null, which
+    no threshold admits."""
     import random
 
     from pyspark.sql import functions as F
@@ -486,11 +488,12 @@ def test_all_pairs_cosine_matches_expression(spark):
     rows[1] = (1, list(rows[0][1]))
     rows[2] = (2, [x + 1e-7 for x in rows[0][1]])
     rows[3] = (3, [-x for x in rows[0][1]])
+    rows[4] = (4, None)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     a = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     b = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
-    expr = {
+    expr_all = {
         (r.id_a, r.id_b): r.sim
         for r in a.join(b, F.col("id_a") < F.col("id_b"))
         .select(
@@ -498,6 +501,10 @@ def test_all_pairs_cosine_matches_expression(spark):
         )
         .collect()
     }
+    assert {k for k, v in expr_all.items() if v is None} == {
+        k for k in expr_all if 4 in k
+    }
+    expr = {k: v for k, v in expr_all.items() if v is not None}
     blas = {
         (r.id_a, r.id_b): r.cosine_sim
         for r in all_pairs_cosine(
@@ -542,8 +549,8 @@ def test_simhash_votes_mapper_matches_expression(spark):
     ._simhash64_votes_fn) must be bit-identical to the expression form
     (functions/text.simhash64 over xxhash64 token hashes): votes are
     exact integer sums, a bit is set iff votes > 0 (strictly — ties
-    stay 0), and an empty token array yields simhash 0. Random token
-    hash arrays incl. sign/overflow edges and empty docs."""
+    stay 0), and an empty or null token array yields simhash 0. Random
+    token hash arrays incl. sign/overflow edges, empty and null docs."""
     import random
 
     from pyspark.sql import functions as F, types as T
@@ -559,6 +566,7 @@ def test_simhash_votes_mapper_matches_expression(spark):
     rows[0] = (0, [0, 1, -1, 2**63 - 1, -(2**63)])
     rows[1] = (1, [])  # aggregate over empty array = 0 votes = simhash 0
     rows[2] = (2, [3, 3])  # even count: every vote a tie or ±2, ties stay 0
+    rows[3] = (3, None)  # null token array = simhash 0, like the expression
     df = spark.createDataFrame(rows, "doc_id long, toks array<long>")
 
     # Expression form expects TOKEN STRINGS and hashes them itself; feed
@@ -572,6 +580,7 @@ def test_simhash_votes_mapper_matches_expression(spark):
                      range(rng.randint(0, 12))))
         for i in range(40)
     ]
+    str_rows[0] = (0, None)  # null text row: null token array
     sdf = spark.createDataFrame(str_rows, "doc_id long, text string")
     toks = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != "")
     expr_out = {
@@ -593,7 +602,7 @@ def test_simhash_votes_mapper_matches_expression(spark):
             ),
         ).collect()
     }
-    assert expr_out == numpy_out
+    assert expr_out == numpy_out and expr_out[0] == 0
 
     # And the mapper over raw long arrays vs a direct per-row vote in
     # Python (independent reference, covers the full 64-bit range).
@@ -617,7 +626,7 @@ def test_simhash_votes_mapper_matches_expression(spark):
             ),
         ).collect()
     }
-    assert mapped == {i: ref(hs) for i, hs in rows}
+    assert mapped == {i: ref(hs or []) for i, hs in rows}
 
 
 @pytest.mark.full

@@ -13,12 +13,13 @@ from tests.dbt_unit_harness import (
     input_name,
     load_unit_tests,
     rows_match,
+    unit_test_params,
 )
 
 INTERMEDIATE = Path("/root/reference/models/intermediate/unit_tests.yml")
 MARTS = Path("/root/reference/models/marts/unit_tests.yml")
 
-ALL_TESTS = {t["name"]: t for t in load_unit_tests(INTERMEDIATE) + load_unit_tests(MARTS)}
+ALL_TESTS = load_unit_tests(INTERMEDIATE, MARTS)
 
 FULL_REFRESH_TESTS = sorted(
     name
@@ -28,7 +29,7 @@ FULL_REFRESH_TESTS = sorted(
 )
 
 
-@pytest.mark.parametrize("name", FULL_REFRESH_TESTS)
+@pytest.mark.parametrize("name", unit_test_params(FULL_REFRESH_TESTS))
 def test_dbt_unit(spark, name):
     t = ALL_TESTS[name]
     overrides = {}
