@@ -22,6 +22,7 @@ import sys
 from pyspark.sql import SparkSession
 
 from kwwhat_spark.models.base import MODELS, VIEW_MODELS, Pipeline
+from kwwhat_spark.sinks import write_marts
 from kwwhat_spark.sources.ocpp import DEMO_SEED_DIR, load_ocpp_sources
 
 
@@ -42,15 +43,13 @@ def cmd_build(spark: SparkSession, args) -> int:
         cache_views=("stg_ocpp_logs",),
     )
     names = args.models or [m for m in MODELS if m not in VIEW_MODELS]
-    # Build every model first, independent branches side by side; the
-    # loop below then only writes and counts finished checkpoints.
+    # refs (in write_marts, or in the loop) builds every model first,
+    # independent branches side by side; the loop then only counts
+    # finished checkpoints.
+    paths = write_marts(pipe, args.out, names) if args.out else {}
     for name, df in zip(names, pipe.refs(*names)):
-        if args.out:
-            path = os.path.join(args.out, name)
-            df.write.mode("overwrite").parquet(path)
-            print(f"{name}: {df.count()} rows -> {path}")
-        else:
-            print(f"{name}: {df.count()} rows")
+        where = f" -> {paths[name]}" if name in paths else ""
+        print(f"{name}: {df.count()} rows{where}")
     return 0
 
 

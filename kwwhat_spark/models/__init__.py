@@ -1,7 +1,10 @@
 from kwwhat_spark.models.base import MODELS, Pipeline, model  # noqa: F401
 
-# Model modules self-register on import (topological order irrelevant —
-# resolution is lazy via Pipeline.ref()).
+# Model modules self-register on import. Resolution is lazy
+# (Pipeline.ref()), but registration order is the incremental batch
+# order (kwwhat_spark/plans/incremental.py INCREMENTAL_ORDER): keep each
+# incremental model after every incremental model it reads
+# (tests/test_model_config.py checks it).
 from kwwhat_spark.models import staging  # noqa: E402,F401
 from kwwhat_spark.models import hardware  # noqa: E402,F401
 from kwwhat_spark.models import status  # noqa: E402,F401

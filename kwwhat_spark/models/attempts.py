@@ -24,7 +24,9 @@ from kwwhat_spark.functions.core import array_concat_nullaware, surrogate_key
 from kwwhat_spark.models.base import Pipeline, model
 
 
-@model("fact_charge_attempts")
+@model("fact_charge_attempts",
+       unique_key=["charger_id", "connector_id", "charge_attempt_start_ts"],
+       cluster_by="charge_attempt_start_ts")
 def fact_charge_attempts(p: Pipeline) -> DataFrame:
     preparing_src, transactions_src = p.refs("int_connector_preparing", "int_transactions")
 

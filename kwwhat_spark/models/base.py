@@ -46,22 +46,42 @@ from kwwhat_spark.threads import run_all
 
 MODELS: dict[str, Callable[["Pipeline"], DataFrame]] = {}
 
-# Reference materializations (dbt_project.yml:38-42 + per-model configs):
-# views stay lazy, everything else is materialised on first resolution as
-# an in-memory table whose lineage is cut (see Pipeline.ref).
-VIEW_MODELS = {
-    "stg_ocpp_logs",
-    "stg_chargers",
-    "stg_ports",
-    "stg_connectors",
-    "fact_uptime",
-    "fact_charger_commissioned_daily",
-}
+# Per-model config, filled only by @model (the reference's per-model
+# dbt config() block and dbt_project.yml:38-42 materializations):
+# - VIEW_MODELS: views stay lazy; everything else is materialised on
+#   first resolution as an in-memory table whose lineage is cut (see
+#   Pipeline._build).
+# - UNIQUE_KEYS: the merge key of each incremental model; a model with
+#   one is an incremental model (kwwhat_spark/plans/incremental.py).
+# - CLUSTER_BY: the timestamp/date column the model is clustered by; the
+#   partitioned state store and the mart sinks partition by its date.
+VIEW_MODELS: set[str] = set()
+UNIQUE_KEYS: dict[str, list[str]] = {}
+CLUSTER_BY: dict[str, str] = {}
 
 
-def model(name: str):
+def model(name: str, view: bool = False, unique_key: list[str] | None = None,
+          cluster_by: str | None = None):
+    """Register ``fn`` as model ``name`` with its config. Registration
+    order is the incremental batch order, so an incremental model is
+    declared after every incremental model it reads.
+
+    An incremental model's ``cluster_by`` must be one of its
+    ``unique_key`` columns: the partitioned state store derives a row's
+    partition from it, and a merged row must land in the partition of
+    the row it replaces."""
+    if unique_key is not None and cluster_by is not None and cluster_by not in unique_key:
+        raise ValueError(f"model {name!r}: cluster_by {cluster_by!r} is not one of "
+                         f"its unique_key columns {unique_key}")
+
     def deco(fn: Callable[["Pipeline"], DataFrame]):
         MODELS[name] = fn
+        if view:
+            VIEW_MODELS.add(name)
+        if unique_key is not None:
+            UNIQUE_KEYS[name] = unique_key
+        if cluster_by is not None:
+            CLUSTER_BY[name] = cluster_by
         return fn
 
     return deco

@@ -21,7 +21,8 @@ from kwwhat_spark.functions.core import datediff_boundary, surrogate_key
 from kwwhat_spark.models.base import Pipeline, model
 
 
-@model("fact_downtime_daily")
+@model("fact_downtime_daily", unique_key=["date_id", "charger_id", "port_id", "reason"],
+       cluster_by="date_id")
 def fact_downtime_daily(p: Pipeline) -> DataFrame:
     int_ports, faulted_outages, offline_outages, int_chargers = p.refs(
         "int_ports", "int_faulted_outages", "int_offline_outages", "int_chargers")
@@ -119,7 +120,7 @@ def fact_downtime_daily(p: Pipeline) -> DataFrame:
     )
 
 
-@model("fact_charger_commissioned_daily")
+@model("fact_charger_commissioned_daily", view=True, cluster_by="date_id")
 def fact_charger_commissioned_daily(p: Pipeline) -> DataFrame:
     (chargers,) = p.refs("int_chargers")
     spans = (
@@ -161,7 +162,7 @@ def fact_charger_commissioned_daily(p: Pipeline) -> DataFrame:
     return minutes.filter(F.col("minutes") > 0)
 
 
-@model("fact_uptime")
+@model("fact_uptime", view=True, cluster_by="date_id")
 def fact_uptime(p: Pipeline) -> DataFrame:
     int_ports, commissioned, downtime, int_chargers = p.refs(
         "int_ports", "fact_charger_commissioned_daily", "fact_downtime_daily", "int_chargers")
@@ -200,7 +201,7 @@ def fact_uptime(p: Pipeline) -> DataFrame:
     )
 
 
-@model("int_driver_aggregates")
+@model("int_driver_aggregates", unique_key=["id_tag"])
 def int_driver_aggregates(p: Pipeline) -> DataFrame:
     (attempts,) = p.refs("fact_charge_attempts")
     from_ts, _, to_ts = p.window("int_driver_aggregates")

@@ -115,7 +115,10 @@ def _windowed_logs(p: Pipeline, from_ts, to_ts) -> DataFrame:
     )
 
 
-@model("int_meter_values")
+@model("int_meter_values",
+       unique_key=["charger_id", "transaction_id", "ingested_ts", "connector_id",
+                   "measurand", "unit", "phase"],
+       cluster_by="ingested_ts")
 def int_meter_values(p: Pipeline) -> DataFrame:
     logs, int_transactions, int_connectors, int_chargers = p.refs(
         "stg_ocpp_logs", "int_transactions", "int_connectors", "int_chargers")
@@ -243,7 +246,10 @@ def int_meter_values(p: Pipeline) -> DataFrame:
     )
 
 
-@model("fact_interval_data")
+@model("fact_interval_data",
+       unique_key=["charger_id", "transaction_id", "ingested_ts", "connector_id",
+                   "measurand", "unit", "phase", "meter_15min_interval_start"],
+       cluster_by="meter_15min_interval_start")
 def fact_interval_data(p: Pipeline) -> DataFrame:
     logs, imv = p.refs("stg_ocpp_logs", "int_meter_values")
     from_ts, _, to_ts = p.window(

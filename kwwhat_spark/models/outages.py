@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from kwwhat_spark.models.base import Pipeline, model
 
 
-@model("int_offline_outages")
+@model("int_offline_outages", unique_key=["charger_id", "from_ts"], cluster_by="from_ts")
 def int_offline_outages(p: Pipeline) -> DataFrame:
     logs, chargers = p.refs("stg_ocpp_logs", "int_chargers")
     from_ts, _, to_ts = p.window(
@@ -129,7 +129,8 @@ def int_offline_outages(p: Pipeline) -> DataFrame:
     )
 
 
-@model("int_faulted_outages")
+@model("int_faulted_outages", unique_key=["charger_id", "port_id", "from_ts"],
+       cluster_by="from_ts")
 def int_faulted_outages(p: Pipeline) -> DataFrame:
     status_changes, int_ports = p.refs("int_status_changes", "int_ports")
     # The one model that still asks is_incremental for its window: only

@@ -31,7 +31,8 @@ def _gate(action_set, col):
     return F.when(F.col("action").isin(actions), F.col(col))
 
 
-@model("int_connector_preparing")
+@model("int_connector_preparing", unique_key=["charger_id", "connector_id", "ingested_ts"],
+       cluster_by="ingested_ts")
 def int_connector_preparing(p: Pipeline) -> DataFrame:
     status_changes, logs, int_connectors, int_chargers = p.refs(
         "int_status_changes", "stg_ocpp_logs", "int_connectors", "int_chargers")

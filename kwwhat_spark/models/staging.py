@@ -144,7 +144,7 @@ def split_envelope(
     return caps.select(*cols)
 
 
-@model("stg_ocpp_logs")
+@model("stg_ocpp_logs", view=True)
 def stg_ocpp_logs(p: Pipeline) -> DataFrame:
     return split_envelope(
         p.source("raw_ocpp_logs"),
@@ -153,7 +153,7 @@ def stg_ocpp_logs(p: Pipeline) -> DataFrame:
     )
 
 
-@model("stg_chargers")
+@model("stg_chargers", view=True)
 def stg_chargers(p: Pipeline) -> DataFrame:
     return (
         p.source("raw_chargers")
@@ -167,7 +167,7 @@ def stg_chargers(p: Pipeline) -> DataFrame:
     )
 
 
-@model("stg_ports")
+@model("stg_ports", view=True)
 def stg_ports(p: Pipeline) -> DataFrame:
     return (
         p.source("raw_ports")
@@ -179,7 +179,7 @@ def stg_ports(p: Pipeline) -> DataFrame:
     )
 
 
-@model("stg_connectors")
+@model("stg_connectors", view=True)
 def stg_connectors(p: Pipeline) -> DataFrame:
     return p.source("raw_connectors").select(
         F.col("charge_point_id").cast("string").alias("charger_id"),

@@ -27,7 +27,8 @@ def _payload_str(path: str, when_actions: list[str] | str):
     return F.when(F.col("action").isin(actions), F.col(f"__pj.{path}")).cast("string")
 
 
-@model("int_status_changes")
+@model("int_status_changes", unique_key=["charger_id", "connector_id", "ingested_ts"],
+       cluster_by="ingested_ts")
 def int_status_changes(p: Pipeline) -> DataFrame:
     logs, int_connectors = p.refs("stg_ocpp_logs", "int_connectors")
     from_ts, buffer_from, to_ts = p.window(
@@ -214,7 +215,7 @@ def int_status_changes(p: Pipeline) -> DataFrame:
     )
 
 
-@model("int_connector_latest_status")
+@model("int_connector_latest_status", unique_key=["charger_id", "connector_id", "port_id"])
 def int_connector_latest_status(p: Pipeline) -> DataFrame:
     (changes,) = p.refs("int_status_changes")
     from_ts, _, _ = p.window("int_connector_latest_status")

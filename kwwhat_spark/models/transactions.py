@@ -24,7 +24,8 @@ from kwwhat_spark.models.payload import parsed_payload, payload_field
 _NUMERIC = "decimal(28,6)"
 
 
-@model("int_transactions")
+@model("int_transactions", unique_key=["charger_id", "connector_id", "ingested_ts"],
+       cluster_by="ingested_ts")
 def int_transactions(p: Pipeline) -> DataFrame:
     logs, int_connectors, int_chargers = p.refs(
         "stg_ocpp_logs", "int_connectors", "int_chargers")

@@ -125,7 +125,9 @@ def _merge_with_buffer(p: Pipeline, new_visits: DataFrame, buffer_from) -> DataF
     )
 
 
-@model("fact_visits")
+@model("fact_visits",
+       unique_key=["location_id", "first_charger_id", "first_port_id", "visit_start_ts"],
+       cluster_by="visit_start_ts")
 def fact_visits(p: Pipeline) -> DataFrame:
     attempts_src, dim_connectors, dim_chargers = p.refs(
         "fact_charge_attempts", "dim_connectors", "dim_chargers")

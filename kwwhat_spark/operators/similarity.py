@@ -202,7 +202,10 @@ def all_pairs_cosine(
     provably lacks (r13: zero zero-norm rows at every SF) and the
     docstring contract forbids. Null vectors are excluded on both
     sides, like the expression form, whose null sim fails every
-    threshold compare.
+    threshold compare. Ragged vectors: a pair of unequal length has a
+    null similarity in the expression form (zip_with pads the shorter
+    array with nulls), so it never survives here either; only vectors
+    of equal length are compared.
 
     Like brute_force_topk the corpus must fit the driver/broadcast
     (bounded collect guard); the all-pairs O(n²) output contract already
@@ -232,13 +235,25 @@ def all_pairs_cosine(
     schema = T.StructType(out_fields)
     if not rows:
         return df.sparkSession.createDataFrame([], schema)
-    all_ids = np.array([r[0] for r in rows])
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1)
-    bc = df.sparkSession.sparkContext.broadcast((all_ids, mat, norms))
+    # One (ids, matrix, norms) per vector length: only equal-length
+    # vectors pair (see the docstring).
+    by_len: dict[int, list] = {}
+    for r in rows:
+        by_len.setdefault(len(r[1]), []).append(r)
+    corpus = {}
+    for d, grp in by_len.items():
+        mat = np.array([r[1] for r in grp], dtype=np.float64)
+        corpus[d] = (np.array([r[0] for r in grp]), mat, np.linalg.norm(mat, axis=1))
+    bc = df.sparkSession.sparkContext.broadcast(corpus)
 
     def pairs(batches):
-        ids_b, m, n = bc.value
+        for pdf in batches:
+            lens = pdf[vec_col].map(len)
+            for d in lens.unique():
+                if d in bc.value:
+                    yield from pairs_of_length(pdf[lens == d], *bc.value[d])
+
+    def pairs_of_length(pdf, ids_b, m, n):
         ncorp = len(ids_b)
         # Row-block each Arrow batch so one sims block stays ~32 MB
         # (block × ncorp float64) no matter the corpus size — the
@@ -246,24 +261,21 @@ def all_pairs_cosine(
         # O(batch × ncorp) and a corpus near the guard bound would OOM
         # the worker. At test scales block ≥ the whole batch (no-op).
         block = max(1, block_doubles // max(1, ncorp))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            avecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            aids = pdf[id_col].to_numpy()
-            an = np.linalg.norm(avecs, axis=1)
-            for lo in range(0, len(aids), block):
-                hi = min(lo + block, len(aids))
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sims = _round6_half_up(
-                        (avecs[lo:hi] @ m.T) / (an[lo:hi, None] * n[None, :])
-                    )
-                keep = (sims >= threshold) & (aids[lo:hi, None] < ids_b[None, :])
-                ai, bi = np.nonzero(keep)
-                cols = {"id_a": aids[lo:hi][ai], "id_b": ids_b[bi]}
-                if keep_sim:
-                    cols[sim_col] = sims[ai, bi]
-                yield pd.DataFrame(cols)
+        avecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        aids = pdf[id_col].to_numpy()
+        an = np.linalg.norm(avecs, axis=1)
+        for lo in range(0, len(aids), block):
+            hi = min(lo + block, len(aids))
+            with np.errstate(divide="ignore", invalid="ignore"):
+                sims = _round6_half_up(
+                    (avecs[lo:hi] @ m.T) / (an[lo:hi, None] * n[None, :])
+                )
+            keep = (sims >= threshold) & (aids[lo:hi, None] < ids_b[None, :])
+            ai, bi = np.nonzero(keep)
+            cols = {"id_a": aids[lo:hi][ai], "id_b": ids_b[bi]}
+            if keep_sim:
+                cols[sim_col] = sims[ai, bi]
+            yield pd.DataFrame(cols)
 
     return vecs.mapInPandas(pairs, schema=schema)
 

@@ -22,46 +22,13 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kwwhat_spark.models.base import MODELS, Pipeline
+from kwwhat_spark.models.base import CLUSTER_BY, MODELS, UNIQUE_KEYS, Pipeline
 from kwwhat_spark.operators.cachescope import release
 
-# Merge keys per incremental model (reference per-model `unique_key`).
-UNIQUE_KEYS: dict[str, list[str]] = {
-    "int_status_changes": ["charger_id", "connector_id", "ingested_ts"],
-    "int_connector_latest_status": ["charger_id", "connector_id", "port_id"],
-    "int_connector_preparing": ["charger_id", "connector_id", "ingested_ts"],
-    "int_transactions": ["charger_id", "connector_id", "ingested_ts"],
-    "int_meter_values": [
-        "charger_id", "transaction_id", "ingested_ts", "connector_id",
-        "measurand", "unit", "phase",
-    ],
-    "int_driver_aggregates": ["id_tag"],
-    "int_faulted_outages": ["charger_id", "port_id", "from_ts"],
-    "int_offline_outages": ["charger_id", "from_ts"],
-    "fact_charge_attempts": ["charger_id", "connector_id", "charge_attempt_start_ts"],
-    "fact_visits": ["location_id", "first_charger_id", "first_port_id", "visit_start_ts"],
-    "fact_interval_data": [
-        "charger_id", "transaction_id", "ingested_ts", "connector_id",
-        "measurand", "unit", "phase", "meter_15min_interval_start",
-    ],
-    "fact_downtime_daily": ["date_id", "charger_id", "port_id", "reason"],
-}
-
-# Execution order for a batch (upstream before downstream).
-INCREMENTAL_ORDER = [
-    "int_status_changes",
-    "int_connector_latest_status",
-    "int_transactions",
-    "int_connector_preparing",
-    "fact_charge_attempts",
-    "fact_visits",
-    "int_driver_aggregates",
-    "int_faulted_outages",
-    "int_offline_outages",
-    "fact_downtime_daily",
-    "int_meter_values",
-    "fact_interval_data",
-]
+# Execution order for a batch: the incremental models (those @model
+# gives a unique_key) in registration order, which puts each after every
+# incremental model it reads.
+INCREMENTAL_ORDER = [m for m in MODELS if m in UNIQUE_KEYS]
 
 
 def _has_part_files(path: str) -> bool:
@@ -218,12 +185,13 @@ class PartitionedStateStore(ParquetStateStore):
     reference's 3-month windows viable at 100 TB. ParquetStateStore's
     full anti-join ∪ rewrite is O(table) per batch.
 
-    Correctness precondition (holds for every model here): the partition
-    expression is a function of the model's unique-key columns, so a
-    merged row lands in the same partition as the row it replaces and no
-    stale copy can survive in an untouched partition. Models without a
-    cluster timestamp (tiny snapshot/entity tables) fall back to the
-    versioned full-rewrite store.
+    Correctness precondition: the partition expression is a function of
+    the model's unique-key columns, so a merged row lands in the same
+    partition as the row it replaces and no stale copy can survive in an
+    untouched partition. The default expression is ``to_date`` of the
+    model's ``cluster_by``, which @model requires to be a unique-key
+    column. Models without a ``cluster_by`` (tiny snapshot/entity
+    tables) fall back to the versioned full-rewrite store.
 
     Reference parity: `cluster_by` ts per model (int_status_changes.sql:6
     and siblings) — the same column choices, promoted from a clustering
@@ -231,25 +199,13 @@ class PartitionedStateStore(ParquetStateStore):
     MERGE with partition predicates (or replaceWhere).
     """
 
-    # model -> SQL expr deriving the partition date FROM KEY COLUMNS.
-    PARTITION_EXPRS: dict[str, str] = {
-        "int_status_changes": "to_date(ingested_ts)",
-        "int_connector_preparing": "to_date(ingested_ts)",
-        "int_transactions": "to_date(ingested_ts)",
-        "int_meter_values": "to_date(ingested_ts)",
-        "int_faulted_outages": "to_date(from_ts)",
-        "int_offline_outages": "to_date(from_ts)",
-        "fact_charge_attempts": "to_date(charge_attempt_start_ts)",
-        "fact_visits": "to_date(visit_start_ts)",
-        "fact_interval_data": "to_date(meter_15min_interval_start)",
-        "fact_downtime_daily": "date_id",
-    }
-
     def __init__(self, spark: SparkSession, state_dir: str, partition_exprs=None):
+        """``partition_exprs``: model -> SQL expression deriving the
+        partition date from key columns; by default ``to_date`` of each
+        incremental model's ``cluster_by``."""
         super().__init__(spark, state_dir)
-        self.partition_exprs = (
-            dict(self.PARTITION_EXPRS) if partition_exprs is None else partition_exprs
-        )
+        self.partition_exprs = partition_exprs if partition_exprs is not None else {
+            m: f"to_date({CLUSTER_BY[m]})" for m in INCREMENTAL_ORDER if m in CLUSTER_BY}
 
     def _part_path(self, name: str) -> str:
         return os.path.join(self.state_dir, name, "partitioned")

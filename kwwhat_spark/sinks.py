@@ -18,25 +18,9 @@ from functools import partial
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kwwhat_spark.models.base import Pipeline
+from kwwhat_spark.models.base import CLUSTER_BY, Pipeline
 from kwwhat_spark.operators.cachescope import release
 from kwwhat_spark.threads import run_all
-
-# Mart -> timestamp/date column that mirrors the reference's cluster_by.
-PARTITION_COLUMN: dict[str, str] = {
-    "fact_charge_attempts": "charge_attempt_start_ts",
-    "fact_visits": "visit_start_ts",
-    "fact_interval_data": "meter_15min_interval_start",
-    "fact_downtime_daily": "date_id",
-    "fact_uptime": "date_id",
-    "fact_charger_commissioned_daily": "date_id",
-    "int_status_changes": "ingested_ts",
-    "int_transactions": "ingested_ts",
-    "int_connector_preparing": "ingested_ts",
-    "int_meter_values": "ingested_ts",
-    "int_offline_outages": "from_ts",
-    "int_faulted_outages": "from_ts",
-}
 
 
 def write_partitioned(df: DataFrame, path: str, ts_col: str | None) -> None:
@@ -58,16 +42,15 @@ def write_partitioned(df: DataFrame, path: str, ts_col: str | None) -> None:
     )
 
 
-def write_marts(pipe: Pipeline, out_dir: str, models: list[str] | None = None) -> dict[str, str]:
-    """Materialize models under out_dir, date-partitioned where declared.
-    Returns {model: path}. The models are built together (``refs``),
-    then written concurrently: each write is a few short stages, bound
-    by driver overhead rather than cores."""
-    names = models or list(PARTITION_COLUMN)
-    paths = {name: os.path.join(out_dir, name) for name in names}
-    dfs = pipe.refs(*names)
-    run_all([partial(write_partitioned, df, paths[name], PARTITION_COLUMN.get(name))
-             for name, df in zip(names, dfs)])
+def write_marts(pipe: Pipeline, out_dir: str, models: list[str]) -> dict[str, str]:
+    """Materialize ``models`` under out_dir, each date-partitioned by its
+    ``cluster_by`` if it has one. Returns {model: path}. The models are
+    built together (``refs``), then written concurrently: each write is
+    a few short stages, bound by driver overhead rather than cores."""
+    paths = {name: os.path.join(out_dir, name) for name in models}
+    dfs = pipe.refs(*models)
+    run_all([partial(write_partitioned, df, paths[name], CLUSTER_BY.get(name))
+             for name, df in zip(models, dfs)])
     return paths
 
 

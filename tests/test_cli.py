@@ -8,11 +8,22 @@ import pytest
 # Default runs exclude it (pytest.ini addopts); run with -m full.
 pytestmark = pytest.mark.full
 
+import csv
+import os
 from types import SimpleNamespace
 
 from kwwhat_spark.__main__ import cmd_build, cmd_check, cmd_incremental, cmd_metrics
 from kwwhat_spark.quality import load_checks_yaml
 from kwwhat_spark.sources.ocpp import DEMO_SEED_DIR
+from perfbench import fleet
+
+
+@pytest.fixture(scope="module")
+def fleet_dir(tmp_path_factory):
+    """A one-charger fleet generated by perfbench.fleet."""
+    out = str(tmp_path_factory.mktemp("one_charger_fleet"))
+    fleet.write_fleet(out, fleet.generate(7, 1))
+    return out
 
 
 def _args(tmp_path, **kw):
@@ -40,11 +51,16 @@ def test_shipped_checks_parse():
     }
 
 
-def test_cmd_build_writes_marts(spark, tmp_path):
-    args = _args(tmp_path)
+def test_cmd_build_writes_marts(spark, tmp_path, fleet_dir):
+    args = _args(tmp_path, seed_dir=fleet_dir,
+                 models=["dim_ports", "fact_location_capacity", "fact_charge_attempts"])
     assert cmd_build(spark, args) == 0
     out = spark.read.parquet(str(tmp_path / "marts" / "dim_ports"))
-    assert out.count() == 4
+    with open(os.path.join(fleet_dir, "ports.csv")) as f:
+        assert out.count() == len(list(csv.DictReader(f)))
+    # A fact model lands date-partitioned by its cluster_by.
+    attempts = tmp_path / "marts" / "fact_charge_attempts"
+    assert any(p.name.startswith("_date=") for p in attempts.iterdir())
 
 
 def test_cmd_check_passes_on_seed(spark, tmp_path):
@@ -71,14 +87,14 @@ def test_cmd_bi_answers_and_refuses(spark, tmp_path, capsys):
     assert "not defined in the semantic model" in capsys.readouterr().out
 
 
-def test_cmd_incremental_builds_state(spark, tmp_path):
-    assert cmd_incremental(spark, _args(tmp_path)) == 0
+def test_cmd_incremental_builds_state(spark, tmp_path, fleet_dir):
+    assert cmd_incremental(spark, _args(tmp_path, seed_dir=fleet_dir)) == 0
     state = spark.read.parquet(str(tmp_path / "state" / "fact_visits" / "v0"))
     assert state.count() > 0
 
 
-def test_cmd_incremental_partitioned_store(spark, tmp_path):
-    assert cmd_incremental(spark, _args(tmp_path, partitioned=True)) == 0
+def test_cmd_incremental_partitioned_store(spark, tmp_path, fleet_dir):
+    assert cmd_incremental(spark, _args(tmp_path, seed_dir=fleet_dir, partitioned=True)) == 0
     part_dir = tmp_path / "state" / "fact_visits" / "partitioned"
     assert any(p.name.startswith("_part=") for p in part_dir.iterdir())
 

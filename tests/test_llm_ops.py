@@ -471,8 +471,9 @@ def test_all_pairs_cosine_matches_expression(spark):
     HALF_UP to 6) pair-for-pair. Compared at threshold -1.0 so EVERY
     pair's rounded sim is checked (the 0.95 entries emit few/no rows at
     test scale), plus the thresholded survivor set, plus empty input.
-    A null vector pairs with nothing: its expression sim is null, which
-    no threshold admits."""
+    A null vector pairs with nothing, nor does a vector with one of
+    another length: the expression sim is null, which no threshold
+    admits."""
     import random
 
     from pyspark.sql import functions as F
@@ -489,6 +490,12 @@ def test_all_pairs_cosine_matches_expression(spark):
     rows[2] = (2, [x + 1e-7 for x in rows[0][1]])
     rows[3] = (3, [-x for x in rows[0][1]])
     rows[4] = (4, None)
+    # Ragged: 5 and 6 are shorter than the rest and pair only with each
+    # other (parallel, so they survive); every unequal-length pair's
+    # expression sim is null, which no threshold admits.
+    rows[5] = (5, rows[5][1][:5])
+    rows[6] = (6, [2 * x for x in rows[5][1]])
+    short = {5, 6}
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     a = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
@@ -502,7 +509,7 @@ def test_all_pairs_cosine_matches_expression(spark):
         .collect()
     }
     assert {k for k, v in expr_all.items() if v is None} == {
-        k for k in expr_all if 4 in k
+        k for k in expr_all if 4 in k or len(short & set(k)) == 1
     }
     expr = {k: v for k, v in expr_all.items() if v is not None}
     blas = {
@@ -520,6 +527,7 @@ def test_all_pairs_cosine_matches_expression(spark):
     assert thresholded == {k for k, v in expr.items() if v >= 0.95}
     assert (1, 2) not in thresholded or expr[(1, 2)] >= 0.95  # sanity
     assert (0, 1) in thresholded  # identical vectors survive
+    assert (5, 6) in thresholded  # so do equal-length ragged ones
 
     empty = all_pairs_cosine(
         df.filter(F.lit(False)), "vec_id", "embedding", 0.5, keep_sim=True
