@@ -58,11 +58,9 @@ def cmd_incremental(spark: SparkSession, args) -> int:
         INCREMENTAL_ORDER,
         IncrementalRunner,
         ParquetStateStore,
-        PartitionedStateStore,
     )
 
-    store_cls = PartitionedStateStore if args.partitioned else ParquetStateStore
-    store = store_cls(spark, args.state)
+    store = ParquetStateStore(spark, args.state)
     runner = IncrementalRunner(spark, store)
     runner.run_batch(load_ocpp_sources(spark, args.seed_dir))
     for name in INCREMENTAL_ORDER:
@@ -222,11 +220,6 @@ def main(argv: list[str] | None = None) -> int:
 
     p_inc = sub.add_parser("incremental", help="run one incremental merge batch")
     p_inc.add_argument("--state", required=True, help="state-store directory")
-    p_inc.add_argument(
-        "--partitioned",
-        action="store_true",
-        help="insert_overwrite state store (rewrite only the batch's date partitions)",
-    )
 
     p_check = sub.add_parser("check", help="run declared schema tests")
     p_check.add_argument("--checks", default=None, help="checks yml (default: shipped)")

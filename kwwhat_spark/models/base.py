@@ -54,7 +54,7 @@ MODELS: dict[str, Callable[["Pipeline"], DataFrame]] = {}
 # - UNIQUE_KEYS: the merge key of each incremental model; a model with
 #   one is an incremental model (kwwhat_spark/plans/incremental.py).
 # - CLUSTER_BY: the timestamp/date column the model is clustered by; the
-#   partitioned state store and the mart sinks partition by its date.
+#   state store and the mart sinks partition by its date.
 VIEW_MODELS: set[str] = set()
 UNIQUE_KEYS: dict[str, list[str]] = {}
 CLUSTER_BY: dict[str, str] = {}
@@ -67,7 +67,7 @@ def model(name: str, view: bool = False, unique_key: list[str] | None = None,
     declared after every incremental model it reads.
 
     An incremental model's ``cluster_by`` must be one of its
-    ``unique_key`` columns: the partitioned state store derives a row's
+    ``unique_key`` columns: the state store derives a row's date
     partition from it, and a merged row must land in the partition of
     the row it replaces."""
     if unique_key is not None and cluster_by is not None and cluster_by not in unique_key:

@@ -939,6 +939,45 @@ def semdedup(
     return assigned.groupBy("cluster_id").applyInPandas(dedup_cluster, schema=out_schema)
 
 
+_KNN_SCHEMA = "src_id long, dst_id long, cosine_sim double, rank int"
+
+
+def _unit_rows(mat):
+    """Rows of ``mat`` scaled to unit L2 norm; all-zero rows stay zero."""
+    import numpy as np
+
+    norms = np.linalg.norm(mat, axis=1)
+    norms[norms == 0.0] = 1.0
+    return mat / norms[:, None]
+
+
+def _topk_edges(q_ids, q_mat, c_ids, c_unit, k: int):
+    """The top-k kernel of knn_graph and knn_graph_blocked: for each
+    query row, the k corpus rows of highest cosine similarity, ordered
+    by (-sim, dst_id) with the self-edge skipped, as a (src_id, dst_id,
+    cosine_sim, rank) frame. ``c_unit`` is the corpus through
+    _unit_rows."""
+    import numpy as np
+    import pandas as pd
+
+    sims = _unit_rows(q_mat) @ c_unit.T
+    out = {"src_id": [], "dst_id": [], "cosine_sim": [], "rank": []}
+    for i, qid in enumerate(q_ids):
+        row = sims[i]
+        taken = 0
+        for j in np.lexsort((c_ids, -row)):
+            if c_ids[j] == qid:
+                continue
+            taken += 1
+            out["src_id"].append(qid)
+            out["dst_id"].append(c_ids[j])
+            out["cosine_sim"].append(row[j])
+            out["rank"].append(taken)
+            if taken == k:
+                break
+    return pd.DataFrame(out)
+
+
 def knn_graph(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -966,7 +1005,7 @@ def knn_graph(
 
     Scale: the broadcast corpus bounds this operator at ~executor-memory
     vectors (64-dim float64 ≈ 2 GB per 4M vectors); past that, switch to
-    the IVF/LSH entries or shard the corpus and union per-shard graphs.
+    knn_graph_blocked (block matmul) or the IVF/LSH entries.
     The matmul is embarrassingly parallel across input partitions.
     """
     import numpy as np
@@ -974,167 +1013,17 @@ def knn_graph(
     rows = df.select(id_col, vec_col).collect()
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     mat = np.array([r[1] for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0.0] = 1.0
-    normed = mat / norms[:, None]
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast((ids, normed))
-
-    schema = "src_id long, dst_id long, cosine_sim double, rank int"
+    bc = df.sparkSession.sparkContext.broadcast((ids, _unit_rows(mat)))
 
     def neighbors(batches):
-        import pandas as pd
-
-        c_ids, c_mat = bc.value
+        c_ids, c_unit = bc.value
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
             for lo in range(0, len(pdf), batch_rows):
                 chunk = pdf.iloc[lo : lo + batch_rows]
                 q = np.stack(chunk[vec_col].to_numpy()).astype(np.float64)
-                qn = np.linalg.norm(q, axis=1)
-                qn[qn == 0.0] = 1.0
-                sims = (q / qn[:, None]) @ c_mat.T
-                q_ids = chunk[id_col].to_numpy()
-                out_src, out_dst, out_sim, out_rank = [], [], [], []
-                for i, qid in enumerate(q_ids):
-                    row = sims[i]
-                    # top-k by (-sim, dst_id), excluding self
-                    order = np.lexsort((c_ids, -row))
-                    taken = 0
-                    for j in order:
-                        if c_ids[j] == qid:
-                            continue
-                        taken += 1
-                        out_src.append(qid)
-                        out_dst.append(c_ids[j])
-                        out_sim.append(row[j])
-                        out_rank.append(taken)
-                        if taken == k:
-                            break
-                yield pd.DataFrame(
-                    {
-                        "src_id": out_src,
-                        "dst_id": out_dst,
-                        "cosine_sim": out_sim,
-                        "rank": out_rank,
-                    }
-                )
+                yield _topk_edges(chunk[id_col].to_numpy(), q, c_ids, c_unit, k)
 
-    return df.select(id_col, vec_col).mapInPandas(neighbors, schema)
-
-
-def knn_graph_sharded(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    *,
-    k: int = 5,
-    n_shards: int = 4,
-    batch_rows: int = 4096,
-    max_shard_rows: int = 4_000_000,
-) -> DataFrame:
-    """knn_graph beyond broadcast range: block the corpus into n_shards by
-    id hash, broadcast ONE shard at a time, take each query row's top-k
-    against that shard, and merge the per-shard partials into the global
-    top-k with a window. Per-src top-k within every shard is a superset
-    of the global top-k's candidates, so the merge is lossless.
-
-    Scale contract (the piece plain knn_graph lacks): driver and executor
-    memory are bounded by ONE shard (corpus/n_shards rows), not the
-    corpus — each shard's partial edges are materialized eagerly
-    (localCheckpoint) and its broadcast destroyed before the next shard
-    loads, so at no point do two shard matrices coexist. Asserted, not
-    assumed: a shard exceeding max_shard_rows raises with the n_shards
-    to use. Cost: n_shards passes over the corpus (block-matmul shape —
-    at 100 TB you pick n_shards so a shard fits executor memory and the
-    passes pipeline over the scan).
-
-    Output schema and ordering semantics are identical to knn_graph
-    (src_id, dst_id, cosine_sim, rank; ties by dst_id ascending); an
-    agreement test pins the two paths to each other at test scale.
-    """
-    from pyspark.sql import Window as W
-
-    sc = df.sparkSession.sparkContext
-    src = df.select(id_col, vec_col)
-    partials = []
-    for s in range(n_shards):
-        shard = src.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)) == s)
-        # Queries = the FULL df, corpus = this shard only: collect the
-        # shard, guard its size, broadcast, scan all rows against it.
-        rows = shard.collect()
-        if not rows:
-            # A hash bucket can be empty for small corpora; an empty
-            # shard contributes no edges (and np.linalg.norm would
-            # raise AxisError on the 1-D empty matrix below).
-            continue
-        if len(rows) > max_shard_rows:
-            need = -(-len(rows) * n_shards // max_shard_rows)
-            raise ValueError(
-                f"knn_graph_sharded: shard {s} has {len(rows)} rows "
-                f"(> {max_shard_rows}); raise n_shards to >= {need}"
-            )
-        import numpy as np
-
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        mat = np.array([r[1] for r in rows], dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = 1.0
-        normed = mat / norms[:, None]
-        bc = sc.broadcast((ids, normed))
-        schema = "src_id long, dst_id long, cosine_sim double, rank int"
-
-        def neighbors(batches, _bc=bc):
-            import numpy as np
-            import pandas as pd
-
-            c_ids, c_mat = _bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for lo in range(0, len(pdf), batch_rows):
-                    chunk = pdf.iloc[lo : lo + batch_rows]
-                    q = np.stack(chunk[vec_col].to_numpy()).astype(np.float64)
-                    qn = np.linalg.norm(q, axis=1)
-                    qn[qn == 0.0] = 1.0
-                    sims = (q / qn[:, None]) @ c_mat.T
-                    q_ids = chunk[id_col].to_numpy()
-                    out = {"src_id": [], "dst_id": [], "cosine_sim": [], "rank": []}
-                    for i, qid in enumerate(q_ids):
-                        row = sims[i]
-                        order = np.lexsort((c_ids, -row))
-                        taken = 0
-                        for j in order:
-                            if c_ids[j] == qid:
-                                continue
-                            taken += 1
-                            out["src_id"].append(qid)
-                            out["dst_id"].append(c_ids[j])
-                            out["cosine_sim"].append(row[j])
-                            out["rank"].append(taken)
-                            if taken == k:
-                                break
-                    yield pd.DataFrame(out)
-
-        # Eager materialization bounds live broadcast memory to one shard.
-        part = src.mapInPandas(neighbors, schema).localCheckpoint(eager=True)
-        bc.destroy()
-        partials.append(part)
-
-    if not partials:  # empty corpus: every shard was empty
-        return df.sparkSession.createDataFrame(
-            [], "src_id long, dst_id long, cosine_sim double, rank int"
-        )
-    merged = partials[0]
-    for p in partials[1:]:
-        merged = merged.unionByName(p)
-    w = W.partitionBy("src_id").orderBy(F.desc("cosine_sim"), F.asc("dst_id"))
-    return (
-        merged.drop("rank")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return df.select(id_col, vec_col).mapInPandas(neighbors, _KNN_SCHEMA)
 
 
 def knn_graph_blocked(
@@ -1146,30 +1035,26 @@ def knn_graph_blocked(
     n_shards: int = 4,
     n_query_blocks: int | None = None,
 ) -> DataFrame:
-    """Executor-side block-matmul kNN (VERDICT r6 item 7): the fully
-    distributed alternative to knn_graph_sharded's driver staging.
-
-    knn_graph_sharded collects each corpus shard to the DRIVER before
-    broadcasting — bounded by max_shard_rows, but still a per-shard
-    driver residency + serialization cost that a 1000-executor run
-    would rather not pay. This variant never moves vectors through the
-    driver: corpus rows are hashed into ``n_shards`` blocks, query rows
+    """Executor-side block-matmul kNN (VERDICT r6 item 7): knn_graph
+    beyond broadcast range, with no vector ever moving through the
+    driver. Corpus rows are hashed into ``n_shards`` blocks, query rows
     into ``n_query_blocks`` blocks, each side is replicated across the
     other's block axis with a column-explode, and a cogrouped
     applyInPandas computes the (query-block × corpus-shard) BLAS matmul
     per task. Per-shard top-k partials merge into the global top-k with
-    a window, exactly as in knn_graph_sharded (the per-block top-k is a
-    candidate superset of the global top-k, so the merge is lossless).
+    a window (the per-block top-k is a candidate superset of the global
+    top-k, so the merge is lossless). It replaced a driver-staged
+    variant (shard by shard collected and broadcast): 1.07 s vs 58.3 s
+    at sf1 (BASELINE.md round 7).
 
     Cost shape: shuffle volume N·n_shards (queries) + N·n_query_blocks
-    (corpus) instead of n_shards driver round-trips; task memory is one
-    query block + one corpus shard. At 100 TB you size the two block
+    (corpus); task memory is one query block + one corpus shard. At 100 TB you size the two block
     counts so a block pair fits executor memory — the standard
     distributed block-matrix-multiply layout.
 
     Output schema and ordering semantics are identical to knn_graph
     (src_id, dst_id, cosine_sim, rank; self-edges excluded, ties by
-    dst_id ascending); an agreement test pins all three paths together.
+    dst_id ascending); an agreement test pins the two paths together.
     """
     from pyspark.sql import Window as W
 
@@ -1191,8 +1076,6 @@ def knn_graph_blocked(
         F.explode(qblock_axis).alias("_qb"),
     )
 
-    schema = "src_id long, dst_id long, cosine_sim double, rank int"
-
     def block(left, right):
         import numpy as np
         import pandas as pd
@@ -1203,35 +1086,14 @@ def knn_graph_blocked(
             )
         c_ids = right["c_id"].to_numpy(dtype=np.int64)
         c_mat = np.stack(right["c_vec"].to_numpy()).astype(np.float64)
-        c_norms = np.linalg.norm(c_mat, axis=1)
-        c_norms[c_norms == 0.0] = 1.0
-        c_mat = c_mat / c_norms[:, None]
-        q_ids = left["q_id"].to_numpy(dtype=np.int64)
         q = np.stack(left["q_vec"].to_numpy()).astype(np.float64)
-        qn = np.linalg.norm(q, axis=1)
-        qn[qn == 0.0] = 1.0
-        sims = (q / qn[:, None]) @ c_mat.T
-        out = {"src_id": [], "dst_id": [], "cosine_sim": [], "rank": []}
-        for i, qid in enumerate(q_ids):
-            row = sims[i]
-            order = np.lexsort((c_ids, -row))
-            taken = 0
-            for j in order:
-                if c_ids[j] == qid:
-                    continue
-                taken += 1
-                out["src_id"].append(qid)
-                out["dst_id"].append(c_ids[j])
-                out["cosine_sim"].append(row[j])
-                out["rank"].append(taken)
-                if taken == k:
-                    break
-        return pd.DataFrame(out)
+        return _topk_edges(left["q_id"].to_numpy(dtype=np.int64), q,
+                           c_ids, _unit_rows(c_mat), k)
 
     partials = (
         queries.groupBy("_qb", "_sh")
         .cogroup(corpus.groupBy("_qb", "_sh"))
-        .applyInPandas(block, schema)
+        .applyInPandas(block, _KNN_SCHEMA)
     )
     w = W.partitionBy("src_id").orderBy(F.desc("cosine_sim"), F.asc("dst_id"))
     return (
@@ -1264,7 +1126,7 @@ def knn_graph_quantized(
 
     This is the ORACLE TWIN shape — an all-pairs join meant for a
     bounded slice (the catalog entry caps the corpus). The production
-    paths are knn_graph (broadcast matmul) and knn_graph_sharded (block
+    paths are knn_graph (broadcast matmul) and knn_graph_blocked (block
     matmul); an agreement test binds this twin's neighbor sets to the
     BLAS path at matching quantization error.
     """

@@ -2,13 +2,14 @@
 (SURVEY §3.2): window computation → windowed scan → buffer re-read →
 transform → MERGE upsert on the model's unique key.
 
-State stores: versioned parquet directories (merge expressed as
-left_anti(old, key) ∪ new — exactly what Delta's MERGE
-whenMatched-update/whenNotMatched-insert produces for full-row updates),
-a partition-scoped insert_overwrite variant, and DeltaStateStore — the
-real `MERGE INTO` path, import-gated on delta-spark (absent in this
-container; tests skip, the code runs wherever the package exists). The
-runner contract is identical across all three. Cluster-scale notes: each
+State stores: ParquetStateStore, whose per-name layout follows the
+name's cluster column (date partitions merged by dynamic partition
+overwrite, or versioned directories merged as left_anti(old, key) ∪ new
+— exactly what Delta's MERGE whenMatched-update/whenNotMatched-insert
+produces for full-row updates), and DeltaStateStore — the real
+`MERGE INTO` path, import-gated on delta-spark (tests skip where the
+package is absent; the code runs wherever it exists). The runner
+contract is identical across both. Cluster-scale notes: each
 version write is a new directory (no in-place mutation → safe concurrent
 readers); the anti-join shuffles only on the unique key, and AQE handles
 key skew.
@@ -21,9 +22,11 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from kwwhat_spark.models.base import CLUSTER_BY, MODELS, UNIQUE_KEYS, Pipeline
 from kwwhat_spark.operators.cachescope import release
+from kwwhat_spark.sinks import DATE_COL, with_date
 
 # Execution order for a batch: the incremental models (those @model
 # gives a unique_key) in registration order, which puts each after every
@@ -45,25 +48,99 @@ def _has_part_files(path: str) -> bool:
 
 
 class ParquetStateStore:
-    """Versioned parquet state: state_dir/<model>/v<N>/ + _latest pointer."""
+    """Parquet model state under state_dir/<name>/, in the layout the
+    name's cluster column picks:
 
-    def __init__(self, spark: SparkSession, state_dir: str):
+    - **Clustered** (the name has a ``cluster_by`` column): ONE directory,
+      ``partitioned/``, partitioned by ``_date`` of that column — the
+      marts' layout (sinks.with_date). merge rewrites ONLY the date
+      partitions the batch touches (dynamic partition overwrite):
+      dbt-spark's ``insert_overwrite`` strategy on plain parquet, so batch
+      cost follows the batch's date span, not the table size — the
+      property that makes the reference's 3-month windows viable at
+      100 TB. ``_partitioned.json`` records the schema and batch_id,
+      written after the data (weaker atomicity than the pointer swap: a
+      crash in between replays the batch against already-merged
+      partitions, which dynamic overwrite makes idempotent).
+    - **Versioned** (every other name: snapshot/entity models, the
+      corpus/dedup indexes, merge_sink targets): each write is a new
+      ``v<N>/`` directory, swapped in by the atomic ``_latest.json``
+      pointer that also records the schema and batch_id; merge is a full
+      left_anti(old, key) ∪ new rewrite, O(table) per batch.
+
+    Correctness precondition of the clustered layout: the cluster column
+    is one of the unique-key columns (@model enforces it), so a merged
+    row lands in the partition of the row it replaces and no stale copy
+    survives in an untouched partition.
+
+    Reference parity: `cluster_by` ts per model (int_status_changes.sql:6
+    and siblings) — the same column choices, promoted from a clustering
+    hint to physical partitioning. On Delta/Iceberg the clustered layout
+    maps to MERGE with partition predicates (or replaceWhere).
+    """
+
+    def __init__(self, spark: SparkSession, state_dir: str,
+                 cluster_by: dict[str, str] | None = None):
+        """``cluster_by``: name -> cluster column; by default each
+        incremental model's ``cluster_by``. Other names are versioned."""
         self.spark = spark
         self.state_dir = state_dir
+        self.cluster_by = cluster_by if cluster_by is not None else {
+            m: CLUSTER_BY[m] for m in INCREMENTAL_ORDER if m in CLUSTER_BY}
         os.makedirs(state_dir, exist_ok=True)
 
     def _pointer(self, name: str) -> str:
         return os.path.join(self.state_dir, name, "_latest.json")
 
-    def read(self, name: str) -> DataFrame | None:
-        ptr = self._pointer(name)
-        if not os.path.exists(ptr):
-            return None
-        meta = json.load(open(ptr))
-        path = os.path.join(self.state_dir, name, f"v{meta['version']}")
-        return self._read_with_schema(path, meta.get("schema"))
+    def _meta_path(self, name: str) -> str:
+        if name in self.cluster_by:
+            return os.path.join(self.state_dir, name, "_partitioned.json")
+        return self._pointer(name)
 
-    def _read_with_schema(self, path: str, schema_json: str | None) -> DataFrame:
+    def _meta(self, name: str) -> dict | None:
+        """The name's metadata record, or None before its first write.
+        Clustered state the record does not describe refuses — a
+        versioned pointer left on disk (state written while the name had
+        no cluster column), or partition data without a record (an
+        interrupted first write, or an older `_part=` layout): silently
+        ignoring it would restart the incremental state from empty."""
+        path = self._meta_path(name)
+        if name in self.cluster_by and os.path.exists(self._pointer(name)):
+            raise RuntimeError(
+                f"state for '{name}' exists in the versioned layout "
+                f"({self._pointer(name)}) but '{name}' is clustered by "
+                f"'{self.cluster_by[name]}'; migrate it (read the versioned "
+                "state, write() it through a store that clusters it, delete "
+                "the v*/ dirs and _latest.json)"
+            )
+        if os.path.exists(path):
+            return json.load(open(path))
+        if name in self.cluster_by and os.path.exists(self._data_path(name)):
+            raise RuntimeError(
+                f"state for '{name}' has partition data ({self._data_path(name)}) "
+                f"but no {path}; delete the directory or rebuild it"
+            )
+        return None
+
+    def _data_path(self, name: str, version: int | None = None) -> str:
+        sub = "partitioned" if name in self.cluster_by else f"v{version}"
+        return os.path.join(self.state_dir, name, sub)
+
+    def _record(self, name: str, meta: dict) -> None:
+        """Write the metadata record, after the data: in the versioned
+        layout this is the atomic pointer swap."""
+        with open(self._meta_path(name), "w") as f:
+            json.dump(meta, f)
+
+    def read(self, name: str) -> DataFrame | None:
+        meta = self._meta(name)
+        if meta is None:
+            return None
+        path = self._data_path(name, meta.get("version"))
+        df = self._read_with_schema(path, meta["schema"])
+        return df.drop(DATE_COL) if name in self.cluster_by else df
+
+    def _read_with_schema(self, path: str, schema_json: str) -> DataFrame:
         """Read state parquet; an EMPTY state writes no part files (only
         _SUCCESS), so schema inference fails — reconstruct the empty
         DataFrame from the schema recorded at write time instead of
@@ -76,38 +153,40 @@ class ParquetStateStore:
             # Only the documented empty-state layout (no part files) is
             # recoverable from the recorded schema; real read errors on a
             # directory that has data must propagate (see _has_part_files).
-            if schema_json is None or _has_part_files(path):
+            if _has_part_files(path):
                 raise
             return self.spark.createDataFrame(
                 [], StructType.fromJson(json.loads(schema_json))
             )
 
     def last_batch_id(self, name: str) -> int | None:
-        """Stream-commit marker: the batch_id recorded by the most recent
-        write/merge that passed one, or None. Because the pointer swap is
-        a single JSON write, (state version, batch_id) change atomically —
-        a foreachBatch that writes its output BEFORE merging with a
-        batch_id can skip fully-committed replays and recompute partially
-        committed ones against the unswapped prior state."""
-        ptr = self._pointer(name)
-        if not os.path.exists(ptr):
-            return None
-        return json.load(open(ptr)).get("batch_id")
+        """Stream-commit marker: the batch_id passed to the most recent
+        write/merge, or None. In the versioned layout the pointer swap is
+        a single JSON write, so (state version, batch_id) change
+        atomically — a foreachBatch that writes its output BEFORE merging
+        with a batch_id can skip fully-committed replays and recompute
+        partially committed ones against the unswapped prior state."""
+        meta = self._meta(name)
+        return None if meta is None else meta.get("batch_id")
 
     def write(self, name: str, df: DataFrame, *, batch_id: int | None = None) -> None:
-        ptr = self._pointer(name)
-        version = (json.load(open(ptr))["version"] + 1) if os.path.exists(ptr) else 0
-        path = os.path.join(self.state_dir, name, f"v{version}")
-        df.write.mode("overwrite").parquet(path)
-        with open(ptr, "w") as f:
-            json.dump(
-                {"version": version, "batch_id": batch_id,
-                 "schema": json.dumps(df.schema.jsonValue())},
-                f,
+        meta = {"batch_id": batch_id, "schema": json.dumps(df.schema.jsonValue())}
+        prior = self._meta(name)  # refuses state this layout does not describe
+        if name in self.cluster_by:
+            (
+                with_date(df, self.cluster_by[name])
+                .write.mode("overwrite")
+                .partitionBy(DATE_COL)
+                .parquet(self._data_path(name))
             )
+            self._record(name, meta)
+            return
+        version = 0 if prior is None else prior["version"] + 1
+        df.write.mode("overwrite").parquet(self._data_path(name, version))
+        self._record(name, {"version": version, **meta})
         # Retire old versions (keep previous for debugging).
         for old in range(version - 1):
-            shutil.rmtree(os.path.join(self.state_dir, name, f"v{old}"), ignore_errors=True)
+            shutil.rmtree(self._data_path(name, old), ignore_errors=True)
 
     def _evolve(self, name: str, existing: DataFrame, new: DataFrame) -> DataFrame:
         """Schema evolution on merge (the state-store analog of the
@@ -119,8 +198,6 @@ class ParquetStateStore:
         REMOVED columns refuse with a pointer to migrate(): dropping
         data is a phase-staged, human-approved operation in the
         reference and stays one here."""
-        from pyspark.sql import functions as F
-
         removed = [c for c in existing.columns if c not in new.columns]
         if removed:
             raise RuntimeError(
@@ -138,15 +215,16 @@ class ParquetStateStore:
         return existing
 
     def migrate(self, name: str, transform) -> None:
-        """Versioned state migration: read the current state, apply
-        `transform(df) -> df`, write it as a NEW version — the previous
-        version directory stays on disk for rollback, mirroring the
-        reference's phase-staged migration (create new → validate →
-        swap → drop only after sign-off)."""
+        """State migration: read the current state, apply
+        `transform(df) -> df` and write the result back. In the versioned
+        layout it is a NEW version and the previous version directory
+        stays on disk for rollback, mirroring the reference's
+        phase-staged migration (create new → validate → swap → drop only
+        after sign-off)."""
         cur = self.read(name)
         if cur is None:
             raise RuntimeError(f"no state for '{name}' to migrate")
-        # Materialize before writing: the partitioned layout overwrites
+        # Materialize before writing: the clustered layout overwrites
         # the same directory the lazy plan would still be scanning.
         out = transform(cur).localCheckpoint(eager=True)
         try:
@@ -163,228 +241,97 @@ class ParquetStateStore:
         if existing is None:
             self.write(name, new, batch_id=batch_id)
             return
+        clustered = name in self.cluster_by
+        if clustered and set(new.columns) == set(existing.columns):
+            self._merge_partitions(name, new.select(*existing.columns), keys, batch_id)
+            return
+        # Full rewrite: every versioned merge, and a clustered one whose
+        # schema changed — partition directories cannot mix schemas
+        # (untouched partitions would keep the old footer), so an
+        # additive evolution rewrites the table once, the same cost as a
+        # warehouse ALTER TABLE + backfill.
         existing = self._evolve(name, existing, new)
         # Materialize the batch once: the anti-join's key-distinct and
-        # the version write would otherwise each run the full model plan.
+        # the write would otherwise each run the full model plan.
         new = new.localCheckpoint(eager=True)
         keep = existing.join(new.select(*keys).distinct(), keys, "left_anti")
+        merged = keep.unionByName(new.select(*existing.columns))
+        if clustered:  # the write replaces the directory `keep` scans
+            merged = merged.localCheckpoint(eager=True)
         try:
-            self.write(name, keep.unionByName(new.select(*existing.columns)),
-                       batch_id=batch_id)
+            self.write(name, merged, batch_id=batch_id)
         finally:
+            release(merged)
             release(new)
 
-
-class PartitionedStateStore(ParquetStateStore):
-    """Scale variant of the state store: dbt-spark's `insert_overwrite`
-    incremental strategy expressed on plain parquet. Each model with a
-    cluster timestamp lives in ONE directory partitioned by a derived
-    `_part` date; merge rewrites ONLY the partitions the batch touches
-    (dynamic partition overwrite), so batch cost is proportional to the
-    batch's date span, not the table size — the property that makes the
-    reference's 3-month windows viable at 100 TB. ParquetStateStore's
-    full anti-join ∪ rewrite is O(table) per batch.
-
-    Correctness precondition: the partition expression is a function of
-    the model's unique-key columns, so a merged row lands in the same
-    partition as the row it replaces and no stale copy can survive in an
-    untouched partition. The default expression is ``to_date`` of the
-    model's ``cluster_by``, which @model requires to be a unique-key
-    column. Models without a ``cluster_by`` (tiny snapshot/entity
-    tables) fall back to the versioned full-rewrite store.
-
-    Reference parity: `cluster_by` ts per model (int_status_changes.sql:6
-    and siblings) — the same column choices, promoted from a clustering
-    hint to physical partitioning. On Delta/Iceberg this store maps to
-    MERGE with partition predicates (or replaceWhere).
-    """
-
-    def __init__(self, spark: SparkSession, state_dir: str, partition_exprs=None):
-        """``partition_exprs``: model -> SQL expression deriving the
-        partition date from key columns; by default ``to_date`` of each
-        incremental model's ``cluster_by``."""
-        super().__init__(spark, state_dir)
-        self.partition_exprs = partition_exprs if partition_exprs is not None else {
-            m: f"to_date({CLUSTER_BY[m]})" for m in INCREMENTAL_ORDER if m in CLUSTER_BY}
-
-    def _part_path(self, name: str) -> str:
-        return os.path.join(self.state_dir, name, "partitioned")
-
-    def _check_no_versioned_state(self, name: str) -> None:
-        """A model newly promoted to partitioned layout may have leftover
-        versioned state from a ParquetStateStore run (e.g., the CLI rerun
-        with --partitioned added). Silently ignoring it would restart the
-        incremental state from empty; refuse instead and tell the
-        operator how to migrate."""
-        ptr = self._pointer(name)
-        if os.path.exists(ptr):
-            raise RuntimeError(
-                f"state for '{name}' exists in the versioned layout "
-                f"({ptr}) but '{name}' is configured as partitioned; "
-                "migrate it (read the versioned state, write() it through "
-                "this store, delete the v*/ dirs and _latest.json) or run "
-                "without the partitioned config for this model"
-            )
-
-    def _schema_path(self, name: str) -> str:
-        return os.path.join(self.state_dir, name, "_schema.json")
-
-    def _record_schema(self, name: str, df: DataFrame) -> None:
-        with open(self._schema_path(name), "w") as f:
-            json.dump(df.schema.jsonValue(), f)
-
-    def read(self, name: str) -> DataFrame | None:
-        if name not in self.partition_exprs:
-            return super().read(name)
-        self._check_no_versioned_state(name)
-        path = self._part_path(name)
-        if not os.path.exists(path):
-            return None
-        schema_json = None
-        if os.path.exists(self._schema_path(name)):
-            schema_json = json.dumps(json.load(open(self._schema_path(name))))
-        return self._read_with_schema(path, schema_json).drop("_part")
-
-    def last_batch_id(self, name: str) -> int | None:
-        if name not in self.partition_exprs:
-            return super().last_batch_id(name)
-        marker = os.path.join(self.state_dir, name, "_batch.json")
-        if not os.path.exists(marker):
-            return None
-        return json.load(open(marker)).get("batch_id")
-
-    def _record_batch(self, name: str, batch_id: int | None) -> None:
-        # Sidecar marker for the partitioned layout (written after the
-        # data; weaker atomicity than the versioned pointer swap — a
-        # crash in between replays the batch against already-merged
-        # partitions, which dynamic overwrite makes idempotent).
-        if batch_id is None:
-            return
-        with open(os.path.join(self.state_dir, name, "_batch.json"), "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-
-    def write(self, name: str, df: DataFrame, *, batch_id: int | None = None) -> None:
-        if name not in self.partition_exprs:
-            super().write(name, df, batch_id=batch_id)
-            return
-        self._check_no_versioned_state(name)
-        from pyspark.sql import functions as F
-
-        (
-            df.withColumn("_part", F.expr(self.partition_exprs[name]))
-            .write.mode("overwrite")
-            .partitionBy("_part")
-            .parquet(self._part_path(name))
-        )
-        self._record_schema(name, df)
-        self._record_batch(name, batch_id)
-
-    def merge(self, name: str, new: DataFrame, keys: list[str], *,
-              batch_id: int | None = None) -> None:
-        if name not in self.partition_exprs:
-            super().merge(name, new, keys, batch_id=batch_id)
-            return
-        from pyspark.sql import functions as F
-
-        existing = self.read(name)
-        if existing is None:
-            self.write(name, new, batch_id=batch_id)
-            return
-        if set(new.columns) != set(existing.columns):
-            # Schema change: partition directories cannot mix schemas
-            # (untouched partitions would keep the old footer), so an
-            # additive evolution is a one-off FULL rewrite of the table
-            # with typed NULLs backfilled — the same cost as a warehouse
-            # ALTER TABLE + backfill. Removed columns raise in _evolve.
-            evolved = self._evolve(name, existing, new)
-            keep_all = evolved.join(new.select(*keys).distinct(), keys, "left_anti")
-            merged = keep_all.unionByName(new.select(*evolved.columns))
-            merged = merged.localCheckpoint(eager=True)
-            try:
-                self.write(name, merged, batch_id=batch_id)
-            finally:
-                release(merged)
-            return
-        # ONE materialization of the batch plan (VERDICT r8: the merge
-        # previously ran it 2-3x — once for the affected-partition
-        # collect, again inside the keep∪new checkpoint). Everything
-        # downstream (partition collect, anti-join, write) reads this
-        # in-memory checkpoint.
-        newp = (
-            new.select(*existing.columns)
-            .withColumn("_part", F.expr(self.partition_exprs[name]))
-            .localCheckpoint(eager=True)
-        )
+    def _merge_partitions(self, name: str, new: DataFrame, keys: list[str],
+                          batch_id: int | None) -> None:
+        """Clustered merge: replace the date partitions ``new`` touches
+        with their merged rows; every other partition keeps its files."""
+        # ONE materialization of the batch plan: the partition collect,
+        # the anti-join and the write all read this checkpoint.
+        newp = with_date(new, self.cluster_by[name]).localCheckpoint(eager=True)
         try:
-            self._overwrite_partitions(name, newp, keys, batch_id)
+            # The batch's partition set: tiny (batch window + buffer
+            # dates), driver-safe to collect, and the ONLY state the
+            # merge reads.
+            affected = [r[DATE_COL] for r in newp.select(DATE_COL).distinct().collect()]
+            if not affected:
+                return  # empty batch: no partitions touched, state unchanged
+            non_null = [p for p in affected if p is not None]
+            pred = F.col(DATE_COL).isin(non_null)
+            if len(non_null) < len(affected):
+                pred = pred | F.col(DATE_COL).isNull()
+            path = self._data_path(name)
+            try:
+                prior = self.spark.read.parquet(path)
+            except Exception:
+                if _has_part_files(path):
+                    raise  # corrupted state: fail loudly, don't rebuild from batch
+                prior = None  # empty prior state wrote no part files
+            if prior is None:
+                out = newp
+            else:
+                keep = prior.filter(pred).join(
+                    newp.select(*keys).distinct(), keys, "left_anti")
+                out = keep.unionByName(newp.select(*keep.columns))
+            (
+                # Single write pass, no intermediate checkpoint: the batch
+                # side is already materialized above, and the prior-state
+                # side is fully read by the write job's tasks BEFORE the
+                # dynamic-overwrite commit replaces any partition files.
+                # One task per date partition (dbt-spark insert_overwrite
+                # shape): without the repartition every upstream task
+                # writes a sliver into every partition dir — task_count ×
+                # partition_count small files that every later read(name)
+                # must list and footer-parse. The mart sinks keep their
+                # own policy (sort within each date).
+                out.repartition(DATE_COL)
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(DATE_COL)
+                .parquet(path)
+            )
+            self._record(name, {**self._meta(name), "batch_id": batch_id})
         finally:
             release(newp)
 
-    def _overwrite_partitions(self, name: str, newp: DataFrame, keys: list[str],
-                              batch_id: int | None) -> None:
-        """Replace the partitions the checkpointed batch ``newp`` touches
-        with their merged rows."""
-        from pyspark.sql import functions as F
-
-        path = self._part_path(name)
-        # The batch's partition set: tiny (batch window + buffer dates),
-        # driver-safe to collect, and the ONLY state the merge reads.
-        affected = [r["_part"] for r in newp.select("_part").distinct().collect()]
-        if not affected:
-            return  # empty batch: no partitions touched, state unchanged
-        non_null = [p for p in affected if p is not None]
-        pred = F.col("_part").isin(non_null)
-        if len(non_null) < len(affected):
-            pred = pred | F.col("_part").isNull()
-        try:
-            prior_raw = self.spark.read.parquet(path)
-        except Exception:
-            if _has_part_files(path):
-                raise  # corrupted state: fail loudly, don't rebuild from batch
-            prior_raw = None  # empty prior state wrote no part files
-        if prior_raw is None:
-            out = newp
-        else:
-            keep = prior_raw.filter(pred).join(
-                newp.select(*keys).distinct(), keys, "left_anti"
-            )
-            out = keep.unionByName(newp.select(*keep.columns))
-        (
-            # Single write pass, no intermediate checkpoint: the batch
-            # side is already materialized above, and the prior-state
-            # side is fully read by the write job's tasks BEFORE the
-            # dynamic-overwrite commit replaces any partition files —
-            # the read-while-overwriting hazard needed the batch plan
-            # itself to re-read the directory, which the checkpoint
-            # rules out. One task per date partition (dbt-spark
-            # insert_overwrite shape): without the repartition every
-            # upstream task writes a sliver into every partition dir —
-            # task_count × partition_count small files that every later
-            # read(name) must list and footer-parse.
-            out.repartition("_part")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_part")
-            .parquet(path)
-        )
-        self._record_batch(name, batch_id)
-
 
 class DeltaStateStore:
-    """Lakehouse-native state store: the documented collapse of both
-    parquet stores into warehouse `MERGE INTO` (the reference's actual
-    incremental contract — `incremental_strategy='merge'`,
-    int_status_changes.sql:1-8; BASELINE.md "collapse into MERGE INTO on
-    Delta/Iceberg").
+    """Lakehouse-native state store: the documented collapse of
+    ParquetStateStore's two layouts into warehouse `MERGE INTO` (the
+    reference's actual incremental contract — `incremental_strategy=
+    'merge'`, int_status_changes.sql:1-8; BASELINE.md "collapse into
+    MERGE INTO on Delta/Iceberg").
 
     Same interface as ParquetStateStore (read / write / merge /
     last_batch_id), so IncrementalRunner and the streaming sinks take it
     unchanged. merge() is a single `whenMatchedUpdateAll /
     whenNotMatchedInsertAll` on the model's unique key with null-safe
-    equality (<=>) — exactly the left_anti ∪ new the parquet stores
-    express by hand, but executed as Delta's transactional row-level
+    equality (<=>) — exactly the left_anti ∪ new the parquet store
+    expresses by hand, but executed as Delta's transactional row-level
     merge: partition pruning and data skipping come from the table
-    layout instead of the PartitionedStateStore's explicit partition
+    layout instead of the clustered layout's explicit partition
     predicate.
 
     Requires the delta-spark package and a Delta-enabled session

@@ -548,8 +548,8 @@ def knn_graph_sharded_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     that replaced the driver-staged knn_graph_sharded as this entry's
     implementation after the round-7 comparison (sf1, 20k vectors:
     blocked 1.1 s vs driver-staged 58 s; 200k vectors in 131 s —
-    BASELINE.md round 7). knn_graph_sharded remains available and
-    agreement-tested as the bounded driver-staged variant."""
+    BASELINE.md round 7). The driver-staged variant is deleted; the
+    entry keeps its name."""
     from kwwhat_spark.operators.scaling import widen
     from kwwhat_spark.operators.similarity import knn_graph_blocked
 

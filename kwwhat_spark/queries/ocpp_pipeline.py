@@ -1230,12 +1230,13 @@ def ocpp_fact_interval_data(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Incremental engine under the driver gate (SURVEY §2.8): run
-# int_status_changes in TWO batches through PartitionedStateStore —
-# batch 1 sees only logs before the cutoff (full-refresh branch, no
-# prior state), batch 2 sees the whole source (incremental branch:
-# window from the stored watermark, 30-min look-back buffer of open
-# rows, partition-scoped MERGE) — and return the merged state. The
-# oracle replays the exact same two-batch lifecycle in DuckDB:
+# int_status_changes in TWO batches through ParquetStateStore (its
+# clustered, date-partitioned layout) — batch 1 sees only logs before
+# the cutoff (full-refresh branch, no prior state), batch 2 sees the
+# whole source (incremental branch: window from the stored watermark,
+# 30-min look-back buffer of open rows, partition-scoped MERGE) — and
+# return the merged state. The oracle replays the exact same two-batch
+# lifecycle in DuckDB:
 # b1 = full-refresh compile over the pre-cutoff slice, b2 = the
 # incremental branch (buffer union + coalesced lag stitch) compiled
 # from int_status_changes.sql:90-205, merge = anti-join on the model's
@@ -1402,22 +1403,22 @@ SELECT {', '.join(_INC_STATUS_COLS)} FROM merged
     oracle=_INC_STATUS_ORACLE,
     cite="int_status_changes.sql:1-225 (incremental branch: window macro "
     "macros/incremental_date_range.sql, 30-min buffer :90-146, merge on "
-    "unique_key :4); plans/incremental.py PartitionedStateStore",
+    "unique_key :4); plans/incremental.py ParquetStateStore (clustered layout)",
 )
 def ocpp_incremental_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-batch incremental lifecycle of int_status_changes through the
-    partition-scoped state store; returns the post-merge state (sf_dir
+    date-partitioned state store; returns the post-merge state (sf_dir
     ignored — the demo seed is the canonical fixture both engines read)."""
     import shutil
     import tempfile
 
-    from kwwhat_spark.plans.incremental import IncrementalRunner, PartitionedStateStore
+    from kwwhat_spark.plans.incremental import IncrementalRunner, ParquetStateStore
     from kwwhat_spark.sources.ocpp import load_ocpp_sources
 
     sources = load_ocpp_sources(spark)
     state_dir = tempfile.mkdtemp(prefix="kwh-inc-status-")
     try:
-        store = PartitionedStateStore(spark, state_dir)
+        store = ParquetStateStore(spark, state_dir)
         runner = IncrementalRunner(spark, store)
         batch1 = {
             **sources,
@@ -1446,7 +1447,7 @@ def ocpp_incremental_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cross-MODEL incremental chain under the gate (round-3 verdict #8):
 # two batches of the real 5-model chain (int_status_changes →
 # int_connector_latest_status / int_transactions / int_connector_preparing
-# → fact_charge_attempts) through PartitionedStateStore, so the
+# → fact_charge_attempts) through ParquetStateStore, so the
 # upstream-watermark capping the reference does in
 # fact_charge_attempts.sql:19-28 is exercised across model boundaries.
 # Oracle form: CONVERGENCE — a correct chain's merged mart equals the
@@ -1491,13 +1492,13 @@ _INC_CHAIN_ORACLE = (
 )
 def ocpp_incremental_attempts_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-batch lifecycle of the status→attempts model chain through
-    the partition-scoped state store; returns the merged
+    the date-partitioned state store; returns the merged
     fact_charge_attempts state on its batch-stable columns (sf_dir
     ignored — the demo seed is the canonical fixture)."""
     import shutil
     import tempfile
 
-    from kwwhat_spark.plans.incremental import IncrementalRunner, PartitionedStateStore
+    from kwwhat_spark.plans.incremental import IncrementalRunner, ParquetStateStore
     from kwwhat_spark.sources.ocpp import load_ocpp_sources
 
     chain = [
@@ -1507,7 +1508,7 @@ def ocpp_incremental_attempts_chain(spark: SparkSession, sf_dir: str) -> DataFra
     sources = load_ocpp_sources(spark)
     state_dir = tempfile.mkdtemp(prefix="kwh-inc-chain-")
     try:
-        store = PartitionedStateStore(spark, state_dir)
+        store = ParquetStateStore(spark, state_dir)
         runner = IncrementalRunner(spark, store)
         batch1 = {
             **sources,

@@ -3,8 +3,9 @@
 The reference clusters every incremental table by its timestamp column
 (`cluster_by`, e.g. int_status_changes.sql:6; SURVEY §4 "data
 clustering"). The Spark-native analogue is directory partitioning by the
-event date: scans with a date predicate prune whole partitions, and
-downstream jobs (the incremental runner's windowed re-reads in
+event date (`with_date`, the one layout the marts and the incremental
+state store share): scans with a date predicate prune whole partitions,
+and downstream jobs (the incremental runner's windowed re-reads in
 particular) touch only the affected days. On Delta/Iceberg the same
 mapping becomes Z-ORDER / liquid clustering — the writer contract is
 unchanged.
@@ -22,22 +23,31 @@ from kwwhat_spark.models.base import CLUSTER_BY, Pipeline
 from kwwhat_spark.operators.cachescope import release
 from kwwhat_spark.threads import run_all
 
+# Partition column of every clustered table written here and by
+# plans/incremental.ParquetStateStore.
+DATE_COL = "_date"
+
+
+def with_date(df: DataFrame, cluster_col: str) -> DataFrame:
+    """``df`` plus its partition column, the date of ``cluster_col``."""
+    return df.withColumn(DATE_COL, F.to_date(F.col(cluster_col)))
+
 
 def write_partitioned(df: DataFrame, path: str, ts_col: str | None) -> None:
     if ts_col is None:
         df.write.mode("overwrite").parquet(path)
         return
     (
-        df.withColumn("_date", F.to_date(F.col(ts_col)))
+        with_date(df, ts_col)
         # Sorting by the cluster timestamp WITHIN each date partition is
         # the second half of the reference's cluster_by: directory
         # pruning handles the date predicate, and ordered parquet
         # row-group min/max stats prune sub-day time ranges at scan time
         # — at 100 TB an hourly window touches a handful of row groups
         # instead of the whole day's files.
-        .sortWithinPartitions("_date", ts_col)
+        .sortWithinPartitions(DATE_COL, ts_col)
         .write.mode("overwrite")
-        .partitionBy("_date")
+        .partitionBy(DATE_COL)
         .parquet(path)
     )
 
@@ -62,14 +72,14 @@ def compact_partitioned(
     min_files: int = 4,
     sort_col: str | None = None,
 ) -> dict[str, int]:
-    """Compact small files inside a date/part-partitioned parquet table.
+    """Compact small files inside a date-partitioned parquet table.
 
-    Incremental merges (PartitionedStateStore, dynamic partition
-    overwrite) leave a few small files per touched partition per batch;
-    over months the file count grows linearly and at 100 TB the metadata
-    (listing, footers, task scheduling) dominates scan cost long before
-    the bytes do. This rewrites ONLY partitions whose layout is bad —
-    at least `min_files` files AND mean file size under half of
+    Incremental merges (ParquetStateStore's clustered layout, dynamic
+    partition overwrite) leave a few small files per touched partition
+    per batch; over months the file count grows linearly and at 100 TB
+    the metadata (listing, footers, task scheduling) dominates scan cost
+    long before the bytes do. This rewrites ONLY partitions whose layout
+    is bad — at least `min_files` files AND mean file size under half of
     `target_mb` — coalescing each to ceil(bytes/target) files, restoring
     the within-partition sort (`sort_col`) so row-group min/max pruning
     keeps working. Untouched partitions keep their exact files, the same

@@ -5,7 +5,9 @@ The reference materializes every non-view model with
 that through plans/incremental.ParquetStateStore. `merge_sink` is the
 streaming half of the same story: each micro-batch upserts into the
 store by key via foreachBatch, so a continuously-running stream
-maintains exactly the table a scheduled incremental batch run would.
+maintains exactly the table a scheduled incremental batch run would,
+in the layout the store gives the target name (date partitions if it
+has a cluster column, else versioned directories).
 Because the MERGE is keyed, redelivered micro-batches are idempotent —
 at-least-once delivery upgrades to effectively-once table state.
 

@@ -22,3 +22,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def one_charger_fleet(tmp_path_factory):
+    """Seed directory of a one-charger, 14-day OCPP fleet generated by
+    perfbench.fleet (seed 7)."""
+    from perfbench import fleet
+
+    out = str(tmp_path_factory.mktemp("one_charger_fleet"))
+    fleet.write_fleet(out, fleet.generate(7, 1))
+    return out

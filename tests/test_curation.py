@@ -248,55 +248,6 @@ def test_knn_graph_quantized_twin_agrees_with_blas_path(spark, sf_dir):
         assert bdst == dst, (key, bdst, dst)
 
 
-def test_knn_graph_sharded_agrees_with_broadcast_path(spark, sf_dir):
-    from kwwhat_spark.operators.similarity import knn_graph, knn_graph_sharded
-    from kwwhat_spark.sources.testdata import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    sub = emb.filter(F.col("vec_id") < 120)
-    whole = {
-        (r.src_id, r.rank): (r.dst_id, round(r.cosine_sim, 6))
-        for r in knn_graph(sub, k=4).collect()
-    }
-    sharded = {
-        (r.src_id, r.rank): (r.dst_id, round(r.cosine_sim, 6))
-        for r in knn_graph_sharded(sub, k=4, n_shards=3).collect()
-    }
-    assert set(sharded) == set(whole)
-    for key, (dst, sim) in whole.items():
-        sdst, ssim = sharded[key]
-        assert sdst == dst, (key, sdst, dst)
-        assert abs(ssim - sim) < 2e-6
-
-
-def test_knn_graph_sharded_enforces_shard_bound(spark):
-    import pytest
-
-    from kwwhat_spark.operators.similarity import knn_graph_sharded
-
-    rows = [(i, [float(i), 1.0]) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="raise n_shards"):
-        knn_graph_sharded(df, k=2, n_shards=2, max_shard_rows=5).collect()
-
-
-def test_knn_graph_sharded_tolerates_empty_shards(spark):
-    """With n_shards >> rows some hash buckets are empty; an empty shard
-    must be skipped, not crash numpy (AxisError on a 1-D empty matrix)."""
-    from kwwhat_spark.operators.similarity import knn_graph_sharded
-
-    rows = [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = knn_graph_sharded(df, k=2, n_shards=8).collect()
-    assert {r.src_id for r in got} == {1, 2, 3}
-    # empty corpus: empty result with the contract schema
-    empty = knn_graph_sharded(df.filter("vec_id > 99"), k=2, n_shards=4)
-    assert empty.columns == ["src_id", "dst_id", "cosine_sim", "rank"]
-    assert empty.count() == 0
-
-
 def test_kmeans_quantized_separates_obvious_groups(spark):
     from kwwhat_spark.operators.clustering import kmeans_quantized
 
@@ -387,3 +338,7 @@ def test_knn_graph_blocked_tolerates_empty_blocks(spark):
     out = knn_graph_blocked(df, k=2, n_shards=16, n_query_blocks=16).collect()
     assert {r.src_id for r in out} == set(range(7))
     assert all(1 <= r.rank <= 2 for r in out)
+    # empty corpus: empty result with the contract schema
+    empty = knn_graph_blocked(df.filter("vec_id > 99"), k=2, n_shards=4)
+    assert empty.columns == ["src_id", "dst_id", "cosine_sim", "rank"]
+    assert empty.count() == 0

@@ -93,7 +93,7 @@ def test_dbt_incremental_unit(spark, name):
 
 
 # ---------------------------------------------------------------------------
-# End-to-end: feeding the 14-day demo seed through the IncrementalRunner in
+# End-to-end: feeding a 14-day fleet through the IncrementalRunner in
 # three cumulative batches must converge to the same state as one
 # full-refresh run (the reference's incremental models are designed to be
 # refresh-equivalent; late/boundary handling via buffers, SURVEY §2.8).
@@ -109,7 +109,6 @@ from kwwhat_spark.plans.incremental import (
     DeltaStateStore,
     IncrementalRunner,
     ParquetStateStore,
-    PartitionedStateStore,
 )
 from kwwhat_spark.sources.ocpp import load_ocpp_sources
 
@@ -167,10 +166,11 @@ def _delta_available() -> bool:
 
 
 @pytest.mark.parametrize(
-    "store_cls",
+    "make_store",
     [
-        ParquetStateStore,
-        PartitionedStateStore,
+        pytest.param(lambda spark, d: ParquetStateStore(spark, d, cluster_by={}),
+                     id="versioned"),
+        pytest.param(ParquetStateStore, id="clustered"),
         pytest.param(
             DeltaStateStore,
             marks=pytest.mark.skipif(
@@ -181,9 +181,10 @@ def _delta_available() -> bool:
         ),
     ],
 )
-def test_incremental_runner_converges_to_full_refresh(spark, tmp_path, store_cls):
-    sources = load_ocpp_sources(spark)
-    store = store_cls(spark, str(tmp_path / "state"))
+def test_incremental_runner_converges_to_full_refresh(
+        spark, tmp_path, one_charger_fleet, make_store):
+    sources = load_ocpp_sources(spark, one_charger_fleet)
+    store = make_store(spark, str(tmp_path / "state"))
     runner = IncrementalRunner(spark, store)
 
     # Cumulative source snapshots: data "arrives" between runs.
@@ -224,21 +225,19 @@ def test_incremental_runner_converges_to_full_refresh(spark, tmp_path, store_cls
 
 
 # ---------------------------------------------------------------------------
-# PartitionedStateStore: insert_overwrite-style merge must (a) implement
-# the same MERGE semantics as the versioned store and (b) physically leave
-# partitions outside the batch's date span untouched — the property that
-# bounds batch cost by batch span instead of table size.
+# Clustered layout: the insert_overwrite-style merge must (a) implement
+# the same MERGE semantics as the versioned layout and (b) physically
+# leave partitions outside the batch's date span untouched — the property
+# that bounds batch cost by batch span instead of table size.
 # ---------------------------------------------------------------------------
 def _part_files(state_dir, model, part):
-    d = Path(state_dir) / model / "partitioned" / f"_part={part}"
+    d = Path(state_dir) / model / "partitioned" / f"_date={part}"
     return sorted((p.name, p.stat().st_mtime_ns) for p in d.glob("*.parquet"))
 
 
 def test_partitioned_store_merge_touches_only_batch_partitions(spark, tmp_path):
     state_dir = str(tmp_path / "state")
-    store = PartitionedStateStore(
-        spark, state_dir, partition_exprs={"m": "to_date(ingested_ts)"}
-    )
+    store = ParquetStateStore(spark, state_dir, cluster_by={"m": "ingested_ts"})
     rows = [
         ("c1", f"2025-10-0{d} 0{h}:00:00", f"v{d}{h}")
         for d in (1, 2, 3)
@@ -263,7 +262,7 @@ def test_partitioned_store_merge_touches_only_batch_partitions(spark, tmp_path):
     ).withColumn("ingested_ts", F.to_timestamp("ingested_ts"))
     store.merge("m", new, ["charger_id", "ingested_ts"])
 
-    # MERGE semantics match the versioned store's definition.
+    # MERGE semantics match the versioned layout's definition.
     got = {
         (r["charger_id"], r["ingested_ts"].isoformat()): r["val"]
         for r in store.read("m").collect()
@@ -294,14 +293,12 @@ def test_corrupted_state_fails_loudly_not_empty(spark, tmp_path):
     # only legal when no part files exist at all.
     import pytest
 
-    from kwwhat_spark.plans.incremental import ParquetStateStore, PartitionedStateStore
-
     df = spark.createDataFrame(
         [("c1", "2025-10-01 01:00:00", "v1")],
         "charger_id string, ingested_ts string, val string",
     ).withColumn("ingested_ts", F.to_timestamp("ingested_ts"))
 
-    # Versioned store: corrupt every part file of the current version.
+    # Versioned layout: corrupt every part file of the current version.
     vstate = str(tmp_path / "vstate")
     vstore = ParquetStateStore(spark, vstate)
     vstore.write("m", df)
@@ -310,11 +307,9 @@ def test_corrupted_state_fails_loudly_not_empty(spark, tmp_path):
     with pytest.raises(Exception):
         vstore.read("m").collect()
 
-    # Partitioned store: same corruption under the partition dirs.
+    # Clustered layout: same corruption under the partition dirs.
     pstate = str(tmp_path / "pstate")
-    pstore = PartitionedStateStore(
-        spark, pstate, partition_exprs={"m": "to_date(ingested_ts)"}
-    )
+    pstore = ParquetStateStore(spark, pstate, cluster_by={"m": "ingested_ts"})
     pstore.merge("m", df, ["charger_id", "ingested_ts"])
     for p in (Path(pstate) / "m" / "partitioned").rglob("*.parquet"):
         p.write_bytes(b"not parquet at all")
@@ -323,22 +318,31 @@ def test_corrupted_state_fails_loudly_not_empty(spark, tmp_path):
 
 
 def test_partitioned_store_refuses_leftover_versioned_state(spark, tmp_path):
-    # A model promoted to the partitioned layout with versioned state
-    # left on disk must fail loudly, not silently restart from empty.
+    # A model clustered by default with versioned state left on disk
+    # (written while it had no cluster column) must fail loudly, not
+    # silently restart from empty.
     import pytest
 
-    from kwwhat_spark.plans.incremental import ParquetStateStore, PartitionedStateStore
-
     state_dir = str(tmp_path / "state")
-    old = ParquetStateStore(spark, state_dir)
+    old = ParquetStateStore(spark, state_dir, cluster_by={})
     df = spark.createDataFrame([(1, "2024-01-01 00:00:00")], "charger_id long, ingested_ts string")
     old.write("int_status_changes", df)
 
-    part = PartitionedStateStore(spark, state_dir)
+    part = ParquetStateStore(spark, state_dir)
     with pytest.raises(RuntimeError, match="versioned layout"):
         part.read("int_status_changes")
     with pytest.raises(RuntimeError, match="versioned layout"):
         part.merge("int_status_changes", df, ["charger_id", "ingested_ts"])
+
+    # Partition data without its _partitioned.json record (an interrupted
+    # first write, or an older `_part=` state) refuses the same way.
+    clustered = ParquetStateStore(spark, state_dir, cluster_by={"m": "ingested_ts"})
+    clustered.write("m", df)
+    (Path(state_dir) / "m" / "_partitioned.json").unlink()
+    with pytest.raises(RuntimeError, match="no .*_partitioned.json"):
+        clustered.read("m")
+    with pytest.raises(RuntimeError, match="no .*_partitioned.json"):
+        clustered.merge("m", df, ["charger_id", "ingested_ts"])
 
 
 def test_staged_cutoff_equals_staging_filtered_raw(spark):

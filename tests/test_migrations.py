@@ -14,9 +14,14 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from kwwhat_spark.plans.incremental import ParquetStateStore, PartitionedStateStore
+from kwwhat_spark.plans.incremental import ParquetStateStore
 from kwwhat_spark.plans.migrations import split_ports, validate_split
 from kwwhat_spark.sources.ocpp import load_ocpp_sources
+
+# The store's two layouts for int_status_changes: no cluster column
+# (versioned), and its default cluster column (date partitions).
+LAYOUTS = pytest.mark.parametrize(
+    "cluster_by", [{}, None], ids=["versioned", "clustered"])
 
 
 def test_split_ports_reproduces_seed_tables(spark):
@@ -63,10 +68,10 @@ def test_split_ports_reproduces_seed_tables(spark):
     assert problems == [], problems
 
 
-@pytest.mark.parametrize("store_cls", [ParquetStateStore, PartitionedStateStore])
-def test_state_store_additive_schema_evolution(spark, tmp_path, store_cls):
-    store = store_cls(spark, str(tmp_path / "state"))
-    name = "int_status_changes"  # partitioned by to_date(ingested_ts)
+@LAYOUTS
+def test_state_store_additive_schema_evolution(spark, tmp_path, cluster_by):
+    store = ParquetStateStore(spark, str(tmp_path / "state"), cluster_by)
+    name = "int_status_changes"  # clustered by ingested_ts by default
     keys = ["charger_id", "connector_id", "ingested_ts"]
     v1 = spark.createDataFrame(
         [("CH-1", "1", "2025-10-01 10:00:00", "Available"),
@@ -95,9 +100,9 @@ def test_state_store_additive_schema_evolution(spark, tmp_path, store_cls):
     assert got["2025-10-03T10:00:00"]["error_code"] is None
 
 
-@pytest.mark.parametrize("store_cls", [ParquetStateStore, PartitionedStateStore])
-def test_state_store_refuses_dropped_columns_until_migrate(spark, tmp_path, store_cls):
-    store = store_cls(spark, str(tmp_path / "state"))
+@LAYOUTS
+def test_state_store_refuses_dropped_columns_until_migrate(spark, tmp_path, cluster_by):
+    store = ParquetStateStore(spark, str(tmp_path / "state"), cluster_by)
     name = "int_status_changes"
     keys = ["charger_id", "connector_id", "ingested_ts"]
     v1 = spark.createDataFrame(
@@ -123,12 +128,12 @@ def test_state_store_refuses_dropped_columns_until_migrate(spark, tmp_path, stor
     assert "error_code" not in store.read(name).columns
 
 
-@pytest.mark.parametrize("store_cls", [ParquetStateStore, PartitionedStateStore])
-def test_state_store_survives_empty_state(spark, tmp_path, store_cls):
+@LAYOUTS
+def test_state_store_survives_empty_state(spark, tmp_path, cluster_by):
     """An EMPTY batch writes a parquet dir with no part files; the next
     read must reconstruct the empty state from the recorded schema (not
     crash on schema inference, not flip the model to full-refresh)."""
-    store = store_cls(spark, str(tmp_path / "state"))
+    store = ParquetStateStore(spark, str(tmp_path / "state"), cluster_by)
     name = "int_status_changes"
     empty = spark.createDataFrame(
         [],

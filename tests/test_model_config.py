@@ -17,7 +17,6 @@ import pytest
 from kwwhat_spark.models.base import CLUSTER_BY, MODELS, UNIQUE_KEYS, VIEW_MODELS, Pipeline, model
 from kwwhat_spark.plans.incremental import INCREMENTAL_ORDER
 from kwwhat_spark.sources.ocpp import load_ocpp_sources
-from perfbench import fleet
 
 
 def test_cluster_by_must_be_a_unique_key_column():
@@ -52,13 +51,11 @@ class RecordingPipeline(Pipeline):
         return super().ref(name)
 
 
-def test_incremental_order_follows_the_dag(spark, tmp_path):
+def test_incremental_order_follows_the_dag(spark, one_charger_fleet):
     assert INCREMENTAL_ORDER == [m for m in MODELS if m in UNIQUE_KEYS]
     assert len(INCREMENTAL_ORDER) == 12
 
-    out = str(tmp_path / "fleet")
-    fleet.write_fleet(out, fleet.generate(7, 1))
-    pipe = RecordingPipeline(spark=spark, sources=load_ocpp_sources(spark, out),
+    pipe = RecordingPipeline(spark=spark, sources=load_ocpp_sources(spark, one_charger_fleet),
                              cache_views=("stg_ocpp_logs",))
     pipe.reads = {}
     try:

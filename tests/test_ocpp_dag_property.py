@@ -279,7 +279,7 @@ def test_generated_fleet_mart_matches_reference_compile(spark, fleet_dir, mart):
 
 
 def test_generated_fleet_incremental_converges(spark, fleet_dir, tmp_path):
-    """Three cumulative batches through the PartitionedStateStore on the
+    """Three cumulative batches through ParquetStateStore on the
     adversarial fleet, asserted against what the REFERENCE actually
     guarantees. Unlike the demo seed (whose 60 s heartbeats and
     day-boundary cutoffs never split an entity lifecycle), this fleet
@@ -314,12 +314,12 @@ def test_generated_fleet_incremental_converges(spark, fleet_dir, tmp_path):
     from kwwhat_spark.plans.incremental import (
         INCREMENTAL_ORDER,
         IncrementalRunner,
-        PartitionedStateStore,
+        ParquetStateStore,
     )
     from tests.test_incremental import _BOUNDARY_LINK_COLS, _rows_key
 
     sources = load_ocpp_sources(spark, fleet_dir)
-    store = PartitionedStateStore(spark, str(tmp_path / "state"))
+    store = ParquetStateStore(spark, str(tmp_path / "state"))
     runner = IncrementalRunner(spark, store)
     for cutoff in ["2025-10-02T07", "2025-10-02T09", None]:
         logs = sources["raw_ocpp_logs"]

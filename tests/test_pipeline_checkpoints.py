@@ -16,7 +16,6 @@ from kwwhat_spark.operators.cachescope import checkpoint_rdd
 from kwwhat_spark.plans.incremental import (
     IncrementalRunner,
     ParquetStateStore,
-    PartitionedStateStore,
 )
 from kwwhat_spark.sources.ocpp import (
     CHARGERS_SCHEMA,
@@ -114,7 +113,7 @@ def test_incremental_batches_release_every_checkpoint(spark, tmp_path):
 def test_partitioned_merges_release_every_checkpoint(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    store = PartitionedStateStore(spark, str(tmp_path / "p"))
+    store = ParquetStateStore(spark, str(tmp_path / "p"))  # clusters int_status_changes
     keys = ["charger_id", "connector_id", "ingested_ts"]
     before = _persistent_ids(spark)
     store.merge("int_status_changes", _status_changes(spark, T0), keys)

@@ -1,7 +1,7 @@
 """Concurrent model builds (Pipeline.refs) are the same build as a
 sequential one.
 
-Runs on a one-charger fleet generated by perfbench.fleet:
+Runs on the shared one-charger fleet (conftest ``one_charger_fleet``):
 
 - every model function runs once, however many branches read it;
 - both charge-attempt marts equal the DuckDB compile of the DAG;
@@ -21,16 +21,13 @@ import time
 from collections import Counter
 
 import duckdb
-import pytest
 
 from kwwhat_spark.models import base
 from kwwhat_spark.models.base import MODELS, VIEW_MODELS, Pipeline
 from kwwhat_spark.queries.ocpp_pipeline import mart_oracle_for_seed_dir, mart_projection
 from kwwhat_spark.sources.ocpp import load_ocpp_sources
-from perfbench import fleet
 from tests.oracle_harness import compare
 
-SEED = 7
 MARTS = ("fact_charge_attempts", "fact_visits")
 # Everything fact_charge_attempts and fact_visits read, views included.
 UPSTREAM = {
@@ -42,19 +39,12 @@ UPSTREAM = {
 TIMEOUT_S = 120
 
 
-@pytest.fixture(scope="module")
-def fleet_dir(tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("one_charger_fleet"))
-    fleet.write_fleet(out, fleet.generate(SEED, 1))
-    return out
-
-
-def _pipeline(spark, fleet_dir, cls=Pipeline):
-    return cls(spark=spark, sources=load_ocpp_sources(spark, fleet_dir),
+def _pipeline(spark, seed_dir, cls=Pipeline):
+    return cls(spark=spark, sources=load_ocpp_sources(spark, seed_dir),
                cache_views=("stg_ocpp_logs",))
 
 
-def test_concurrent_build_is_the_same_build(spark, fleet_dir, monkeypatch):
+def test_concurrent_build_is_the_same_build(spark, one_charger_fleet, monkeypatch):
     sc = spark.sparkContext
     group = "pipeline-concurrency-test"
     built: list[str] = []
@@ -71,7 +61,7 @@ def test_concurrent_build_is_the_same_build(spark, fleet_dir, monkeypatch):
 
     for name, fn in list(MODELS.items()):
         monkeypatch.setitem(MODELS, name, counted(name, fn))
-    pipe = _pipeline(spark, fleet_dir)
+    pipe = _pipeline(spark, one_charger_fleet)
     ungrouped_before = set(sc.statusTracker().getJobIdsForGroup(None))
     sc.setJobGroup(group, group)
     try:
@@ -97,7 +87,7 @@ def test_concurrent_build_is_the_same_build(spark, fleet_dir, monkeypatch):
     con.execute("SET TimeZone='UTC'")
     for mart, df in zip(MARTS, marts):
         got = mart_projection(mart, df)
-        problems = compare(got, con, mart_oracle_for_seed_dir(mart, fleet_dir))
+        problems = compare(got, con, mart_oracle_for_seed_dir(mart, one_charger_fleet))
         assert not problems, (mart, problems[:3])
         assert got.count() > 0, mart
     con.close()
@@ -123,7 +113,7 @@ def _in_thread(fn) -> dict:
     return box
 
 
-def test_refs_reraises_a_worker_failure(spark, fleet_dir, monkeypatch):
+def test_refs_reraises_a_worker_failure(spark, one_charger_fleet, monkeypatch):
     started, release = threading.Event(), threading.Event()
     calls: Counter = Counter()
     int_ports = MODELS["int_ports"]
@@ -135,7 +125,7 @@ def test_refs_reraises_a_worker_failure(spark, fleet_dir, monkeypatch):
         raise Boom("int_ports")
 
     monkeypatch.setitem(MODELS, "int_ports", failing)
-    pipe = _pipeline(spark, fleet_dir)
+    pipe = _pipeline(spark, one_charger_fleet)
     # int_ports fails in a worker thread of refs, after a second caller
     # has started waiting for the same build.
     builder = _in_thread(lambda: pipe.refs("int_connectors", "int_ports"))
@@ -235,8 +225,8 @@ class RecordingPipeline(Pipeline):
             top[1] = inside
 
 
-def test_model_bodies_read_through_refs(spark, fleet_dir, monkeypatch):
-    pipe = _pipeline(spark, fleet_dir, RecordingPipeline)
+def test_model_bodies_read_through_refs(spark, one_charger_fleet, monkeypatch):
+    pipe = _pipeline(spark, one_charger_fleet, RecordingPipeline)
     pipe.late = []
     pipe.refs(*MODELS)
     assert pipe.late == [], (
@@ -246,7 +236,7 @@ def test_model_bodies_read_through_refs(spark, fleet_dir, monkeypatch):
 
     # The recorder does see a plain ref of an unbuilt model.
     monkeypatch.setitem(MODELS, "serial_probe", lambda p: p.ref("int_connectors"))
-    probe = _pipeline(spark, fleet_dir, RecordingPipeline)
+    probe = _pipeline(spark, one_charger_fleet, RecordingPipeline)
     probe.late = []
     probe.ref("serial_probe")
     assert probe.late == [("serial_probe", "int_connectors")]

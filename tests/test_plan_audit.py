@@ -45,7 +45,7 @@ WHITELIST = {
     "ocpp_chat_bi_entities": "five single-row metric partials cross-joined "
     "into one row (the BI module's whitelisted scalar-combine pattern)",
     "knn_graph_quantized_replayable": "oracle-twin shape: all-pairs over a "
-    "200-row bounded slice only (prod kNN is knn_graph/knn_graph_sharded)",
+    "200-row bounded slice only (prod kNN is knn_graph/knn_graph_blocked)",
     "ocpp_chat_bi_pop": "two single-row metric partials cross-joined into "
     "one row per period (the BI module's whitelisted scalar-combine "
     "pattern, same as ocpp_chat_bi_entities)",

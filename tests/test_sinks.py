@@ -1,5 +1,6 @@
 """Date-partitioned mart sink: partition layout exists, reads round-trip,
-and a date predicate prunes partitions."""
+and a date predicate prunes partitions (on the shared one-charger,
+14-day fleet)."""
 
 from __future__ import annotations
 
@@ -14,9 +15,9 @@ from kwwhat_spark.sources.ocpp import load_ocpp_sources
 
 
 @pytest.fixture(scope="module")
-def written(spark, tmp_path_factory):
+def written(spark, tmp_path_factory, one_charger_fleet):
     out = str(tmp_path_factory.mktemp("marts"))
-    pipe = Pipeline(spark=spark, sources=load_ocpp_sources(spark))
+    pipe = Pipeline(spark=spark, sources=load_ocpp_sources(spark, one_charger_fleet))
     paths = write_marts(pipe, out, models=["fact_charge_attempts", "fact_downtime_daily"])
     return pipe, paths
 
@@ -25,7 +26,7 @@ def test_partition_layout_and_roundtrip(spark, written):
     pipe, paths = written
     path = paths["fact_charge_attempts"]
     days = [d for d in os.listdir(path) if d.startswith("_date=")]
-    assert len(days) >= 10  # 14-day seed
+    assert len(days) >= 10  # 14-day fleet
     back = spark.read.parquet(path)
     assert back.count() == pipe.ref("fact_charge_attempts").count()
 

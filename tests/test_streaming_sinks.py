@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from kwwhat_spark.plans.incremental import ParquetStateStore, PartitionedStateStore
+from kwwhat_spark.plans.incremental import ParquetStateStore
 from kwwhat_spark.sources.testdata import load_table
 from kwwhat_spark.streaming.sinks import merge_sink, stream_dedup
 
@@ -37,11 +37,9 @@ def test_stream_dedup_drops_within_watermark(spark, dup_dir):
     assert out.select("event_id").distinct().count() == 500
 
 
-@pytest.mark.parametrize("store_fn", [
+@pytest.mark.parametrize("store_fn", [  # versioned, then clustered layout
     lambda spark, p: ParquetStateStore(spark, p),
-    lambda spark, p: PartitionedStateStore(
-        spark, p, partition_exprs={"events_mart": "to_date(ts)"}
-    ),
+    lambda spark, p: ParquetStateStore(spark, p, cluster_by={"events_mart": "ts"}),
 ])
 def test_merge_sink_upserts_across_microbatches(spark, sf_dir, tmp_path, store_fn):
     src = str(tmp_path / "merge_src")

@@ -7,7 +7,8 @@ execution paths over it:
                1×/10×/50× table's shape, extended)
   stream       the stateful change-point stream, one availableNow pass
   incremental  the two-batch status→attempts chain through the
-               partition-scoped state store
+               state store (date-partitioned: every model in the
+               chain but int_connector_latest_status is clustered)
 
 Replication rewrites charge_point_id / location_id with a per-replica
 tag (join grain stays per-charger: fan-out is wider, never deeper) and
@@ -188,7 +189,7 @@ def run_incremental(spark, seed_dir: str) -> dict:
 
     from pyspark.sql import functions as F
 
-    from kwwhat_spark.plans.incremental import IncrementalRunner, PartitionedStateStore
+    from kwwhat_spark.plans.incremental import IncrementalRunner, ParquetStateStore
     from kwwhat_spark.sources.ocpp import load_ocpp_sources
 
     chain = [
@@ -198,7 +199,7 @@ def run_incremental(spark, seed_dir: str) -> dict:
     sources = load_ocpp_sources(spark, seed_dir=seed_dir)
     state_dir = tempfile.mkdtemp(prefix="fleet-inc-")
     try:
-        store = PartitionedStateStore(spark, state_dir)
+        store = ParquetStateStore(spark, state_dir)
         runner = IncrementalRunner(spark, store)
         t0 = time.perf_counter()
         batch1 = {
