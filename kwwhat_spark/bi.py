@@ -8,10 +8,10 @@ full-stack acceptance tests.  SURVEY §3.3 scopes the LLM itself out
 piece such an agent calls into, made deterministic so it is testable
 without a model:
 
-- a typed ``BIQuery`` (aggregate columns + a time window), compiled to
-  one Spark SQL aggregate per touched mart (single shuffle per mart,
-  whole-stage codegen; scalar partials combined with one-row cross
-  joins, the repo's whitelisted pattern);
+- a typed ``BIQuery`` (aggregate columns + a time window), compiled by
+  the semantic layer's ``_aggregate`` to one aggregate per touched mart
+  (single shuffle per mart, whole-stage codegen; scalar partials
+  combined with one-row cross joins, the repo's whitelisted pattern);
 - ``route()``: a rule lexicon that parses a natural-language question
   into a ``BIQuery`` — entity counts ("how many ports…"), the ten
   semantic-layer metrics by label (metrics/semantic.py METRICS), and
@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -38,8 +39,8 @@ from pyspark.sql import functions as F
 from kwwhat_spark.metrics.semantic import (
     METRICS,
     SEMANTIC_MODELS,
-    Metric,
-    _measure_model,
+    _aggregate,
+    metric_sql,
 )
 from kwwhat_spark.models.base import Pipeline
 
@@ -128,24 +129,6 @@ _PERCENT_METRICS = {
 }
 
 
-def _metric_sql(metric: Metric) -> tuple[str, str]:
-    """(mart, aggregate SQL) for a semantic-layer metric.  Ratio metrics
-    compile to num/den measure SQL — valid because every declared ratio's
-    measures live on one semantic model; a cross-model ratio would need
-    the query_metrics() partial join, so we refuse it loudly."""
-    if metric.type == "simple":
-        sm = _measure_model(metric.measure)
-        return sm.model, sm.measures[metric.measure].sql()
-    num_model, num_sql = _metric_sql(METRICS[metric.numerator])
-    den_model, den_sql = _metric_sql(METRICS[metric.denominator])
-    if num_model != den_model:
-        raise ValueError(
-            f"ratio metric {metric.name} spans models {num_model}/{den_model}; "
-            "use kwwhat_spark.metrics.semantic.query_metrics for it"
-        )
-    return num_model, f"(cast({num_sql} as double) / nullif({den_sql}, 0))"
-
-
 def _metric_column(key: str, single: bool) -> BIColumn:
     """Build the output column for a lexicon metric key.  `single` is
     True when the question asks for exactly one metric — the reference's
@@ -179,7 +162,7 @@ def _metric_column(key: str, single: bool) -> BIColumn:
             time_col=_TIME_COLS[sm.model],
         )
     if key in METRICS:
-        model, sql = _metric_sql(METRICS[key])
+        model, sql = metric_sql(METRICS[key])
         return BIColumn(
             name=f"{key}_pct" if key in _PERCENT_METRICS else key,
             model=model,
@@ -291,20 +274,16 @@ def route(question: str) -> BIQuery:
 # --- compile & run -----------------------------------------------------
 
 
-def _mart_view(pipe: Pipeline, model: str) -> str:
-    view = f"__bi_{model.strip('_')}"
+def _mart_frame(pipe: Pipeline, model: str) -> DataFrame:
     if model == "__ports_with_chargers":
-        df = pipe.ref("dim_ports").join(
+        return pipe.ref("dim_ports").join(
             F.broadcast(
                 pipe.ref("dim_chargers").select("charger_id", "decommissioned_ts")
             ),
             "charger_id",
             "left",
         )
-    else:
-        df = pipe.ref(model)
-    df.createOrReplaceTempView(view)
-    return view
+    return pipe.ref(model)
 
 
 def _resolve_anchor(pipe: Pipeline, columns: tuple[BIColumn, ...]) -> str | None:
@@ -317,25 +296,35 @@ def _resolve_anchor(pipe: Pipeline, columns: tuple[BIColumn, ...]) -> str | None
     for c in columns:
         if c.time_col and c.model not in seen:
             seen.add(c.model)
-            view = _mart_view(pipe, c.model)
-            anchors.append(f"select max({c.time_col}) as t from {view}")
+            anchors.append(_mart_frame(pipe, c.model).selectExpr(f"max({c.time_col}) as t"))
     if not anchors:
         return None
-    row = pipe.spark.sql(" union all ".join(anchors)).agg(F.max("t")).first()
+    row = reduce(DataFrame.unionAll, anchors).agg(F.max("t")).first()
     return f"timestamp'{row[0]}'" if row[0] is not None else None
+
+
+def _column_sql(c: BIColumn) -> str:
+    if c.where and c.expr == "count(*)":
+        # Push the predicate inside the aggregate so several filtered
+        # counts can share one scan of the mart.
+        sql = f"count(case when {c.where} then 1 end)"
+    else:
+        sql = c.expr
+    # cast: avg over a decimal literal yields DECIMAL in Spark; the BI
+    # contract is plain doubles.
+    return f"cast(round(({sql}) * 100, 2) as double)" if c.percent else sql
 
 
 def compile_query(pipe: Pipeline, bq: BIQuery, anchor: str | None = None) -> DataFrame:
     """One aggregate per touched mart (a single shuffle each), scalar
     partials combined via one-row cross joins, percent columns rendered
-    round(x*100, 2) last.  Window anchor defaults to the max event time
+    round(x*100, 2).  Window anchor defaults to the max event time
     across the touched facts (deterministic on static test data); a live
     deployment passes wall-clock (or a pinned as-of time) via `anchor`,
     a SQL timestamp literal like "timestamp'2025-10-15 00:00:00'".  An
     explicit anchor also UPPER-bounds the current window (ts <= anchor):
     that is what "the last 7 days as of T" means, and it keeps the answer
     reproducible when the marts contain events after T."""
-    spark = pipe.spark
     # Group key includes the non-count WHERE so two differently-filtered
     # averages on one mart never share (and wrongly AND) a predicate.
     by_model: dict[tuple[str, str | None], list[BIColumn]] = {}
@@ -347,47 +336,21 @@ def compile_query(pipe: Pipeline, bq: BIQuery, anchor: str | None = None) -> Dat
     if bq.window_days is not None:
         anchor_sql = anchor if anchor is not None else _resolve_anchor(pipe, bq.columns)
 
-    partials: list[DataFrame] = []
-    for (model, _), cols in by_model.items():
-        view = _mart_view(pipe, model)
-        exprs = []
-        for c in cols:
-            if c.where and c.expr == "count(*)":
-                # Push the predicate inside the aggregate so several
-                # filtered counts can share one scan of the mart.
-                exprs.append(f"count(case when {c.where} then 1 end) as `{c.name}`")
-            else:
-                exprs.append(f"{c.expr} as `{c.name}`")
-        sql = f"select {', '.join(exprs)} from {view}"
-        wheres = [
-            f"({c.where})" for c in cols if c.where and c.expr != "count(*)"
-        ]
+    parts = []
+    for (model, where), cols in by_model.items():
+        wheres = [f"({where})"] if where else []
         tc = next((c.time_col for c in cols if c.time_col), None)
         if anchor_sql and tc:
-            wheres.append(
-                f"{tc} > {anchor_sql} - interval {bq.window_days} day"
-            )
+            wheres.append(f"{tc} > {anchor_sql} - interval {bq.window_days} day")
             if anchor is not None:
                 wheres.append(f"{tc} <= {anchor_sql}")
-        if wheres:
-            sql += " where " + " and ".join(wheres)
-        partials.append(spark.sql(sql))
-
-    result = partials[0]
-    for other in partials[1:]:
-        result = result.crossJoin(other)
-
-    final = []
-    for c in bq.columns:
-        if c.percent:
-            # cast: avg over a decimal literal yields DECIMAL in Spark;
-            # the BI contract is plain doubles.
-            final.append(
-                f"cast(round(`{c.name}` * 100, 2) as double) as `{c.name}`"
-            )
-        else:
-            final.append(f"`{c.name}`")
-    return result.selectExpr(*final)
+        parts.append((
+            _mart_frame(pipe, model),
+            " and ".join(wheres),
+            [],
+            [(c.name, _column_sql(c)) for c in cols],
+        ))
+    return _aggregate(parts).selectExpr(*[f"`{c.name}`" for c in bq.columns])
 
 
 # --- pluggable agent interface -----------------------------------------

@@ -4,19 +4,22 @@ semantic_models.yml; SURVEY §3.3).
 
 6 semantic models (entities / dimensions / measures over marts,
 semantic_models.yml:3-309) and 10 metrics (semantic_models.yml:310-383).
-`query_metrics()` is the MetricFlow-equivalent entry point: it renders
-each requested metric to an aggregate Spark SQL statement over the mart
-(registered as a temp view), groups by the requested dimensions, and
-joins per-model results — measures are plain count/sum/avg/sum_boolean
-aggregates, so every metric stays inside whole-stage codegen; a metric
-query is one shuffle per base mart regardless of metric count.
+`metric_sql()` renders a metric to one aggregate SQL expression over its
+mart, and `_aggregate()` runs one filtered, grouped aggregate per mart
+and joins the per-mart results. `query_metrics()` (the MetricFlow-
+equivalent entry point) and chat-BI (`kwwhat_spark.bi`) both compile
+through these two: measures are plain count/sum/avg/sum_boolean
+aggregates, so every metric stays inside whole-stage codegen, and a
+metric query is one shuffle per mart regardless of metric count.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from kwwhat_spark.models.base import Pipeline
 
@@ -374,6 +377,42 @@ def _base_measures(metric: Metric) -> list[str]:
     return out
 
 
+def metric_sql(metric: Metric) -> tuple[str, str]:
+    """(mart, aggregate SQL) for a metric: a simple metric is its
+    measure's SQL, a ratio is ``cast(num as double) / nullif(den, 0)``
+    over the one mart both sides sit on.  Every declared ratio's measures
+    live on one semantic model; a ratio across two is refused."""
+    if metric.type == "simple":
+        sm = _measure_model(metric.measure)
+        return sm.model, sm.measures[metric.measure].sql()
+    num_model, num_sql = metric_sql(METRICS[metric.numerator])
+    den_model, den_sql = metric_sql(METRICS[metric.denominator])
+    if num_model != den_model:
+        raise ValueError(
+            f"ratio metric {metric.name} spans models {num_model}/{den_model}; "
+            "a ratio's numerator and denominator must share one mart"
+        )
+    return num_model, f"(cast({num_sql} as double) / nullif({den_sql}, 0))"
+
+
+def _aggregate(parts: list[tuple]) -> DataFrame:
+    """One filtered, grouped aggregate per part (a single shuffle each),
+    joined on the dimension aliases (full outer), or cross-joined as
+    one-row partials when there are none.  A part is one mart's share of
+    the query: (frame, filter SQL or None, [(dimension alias, SQL)],
+    [(column alias, aggregate SQL)]).  Catalyst folds equal aggregate
+    expressions, so columns repeating a measure cost nothing."""
+    frames = []
+    for frame, where, dims, cols in parts:
+        if where:
+            frame = frame.where(where)
+        frames.append(frame.groupBy(*[F.expr(sql).alias(n) for n, sql in dims])
+                      .agg(*[F.expr(sql).alias(n) for n, sql in cols]))
+    keys = [n for n, _ in parts[0][2]]
+    return reduce(
+        lambda a, b: a.join(b, keys, "full_outer") if keys else a.crossJoin(b), frames)
+
+
 def query_metrics(
     pipe: Pipeline,
     metrics: list[str],
@@ -381,7 +420,7 @@ def query_metrics(
     where: str | None = None,
 ) -> DataFrame:
     """MetricFlow-equivalent metric query: returns one row per group_by
-    combination with one column per requested metric.
+    combination with one double column per requested metric.
 
     group_by names must be dimensions declared on every semantic model the
     requested metrics touch (MetricFlow would join through entities; the
@@ -390,53 +429,16 @@ def query_metrics(
     the base mart's columns, applied before aggregation.
     """
     group_by = group_by or []
-    wanted = [METRICS[m] for m in metrics]
-
-    # Group base measures by their semantic model.
-    by_model: dict[str, list[str]] = {}
-    for metric in wanted:
-        for meas in _base_measures(metric):
-            sm = _measure_model(meas)
-            by_model.setdefault(sm.name, [])
-            if meas not in by_model[sm.name]:
-                by_model[sm.name].append(meas)
-
-    spark = pipe.spark
-    partials: list[DataFrame] = []
-    for sm_name, measure_names in by_model.items():
-        sm = SEMANTIC_MODELS[sm_name]
-        view = f"__metric_{sm.model}"
-        pipe.ref(sm.model).createOrReplaceTempView(view)
-        dim_sql = []
-        for d in group_by:
-            if d not in sm.dimensions:
-                raise KeyError(f"dimension {d} not on semantic model {sm_name}")
-            dim_sql.append(f"{sm.dimensions[d].sql()} as {d}")
-        meas_sql = [f"{sm.measures[m].sql()} as {m}" for m in measure_names]
-        sql = f"select {', '.join(dim_sql + meas_sql)} from {view}"
-        if where:
-            sql += f" where {where}"
-        if group_by:
-            sql += f" group by {', '.join(str(i + 1) for i in range(len(group_by)))}"
-        partials.append(spark.sql(sql))
-
-    result = partials[0]
-    for other in partials[1:]:
-        result = (
-            result.join(other, on=group_by, how="full_outer") if group_by
-            else result.crossJoin(other)
-        )
-
-    # Derive metric columns from base-measure columns.
-    exprs = [f"`{c}`" for c in group_by]
-    for metric in wanted:
-        exprs.append(f"{_metric_expr(metric)} as {metric.name}")
-    return result.selectExpr(*exprs)
-
-
-def _metric_expr(metric: Metric) -> str:
-    if metric.type == "simple":
-        return f"cast(`{metric.measure}` as double)"
-    num = _metric_expr(METRICS[metric.numerator])
-    den = _metric_expr(METRICS[metric.denominator])
-    return f"({num} / nullif({den}, 0))"
+    by_mart: dict[str, dict[str, str]] = {}
+    for name in metrics:
+        mart, sql = metric_sql(METRICS[name])
+        by_mart.setdefault(mart, {})[name] = f"cast({sql} as double)"
+    parts = []
+    for mart, cols in by_mart.items():
+        sm = next(s for s in SEMANTIC_MODELS.values() if s.model == mart)
+        missing = [d for d in group_by if d not in sm.dimensions]
+        if missing:
+            raise KeyError(f"dimension {missing[0]} not on semantic model {sm.name}")
+        dims = [(d, sm.dimensions[d].sql()) for d in group_by]
+        parts.append((pipe.ref(mart), where, dims, list(cols.items())))
+    return _aggregate(parts).select(*group_by, *metrics)

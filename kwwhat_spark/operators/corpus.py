@@ -620,8 +620,8 @@ def strip_duplicate_spans(
     a collision can only merge two gram groups, i.e. over-mark a span
     as duplicated). The DuckDB oracle still groups by md5 of the span
     text — gate-green means the rewrite is value-identical. Measured
-    r12: output rows identical at sf0.01/sf0.1 (tools/probe_span_key.py
-    same-session compare); sf0.1 A/B parity (the query is
+    r12: output rows identical at sf0.01/sf0.1 (OPTIMIZATION_r12.md
+    change 6, same-session compare); sf0.1 A/B parity (the query is
     exchange/latency-bound there); sf1 interleaved stash A/B, 3 windows,
     min-of-3 each: 2.35 → 2.09 s, faster in every window.
 

@@ -276,7 +276,7 @@ def _simhash64_votes_fn():
     HOF passes per doc in Catalyst's INTERPRETED evaluator — the same
     pathology the r12 MinHash signature fix removed. Here the whole
     batch is 64 vectorized shift-and-reduceat passes. Same-window
-    canary-gated A/B at sf0.1 (r13, tools/ab_simhash_r13.py): signature
+    canary-gated A/B at sf0.1 (r13, OPTIMIZATION_r13.md change 5): signature
     stage 1.71 s -> 0.28 s min-of-5, identical output. Parity pinned by
     tests/test_llm_ops.py::test_simhash_votes_mapper_matches_expression."""
     import numpy as np
@@ -555,7 +555,11 @@ def simhash_pairs(
     banded-persist lesson, r12 change 7). The cached rows are two longs
     per doc. Same-window canary-gated A/B at sf0.1 (r13, min-of-5, full
     pairs op): expr-nopersist 2.40 s (r12 ship) -> numpy 0.72 ->
-    numpy+persist 0.62; the replayable family alone gains 2.40 -> 2.09."""
+    numpy+persist 0.62; the replayable family alone gains 2.40 -> 2.09.
+
+    Null and empty texts have no tokens, so both hash families give them
+    simhash 0: every two such documents come out as a pair at hamming
+    distance 0.  Filter them out first if they must not pair."""
     from pyspark.storagelevel import StorageLevel
 
     from kwwhat_spark.operators.cachescope import track

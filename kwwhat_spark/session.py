@@ -15,6 +15,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """24g, or half the machine's physical memory when that is less."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return "24g" if half_mb >= 24 * 1024 else f"{half_mb}m"
+
+
 def get_spark(
     app_name: str = "kwh-spark",
     master: str | None = None,
@@ -62,9 +68,15 @@ def get_spark(
         # Local mode hosts all 32 executor threads inside the driver JVM:
         # an 8g heap showed progressive GC drift across bench runs
         # (19->30 s for identical plans). The rig has 128 GiB; 24g keeps
-        # steady-state flat. On a real cluster executor memory is sized
-        # by spark-submit and this knob only covers the driver proper.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        # steady-state flat. A smaller machine gets half its memory: a
+        # 24g heap on 16 GB let one test JVM reach 9.2 GB RSS and two
+        # side-by-side sessions lose their JVMs. On a real cluster
+        # executor memory is sized by spark-submit and this knob only
+        # covers the driver proper.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
+        )
         # Shuffle/spill scratch stays on disk BY DESIGN (Spark's /tmp
         # default; SPARK_LOCAL_DIRS overrides it natively, no config
         # needed): spill is unbounded — a quadratic candidate join at

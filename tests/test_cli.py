@@ -57,22 +57,25 @@ def test_cmd_check_passes_on_seed(spark, tmp_path):
     assert cmd_check(spark, _args(tmp_path)) == 0
 
 
-def test_cmd_metrics_runs(spark, tmp_path, capsys):
-    assert cmd_metrics(spark, _args(tmp_path)) == 0
+def test_cmd_metrics_runs(spark, tmp_path, capsys, one_charger_fleet):
+    assert cmd_metrics(spark, _args(tmp_path, seed_dir=one_charger_fleet)) == 0
     assert "total_visits" in capsys.readouterr().out
 
 
-def test_cmd_bi_answers_and_refuses(spark, tmp_path, capsys):
+def test_cmd_bi_answers_and_refuses(spark, tmp_path, capsys, one_charger_fleet):
     from kwwhat_spark.__main__ import cmd_bi
 
-    args = _args(tmp_path, question="How many ports do we have?", glance=False, pop=False)
+    args = _args(tmp_path, seed_dir=one_charger_fleet,
+                 question="How many ports do we have?", glance=False, pop=False)
     assert cmd_bi(spark, args) == 0
     assert "total_ports" in capsys.readouterr().out
-    args = _args(tmp_path, question="What is our uptime?", glance=True, pop=False)
+    args = _args(tmp_path, seed_dir=one_charger_fleet,
+                 question="What is our uptime?", glance=True, pop=False)
     assert cmd_bi(spark, args) == 0
     out = capsys.readouterr().out
     assert "overall_uptime_pct" in out and "status" in out
-    args = _args(tmp_path, question="blended gross margin?", glance=False, pop=False)
+    args = _args(tmp_path, seed_dir=one_charger_fleet,
+                 question="blended gross margin?", glance=False, pop=False)
     assert cmd_bi(spark, args) == 2
     assert "not defined in the semantic model" in capsys.readouterr().out
 

@@ -164,6 +164,20 @@ def test_simhash_identical_docs_hamming_zero(docs):
     assert pairs[(1, 2)] == 0
 
 
+@pytest.mark.parametrize("replayable_hash", [False, True])
+def test_simhash_null_and_empty_texts_pair_at_hamming_zero(spark, replayable_hash):
+    """The documented contract: null and empty texts hash to simhash 0 in
+    both families, so they pair with each other and with nothing else."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, None), (3, ""), (4, None), (5, "x y z")],
+        "doc_id long, text string",
+    )
+    got = simhash_pairs(docs, "doc_id", "text", replayable_hash=replayable_hash).collect()
+    assert {(r["doc_a"], r["doc_b"]): r["hamming"] for r in got} == {
+        (2, 3): 0, (2, 4): 0, (3, 4): 0,
+    }
+
+
 @pytest.mark.full
 def test_lsh_topk_subset_of_brute_force_universe(spark, sf_dir):
     from kwwhat_spark.sources.testdata import load_table

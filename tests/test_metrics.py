@@ -1,6 +1,7 @@
 """Semantic-layer tests: the 10 reference metrics
-(semantic_models.yml:310-383) computed over the demo-seed pipeline,
-cross-checked against direct DataFrame aggregation."""
+(semantic_models.yml:310-383) computed over the one-charger generated
+fleet (conftest ``one_charger_fleet``), cross-checked against direct
+DataFrame aggregation."""
 
 from __future__ import annotations
 
@@ -19,8 +20,8 @@ ALL_METRICS = sorted(METRICS)
 
 
 @pytest.fixture(scope="module")
-def pipe(spark):
-    return Pipeline(spark=spark, sources=load_ocpp_sources(spark))
+def pipe(spark, one_charger_fleet):
+    return Pipeline(spark=spark, sources=load_ocpp_sources(spark, one_charger_fleet))
 
 
 @pytest.fixture(scope="module")
@@ -92,7 +93,7 @@ def test_group_by_time_grain(pipe):
     daily = query_metrics(
         pipe, ["total_visits"], group_by=["visit_end_ts"]
     ).collect()
-    assert len(daily) >= 10  # 14-day seed
+    assert len(daily) >= 10  # 14-day fleet
     assert all(r["visit_end_ts"] is not None for r in daily)
 
 
