@@ -290,7 +290,8 @@ def _resolve_anchor(pipe: Pipeline, columns: tuple[BIColumn, ...]) -> str | None
     """The window anchor: max event time across ALL marts the query
     touches (one union-all of per-mart max scans).  Resolved once and
     inlined as a literal so every predicate — current window and any
-    shifted previous-period window — shares the same anchor."""
+    shifted previous-period window — shares the same anchor. Formatted
+    in the session time zone, the zone the literal is read back in."""
     anchors = []
     seen: set[str] = set()
     for c in columns:
@@ -299,7 +300,8 @@ def _resolve_anchor(pipe: Pipeline, columns: tuple[BIColumn, ...]) -> str | None
             anchors.append(_mart_frame(pipe, c.model).selectExpr(f"max({c.time_col}) as t"))
     if not anchors:
         return None
-    row = reduce(DataFrame.unionAll, anchors).agg(F.max("t")).first()
+    row = reduce(DataFrame.unionAll, anchors).agg(
+        F.date_format(F.max("t"), "yyyy-MM-dd HH:mm:ss.SSSSSS")).first()
     return f"timestamp'{row[0]}'" if row[0] is not None else None
 
 
@@ -447,9 +449,8 @@ def period_over_period(
     literal (see compile_query) — required for reproducible comparisons
     when any touched mart extends to wall-clock."""
     bq = route(question)
-    cur = compile_query(pipe, bq, anchor=anchor)
     if bq.window_days is None:
-        g = at_a_glance(cur)
+        g = at_a_glance(compile_query(pipe, bq, anchor=anchor))
         return g.select(
             "metric",
             "value",
@@ -459,10 +460,13 @@ def period_over_period(
     # Previous period = [2w ago, w ago), recomputed with an explicit
     # shifted filter (works for averages too, not just additive sums).
     # The anchor is resolved ONCE across all touched marts — the same
-    # union-max compile_query uses for the current window — so the two
-    # periods are adjacent by construction even when marts have
-    # different max timestamps.
+    # union-max compile_query would resolve — and both windows get it
+    # as a literal, so the two periods are adjacent by construction
+    # even when marts have different max timestamps. The current
+    # window's added `ts <= anchor` bound drops no row: the anchor is
+    # the max over those marts.
     anchor_sql = anchor if anchor is not None else _resolve_anchor(pipe, bq.columns)
+    cur = compile_query(pipe, bq, anchor=anchor_sql)
     prev = compile_query(
         pipe,
         BIQuery(

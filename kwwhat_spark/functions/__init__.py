@@ -1,6 +1,5 @@
 from kwwhat_spark.functions.core import (  # noqa: F401
-    array_concat_nullaware,
-    array_first,
+    array_union_sorted,
     bucket_15min,
     datediff_boundary,
     surrogate_key,

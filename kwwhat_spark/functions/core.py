@@ -68,17 +68,9 @@ def datediff_boundary(unit: str, start: Column | str, end: Column | str) -> Colu
     ).cast("long")
 
 
-def array_concat_nullaware(a: Column, b: Column) -> Column:
-    """Null-aware array concat (reference macros/array_concat.sql:1-17):
-    both null → null; one null → the other; else concat."""
-    return (
-        F.when(a.isNull() & b.isNull(), F.lit(None))
-        .when(a.isNull(), b)
-        .when(b.isNull(), a)
-        .otherwise(F.concat(a, b))
-    )
-
-
-def array_first(c: Column) -> Column:
-    """First element of an array, 1-based (reference macros/array_first.sql:1-10)."""
-    return F.element_at(c, 1)
+def array_union_sorted(a: Column, b: Column) -> Column:
+    """Sorted, distinct union of two arrays with the reference's
+    null-aware concat (macros/array_concat.sql:1-17): both null → null,
+    one null → the other (sorted and distinct)."""
+    return F.array_sort(F.array_distinct(
+        F.when(a.isNull(), b).when(b.isNull(), a).otherwise(F.concat(a, b))))

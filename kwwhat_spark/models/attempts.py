@@ -20,7 +20,7 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kwwhat_spark.functions.core import array_concat_nullaware, surrogate_key
+from kwwhat_spark.functions.core import array_union_sorted, surrogate_key
 from kwwhat_spark.models.base import Pipeline, model
 
 
@@ -116,14 +116,10 @@ def fact_charge_attempts(p: Pipeline) -> DataFrame:
         "next_status",
         "preparing_payload_ts",
         "preparing_next_payload_ts",
-        F.array_sort(
-            F.array_distinct(array_concat_nullaware(F.col("p_id_tags"), F.col("t_id_tags")))
-        ).alias("id_tags"),
-        F.array_sort(
-            F.array_distinct(
-                array_concat_nullaware(F.col("p_id_tag_statuses"), F.col("t_id_tag_statuses"))
-            )
-        ).alias("id_tag_statuses"),
+        array_union_sorted(F.col("p_id_tags"), F.col("t_id_tags")).alias("id_tags"),
+        array_union_sorted(F.col("p_id_tag_statuses"), F.col("t_id_tag_statuses")).alias(
+            "id_tag_statuses"
+        ),
         F.coalesce("p_transaction_id", "t_transaction_id").alias("transaction_id"),
         "transaction_start_ts",
         "transaction_stop_ts",
@@ -132,105 +128,25 @@ def fact_charge_attempts(p: Pipeline) -> DataFrame:
         "meter_start_wh",
         "meter_stop_wh",
         "energy_transferred_kwh",
-        F.array_sort(
-            F.array_distinct(
-                array_concat_nullaware(F.col("p_error_codes"), F.col("t_error_codes"))
-            )
-        ).alias("error_codes"),
+        array_union_sorted(F.col("p_error_codes"), F.col("t_error_codes")).alias("error_codes"),
     )
 
-    if p.is_incremental("fact_charge_attempts"):
-        # Merge with buffered attempts (start_ts > buffer_from) on
-        # (charger, connector, transaction_id) — transaction_id must be
-        # non-null on BOTH sides (fact_charge_attempts.sql:211-215):
-        # buffer-wins on start, new-wins on stop/details, arrays merged.
-        bcols = [
-            "charger_id", "connector_id", "charge_attempt_start_ts",
-            "charge_attempt_stop_ts", "preparing_unique_id", "preparing_ingested_ts",
-            "previous_status", "status", "next_status", "preparing_payload_ts",
-            "preparing_next_payload_ts", "id_tags", "id_tag_statuses",
-            "transaction_id", "transaction_start_ts", "transaction_stop_ts",
-            "transaction_ingested_ts", "transaction_stop_reason", "meter_start_wh",
-            "meter_stop_wh", "energy_transferred_kwh", "error_codes",
-        ]
-        b = (
-            p.this("fact_charge_attempts")
-            .filter(F.col("charge_attempt_start_ts") > F.lit(buffer_from))
-            .select(*[F.col(c).alias(f"b_{c}") for c in bcols])
-        )
-        attempts = (
-            attempts.join(
-                b,
-                (F.col("charger_id") == F.col("b_charger_id"))
-                & (F.col("connector_id") == F.col("b_connector_id"))
-                & F.col("transaction_id").isNotNull()
-                & F.col("b_transaction_id").isNotNull()
-                & (F.col("transaction_id") == F.col("b_transaction_id")),
-                "left",
-            )
-            .select(
-                "charger_id",
-                "connector_id",
-                "port_id",
-                "location_id",
-                F.coalesce("b_charge_attempt_start_ts", "charge_attempt_start_ts").alias(
-                    "charge_attempt_start_ts"
-                ),
-                F.coalesce("charge_attempt_stop_ts", "b_charge_attempt_stop_ts").alias(
-                    "charge_attempt_stop_ts"
-                ),
-                F.coalesce("preparing_unique_id", "b_preparing_unique_id").alias(
-                    "preparing_unique_id"
-                ),
-                F.coalesce("preparing_ingested_ts", "b_preparing_ingested_ts").alias(
-                    "preparing_ingested_ts"
-                ),
-                F.coalesce("preparing_payload_ts", "b_preparing_payload_ts").alias(
-                    "preparing_payload_ts"
-                ),
-                F.coalesce("preparing_next_payload_ts", "b_preparing_next_payload_ts").alias(
-                    "preparing_next_payload_ts"
-                ),
-                F.coalesce("previous_status", "b_previous_status").alias("previous_status"),
-                F.coalesce("status", "b_status").alias("status"),
-                F.coalesce("next_status", "b_next_status").alias("next_status"),
-                F.coalesce("transaction_id", "b_transaction_id").alias("transaction_id"),
-                F.coalesce("transaction_ingested_ts", "b_transaction_ingested_ts").alias(
-                    "transaction_ingested_ts"
-                ),
-                F.coalesce("transaction_start_ts", "b_transaction_start_ts").alias(
-                    "transaction_start_ts"
-                ),
-                F.coalesce("transaction_stop_ts", "b_transaction_stop_ts").alias(
-                    "transaction_stop_ts"
-                ),
-                F.coalesce("transaction_stop_reason", "b_transaction_stop_reason").alias(
-                    "transaction_stop_reason"
-                ),
-                F.coalesce("meter_start_wh", "b_meter_start_wh").alias("meter_start_wh"),
-                F.coalesce("meter_stop_wh", "b_meter_stop_wh").alias("meter_stop_wh"),
-                F.coalesce("energy_transferred_kwh", "b_energy_transferred_kwh").alias(
-                    "energy_transferred_kwh"
-                ),
-                F.array_sort(
-                    F.array_distinct(
-                        array_concat_nullaware(F.col("id_tags"), F.col("b_id_tags"))
-                    )
-                ).alias("id_tags"),
-                F.array_sort(
-                    F.array_distinct(
-                        array_concat_nullaware(
-                            F.col("id_tag_statuses"), F.col("b_id_tag_statuses")
-                        )
-                    )
-                ).alias("id_tag_statuses"),
-                F.array_sort(
-                    F.array_distinct(
-                        array_concat_nullaware(F.col("error_codes"), F.col("b_error_codes"))
-                    )
-                ).alias("error_codes"),
-            )
-        )
+    # Merge with buffered attempts (start_ts > buffer_from) on
+    # (charger, connector, transaction_id) — a null transaction_id never
+    # matches (fact_charge_attempts.sql:211-215): buffer-wins on start,
+    # new-wins on stop/details, arrays merged.
+    attempts = p.merge_prior(
+        "fact_charge_attempts", attempts, ["charger_id", "connector_id", "transaction_id"],
+        {"charge_attempt_start_ts": "prior",
+         **dict.fromkeys(["charge_attempt_stop_ts", "preparing_unique_id",
+                          "preparing_ingested_ts", "preparing_payload_ts",
+                          "preparing_next_payload_ts", "previous_status", "status",
+                          "next_status", "transaction_ingested_ts", "transaction_start_ts",
+                          "transaction_stop_ts", "transaction_stop_reason", "meter_start_wh",
+                          "meter_stop_wh", "energy_transferred_kwh"], "batch"),
+         **dict.fromkeys(["id_tags", "id_tag_statuses", "error_codes"], "union")},
+        prior_filter=F.col("charge_attempt_start_ts") > F.lit(buffer_from),
+    )
 
     is_successful = (
         F.col("transaction_id").isNotNull()

@@ -12,6 +12,11 @@ bound on how many run at once. Full-refresh semantics (every reference
 model's ``is_incremental()=false`` branch); the incremental batch
 runner layers on top (kwwhat_spark/plans/incremental.py).
 
+A model body reaches its incremental behaviour through two hooks:
+``window`` gives its batch window, and ``merge_prior`` folds the prior
+state (``{{ this }}``) into its batch under per-column rules. Both are
+the full-refresh behaviour when the model has no prior state.
+
 The contract that makes concurrent builds the same build as a
 sequential one:
 
@@ -35,12 +40,13 @@ import threading
 from collections.abc import Callable, Iterable
 from concurrent.futures import Future
 from dataclasses import dataclass, field
-from functools import partial
+from functools import partial, reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kwwhat_spark.config import VARS, PipelineVars
+from kwwhat_spark.functions.core import array_union_sorted
 from kwwhat_spark.operators.cachescope import release
 from kwwhat_spark.threads import run_all
 
@@ -58,6 +64,17 @@ MODELS: dict[str, Callable[["Pipeline"], DataFrame]] = {}
 VIEW_MODELS: set[str] = set()
 UNIQUE_KEYS: dict[str, list[str]] = {}
 CLUSTER_BY: dict[str, str] = {}
+
+# Pipeline.merge_prior's column rules over (batch value, prior value);
+# the count-weighted mean is the one rule with a parameter.
+_RULES: dict[str, Callable[[Column, Column], Column]] = {
+    "batch": F.coalesce,
+    "prior": lambda b, p: F.coalesce(p, b),
+    "union": array_union_sorted,
+    "least": F.least,
+    "greatest": F.greatest,
+}
+_PRIOR = "__prior_"
 
 
 def model(name: str, view: bool = False, unique_key: list[str] | None = None,
@@ -164,6 +181,52 @@ class Pipeline:
         to_ts = min([from_ts.replace(year=year, month=month, day=day)]
                     + _present(self.scalar_max(df, c) for df, c in to_caps))
         return from_ts, from_ts - dt.timedelta(minutes=buffer_minutes), to_ts
+
+    def merge_prior(
+        self,
+        name: str,
+        batch: DataFrame,
+        keys: list[str],
+        combine: dict[str, str | tuple[str, str]],
+        prior_filter: Column | None = None,
+    ) -> DataFrame:
+        """Model ``name``'s batch merged with its prior state, the
+        reference's incremental merge (SURVEY.md:167/:182): ``batch``
+        left-joined to ``this(name)`` rows that pass ``prior_filter``,
+        with plain ``==`` on each of ``keys`` (a null key never
+        matches). In a full refresh it returns ``batch`` itself.
+
+        The result has ``batch``'s columns in ``batch``'s order. Each
+        column named in ``combine`` becomes its rule over the batch
+        value ``b`` and the prior value ``p`` (null when unmatched);
+        every other column keeps the batch value.
+
+        - ``"batch"``: coalesce(b, p). ``"prior"``: coalesce(p, b).
+        - ``"union"``: sorted, distinct, null-aware array union.
+        - ``"least"`` / ``"greatest"``: null-skipping least / greatest.
+        - ``("mean", count)``: the mean weighted by column ``count``,
+          which becomes the summed count; b alone if p is null.
+        """
+        if not self.is_incremental(name):
+            return batch
+        counts = [r[1] for r in combine.values() if isinstance(r, tuple)]
+        used = dict.fromkeys([*keys, *combine, *counts])
+        prior = self.this(name)
+        if prior_filter is not None:
+            prior = prior.filter(prior_filter)
+        prior = prior.select(*[F.col(c).alias(_PRIOR + c) for c in used])
+        on = reduce(lambda a, b: a & b, [F.col(k) == F.col(_PRIOR + k) for k in keys])
+        exprs = {}
+        for c, rule in combine.items():
+            b, p = F.col(c), F.col(_PRIOR + c)
+            if isinstance(rule, tuple):
+                n, pn = F.col(rule[1]), F.col(_PRIOR + rule[1])
+                exprs[c] = F.when(p.isNull(), b).otherwise((b * n + p * pn) / (n + pn))
+                exprs[rule[1]] = F.when(pn.isNull(), n).otherwise(n + pn)
+            else:
+                exprs[c] = _RULES[rule](b, p)
+        return batch.join(prior, on, "left").select(
+            *[exprs.get(c, F.col(c)).alias(c) for c in batch.columns])
 
     def source(self, name: str) -> DataFrame:
         return self.sources[name]

@@ -20,7 +20,7 @@ from pyspark.sql.types import (
 )
 
 from kwwhat_spark.functions.core import bucket_15min, surrogate_key
-from kwwhat_spark.models.base import Pipeline, model
+from kwwhat_spark.models.base import UNIQUE_KEYS, Pipeline, model
 
 # STRUCT<connectorId, transactionId, meterValue: ARRAY<STRUCT<timestamp,
 # sampledValue: ARRAY<...>>>> (payload_extractions.sql:131). The two
@@ -174,62 +174,13 @@ def int_meter_values(p: Pipeline) -> DataFrame:
         )
     )
 
-    if p.is_incremental("int_meter_values"):
-        # Partial/final recombination with kept (avg, count) state —
-        # weighted average (int_meter_values.sql:199-248).
-        b = p.this("int_meter_values").select(
-            F.col("charger_id").alias("b_charger_id"),
-            F.col("connector_id").alias("b_connector_id"),
-            F.col("transaction_id").alias("b_transaction_id"),
-            F.col("ingested_ts").alias("b_ingested_ts"),
-            F.col("measurand").alias("b_measurand"),
-            F.col("unit").alias("b_unit"),
-            F.col("phase").alias("b_phase"),
-            F.col("first_measurement_ts").alias("b_first_ts"),
-            F.col("last_measurement_ts").alias("b_last_ts"),
-            F.col("min_value").alias("b_min"),
-            F.col("max_value").alias("b_max"),
-            F.col("avg_value").alias("b_avg"),
-            F.col("_count").alias("b_count"),
-        )
-        agg = (
-            agg.join(
-                b,
-                (F.col("charger_id") == F.col("b_charger_id"))
-                & (F.col("connector_id") == F.col("b_connector_id"))
-                & (F.col("transaction_id") == F.col("b_transaction_id"))
-                & (F.col("ingested_ts") == F.col("b_ingested_ts"))
-                & (F.col("measurand") == F.col("b_measurand"))
-                & (F.col("unit") == F.col("b_unit"))
-                & (F.col("phase") == F.col("b_phase")),
-                "left",
-            )
-            .select(
-                "charger_id", "transaction_id", "connector_id", "ingested_ts",
-                "measurand", "unit", "phase",
-                F.when(F.col("b_first_ts").isNull(), F.col("first_measurement_ts"))
-                .otherwise(F.least("first_measurement_ts", "b_first_ts"))
-                .alias("first_measurement_ts"),
-                F.when(F.col("b_last_ts").isNull(), F.col("last_measurement_ts"))
-                .otherwise(F.greatest("last_measurement_ts", "b_last_ts"))
-                .alias("last_measurement_ts"),
-                F.when(F.col("b_min").isNull(), F.col("min_value"))
-                .otherwise(F.least("min_value", "b_min"))
-                .alias("min_value"),
-                F.when(F.col("b_max").isNull(), F.col("max_value"))
-                .otherwise(F.greatest("max_value", "b_max"))
-                .alias("max_value"),
-                F.when(F.col("b_avg").isNull(), F.col("avg_value"))
-                .otherwise(
-                    (F.col("avg_value") * F.col("_count") + F.col("b_avg") * F.col("b_count"))
-                    / (F.col("_count") + F.col("b_count"))
-                )
-                .alias("avg_value"),
-                F.when(F.col("b_count").isNull(), F.col("_count"))
-                .otherwise(F.col("_count") + F.col("b_count"))
-                .alias("_count"),
-            )
-        )
+    # Partial/final recombination with kept (avg, count) state —
+    # weighted average (int_meter_values.sql:199-248).
+    agg = p.merge_prior(
+        "int_meter_values", agg, UNIQUE_KEYS["int_meter_values"],
+        {"first_measurement_ts": "least", "last_measurement_ts": "greatest",
+         "min_value": "least", "max_value": "greatest", "avg_value": ("mean", "_count")},
+    )
 
     connectors = int_connectors.select("charger_id", "connector_id", "port_id")
     chargers = int_chargers.select("charger_id", "location_id")
@@ -330,47 +281,10 @@ def fact_interval_data(p: Pipeline) -> DataFrame:
         F.count(F.lit(1)).alias("_count"),
     )
 
-    if p.is_incremental("fact_interval_data"):
-        b = p.this("fact_interval_data").select(
-            F.col("charger_id").alias("b_charger_id"),
-            F.col("connector_id").alias("b_connector_id"),
-            F.col("transaction_id").alias("b_transaction_id"),
-            F.col("ingested_ts").alias("b_ingested_ts"),
-            F.col("measurand").alias("b_measurand"),
-            F.col("unit").alias("b_unit"),
-            F.col("phase").alias("b_phase"),
-            F.col("meter_15min_interval_start").alias("b_interval_start"),
-            F.col("avg_value").alias("b_avg"),
-            F.col("_count").alias("b_count"),
-        )
-        agg = (
-            agg.join(
-                b,
-                (F.col("charger_id") == F.col("b_charger_id"))
-                & (F.col("connector_id") == F.col("b_connector_id"))
-                & (F.col("transaction_id") == F.col("b_transaction_id"))
-                & (F.col("ingested_ts") == F.col("b_ingested_ts"))
-                & (F.col("measurand") == F.col("b_measurand"))
-                & (F.col("unit") == F.col("b_unit"))
-                & (F.col("phase") == F.col("b_phase"))
-                & (F.col("meter_15min_interval_start") == F.col("b_interval_start")),
-                "left",
-            )
-            .select(
-                "charger_id", "transaction_id", "ingested_ts", "connector_id",
-                "port_id", "location_id", "measurand", "unit", "phase",
-                "meter_15min_interval_start", "meter_15min_interval_stop",
-                F.when(F.col("b_avg").isNull(), F.col("avg_value"))
-                .otherwise(
-                    (F.col("avg_value") * F.col("_count") + F.col("b_avg") * F.col("b_count"))
-                    / (F.col("_count") + F.col("b_count"))
-                )
-                .alias("avg_value"),
-                F.when(F.col("b_count").isNull(), F.col("_count"))
-                .otherwise(F.col("_count") + F.col("b_count"))
-                .alias("_count"),
-            )
-        )
+    agg = p.merge_prior(
+        "fact_interval_data", agg, UNIQUE_KEYS["fact_interval_data"],
+        {"avg_value": ("mean", "_count")},
+    )
 
     return agg.select(
         surrogate_key(

@@ -229,59 +229,21 @@ def int_connector_preparing(p: Pipeline) -> DataFrame:
         F.sort_array(F.collect_set("error_code")).alias("error_codes"),
     )
 
-    if p.is_incremental("int_connector_preparing"):
-        # Merge with prior open anchors (b.next_status is null) on the full
-        # anchor key; coalesce precedence is asymmetric by design —
-        # new-wins for status/next_*, old-wins for previous_*
-        # (int_connector_preparing.sql:214-233).
-        from kwwhat_spark.functions.core import array_concat_nullaware
-
-        bcols = [
-            "charger_id", "connector_id", "unique_id", "ingested_ts",
-            "previous_status", "status", "next_status", "confirmation_ingested_ts",
-            "previous_ingested_ts", "next_ingested_ts", "previous_payload_ts",
-            "next_payload_ts", "id_tags", "id_tag_statuses", "parent_id_tags",
-            "transaction_ids", "error_codes",
-        ]
-        b = p.this("int_connector_preparing").filter(F.col("next_status").isNull()).select(
-            *[F.col(c).alias(f"b_{c}") for c in bcols]
-        )
-        agg = (
-            agg.join(
-                b,
-                (F.col("charger_id") == F.col("b_charger_id"))
-                & (F.col("connector_id") == F.col("b_connector_id"))
-                & (F.col("unique_id") == F.col("b_unique_id"))
-                & (F.col("ingested_ts") == F.col("b_ingested_ts")),
-                "left",
-            )
-            .select(
-                "charger_id", "connector_id", "unique_id", "ingested_ts", "payload_ts",
-                F.coalesce("previous_status", "b_previous_status").alias("previous_status"),
-                F.coalesce("status", "b_status").alias("status"),
-                F.coalesce("next_status", "b_next_status").alias("next_status"),
-                F.coalesce("confirmation_ingested_ts", "b_confirmation_ingested_ts").alias(
-                    "confirmation_ingested_ts"
-                ),
-                F.coalesce("b_previous_ingested_ts", "previous_ingested_ts").alias(
-                    "previous_ingested_ts"
-                ),
-                F.coalesce("next_ingested_ts", "b_next_ingested_ts").alias("next_ingested_ts"),
-                F.coalesce("b_previous_payload_ts", "previous_payload_ts").alias(
-                    "previous_payload_ts"
-                ),
-                F.coalesce("next_payload_ts", "b_next_payload_ts").alias("next_payload_ts"),
-                *[
-                    F.array_sort(
-                        F.array_distinct(
-                            array_concat_nullaware(F.col(c), F.col(f"b_{c}"))
-                        )
-                    ).alias(c)
-                    for c in ["id_tags", "id_tag_statuses", "parent_id_tags",
-                              "transaction_ids", "error_codes"]
-                ],
-            )
-        )
+    # Merge with prior open anchors (next_status is null) on the full
+    # anchor key; coalesce precedence is asymmetric by design —
+    # new-wins for status/next_*, old-wins for previous_*
+    # (int_connector_preparing.sql:214-233).
+    agg = p.merge_prior(
+        "int_connector_preparing", agg,
+        ["charger_id", "connector_id", "unique_id", "ingested_ts"],
+        {**dict.fromkeys(["previous_status", "status", "next_status",
+                          "confirmation_ingested_ts", "next_ingested_ts",
+                          "next_payload_ts"], "batch"),
+         **dict.fromkeys(["previous_ingested_ts", "previous_payload_ts"], "prior"),
+         **dict.fromkeys(["id_tags", "id_tag_statuses", "parent_id_tags",
+                          "transaction_ids", "error_codes"], "union")},
+        prior_filter=F.col("next_status").isNull(),
+    )
 
     connectors = int_connectors.select("charger_id", "connector_id", "port_id")
     chargers = int_chargers.select("charger_id", "location_id")

@@ -221,65 +221,16 @@ def int_transactions(p: Pipeline) -> DataFrame:
         .agg(F.sort_array(F.collect_set("sn_error_code")).alias("error_codes"))
     )
 
-    if p.is_incremental("int_transactions"):
-        # Extend open transactions from prior state: old-wins on scalars,
-        # arrays merged distinct (int_transactions.sql combined_transactions).
-        from kwwhat_spark.functions.core import array_concat_nullaware
-
-        b = p.this("int_transactions").filter(
-            F.col("transaction_stop_ts").isNull()
-        ).select(
-            F.col("charger_id").alias("b_charger_id"),
-            F.col("transaction_id").alias("b_transaction_id"),
-            F.col("ingested_ts").alias("b_ingested_ts"),
-            F.col("transaction_start_ts").alias("b_start_ts"),
-            F.col("transaction_stop_ts").alias("b_stop_ts"),
-            F.col("last_ingested_ts").alias("b_last_ingested_ts"),
-            F.col("transaction_stop_reason").alias("b_stop_reason"),
-            F.col("meter_start_wh").alias("b_meter_start"),
-            F.col("meter_stop_wh").alias("b_meter_stop"),
-            F.col("id_tags").alias("b_id_tags"),
-            F.col("id_tag_statuses").alias("b_id_tag_statuses"),
-            F.col("connector_ids").alias("b_connector_ids"),
-        )
-        transactions = (
-            transactions.join(
-                b,
-                (F.col("charger_id") == F.col("b_charger_id"))
-                & (F.col("transaction_id") == F.col("b_transaction_id")),
-                "left",
-            )
-            .select(
-                "charger_id",
-                "transaction_id",
-                F.coalesce("b_ingested_ts", "ingested_ts").alias("ingested_ts"),
-                F.coalesce("b_start_ts", "transaction_start_ts").alias("transaction_start_ts"),
-                F.coalesce("b_stop_ts", "transaction_stop_ts").alias("transaction_stop_ts"),
-                F.coalesce("b_last_ingested_ts", "last_ingested_ts").alias("last_ingested_ts"),
-                F.coalesce("b_stop_reason", "transaction_stop_reason").alias(
-                    "transaction_stop_reason"
-                ),
-                F.coalesce("b_meter_start", "meter_start_wh").alias("meter_start_wh"),
-                F.coalesce("b_meter_stop", "meter_stop_wh").alias("meter_stop_wh"),
-                F.array_sort(
-                    F.array_distinct(
-                        array_concat_nullaware(F.col("id_tags"), F.col("b_id_tags"))
-                    )
-                ).alias("id_tags"),
-                F.array_sort(
-                    F.array_distinct(
-                        array_concat_nullaware(
-                            F.col("id_tag_statuses"), F.col("b_id_tag_statuses")
-                        )
-                    )
-                ).alias("id_tag_statuses"),
-                F.array_sort(
-                    F.array_distinct(
-                        array_concat_nullaware(F.col("connector_ids"), F.col("b_connector_ids"))
-                    )
-                ).alias("connector_ids"),
-            )
-        )
+    # Extend open transactions from prior state: old-wins on scalars,
+    # arrays merged distinct (int_transactions.sql combined_transactions).
+    transactions = p.merge_prior(
+        "int_transactions", transactions, ["charger_id", "transaction_id"],
+        {**dict.fromkeys(["ingested_ts", "transaction_start_ts", "transaction_stop_ts",
+                          "last_ingested_ts", "transaction_stop_reason",
+                          "meter_start_wh", "meter_stop_wh"], "prior"),
+         **dict.fromkeys(["id_tags", "id_tag_statuses", "connector_ids"], "union")},
+        prior_filter=F.col("transaction_stop_ts").isNull(),
+    )
 
     final = (
         transactions.join(tsn, ["transaction_id", "charger_id"], "left")

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from kwwhat_spark.functions.core import (
-    array_concat_nullaware,
+    array_union_sorted,
     datediff_boundary,
     surrogate_key,
 )
@@ -95,18 +95,10 @@ def _merge_with_buffer(p: Pipeline, new_visits: DataFrame, buffer_from) -> DataF
         (F.coalesce("b_charge_attempt_count", F.lit(0)) + F.col("charge_attempt_count")).alias(
             "charge_attempt_count"
         ),
-        F.array_sort(
-            F.array_distinct(
-                array_concat_nullaware(
-                    F.col("b_charge_attempt_ids"), F.col("charge_attempt_ids")
-                )
-            )
-        ).alias("charge_attempt_ids"),
-        F.array_sort(
-            F.array_distinct(
-                array_concat_nullaware(F.col("b_charger_ids"), F.col("charger_ids"))
-            )
-        ).alias("charger_ids"),
+        array_union_sorted(F.col("b_charge_attempt_ids"), F.col("charge_attempt_ids")).alias(
+            "charge_attempt_ids"
+        ),
+        array_union_sorted(F.col("b_charger_ids"), F.col("charger_ids")).alias("charger_ids"),
         (
             F.coalesce("b_total_energy_transferred_kwh", F.lit(0))
             + F.col("total_energy_transferred_kwh")

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kwwhat_spark.operators.cachescope import release
+
 EOW = "</w>"
 
 # GPT-2-style pre-tokenizer (Radford et al. 2019, public): contractions,
@@ -223,9 +225,9 @@ def learn_bpe_merges(
         left, right, cnt = top[0]["left"], top[0]["right"], int(top[0]["pair_count"])
         merges.append((rank, left, right, cnt))
         nxt = _merge_types(types, left, right).localCheckpoint(eager=True)
-        types.unpersist()
+        release(types)
         types = nxt
-    types.unpersist()
+    release(types)
     return merges
 
 

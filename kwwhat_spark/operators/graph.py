@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
+from kwwhat_spark.operators.cachescope import release
+
 # Bounded-driver closure threshold, in DOUBLED (undirected) edge rows.
 # Below this the component closure runs as one union-find over an Arrow
 # collect of the edge list instead of O(log diameter) distributed rounds
@@ -154,6 +156,7 @@ def connected_components(
             .limit(1)
             .count()
         )
+        release(labels)
         labels = new_labels
         if changed == 0:
             break
@@ -344,6 +347,7 @@ def pagerank_quantized(
     base = (15 * init) // 100
     p = nodes.withColumn("rank_q", F.lit(init).cast("long"))
     for _ in range(iterations):
+        prev = p
         contribs = (
             und.join(p, und.a == p.node)
             .join(deg, "a")
@@ -362,6 +366,7 @@ def pagerank_quantized(
             )
             .localCheckpoint(eager=True)
         )
+        release(prev)
     # The final iterate is eagerly checkpointed, so the loop-invariant
     # cached stages are no longer referenced by its lineage — release
     # them instead of letting them occupy storage memory for the

@@ -15,6 +15,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kwwhat_spark.functions.core import (
+    array_union_sorted,
     bucket_15min,
     datediff_boundary,
     surrogate_key,
@@ -122,6 +123,17 @@ def test_surrogate_key_matches_dbt_formula(spark, duck, rows):
         for a, b in rows
     ]
     assert got == want
+
+
+def test_array_union_sorted_null_cases(spark):
+    """macros/array_concat.sql's null cases, then sort and distinct."""
+    df = spark.createDataFrame(
+        [(None, None), (["b", "a", "b"], None), (None, ["c", "a", "c"]), (["b"], ["a", "b"])],
+        "a array<string>, b array<string>",
+    )
+    got = [r["v"] for r in df.select(array_union_sorted(F.col("a"), F.col("b")).alias("v"))
+           .collect()]
+    assert got == [None, ["a", "b"], ["a", "c"], ["a", "b"]]
 
 
 # --- PII redaction: Spark (Java regex) vs DuckDB (RE2, 'g' flag) must

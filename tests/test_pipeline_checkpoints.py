@@ -12,7 +12,7 @@ import pytest
 
 import kwwhat_spark.models  # noqa: F401  (registers the model DAG)
 from kwwhat_spark.models import Pipeline
-from kwwhat_spark.operators.cachescope import checkpoint_rdd
+from kwwhat_spark.operators.cachescope import checkpoint_rdd, release
 from kwwhat_spark.plans.incremental import (
     IncrementalRunner,
     ParquetStateStore,
@@ -151,3 +151,24 @@ def test_train_logreg_releases_its_training_set(spark):
     w = train_logreg(feats, labels, rounds=2, lr_shift=4)
     assert set(w) == {0, 1, 2}
     assert _persistent_ids(spark) <= before
+
+
+def test_learn_bpe_merges_releases_its_round_checkpoints(spark):
+    from kwwhat_spark.operators.bpe import learn_bpe_merges
+
+    docs = spark.createDataFrame([("low lower lowest",), ("newer newest new",)], "text string")
+    before = _persistent_ids(spark)
+    assert len(learn_bpe_merges(docs, n_merges=4)) == 4
+    assert _persistent_ids(spark) <= before
+
+
+def test_connected_components_keeps_only_its_labels(spark):
+    from kwwhat_spark.operators.graph import connected_components
+
+    # A 6-link chain takes several pointer-jumping rounds.
+    edges = spark.createDataFrame([(i, i + 1) for i in range(6)], "a long, b long")
+    before = _persistent_ids(spark)
+    labels = connected_components(edges, "a", "b", local_max_edge_rows=0)
+    assert _persistent_ids(spark) - before == {checkpoint_rdd(labels).id()}
+    assert {r["component"] for r in labels.collect()} == {0}
+    release(labels)

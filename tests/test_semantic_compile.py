@@ -4,6 +4,7 @@ run over a few hand-built mart rows (no DAG build)."""
 from __future__ import annotations
 
 import datetime as dt
+import time
 
 import pytest
 
@@ -74,3 +75,31 @@ def test_metric_sql_renders_ratios_over_one_mart():
         "(cast(count(case when is_successful then null else visit_id end) as double)"
         " / nullif(count(visit_id), 0))",
     )
+
+
+def test_period_over_period_resolves_the_anchor_once(monkeypatch, pipe):
+    calls = []
+    resolve = bi._resolve_anchor
+    monkeypatch.setattr(bi, "_resolve_anchor",
+                        lambda *args: calls.append(args) or resolve(*args))
+    pop = {r["metric"]: r for r in bi.period_over_period(
+        pipe, "What is the failed visit rate?").collect()}
+    assert len(calls) == 1
+    # Anchor = the latest visit (10-10): visits 3..9 are the window
+    # (3, 6, 9 failed), visits 0..2 the previous one (0 failed).
+    assert pop["failed_rate_pct"]["value"] == 42.86
+    assert pop["failed_rate_pct"]["previous_value"] == 33.33
+
+
+def test_resolved_anchor_is_read_back_in_the_session_zone(monkeypatch, pipe):
+    # The literal is read in the session zone (UTC): a driver process
+    # in another zone must not shift it, or the window's `ts <= anchor`
+    # bound would drop the latest rows.
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        bq = bi.route("What is the failed visit rate?")
+        assert bi._resolve_anchor(pipe, bq.columns) == "timestamp'2025-10-10 00:00:00.000000'"
+    finally:
+        monkeypatch.undo()
+        time.tzset()
