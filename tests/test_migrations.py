@@ -3,7 +3,8 @@
 1. The reference's 001_split_ports.sql replayed as DataFrame jobs: a
    reconstructed legacy connector-grain table (with the pre-migration
    wrong connector type) splits into entity tables that exactly match
-   the demo seed, corrections included.
+   the demo seed's CH-001 hardware rows recorded in FIXTURES.md §1,
+   corrections included.
 2. Persisted state-store schema evolution: additive model columns evolve
    the stored state with typed NULLs on the next incremental merge;
    destructive changes refuse until an explicit store.migrate().
@@ -16,7 +17,11 @@ from pyspark.sql import functions as F
 
 from kwwhat_spark.plans.incremental import ParquetStateStore
 from kwwhat_spark.plans.migrations import split_ports, validate_split
-from kwwhat_spark.sources.ocpp import load_ocpp_sources
+from kwwhat_spark.sources.ocpp import (
+    CHARGERS_SCHEMA,
+    CONNECTORS_SCHEMA,
+    PORTS_SCHEMA,
+)
 
 # The store's two layouts for int_status_changes: no cluster column
 # (versioned), and its default cluster column (date partitions).
@@ -25,10 +30,19 @@ LAYOUTS = pytest.mark.parametrize(
 
 
 def test_split_ports_reproduces_seed_tables(spark):
-    src = load_ocpp_sources(spark)
-    chargers = src["raw_chargers"]
-    ports = src["raw_ports"]
-    connectors = src["raw_connectors"]
+    # The demo seed's hardware rows for CH-001 (FIXTURES.md §1), the
+    # charger that carries the migration's connector-type correction.
+    chargers = spark.createDataFrame(
+        [("CH-001", "LOC-001", "2025-10-01T08:00:00.000Z",
+          "2025-10-15T07:55:00.100Z")],
+        CHARGERS_SCHEMA,
+    )
+    ports = spark.createDataFrame([("CH-001", "1"), ("CH-001", "2")], PORTS_SCHEMA)
+    connectors = spark.createDataFrame(
+        [("CH-001", "1", "1", "CCS"), ("CH-001", "1", "2", "NACS"),
+         ("CH-001", "2", "3", "CCS"), ("CH-001", "2", "4", "CHAdeMO")],
+        CONNECTORS_SCHEMA,
+    )
 
     # Reconstruct the LEGACY denormalized table the migration starts
     # from, with the pre-correction connector type the reference's

@@ -17,8 +17,8 @@ from kwwhat_spark.sources.ocpp import (
 
 
 @pytest.fixture(scope="module")
-def csv_sources(spark):
-    return load_ocpp_sources(spark)
+def csv_sources(spark, one_charger_fleet):
+    return load_ocpp_sources(spark, one_charger_fleet)
 
 
 @pytest.fixture(scope="module")

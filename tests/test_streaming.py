@@ -1,9 +1,11 @@
-"""Structured Streaming pipeline tests: stream the 14-day demo seed
-through each streaming transformation (availableNow trigger → memory
-sink) and compare against the equivalent batch computation."""
+"""Structured Streaming pipeline tests: stream the one-charger 14-day
+generated fleet (conftest ``one_charger_fleet``) through each streaming
+transformation (availableNow trigger → memory sink) and compare against
+the equivalent batch computation."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -11,7 +13,7 @@ from pyspark.sql import functions as F
 
 from kwwhat_spark.models import Pipeline
 from kwwhat_spark.models.meter_values import _meter_measurements
-from kwwhat_spark.sources.ocpp import DEMO_SEED_DIR, load_ocpp_sources
+from kwwhat_spark.sources.ocpp import load_ocpp_sources
 from kwwhat_spark.streaming import (
     read_ocpp_stream,
     stage_stream,
@@ -20,19 +22,20 @@ from kwwhat_spark.streaming import (
     stream_status_changes,
 )
 
-SEED_LOGS = f"{DEMO_SEED_DIR}/ocpp_1_6_synthetic_logs_14d.csv"
-
 
 @pytest.fixture(scope="module")
-def stream_dir(tmp_path_factory):
+def stream_dir(tmp_path_factory, one_charger_fleet):
     d = tmp_path_factory.mktemp("ocpp_stream")
-    shutil.copy(SEED_LOGS, d / "logs.csv")
+    shutil.copy(
+        os.path.join(one_charger_fleet, "ocpp_1_6_synthetic_logs_14d.csv"),
+        d / "logs.csv",
+    )
     return str(d)
 
 
 @pytest.fixture(scope="module")
-def batch_pipe(spark):
-    return Pipeline(spark=spark, sources=load_ocpp_sources(spark))
+def batch_pipe(spark, one_charger_fleet):
+    return Pipeline(spark=spark, sources=load_ocpp_sources(spark, one_charger_fleet))
 
 
 def _run_stream(spark, df, name, output_mode):
