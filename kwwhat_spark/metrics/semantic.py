@@ -18,6 +18,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from functools import reduce
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -426,7 +427,9 @@ def query_metrics(
     requested metrics touch (MetricFlow would join through entities; the
     reference's marts are denormalized enough that shared dimension names
     cover its documented metric queries). `where` is a SQL predicate over
-    the base mart's columns, applied before aggregation.
+    the base mart's columns, applied before aggregation; it must resolve
+    on every mart the metrics touch, and one that does not is refused
+    (ValueError naming the mart and the column) rather than dropped there.
     """
     group_by = group_by or []
     by_mart: dict[str, dict[str, str]] = {}
@@ -440,5 +443,16 @@ def query_metrics(
         if missing:
             raise KeyError(f"dimension {missing[0]} not on semantic model {sm.name}")
         dims = [(d, sm.dimensions[d].sql()) for d in group_by]
-        parts.append((pipe.ref(mart), where, dims, list(cols.items())))
+        frame = pipe.ref(mart)
+        if where:
+            try:
+                frame = frame.where(where)
+            except AnalysisException as e:
+                if not (e.getCondition() or "").startswith("UNRESOLVED_COLUMN"):
+                    raise
+                raise ValueError(
+                    f"where {where!r}: column {e.getMessageParameters()['objectName']} "
+                    f"is not on mart {mart}; a filter must resolve on every mart "
+                    "the metrics touch") from e
+        parts.append((frame, None, dims, list(cols.items())))
     return _aggregate(parts).select(*group_by, *metrics)

@@ -65,14 +65,20 @@ VIEW_MODELS: set[str] = set()
 UNIQUE_KEYS: dict[str, list[str]] = {}
 CLUSTER_BY: dict[str, str] = {}
 
-# Pipeline.merge_prior's column rules over (batch value, prior value);
-# the count-weighted mean is the one rule with a parameter.
+# Pipeline.merge_prior's column rules over (batch value, prior value),
+# and its paired rules over those plus the batch and prior values of a
+# second column (a count, or the timestamp that orders the values).
 _RULES: dict[str, Callable[[Column, Column], Column]] = {
     "batch": F.coalesce,
     "prior": lambda b, p: F.coalesce(p, b),
     "union": array_union_sorted,
     "least": F.least,
     "greatest": F.greatest,
+}
+_PAIRED: dict[str, Callable[[Column, Column, Column, Column], Column]] = {
+    "mean": lambda b, p, n, pn: F.when(p.isNull(), b).otherwise((b * n + p * pn) / (n + pn)),
+    "first": lambda b, p, t, pt: F.when(pt.isNull() | (t <= pt), b).otherwise(p),
+    "last": lambda b, p, t, pt: F.when(pt.isNull() | (t >= pt), b).otherwise(p),
 }
 _PRIOR = "__prior_"
 
@@ -206,11 +212,15 @@ class Pipeline:
         - ``"least"`` / ``"greatest"``: null-skipping least / greatest.
         - ``("mean", count)``: the mean weighted by column ``count``,
           which becomes the summed count; b alone if p is null.
+        - ``("first", ts)`` / ``("last", ts)``: b if the prior ``ts`` is
+          null or the batch ``ts`` is ``<=`` / ``>=`` it, else p: the
+          value seen first / last. A tie keeps b, a null batch ``ts``
+          keeps p, and ``ts`` itself follows its own rule.
         """
         if not self.is_incremental(name):
             return batch
-        counts = [r[1] for r in combine.values() if isinstance(r, tuple)]
-        used = dict.fromkeys([*keys, *combine, *counts])
+        paired = [r[1] for r in combine.values() if isinstance(r, tuple)]
+        used = dict.fromkeys([*keys, *combine, *paired])
         prior = self.this(name)
         if prior_filter is not None:
             prior = prior.filter(prior_filter)
@@ -220,9 +230,11 @@ class Pipeline:
         for c, rule in combine.items():
             b, p = F.col(c), F.col(_PRIOR + c)
             if isinstance(rule, tuple):
-                n, pn = F.col(rule[1]), F.col(_PRIOR + rule[1])
-                exprs[c] = F.when(p.isNull(), b).otherwise((b * n + p * pn) / (n + pn))
-                exprs[rule[1]] = F.when(pn.isNull(), n).otherwise(n + pn)
+                kind, other = rule
+                o, po = F.col(other), F.col(_PRIOR + other)
+                exprs[c] = _PAIRED[kind](b, p, o, po)
+                if kind == "mean":
+                    exprs[other] = F.when(po.isNull(), o).otherwise(o + po)
             else:
                 exprs[c] = _RULES[rule](b, p)
         return batch.join(prior, on, "left").select(

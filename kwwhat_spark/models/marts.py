@@ -239,41 +239,14 @@ def int_driver_aggregates(p: Pipeline) -> DataFrame:
         "first_authorization_status", "latest_authorization_status", "incremental_ts",
     ).unionByName(unknown)
 
-    if not p.is_incremental("int_driver_aggregates"):
-        return new_aggs
-
     # Incremental recombination (int_driver_aggregates.sql final CTE):
     # keep the older first-seen / newer last-seen and their statuses.
-    b = p.this("int_driver_aggregates").select(
-        F.col("id_tag").alias("b_id_tag"),
-        F.col("first_seen_ts").alias("b_first_seen_ts"),
-        F.col("last_seen_ts").alias("b_last_seen_ts"),
-        F.col("first_authorization_status").alias("b_first_status"),
-        F.col("latest_authorization_status").alias("b_latest_status"),
-    )
-    n = new_aggs.join(b, F.col("id_tag") == F.col("b_id_tag"), "left")
-    first_wins_new = F.col("b_first_seen_ts").isNull() | (
-        F.col("first_seen_ts") <= F.col("b_first_seen_ts")
-    )
-    last_wins_new = F.col("b_last_seen_ts").isNull() | (
-        F.col("last_seen_ts") >= F.col("b_last_seen_ts")
-    )
-    return n.select(
-        "id_tag",
-        F.when(first_wins_new, F.col("first_seen_ts")).otherwise(F.col("b_first_seen_ts")).alias(
-            "first_seen_ts"
-        ),
-        F.when(last_wins_new, F.col("last_seen_ts")).otherwise(F.col("b_last_seen_ts")).alias(
-            "last_seen_ts"
-        ),
-        F.when(first_wins_new, F.col("first_authorization_status"))
-        .otherwise(F.col("b_first_status"))
-        .alias("first_authorization_status"),
-        F.when(last_wins_new, F.col("latest_authorization_status"))
-        .otherwise(F.col("b_latest_status"))
-        .alias("latest_authorization_status"),
-        "incremental_ts",
-    )
+    return p.merge_prior("int_driver_aggregates", new_aggs, ["id_tag"], {
+        "first_seen_ts": "least",
+        "last_seen_ts": "greatest",
+        "first_authorization_status": ("first", "first_seen_ts"),
+        "latest_authorization_status": ("last", "last_seen_ts"),
+    })
 
 
 @model("dim_drivers")

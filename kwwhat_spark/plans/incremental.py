@@ -2,17 +2,14 @@
 (SURVEY §3.2): window computation → windowed scan → buffer re-read →
 transform → MERGE upsert on the model's unique key.
 
-State stores: ParquetStateStore, whose per-name layout follows the
+State store: ParquetStateStore, whose per-name layout follows the
 name's cluster column (date partitions merged by dynamic partition
-overwrite, or versioned directories merged as left_anti(old, key) ∪ new
-— exactly what Delta's MERGE whenMatched-update/whenNotMatched-insert
-produces for full-row updates), and DeltaStateStore — the real
-`MERGE INTO` path, import-gated on delta-spark (tests skip where the
-package is absent; the code runs wherever it exists). The runner
-contract is identical across both. Cluster-scale notes: each
-version write is a new directory (no in-place mutation → safe concurrent
-readers); the anti-join shuffles only on the unique key, and AQE handles
-key skew.
+overwrite, or versioned directories rewritten whole). Both layouts
+merge with one key replace (_replace), left_anti(old, new) ∪ new — what
+a warehouse MERGE whenMatched-update/whenNotMatched-insert produces for
+full-row updates. Cluster-scale notes: each version write is a new
+directory (no in-place mutation → safe concurrent readers); the
+anti-join shuffles only on the unique key, and AQE handles key skew.
 """
 
 from __future__ import annotations
@@ -20,9 +17,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from functools import reduce
+from operator import and_, or_
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kwwhat_spark.models.base import CLUSTER_BY, MODELS, UNIQUE_KEYS, Pipeline
 from kwwhat_spark.operators.cachescope import release
@@ -47,6 +47,28 @@ def _has_part_files(path: str) -> bool:
     return False
 
 
+_NEW = "__new_"
+
+
+def _replace(prior: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
+    """The key replace of a MERGE: ``prior`` rows that no ``new`` row
+    replaces, then every ``new`` row, in ``prior``'s columns.
+
+    A row whose key columns are all set is replaced by the new row with
+    that key (plain ``=``). A key with a null column identifies no row:
+    orphan charge attempts, for one, share (charger, connector, null
+    start), and full refresh keeps every one of them. So such a row is
+    replaced only by an identical new row (``<=>`` on every column),
+    which makes a redelivered batch idempotent without collapsing
+    distinct rows."""
+    cols = prior.columns
+    keep = prior.join(new.select(*keys).distinct(), keys, "left_anti")
+    null_key = reduce(or_, [F.col(k).isNull() for k in keys])
+    same = new.filter(null_key).select(*[F.col(c).alias(_NEW + c) for c in cols]).distinct()
+    on = reduce(and_, [F.col(c).eqNullSafe(F.col(_NEW + c)) for c in cols])
+    return keep.join(same, on, "left_anti").unionByName(new.select(*cols))
+
+
 class ParquetStateStore:
     """Parquet model state under state_dir/<name>/, in the layout the
     name's cluster column picks:
@@ -66,7 +88,7 @@ class ParquetStateStore:
       corpus/dedup indexes, merge_sink targets): each write is a new
       ``v<N>/`` directory, swapped in by the atomic ``_latest.json``
       pointer that also records the schema and batch_id; merge is a full
-      left_anti(old, key) ∪ new rewrite, O(table) per batch.
+      left_anti(old, new) ∪ new rewrite, O(table) per batch.
 
     Correctness precondition of the clustered layout: the cluster column
     is one of the unique-key columns (@model enforces it), so a merged
@@ -136,28 +158,25 @@ class ParquetStateStore:
         meta = self._meta(name)
         if meta is None:
             return None
-        path = self._data_path(name, meta.get("version"))
-        df = self._read_with_schema(path, meta["schema"])
+        df = self._scan(self._data_path(name, meta.get("version")))
+        if df is None:  # rebuilt from the schema recorded at write time
+            return self.spark.createDataFrame(
+                [], StructType.fromJson(json.loads(meta["schema"])))
         return df.drop(DATE_COL) if name in self.cluster_by else df
 
-    def _read_with_schema(self, path: str, schema_json: str) -> DataFrame:
-        """Read state parquet; an EMPTY state writes no part files (only
-        _SUCCESS), so schema inference fails — reconstruct the empty
-        DataFrame from the schema recorded at write time instead of
-        flipping the model back to full-refresh."""
-        from pyspark.sql.types import StructType
-
+    def _scan(self, path: str) -> DataFrame | None:
+        """The state parquet under ``path``, or None for an EMPTY state:
+        it wrote no part files (only _SUCCESS), so schema inference
+        fails, and the caller stands in an empty state instead of
+        flipping the model back to full-refresh. Only that layout is
+        recoverable; a read error on a directory that has part files is
+        corrupted state and propagates (see _has_part_files)."""
         try:
             return self.spark.read.parquet(path)
         except Exception:
-            # Only the documented empty-state layout (no part files) is
-            # recoverable from the recorded schema; real read errors on a
-            # directory that has data must propagate (see _has_part_files).
             if _has_part_files(path):
                 raise
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(schema_json))
-            )
+            return None
 
     def last_batch_id(self, name: str) -> int | None:
         """Stream-commit marker: the batch_id passed to the most recent
@@ -236,7 +255,14 @@ class ParquetStateStore:
               batch_id: int | None = None) -> None:
         """MERGE semantics: rows in `new` replace state rows with the same
         key; all other state rows are kept. Additive schema changes
-        evolve the stored state (see _evolve)."""
+        evolve the stored state (see _evolve).
+
+        Keys match as in _replace. dbt's own merge compares keys with
+        plain ``=``, so it stores a re-merged row with a null key column
+        twice; a null-safe ``t.k <=> s.k`` merge would instead let each
+        batch's orphan charge attempts replace the earlier ones, which
+        full refresh keeps. Here a null-key row is replaced only by an
+        identical row."""
         existing = self.read(name)
         if existing is None:
             self.write(name, new, batch_id=batch_id)
@@ -254,9 +280,8 @@ class ParquetStateStore:
         # Materialize the batch once: the anti-join's key-distinct and
         # the write would otherwise each run the full model plan.
         new = new.localCheckpoint(eager=True)
-        keep = existing.join(new.select(*keys).distinct(), keys, "left_anti")
-        merged = keep.unionByName(new.select(*existing.columns))
-        if clustered:  # the write replaces the directory `keep` scans
+        merged = _replace(existing, new, keys)
+        if clustered:  # the write replaces the directory `existing` scans
             merged = merged.localCheckpoint(eager=True)
         try:
             self.write(name, merged, batch_id=batch_id)
@@ -283,18 +308,8 @@ class ParquetStateStore:
             if len(non_null) < len(affected):
                 pred = pred | F.col(DATE_COL).isNull()
             path = self._data_path(name)
-            try:
-                prior = self.spark.read.parquet(path)
-            except Exception:
-                if _has_part_files(path):
-                    raise  # corrupted state: fail loudly, don't rebuild from batch
-                prior = None  # empty prior state wrote no part files
-            if prior is None:
-                out = newp
-            else:
-                keep = prior.filter(pred).join(
-                    newp.select(*keys).distinct(), keys, "left_anti")
-                out = keep.unionByName(newp.select(*keep.columns))
+            prior = self._scan(path)
+            out = newp if prior is None else _replace(prior.filter(pred), newp, keys)
             (
                 # Single write pass, no intermediate checkpoint: the batch
                 # side is already materialized above, and the prior-state
@@ -315,90 +330,6 @@ class ParquetStateStore:
             self._record(name, {**self._meta(name), "batch_id": batch_id})
         finally:
             release(newp)
-
-
-class DeltaStateStore:
-    """Lakehouse-native state store: the documented collapse of
-    ParquetStateStore's two layouts into warehouse `MERGE INTO` (the
-    reference's actual incremental contract — `incremental_strategy=
-    'merge'`, int_status_changes.sql:1-8; BASELINE.md "collapse into
-    MERGE INTO on Delta/Iceberg").
-
-    Same interface as ParquetStateStore (read / write / merge /
-    last_batch_id), so IncrementalRunner and the streaming sinks take it
-    unchanged. merge() is a single `whenMatchedUpdateAll /
-    whenNotMatchedInsertAll` on the model's unique key with null-safe
-    equality (<=>) — exactly the left_anti ∪ new the parquet store
-    expresses by hand, but executed as Delta's transactional row-level
-    merge: partition pruning and data skipping come from the table
-    layout instead of the clustered layout's explicit partition
-    predicate.
-
-    Requires the delta-spark package and a Delta-enabled session
-    (spark.sql.extensions=io.delta.sql.DeltaSparkSessionExtension); the
-    constructor raises ImportError where the package is absent (this
-    container), and tests/test_incremental.py skips its parametrization
-    accordingly — the code path is exercised wherever delta-spark is
-    installed.
-    """
-
-    def __init__(self, spark: SparkSession, state_dir: str):
-        from delta.tables import DeltaTable  # noqa: F401 — availability probe
-
-        self.spark = spark
-        self.state_dir = state_dir
-        os.makedirs(state_dir, exist_ok=True)
-
-    def _path(self, name: str) -> str:
-        return os.path.join(self.state_dir, name)
-
-    def _meta(self, name: str) -> str:
-        return os.path.join(self.state_dir, f"{name}.batch.json")
-
-    def read(self, name: str) -> DataFrame | None:
-        path = self._path(name)
-        if not os.path.exists(os.path.join(path, "_delta_log")):
-            return None
-        return self.spark.read.format("delta").load(path)
-
-    def last_batch_id(self, name: str) -> int | None:
-        meta = self._meta(name)
-        if not os.path.exists(meta):
-            return None
-        return json.load(open(meta)).get("batch_id")
-
-    def _record_batch(self, name: str, batch_id: int | None) -> None:
-        with open(self._meta(name), "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-
-    def write(self, name: str, df: DataFrame, *, batch_id: int | None = None) -> None:
-        (
-            df.write.format("delta")
-            .mode("overwrite")
-            .option("overwriteSchema", "true")
-            .save(self._path(name))
-        )
-        self._record_batch(name, batch_id)
-
-    def merge(self, name: str, new: DataFrame, keys: list[str], *,
-              batch_id: int | None = None) -> None:
-        from delta.tables import DeltaTable
-
-        if self.read(name) is None:
-            self.write(name, new, batch_id=batch_id)
-            return
-        target = DeltaTable.forPath(self.spark, self._path(name))
-        # Null-safe key equality: several unique keys (port_id, phase)
-        # are nullable in the reference schema.
-        cond = " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in keys)
-        (
-            target.alias("t")
-            .merge(new.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        self._record_batch(name, batch_id)
 
 
 class IncrementalRunner:

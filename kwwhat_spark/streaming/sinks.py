@@ -60,8 +60,9 @@ def merge_sink(
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # Within one micro-batch the same key may appear twice; keep the
-        # last occurrence deterministically before merging.
+        # Within one micro-batch the same key may appear twice; keep one
+        # row per key before merging. Which one is arbitrary: dropDuplicates
+        # promises no order.
         store.merge(name, batch_df.dropDuplicates(keys), keys)
 
     writer = (

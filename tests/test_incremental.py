@@ -16,7 +16,7 @@ from pathlib import Path
 
 import pytest
 
-# Slow tier (r13 suite split): incremental convergence harness (1300+s); engine smoke stays via test_cli/test_delta_store_mock.
+# Slow tier (r13 suite split): incremental convergence harness (1300+s); engine smoke stays via test_cli and test_streaming_sinks.
 # Default runs exclude it (pytest.ini addopts); run with -m full.
 pytestmark = pytest.mark.full
 
@@ -106,7 +106,6 @@ from pyspark.sql import functions as F
 
 from kwwhat_spark.plans.incremental import (
     INCREMENTAL_ORDER,
-    DeltaStateStore,
     IncrementalRunner,
     ParquetStateStore,
 )
@@ -157,28 +156,12 @@ _BOUNDARY_LINK_COLS = {
 _SUPERSET_OK = {"int_status_changes"}
 
 
-def _delta_available() -> bool:
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        return False
-    return True
-
-
 @pytest.mark.parametrize(
     "make_store",
     [
         pytest.param(lambda spark, d: ParquetStateStore(spark, d, cluster_by={}),
                      id="versioned"),
         pytest.param(ParquetStateStore, id="clustered"),
-        pytest.param(
-            DeltaStateStore,
-            marks=pytest.mark.skipif(
-                not _delta_available(),
-                reason="delta-spark not installed in this container; "
-                "DeltaStateStore is the MERGE INTO path and runs wherever it is",
-            ),
-        ),
     ],
 )
 def test_incremental_runner_converges_to_full_refresh(

@@ -68,6 +68,16 @@ def test_ratio_across_marts_is_refused(monkeypatch, pipe):
         query_metrics(pipe, ["visits_per_uptime"])
 
 
+def test_where_that_one_mart_cannot_resolve_is_refused(spark, pipe):
+    # On one mart the filter applies (visits 0, 3, 6 and 9 failed)...
+    assert query_metrics(pipe, ["total_visits"], where="not is_successful").first()[0] == 4.0
+    # ...but it is never dropped on a mart without its column.
+    uptime = spark.createDataFrame([(T0, 0.5)], "date_id timestamp, uptime double")
+    both = Pipeline(spark=spark, sources={}, overrides={**pipe.overrides, "fact_uptime": uptime})
+    with pytest.raises(ValueError, match="column `is_successful` is not on mart fact_uptime"):
+        query_metrics(both, sorted(METRICS), where="is_successful")
+
+
 def test_metric_sql_renders_ratios_over_one_mart():
     assert metric_sql(METRICS["total_visits"]) == ("fact_visits", "count(visit_id)")
     assert metric_sql(METRICS["failed_rate"]) == (

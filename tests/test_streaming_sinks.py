@@ -37,10 +37,14 @@ def test_stream_dedup_drops_within_watermark(spark, dup_dir):
     assert out.select("event_id").distinct().count() == 500
 
 
-@pytest.mark.parametrize("store_fn", [  # versioned, then clustered layout
+# The versioned, then the clustered layout.
+STORES = [
     lambda spark, p: ParquetStateStore(spark, p),
     lambda spark, p: ParquetStateStore(spark, p, cluster_by={"events_mart": "ts"}),
-])
+]
+
+
+@pytest.mark.parametrize("store_fn", STORES)
 def test_merge_sink_upserts_across_microbatches(spark, sf_dir, tmp_path, store_fn):
     src = str(tmp_path / "merge_src")
     e = load_table(spark, sf_dir, "events").limit(300).select(
@@ -80,8 +84,18 @@ def test_merge_sink_upserts_across_microbatches(spark, sf_dir, tmp_path, store_f
 def test_merge_sink_is_idempotent_on_redelivery(spark, sf_dir, tmp_path):
     e = load_table(spark, sf_dir, "events").limit(100).select(
         "event_id", "ts", "user_id", "event_type", "value", "props")
-    store = ParquetStateStore(spark, str(tmp_path / "state2"))
-    # Simulate redelivery by merging the same batch twice directly.
-    store.merge("m", e, ["event_id"])
-    store.merge("m", e, ["event_id"])
-    assert store.read("m").count() == 100
+    # One more row, whose key has a null column: redelivery replaces it
+    # instead of storing it a second time.
+    orphan = e.limit(1).withColumn("user_id", F.lit(None).cast("long"))
+    e = e.unionByName(orphan)
+    keys = ["event_id", "user_id"]
+    for i, store_fn in enumerate(STORES):
+        store = store_fn(spark, str(tmp_path / f"state{i}"))
+        # Simulate redelivery by merging the same batch twice directly.
+        store.merge("events_mart", e, keys)
+        store.merge("events_mart", e, keys)
+        assert store.read("events_mart").count() == 101
+        # A different row under the same null key is one more row: a key
+        # with a null column identifies no row, so nothing is replaced.
+        store.merge("events_mart", orphan.withColumn("value", F.col("value") + 1.0), keys)
+        assert store.read("events_mart").count() == 102
