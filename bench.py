@@ -25,6 +25,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from kwwhat_spark.queries import REGISTRY  # noqa: E402
 from kwwhat_spark.session import get_spark  # noqa: E402
 
+# The sf0.1 testdata: the source of the sf1 replica and the canary's input.
+SF01_DIR = "/root/testdata/sf0.1"
+
 
 def _default_sf_dir() -> str:
     """sf1 replicated from the driver's sf0.1 on first use.  Lives on
@@ -36,7 +39,7 @@ def _default_sf_dir() -> str:
     from tools.scale_testdata import TABLES, build
 
     if not all(os.path.exists(os.path.join(dst, f"{t}.parquet")) for t in TABLES):
-        build(10, "/root/testdata/sf0.1", dst)
+        build(10, SF01_DIR, dst)
     return dst
 
 
@@ -100,6 +103,14 @@ def _scan_floor(spark, sf_dir: str) -> float:
     return round(min(once(), once()), 4)
 
 
+def _canary_dir() -> str:
+    """The canary's one input for every tool: the sf0.1 testdata, staged
+    to tmpfs. The steady band below is a band for this input; a canary
+    over the directory being measured would leave it at sf0.01 and
+    sf100."""
+    return _stage_to_tmpfs(SF01_DIR)
+
+
 N_TRIALS = 3
 
 # Steady-state bands for the rig verdict (BASELINE.md "Scan-floor
@@ -129,28 +140,27 @@ class _SettleGate:
     """Bounded canary gate: wait until the scan-floor canary enters the
     steady band, spending from one shared budget across the whole run."""
 
-    def __init__(self, budget_sec: float) -> None:
+    def __init__(self, budget_sec: float, canary_dir: str) -> None:
+        self.canary_dir = canary_dir
         self.left = budget_sec
         self.waited = 0.0
         self.gates = 0
         self.waits = 0
         self.exhausted = False
-        self.last_canary: float | None = None
 
-    def wait(self, spark, sf_dir: str) -> float:
+    def wait(self, spark) -> float:
         self.gates += 1
-        floor = _scan_floor(spark, sf_dir)
+        floor = _scan_floor(spark, self.canary_dir)
         while floor > STEADY_CANARY_MAX and self.left > 0:
             self.waits += 1
             t0 = time.perf_counter()
             time.sleep(min(SETTLE_POLL_SEC, max(1.0, self.left)))
-            floor = _scan_floor(spark, sf_dir)
+            floor = _scan_floor(spark, self.canary_dir)
             dt = time.perf_counter() - t0
             self.left -= dt
             self.waited += dt
         if floor > STEADY_CANARY_MAX and self.left <= 0:
             self.exhausted = True
-        self.last_canary = floor
         return floor
 
     def record(self) -> dict:
@@ -191,6 +201,32 @@ def _rig_verdict(
     }
 
 
+def time_entry(spark, name: str, sf_dir: str, trials: int, before=None) -> list[float]:
+    """Seconds of each of `trials` runs of catalog entry `name` at
+    `sf_dir`, written to the noop sink. `before()`, when given, runs
+    ahead of every trial, outside the timed region.
+
+    The DataFrame is rebuilt for every trial: Spark 4 caches an executed
+    DataFrame's result stage, so a second run of the same one measures
+    nothing."""
+    runs = []
+    for _ in range(trials):
+        if before is not None:
+            before()
+        t0 = time.perf_counter()
+        REGISTRY[name].spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        runs.append(round(time.perf_counter() - t0, 4))
+    # Operators persist() intermediates for within-query reuse (shingle
+    # stages, tokenized stages, graph edge lists); Spark's CacheManager
+    # keys them by logical plan, so they survive the entry and pile up
+    # across a run — storage memory fills and every later entry degrades
+    # under eviction + GC pressure (measured: dedup_substring_spans
+    # 11.7 s inside a full bench run vs 1.1 s hot in isolation).
+    # Dropping the cache after each entry restores per-entry isolation.
+    spark.catalog.clearCache()
+    return runs
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR") or _default_sf_dir()
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -203,8 +239,9 @@ def main() -> None:
     # Warm the JVM + parquet footers once so per-query numbers measure the
     # query, not session startup.
     REGISTRY[names[0]].spark(spark, sf_dir).count()
-    gate = _SettleGate(SETTLE_BUDGET_SEC)
-    floor_before = gate.wait(spark, sf_dir)
+    canary_dir = _canary_dir()
+    gate = _SettleGate(SETTLE_BUDGET_SEC, canary_dir)
+    floor_before = gate.wait(spark)
 
     # N_TRIALS runs per query, report the best: the first run includes
     # plan compilation and cold page cache, and back-to-back runs drift
@@ -217,32 +254,17 @@ def main() -> None:
     trials: dict[str, list[float]] = {}
     pre_canaries: dict[str, list[float]] = {}
     for name in names:
-        runs = []
-        cans = []
-        for i in range(N_TRIALS):
-            # Gate every trial on the canary (r13): the first canary of
-            # a query doubles as the epoch detector for the previous
-            # trial — an epoch that starts mid-trial is caught here and
-            # waited out before the next trial runs.
-            cans.append(gate.wait(spark, sf_dir))
-            t0 = time.perf_counter()
-            df = REGISTRY[name].spark(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 4))
-        trials[name] = runs
-        pre_canaries[name] = cans
-        timings[name] = min(runs)
-        # Operators persist() intermediates for within-query reuse
-        # (shingle stages, tokenized stages, graph edge lists); Spark's
-        # CacheManager keys them by logical plan, so they survive the
-        # query and pile up across the headline set — storage memory
-        # fills and every later query degrades under eviction + GC
-        # pressure (measured: dedup_substring_spans 11.7 s inside a full
-        # bench run vs 1.1 s hot in isolation). Dropping the cache
-        # between queries restores per-query isolation.
-        spark.catalog.clearCache()
+        # Gate every trial on the canary (r13): the first canary of a
+        # query doubles as the epoch detector for the previous trial —
+        # an epoch that starts mid-trial is caught here and waited out
+        # before the next trial runs.
+        cans = pre_canaries[name] = []
+        trials[name] = time_entry(
+            spark, name, sf_dir, N_TRIALS, lambda: cans.append(gate.wait(spark))
+        )
+        timings[name] = min(trials[name])
 
-    floor_after = _scan_floor(spark, sf_dir)
+    floor_after = _scan_floor(spark, canary_dir)
     load_end = _loadavg()
     total = round(sum(timings.values()), 4)
     print(json.dumps({

@@ -671,18 +671,16 @@ def minhash_banded(
     replayable_hash: bool = False,
 ) -> DataFrame:
     """(doc_id, band_idx, band_hash) — the shipped signature + banding
-    plan shared by minhash_lsh_components and the stage-floor tool
-    (tools/components_stage_floor.py), so floor measurements always
-    track the production shape.
+    plan of minhash_lsh_components.
 
     Signature via explode + codegen groupBy-min (r9): the array-lambda
     form ran the per-(shingle, seed) hash in the INTERPRETED expression
-    evaluator — measured as 80% of the sf100 wall
-    (components_stage_floor: 418 s of 524 s at 5M docs). Exploding the
-    shingles keeps every hash and the h1 XOR rot52(h2, k_i) double-hash
-    family (minhash_slot) inside whole-stage codegen, and the
-    groupBy(doc_id) min is map-side combinable — the shuffle carries
-    ~|docs| × num_hashes longs, not the shingle stream."""
+    evaluator — measured as 80% of the sf100 wall (BASELINE.md "Round 9
+    (cont.): components-family floor" stage table: 418 s of 524 s at 5M
+    docs). Exploding the shingles keeps every hash and the h1 XOR
+    rot52(h2, k_i) double-hash family (minhash_slot) inside whole-stage
+    codegen, and the groupBy(doc_id) min is map-side combinable — the
+    shuffle carries ~|docs| × num_hashes longs, not the shingle stream."""
     from kwwhat_spark.functions.text import md5_52
 
     combine = md5_52 if replayable_hash else F.xxhash64

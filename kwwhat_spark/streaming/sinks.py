@@ -19,7 +19,11 @@ forever at 100 TB/day; an unbounded dropDuplicates would OOM).
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import or_
+
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kwwhat_spark.plans.incremental import ParquetStateStore
@@ -61,9 +65,16 @@ def merge_sink(
         if batch_df.isEmpty():
             return
         # Within one micro-batch the same key may appear twice; keep one
-        # row per key before merging. Which one is arbitrary: dropDuplicates
-        # promises no order.
-        store.merge(name, batch_df.dropDuplicates(keys), keys)
+        # row per complete key before merging. Which one is arbitrary:
+        # dropDuplicates promises no order. A key with a null column
+        # identifies no row (the store's _replace keeps every distinct
+        # one), and dropDuplicates would treat its nulls as equal, so such
+        # rows lose only their exact duplicates.
+        null_key = reduce(or_, [F.col(k).isNull() for k in keys])
+        batch_df = batch_df.filter(~null_key).dropDuplicates(keys).unionByName(
+            batch_df.filter(null_key).distinct()
+        )
+        store.merge(name, batch_df, keys)
 
     writer = (
         df.writeStream.foreachBatch(_merge)

@@ -12,6 +12,17 @@ from kwwhat_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("KWH_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def await_stream(q, timeout: int) -> None:
+    """Wait for availableNow stream `q` to finish; on timeout stop it and
+    fail the test instead of letting it read a partial sink."""
+    if not q.awaitTermination(timeout):
+        q.stop()
+        pytest.fail(
+            f"availableNow stream {q.name or q.id} still running after {timeout}s; "
+            "refusing to read a partially-populated memory sink"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="kwh-spark-tests", master="local[4]", shuffle_partitions=4)

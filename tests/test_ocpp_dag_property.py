@@ -44,6 +44,7 @@ from kwwhat_spark.queries.ocpp_pipeline import (
     mart_projection,
 )
 from kwwhat_spark.sources.ocpp import load_ocpp_sources
+from tests.conftest import await_stream
 from tests.oracle_harness import compare
 
 BASE = dt.datetime(2025, 10, 2, 6, 0, 0)
@@ -410,7 +411,7 @@ def test_generated_fleet_streaming_change_points(spark, fleet_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_stream(q, 120)
         got = spark.table(name).localCheckpoint(eager=True)
         spark.catalog.dropTempView(name)
     finally:

@@ -21,6 +21,7 @@ from kwwhat_spark.streaming import (
     stream_request_confirmations,
     stream_status_changes,
 )
+from tests.conftest import await_stream
 
 
 @pytest.fixture(scope="module")
@@ -46,7 +47,7 @@ def _run_stream(spark, df, name, output_mode):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     return spark.table(name)
 
 

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from kwwhat_spark.sources.testdata import load_table
 from kwwhat_spark.streaming.corpus import enrich_documents, stream_ingest_corpus
+from tests.conftest import await_stream
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars int"
 
@@ -36,7 +37,7 @@ def test_stream_ingest_matches_batch(spark, sf_dir, doc_feed):
         out.writeStream.format("memory").queryName("corpus_ingest")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(180)
+    await_stream(q, 180)
     got = spark.table("corpus_ingest")
 
     batch = enrich_documents(load_table(spark, sf_dir, "documents")).filter(
@@ -70,7 +71,7 @@ def test_stream_repetition_gate_drops_repetitive_docs(spark, tmp_path):
         out.writeStream.format("memory").queryName("rep_gate")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = spark.table("rep_gate").select("doc_id", "repetition.dup_3gram_frac").collect()
     assert [r.doc_id for r in got] == [2]
 
@@ -92,7 +93,7 @@ def test_stream_archive_dedup_across_restarts(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_stream(q, 120)
 
     spark.createDataFrame(
         [(1, base), (2, "unrelated words about shuffle partitions and broadcast joins")],
@@ -126,7 +127,7 @@ def test_stream_line_dedup_across_restarts(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_stream(q, 120)
 
     spark.createDataFrame(
         [(1, "first unique line\nshared boilerplate footer"),

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from kwwhat_spark.plans.incremental import ParquetStateStore
 from kwwhat_spark.sources.testdata import load_table
 from kwwhat_spark.streaming.sinks import merge_sink, stream_dedup
+from tests.conftest import await_stream
 
 SCHEMA = ("event_id long, ts timestamp, user_id long, event_type string, "
           "value double, props string")
@@ -31,7 +32,7 @@ def test_stream_dedup_drops_within_watermark(spark, dup_dir):
         deduped.writeStream.format("memory").queryName("dedup_out")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     out = spark.table("dedup_out")
     assert out.count() == 500
     assert out.select("event_id").distinct().count() == 500
@@ -71,7 +72,7 @@ def test_merge_sink_upserts_across_microbatches(spark, sf_dir, tmp_path, store_f
     )
     q = merge_sink(stream, store, "events_mart", ["event_id"],
                    checkpoint_dir=str(tmp_path / "ckpt"))
-    q.awaitTermination(180)
+    await_stream(q, 180)
 
     final = store.read("events_mart")
     assert final.count() == 300  # keys replaced, not appended
@@ -99,3 +100,25 @@ def test_merge_sink_is_idempotent_on_redelivery(spark, sf_dir, tmp_path):
         # with a null column identifies no row, so nothing is replaced.
         store.merge("events_mart", orphan.withColumn("value", F.col("value") + 1.0), keys)
         assert store.read("events_mart").count() == 102
+
+
+@pytest.mark.parametrize("store_fn", STORES)
+def test_merge_sink_keeps_distinct_null_key_rows_in_one_microbatch(
+    spark, sf_dir, tmp_path, store_fn
+):
+    row = load_table(spark, sf_dir, "events").limit(1).select(
+        "event_id", "ts", "user_id", "event_type", "value", "props")
+    orphan = row.withColumn("user_id", F.lit(None).cast("long"))
+    # One complete key, two distinct rows under the same null key and an
+    # exact duplicate of one of them: the duplicate goes, the rest stay.
+    batch = row.unionByName(orphan).unionByName(orphan).unionByName(
+        orphan.withColumn("value", F.col("value") + 1.0))
+    d = str(tmp_path / "stream_in")
+    batch.coalesce(1).write.parquet(d)
+
+    store = store_fn(spark, str(tmp_path / "state"))
+    stream = spark.readStream.schema(SCHEMA).parquet(d)
+    q = merge_sink(stream, store, "events_mart", ["event_id", "user_id"],
+                   checkpoint_dir=str(tmp_path / "ckpt"))
+    await_stream(q, 180)
+    assert store.read("events_mart").count() == 3

@@ -2,7 +2,7 @@
 """Hot Spark-vs-DuckDB comparison on the headline catalog queries.
 
 For each headline query with an oracle, runs the Spark plan and the
-oracle SQL twice each on the same parquet dir and reports the second
+oracle SQL twice each on the same parquet dir and reports the faster
 (hot) time. Usage: python tools/bench_vs_duckdb.py [SF_DIR] [QUERY ...]
 — with explicit QUERY names, measures those instead of the headline set.
 """
@@ -16,11 +16,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
+from bench import time_entry
 from kwwhat_spark.queries import REGISTRY
 from kwwhat_spark.session import get_spark
-from kwwhat_spark.sources.testdata import TESTDATA_TABLES
+from tests.oracle_harness import duckdb_connection
 
 
 def main() -> None:
@@ -29,12 +28,8 @@ def main() -> None:
     )
     spark = get_spark(app_name="bench-vs-duckdb")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    con.execute("SET TimeZone='UTC'")
+    con = duckdb_connection(sf_dir)
     con.execute(f"SET threads={os.cpu_count() or 8}")
-    for t in TESTDATA_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
     wanted = sys.argv[2:]
     unknown = [n for n in wanted if n not in REGISTRY]
@@ -46,17 +41,15 @@ def main() -> None:
             continue
         if not wanted and not q.headline:
             continue
-        spark_hot = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            spark_hot = time.perf_counter() - t0
+        spark_hot = min(time_entry(spark, name, sf_dir, 2))
         duck_hot = None
         if q.oracle:
+            duck = []
             for _ in range(2):
                 t0 = time.perf_counter()
                 con.execute(q.oracle).fetchall()
-                duck_hot = time.perf_counter() - t0
+                duck.append(time.perf_counter() - t0)
+            duck_hot = min(duck)
         out[name] = {
             "spark_hot_s": round(spark_hot, 3),
             "duckdb_hot_s": round(duck_hot, 3) if duck_hot is not None else None,

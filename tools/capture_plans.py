@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kwwhat_spark.queries import REGISTRY  # noqa: E402
 from kwwhat_spark.session import get_spark  # noqa: E402
+from tools.plan_sweep import JOINS, PYTHON, explain  # noqa: E402
 
 
 def main() -> None:
@@ -41,26 +42,13 @@ def main() -> None:
     spark = get_spark(app_name="kwh-spark-plans")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
-        df = REGISTRY[name].spark(spark, args.sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = explain(REGISTRY[name].spark(spark, args.sf_dir))
         path = os.path.join(args.outdir, f"{name}_{args.suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
         n_ex = plan.count("Exchange")
-        joins = [
-            j
-            for j in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
-                      "BroadcastNestedLoopJoin", "CartesianProduct")
-            if j in plan
-        ]
-        pyn = [
-            j
-            for j in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
-                      "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas")
-            if j in plan
-        ]
+        joins = [j for j in JOINS if j in plan]
+        pyn = [p for p in PYTHON if p in plan]
         print(f"{name:30s} Exchange={n_ex:2d} joins={joins} python={pyn} -> {path}")
         spark.catalog.clearCache()
     spark.stop()

@@ -17,6 +17,7 @@ import time
 
 sys.path.insert(0, ".")
 
+from bench import _canary_dir, _loadavg, _rig_verdict, _scan_floor  # noqa: E402
 from kwwhat_spark.queries import REGISTRY  # noqa: E402
 from kwwhat_spark.session import get_spark  # noqa: E402
 from tests.oracle_harness import compare, duckdb_connection  # noqa: E402
@@ -30,7 +31,7 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    load_start = os.getloadavg()
+    load_start = _loadavg()
     spark = get_spark()
     con = duckdb_connection(args.sf_dir)
     names = args.names or list(REGISTRY)
@@ -42,12 +43,9 @@ def main() -> int:
     load_table(spark, args.sf_dir, "lineitem").count()
     # Scan-floor canary (ADVICE r12: the loadavg<=7 heuristic cannot see
     # per-core host throttling — the r12 snapshot self-labeled steady at
-    # 865 s total with 10x-inflated entries). Same fixed-shape canary as
-    # bench.py; its steady band (<=0.32 s) is an upper bound here because
-    # the gate's sf0.01 input is ~10x smaller than the band's sf0.1.
-    from bench import STEADY_CANARY_MAX, _scan_floor
-
-    canary_start = _scan_floor(spark, args.sf_dir)
+    # 865 s total with 10x-inflated entries).
+    canary_dir = _canary_dir()
+    canary_start = _scan_floor(spark, canary_dir)
     failures = []
     timings: dict[str, float] = {}
     t_total = time.time()
@@ -82,28 +80,15 @@ def main() -> int:
     if not args.names:
         # Rig self-label (ADVICE r10: a load-contaminated snapshot with
         # 3-6x outliers was committed unnoticed; ADVICE r12: loadavg alone
-        # missed a throttle epoch entirely). Pre-run loadavg catches
-        # co-tenant load; the scan-floor canary — measured before AND
-        # after, against its known steady band — catches host throttling
-        # that loadavg cannot see. The gate itself saturates local[32],
-        # so only the PRE-run loadavg is diagnostic.
-        canary_end = _scan_floor(spark, args.sf_dir)
-        worst_canary = max(canary_start, canary_end)
-        reasons = []
-        if worst_canary > STEADY_CANARY_MAX:
-            reasons.append(
-                f"canary {worst_canary:.3f}s > steady band max {STEADY_CANARY_MAX}"
-            )
-        if load_start[0] > 7.0:
-            reasons.append(f"pre-run loadavg {load_start[0]:.1f} > 7.0")
-        rig = "contended (" + "; ".join(reasons) + ")" if reasons else "steady"
+        # missed a throttle epoch entirely).
+        canary_end = _scan_floor(spark, canary_dir)
         with open(TIMINGS_PATH, "w") as f:
             json.dump(
                 {"sf_dir": args.sf_dir, "total_sec": round(total, 1),
-                 "load_start": list(load_start),
-                 "load_end": list(os.getloadavg()),
+                 "load_start": load_start,
+                 "load_end": _loadavg(),
                  "scan_floor_sec": {"before": canary_start, "after": canary_end},
-                 "rig": rig,
+                 "rig": _rig_verdict(canary_start, canary_end, load_start),
                  "entries": timings},
                 f, indent=1, sort_keys=True,
             )

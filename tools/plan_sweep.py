@@ -29,6 +29,13 @@ PYTHON = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
           "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas")
 
 
+def explain(df) -> str:
+    """The static physical plan, as ``df.explain("formatted")`` prints it."""
+    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("outfile", nargs="?",
@@ -41,10 +48,7 @@ def main() -> None:
     out: dict[str, dict] = {}
     for name in REGISTRY:
         try:
-            df = REGISTRY[name].spark(spark, args.sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-                df._jdf.queryExecution(), "formatted"
-            )
+            plan = explain(REGISTRY[name].spark(spark, args.sf_dir))
             # Node counts from the numbered detail section ("(N) Op"),
             # so each operator counts once (the tree repeats them).
             nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)

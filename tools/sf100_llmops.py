@@ -2,11 +2,13 @@
 """sf100 sweep for the LLM-ops heavy family (VERDICT r8 #1): paired
 Spark-vs-DuckDB hot runs over the 5M-doc / 2M-vector tmpfs replica.
 
-Each entry runs 2 Spark trials (cold, hot — DataFrame rebuilt per trial;
-Spark 4 caches an executed DataFrame's result stage) and, when an oracle
-exists, 2 DuckDB trials in a SUBPROCESS with a hard timeout — at this
-scale some all-pairs oracles are expected to DNF, and that is itself the
-measurement (the Spark plan is the one that survives the decade).
+Each entry waits for bench.py's settle gate (the scan-floor canary in
+its steady band; the entry records that canary), runs 2 Spark trials
+through bench.time_entry (cold, hot) and, when an oracle exists, 2
+DuckDB trials in a SUBPROCESS with a hard timeout — at this scale some
+all-pairs oracles are expected to DNF, and that is itself the
+measurement (the Spark plan is the one that survives the decade). The
+artifact also records the gate's settle summary.
 
 Usage: python tools/sf100_llmops.py [SF_DIR] [ENTRY ...]
        python tools/sf100_llmops.py merge [JSONL] [NOTE]
@@ -24,7 +26,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -48,18 +49,14 @@ DUCK_TIMEOUT_S = int(os.environ.get("DUCK_TIMEOUT_S", "2400"))
 _DUCK_RUNNER = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
-import duckdb
 from kwwhat_spark.queries import REGISTRY
-from kwwhat_spark.sources.testdata import TESTDATA_TABLES
+from tests.oracle_harness import duckdb_connection
 sf_dir, name = sys.argv[1], sys.argv[2]
-con = duckdb.connect()
-con.execute("SET TimeZone='UTC'")
+con = duckdb_connection(sf_dir)
 con.execute("SET enable_progress_bar=false")
 con.execute(f"SET threads={{os.cpu_count() or 8}}")
 con.execute(f"SET memory_limit='{{os.environ.get('DUCK_MEM', '80GB')}}'")
 con.execute("SET temp_directory='/tmp/duck_spill'")
-for t in TESTDATA_TABLES:
-    con.execute(f"CREATE VIEW {{t}} AS SELECT * FROM read_parquet('{{sf_dir}}/{{t}}.parquet')")
 times = []
 for _ in range(2):
     t0 = time.perf_counter()
@@ -87,6 +84,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/dev/shm/sf100"
     entries = sys.argv[2:] or DEFAULT_ENTRIES
 
+    from bench import SETTLE_BUDGET_SEC, _canary_dir, _SettleGate, time_entry
     from kwwhat_spark.queries import REGISTRY
     from kwwhat_spark.session import get_spark
 
@@ -103,27 +101,14 @@ def main() -> None:
     # the JVM, and a 45 GB DuckDB spilled /tmp toward disk-full);
     # sequential phases give each engine the whole machine, which is
     # also the fairer comparison.
+    gate = _SettleGate(SETTLE_BUDGET_SEC, _canary_dir())
     for name in entries:
-        q = REGISTRY[name]
         rec: dict = {"entry": name, "sf_dir": sf_dir,
-                     "load_start": os.getloadavg()}
-        trials = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df = q.spark(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            trials.append(round(time.perf_counter() - t0, 2))
-        rec["spark_trials"] = trials
-        rec["spark_hot"] = min(trials)
+                     "load_start": os.getloadavg(), "canary_s": gate.wait(spark)}
+        rec["spark_trials"] = time_entry(spark, name, sf_dir, 2)
+        rec["spark_hot"] = min(rec["spark_trials"])
         results.append(rec)
         print(json.dumps(rec), flush=True)
-        # Per-entry isolation, mirroring bench.py: operators persist()
-        # intermediates keyed by logical plan, which pile up across the
-        # sweep — by the 9th entry storage memory holds every previous
-        # entry's cached stages and eviction churn contaminates the
-        # measurement (bench.py measured the same pathology:
-        # dedup_substring_spans 11.7 s mid-run vs 1.1 s isolated).
-        spark.catalog.clearCache()
     # spark.stop() alone is NOT enough to clear the box for phase 2: the
     # py4j gateway JVM stays alive until this python process exits, and a
     # stopped 64g-heap JVM was measured squatting 32 GB RSS and ~4 cores
@@ -164,13 +149,14 @@ def main() -> None:
         with open(out_path, "a") as f:
             f.write(json.dumps(rec) + "\n")
 
-    _write_artifact(results, q_has_oracle, sf_dir)
+    _write_artifact(results, q_has_oracle, sf_dir, settle=gate.record())
 
 
 def _artifact_entry(r: dict, has_oracle: bool) -> dict:
     return {
         "spark_s": r.get("spark_hot"),
         "spark_trials": r.get("spark_trials"),
+        "canary_s": r.get("canary_s"),
         **({"duckdb_s": r["duck_hot"], "duck_trials": r["duck_trials"],
             "ratio_hot": r.get("ratio_hot")} if "duck_hot" in r else {}),
         **({"duck_verdict": r["duck_verdict"],
@@ -181,7 +167,7 @@ def _artifact_entry(r: dict, has_oracle: bool) -> dict:
 
 
 def _write_artifact(results: list[dict], q_has_oracle: dict, sf_dir: str,
-                    note: str | None = None) -> None:
+                    note: str | None = None, settle: dict | None = None) -> None:
     # Consolidated BENCH-style artifact for the repo root: one object per
     # entry with {spark_s, duckdb_s | verdict}.
     artifact = {
@@ -190,6 +176,7 @@ def _write_artifact(results: list[dict], q_has_oracle: dict, sf_dir: str,
                     for r in results},
         "loadavg_end": os.getloadavg(),
         **({"note": note} if note else {}),
+        **({"settle": settle} if settle else {}),
     }
     dst = os.environ.get("LLMOPS_ARTIFACT",
                          os.path.join(os.path.dirname(os.path.dirname(
