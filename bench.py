@@ -22,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from kwwhat_spark.operators.cachescope import scope  # noqa: E402
 from kwwhat_spark.queries import REGISTRY  # noqa: E402
 from kwwhat_spark.session import get_spark  # noqa: E402
 
@@ -149,6 +150,10 @@ class _SettleGate:
         self.exhausted = False
 
     def wait(self, spark) -> float:
+        if not self.gates:
+            # Discard a fresh JVM's first canary: it reads cold (0.400 s,
+            # then 0.29-0.33 s on an idle 4-vCPU machine).
+            _scan_floor(spark, self.canary_dir)
         self.gates += 1
         floor = _scan_floor(spark, self.canary_dir)
         while floor > STEADY_CANARY_MAX and self.left > 0:
@@ -210,20 +215,19 @@ def time_entry(spark, name: str, sf_dir: str, trials: int, before=None) -> list[
     DataFrame's result stage, so a second run of the same one measures
     nothing."""
     runs = []
-    for _ in range(trials):
-        if before is not None:
-            before()
-        t0 = time.perf_counter()
-        REGISTRY[name].spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        runs.append(round(time.perf_counter() - t0, 4))
-    # Operators persist() intermediates for within-query reuse (shingle
-    # stages, tokenized stages, graph edge lists); Spark's CacheManager
-    # keys them by logical plan, so they survive the entry and pile up
-    # across a run — storage memory fills and every later entry degrades
-    # under eviction + GC pressure (measured: dedup_substring_spans
-    # 11.7 s inside a full bench run vs 1.1 s hot in isolation).
-    # Dropping the cache after each entry restores per-entry isolation.
-    spark.catalog.clearCache()
+    # One cache scope around all trials: later trials still reuse a
+    # stage the first one persisted, and everything the entry kept is
+    # freed when it ends. Left to pile up across a run, those caches
+    # fill storage memory and every later entry degrades under eviction
+    # and GC pressure (measured: dedup_substring_spans 11.7 s inside a
+    # full bench run vs 1.1 s hot in isolation).
+    with scope():
+        for _ in range(trials):
+            if before is not None:
+                before()
+            t0 = time.perf_counter()
+            REGISTRY[name].spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            runs.append(round(time.perf_counter() - t0, 4))
     return runs
 
 

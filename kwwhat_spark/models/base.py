@@ -30,6 +30,12 @@ sequential one:
 - ``overrides`` (and ``this_dfs``) change only between top-level calls,
   never while a build is running. The incremental runner relies on
   this: it overrides each merged model before it asks for the next.
+
+Each materialised model is kept in the cache scope open where it was
+built (``operators/cachescope``), which frees it when that scope
+closes; overrides stay the caller's. A Pipeline must not be used after
+the scope it built in has closed: its remembered models would read
+freed blocks. With no scope open, the caller owns the checkpoints.
 """
 
 from __future__ import annotations
@@ -47,7 +53,7 @@ from pyspark.sql import functions as F
 
 from kwwhat_spark.config import VARS, PipelineVars
 from kwwhat_spark.functions.core import array_union_sorted
-from kwwhat_spark.operators.cachescope import release
+from kwwhat_spark.operators.cachescope import keep
 from kwwhat_spark.threads import run_all
 
 MODELS: dict[str, Callable[["Pipeline"], DataFrame]] = {}
@@ -316,7 +322,7 @@ class Pipeline:
         # (stg_*, fact_uptime, fact_charger_commissioned_daily) stay
         # lazy and collapse into their consumers.
         if name not in VIEW_MODELS or name in self.cache_views:
-            df = df.localCheckpoint(eager=True)
+            df = keep(df.localCheckpoint(eager=True))
         self._cache[name] = df
         return df
 
@@ -348,17 +354,6 @@ class Pipeline:
                 fut.set_exception(e)
                 raise
         return fut.result()
-
-    def unpersist_all(self) -> None:
-        """Free every model this Pipeline materialised. Overrides are the
-        caller's and stay. Call it with no build in flight."""
-        for df in self._cache.values():
-            try:
-                release(df)
-            except Exception:  # session already stopped — nothing to free
-                pass
-        self._cache.clear()
-        self._builds.clear()
 
     # Driver-side scalars are memoized per Pipeline by DataFrame
     # IDENTITY: incremental models re-derive the same watermark over the

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kwwhat_spark.operators.cachescope import release
+from kwwhat_spark.operators.cachescope import keep, release, scope
 
 EOW = "</w>"
 
@@ -211,23 +211,23 @@ def learn_bpe_merges(
         types = _byte_types(df, text_col, pretokenizer)
     else:
         raise ValueError(f"unknown BPE level: {level!r}")
-    types = types.localCheckpoint(eager=True)
-    merges: list[tuple[int, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
-        top = (
-            _pair_counts(types)
-            .orderBy(F.col("pair_count").desc(), F.col("left").asc(), F.col("right").asc())
-            .limit(1)
-            .collect()
-        )
-        if not top or top[0]["pair_count"] < 2:
-            break
-        left, right, cnt = top[0]["left"], top[0]["right"], int(top[0]["pair_count"])
-        merges.append((rank, left, right, cnt))
-        nxt = _merge_types(types, left, right).localCheckpoint(eager=True)
-        release(types)
-        types = nxt
-    release(types)
+    with scope():
+        types = keep(types.localCheckpoint(eager=True))
+        merges: list[tuple[int, str, str, int]] = []
+        for rank in range(1, n_merges + 1):
+            top = (
+                _pair_counts(types)
+                .orderBy(F.col("pair_count").desc(), F.col("left").asc(), F.col("right").asc())
+                .limit(1)
+                .collect()
+            )
+            if not top or top[0]["pair_count"] < 2:
+                break
+            left, right, cnt = top[0]["left"], top[0]["right"], int(top[0]["pair_count"])
+            merges.append((rank, left, right, cnt))
+            nxt = keep(_merge_types(types, left, right).localCheckpoint(eager=True))
+            release(types)
+            types = nxt
     return merges
 
 

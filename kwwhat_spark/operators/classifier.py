@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kwwhat_spark.operators.cachescope import release
+from kwwhat_spark.operators.cachescope import keep, scope
 
 BIAS_BUCKET = -1
 SIG_SCALE = 1_000_000
@@ -130,42 +130,42 @@ def train_logreg(
     (halving step) damps it — still exact integers, and each round's
     shift is a compile-time constant in the unrolled oracle replay."""
     spark = feats.sparkSession
-    data = (
-        feats.join(labels, id_col)
-        .select(id_col, "bucket", "cnt", "y")
-        .localCheckpoint(eager=True)
-    )
     shifts = (
         list(lr_shift) if isinstance(lr_shift, (list, tuple))
         else [lr_shift] * rounds
     )
     if len(shifts) < rounds:
         raise ValueError(f"lr_shift schedule shorter than rounds: {shifts}")
-    buckets = [r["bucket"] for r in data.select("bucket").distinct().collect()]
-    w: dict[int, int] = {int(b): 0 for b in buckets}
-    for rnd in range(rounds):
-        wdf = spark.createDataFrame(
-            [(int(b), int(q)) for b, q in sorted(w.items())], "bucket long, w_q long"
+    with scope():
+        data = keep(
+            feats.join(labels, id_col)
+            .select(id_col, "bucket", "cnt", "y")
+            .localCheckpoint(eager=True)
         )
-        dots = (
-            data.join(F.broadcast(wdf), "bucket")
-            .groupBy(id_col, "y")
-            .agg(F.sum(F.col("cnt") * F.col("w_q")).alias("dot_q"))
-        )
-        sig = dots.select(
-            id_col,
-            (
-                _sig_q(F.col("dot_q"), dot_scale) - F.col("y") * F.lit(SIG_SCALE)
-            ).alias("resid_q"),
-        )
-        grad = (
-            sig.join(data.select(id_col, "bucket", "cnt"), id_col)
-            .groupBy("bucket")
-            .agg(F.sum(F.col("resid_q") * F.col("cnt")).alias("g"))
-        )
-        for r in grad.collect():  # <= n_buckets+1 rows: bounded driver read
-            w[int(r["bucket"])] -= int(r["g"]) // (1 << shifts[rnd])
-    release(data)
+        buckets = [r["bucket"] for r in data.select("bucket").distinct().collect()]
+        w: dict[int, int] = {int(b): 0 for b in buckets}
+        for rnd in range(rounds):
+            wdf = spark.createDataFrame(
+                [(int(b), int(q)) for b, q in sorted(w.items())], "bucket long, w_q long"
+            )
+            dots = (
+                data.join(F.broadcast(wdf), "bucket")
+                .groupBy(id_col, "y")
+                .agg(F.sum(F.col("cnt") * F.col("w_q")).alias("dot_q"))
+            )
+            sig = dots.select(
+                id_col,
+                (
+                    _sig_q(F.col("dot_q"), dot_scale) - F.col("y") * F.lit(SIG_SCALE)
+                ).alias("resid_q"),
+            )
+            grad = (
+                sig.join(data.select(id_col, "bucket", "cnt"), id_col)
+                .groupBy("bucket")
+                .agg(F.sum(F.col("resid_q") * F.col("cnt")).alias("g"))
+            )
+            for r in grad.collect():  # <= n_buckets+1 rows: bounded driver read
+                w[int(r["bucket"])] -= int(r["g"]) // (1 << shifts[rnd])
     return w
 
 

@@ -22,8 +22,11 @@ from __future__ import annotations
 
 from collections.abc import Mapping
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from kwwhat_spark.operators.cachescope import keep
 
 
 def chunk_documents(
@@ -588,7 +591,6 @@ def strip_duplicate_spans(
     *,
     k: int = 8,
     min_count: int = 2,
-    persist_tokens: bool = True,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Exact substring deduplication in the style of Lee et al. 2022
@@ -625,9 +627,9 @@ def strip_duplicate_spans(
     exchange/latency-bound there); sf1 interleaved stash A/B, 3 windows,
     min-of-3 each: 2.35 → 2.09 s, faster in every window.
 
-    persist_tokens caches the tokenized stage: it feeds the posting
-    explode AND the final reconstruction join, and any upstream filter
-    (e.g. a quality gate with per-document signals) would otherwise be
+    The tokenized stage is persisted: it feeds the posting explode AND
+    the final reconstruction join, and any upstream filter (e.g. a
+    quality gate with per-document signals) would otherwise be
     re-evaluated for both consumers. On a cluster prefer checkpoint for
     very large corpora — the cache holds token arrays, ~1× corpus size.
 
@@ -642,12 +644,7 @@ def strip_duplicate_spans(
         F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "").alias("__t"),
     )
     base = toks.withColumn("__n", F.size("__t"))
-    if persist_tokens:
-        from pyspark import StorageLevel
-
-        from kwwhat_spark.operators.cachescope import track
-
-        base = track(base.persist(StorageLevel.MEMORY_AND_DISK))
+    base = keep(base.persist(StorageLevel.MEMORY_AND_DISK))
     posts = base.filter(F.col("__n") >= k).select(
         id_col,
         F.explode(F.sequence(F.lit(1), F.col("__n") - (k - 1))).alias("__pos"),
@@ -863,7 +860,7 @@ def line_dedup_plan(
             batch_id=batch_id,
         )
 
-    return cleaned, commit
+    return keep(cleaned), commit
 
 
 def incremental_line_dedup(
@@ -968,7 +965,7 @@ def bigram_logprob_scores(
     # total is sum(__cu) over the |vocab|-row aggregate — the previous
     # alltoks.count() re-tokenized the whole corpus for one scalar.
     uni = alltoks.groupBy("__tok").agg(F.count(F.lit(1)).alias("__cu"))
-    uni = uni.localCheckpoint(eager=True)
+    uni = keep(uni.localCheckpoint(eager=True))
     total = uni.agg(F.sum("__cu")).first()[0]
     bi = pairs.groupBy("__prev", "__tok").agg(F.count(F.lit(1)).alias("__cb"))
     dic = (
@@ -1051,7 +1048,7 @@ def bm25_topk(
     # a single tokenize+combinable-shuffle yields doc lengths AND term
     # frequencies; avgdl falls out of sum(len). The checkpointed
     # per-doc table is |docs| rows (not |tokens|) — bounded state.
-    per_doc = (
+    per_doc = keep(
         toks.groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("__len"),

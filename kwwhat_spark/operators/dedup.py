@@ -20,8 +20,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from kwwhat_spark.functions.text import simhash64, word_shingles
+from kwwhat_spark.operators.cachescope import keep
 from kwwhat_spark.operators.scaling import widen
 
 
@@ -46,7 +48,6 @@ def ngram_jaccard_pairs(
     block_col: str | None = None,
     k: int = 3,
     threshold: float = 0.5,
-    persist_shingles: bool = True,
     strategy: str = "auto",
 ) -> DataFrame:
     """Exact Jaccard similarity over k-word shingle SETS for all pairs
@@ -103,17 +104,12 @@ def ngram_jaccard_pairs(
             )
         ).alias("shingles"),
     ).withColumn("shingle_count", F.size("shingles"))
-    if persist_shingles:
-        # base feeds three consumers (prefix index + both sides of the
-        # verify join); tokenize+shingle+sort is the CPU hot spot, so
-        # cache it rather than recompute per consumer (same rationale as
-        # minhash_lsh_pairs; the 100 TB analogue is checkpointing the
-        # shingle table).
-        from pyspark.storagelevel import StorageLevel
-
-        from kwwhat_spark.operators.cachescope import track
-
-        base = track(base.persist(StorageLevel.MEMORY_AND_DISK))
+    # base feeds three consumers (prefix index + both sides of the
+    # verify join); tokenize+shingle+sort is the CPU hot spot, so cache
+    # it rather than recompute per consumer (same rationale as
+    # minhash_lsh_pairs; the 100 TB analogue is checkpointing the
+    # shingle table).
+    base = keep(base.persist(StorageLevel.MEMORY_AND_DISK))
 
     counts = base.select("doc_id", "shingle_count")
     if strategy == "prefix":
@@ -370,7 +366,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    persist_shingles: bool = True,
     replayable_hash: bool = False,
 ) -> DataFrame:
     """MinHash + banded LSH near-duplicate pairs, verified with exact
@@ -384,12 +379,11 @@ def minhash_lsh_pairs(
     value-hash oracle. Production keeps xxhash64 (faster, full 64-bit
     spread); the two paths differ ONLY in the hash family.
 
-    persist_shingles caches the (doc_id, hashed shingle set) stage: it is
-    consumed four times (both sides of the band self-join and both sides
-    of the verification join), and recomputing tokenize+shingle per
-    consumer is the dominant cost. This is the single-node analogue of
-    checkpointing the signature table in a 100 TB run; pass False to
-    keep the plan fully lazy.
+    The (doc_id, hashed shingle set) stage is persisted: it is consumed
+    four times (both sides of the band self-join and both sides of the
+    verification join), and recomputing tokenize+shingle per consumer
+    is the dominant cost. This is the single-node analogue of
+    checkpointing the signature table in a 100 TB run.
 
     Shingles are hashed to 64-bit longs ONCE up front; the signature,
     the cache, and the verification intersection all work on the long
@@ -397,8 +391,6 @@ def minhash_lsh_pairs(
     sets up to xxhash64 collisions (P ≈ |set|²/2⁶⁵ per doc — vanishing),
     and the verify join shuffles 8-byte longs instead of shingle strings
     (~3× smaller candidate payload, same at 100 TB)."""
-    from pyspark.storagelevel import StorageLevel
-
     from kwwhat_spark.functions.text import let_, md5_52, minhash_from_hashed
 
     if replayable_hash:
@@ -409,10 +401,7 @@ def minhash_lsh_pairs(
         combine_hash = F.xxhash64
 
     shingled = _hashed_shingles(df, id_col, text_col, k, shingle_hash)
-    if persist_shingles:
-        from kwwhat_spark.operators.cachescope import track
-
-        shingled = track(shingled.persist(StorageLevel.MEMORY_AND_DISK))
+    shingled = keep(shingled.persist(StorageLevel.MEMORY_AND_DISK))
 
     # Band rows carry (doc_id, band_idx, band_hash) ONLY — the shingle
     # arrays never enter the 8×-exploded shuffle. At 100 TB the bucket
@@ -486,12 +475,8 @@ def minhash_lsh_pairs(
     # longs per doc, far narrower than the shingle cache that already
     # exists. Interleaved A/B (r12, quiet rig): sf0.1 0.99 → 0.80 s min,
     # sf1 4.08 → 3.77 s with visibly tighter spread (one signature pass
-    # instead of two). Gated on persist_shingles so the fully-lazy mode
-    # stays available.
-    if persist_shingles:
-        from kwwhat_spark.operators.cachescope import track
-
-        banded = track(banded.persist(StorageLevel.MEMORY_AND_DISK))
+    # instead of two).
+    banded = keep(banded.persist(StorageLevel.MEMORY_AND_DISK))
     a = banded.alias("a")
     b = banded.alias("b")
     candidates = (
@@ -560,10 +545,6 @@ def simhash_pairs(
     Null and empty texts have no tokens, so both hash families give them
     simhash 0: every two such documents come out as a pair at hamming
     distance 0.  Filter them out first if they must not pair."""
-    from pyspark.storagelevel import StorageLevel
-
-    from kwwhat_spark.operators.cachescope import track
-
     toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
     if replayable_hash:
         base = widen(df).select(
@@ -586,7 +567,7 @@ def simhash_pairs(
                 ]
             ),
         )
-    base = track(base.persist(StorageLevel.MEMORY_AND_DISK))
+    base = keep(base.persist(StorageLevel.MEMORY_AND_DISK))
 
     chunks = base.select(
         "doc_id",
@@ -807,7 +788,7 @@ def minhash_dedup_plan(
     # builds a structurally identical plan, the CacheManager serves this
     # scan from the pairs operator's persisted shingle stage — one
     # shingle pass and one signature pass per batch instead of two.
-    sigd = (
+    sigd = keep(
         _xxh64_sig_df(
             _hashed_shingles(batch, id_col, text_col, k, F.xxhash64), num_hashes
         )
@@ -864,13 +845,13 @@ def minhash_dedup_plan(
     else:
         fresh = survivors
 
-    fresh = fresh.persist()
+    fresh = keep(fresh.persist())
     # Materialize the survivor verdicts BEFORE any index merge: the
     # returned rows are pinned to this batch's pre-merge state no matter
     # when (or whether) the caller consumes them relative to commit().
-    result = batch.join(
-        fresh.select(id_col), id_col, "left_semi"
-    ).localCheckpoint(eager=True)
+    result = keep(
+        batch.join(fresh.select(id_col), id_col, "left_semi").localCheckpoint(eager=True)
+    )
 
     def commit(batch_id: int | None = None) -> None:
         store.merge(

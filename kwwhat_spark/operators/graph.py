@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
-from kwwhat_spark.operators.cachescope import release
+from kwwhat_spark.operators.cachescope import keep, release, scope
 
 # Bounded-driver closure threshold, in DOUBLED (undirected) edge rows.
 # Below this the component closure runs as one union-find over an Arrow
@@ -88,80 +88,79 @@ def connected_components(
     Isolated nodes only appear if present as self-edges; callers union
     their full node set afterwards if needed.
     """
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_und = und.count()  # materialize once; reused every round
-    limit = (
-        LOCAL_CLOSURE_MAX_EDGE_ROWS
-        if local_max_edge_rows is None
-        else local_max_edge_rows
-    )
-    node_type = und.schema["a"].dataType
-    if n_und <= limit and isinstance(node_type, _LOCAL_CLOSURE_TYPES):
-        labels_pdf = _local_components(und.toPandas())
-        und.unpersist()
-        schema = T.StructType(
-            [
-                T.StructField("node", node_type, False),
-                T.StructField("component", node_type, False),
-            ]
+    with scope():
+        und = keep(
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+            .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+            .distinct()
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        return edges.sparkSession.createDataFrame(labels_pdf, schema)
-    labels = (
-        und.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            und.join(labels, und.b == labels.node)
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("component").alias("nbr_component"))
+        n_und = und.count()  # materialize once; reused every round
+        limit = (
+            LOCAL_CLOSURE_MAX_EDGE_ROWS
+            if local_max_edge_rows is None
+            else local_max_edge_rows
         )
-        stepped = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_component"), F.col("component")),
-                ).alias("component"),
+        node_type = und.schema["a"].dataType
+        if n_und <= limit and isinstance(node_type, _LOCAL_CLOSURE_TYPES):
+            labels_pdf = _local_components(und.toPandas())
+            schema = T.StructType(
+                [
+                    T.StructField("node", node_type, False),
+                    T.StructField("component", node_type, False),
+                ]
             )
-        )
-        # Pointer jumping: also adopt the label of my label, halving
-        # label-chain length every round.
-        by_node = stepped.select(
-            F.col("node").alias("c_node"), F.col("component").alias("c_comp")
-        )
-        new_labels = (
-            stepped.join(by_node, stepped.component == F.col("c_node"), "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("c_comp"), F.col("component")),
-                ).alias("component"),
-            )
+            return edges.sparkSession.createDataFrame(labels_pdf, schema)
+        labels = (
+            und.select(F.col("a").alias("node"))
+            .distinct()
+            .withColumn("component", F.col("node"))
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        release(labels)
-        labels = new_labels
-        if changed == 0:
-            break
-    und.unpersist()
-    return labels
+        for _ in range(max_iter):
+            neighbor_min = (
+                und.join(labels, und.b == labels.node)
+                .groupBy(F.col("a").alias("node"))
+                .agg(F.min("component").alias("nbr_component"))
+            )
+            stepped = (
+                labels.join(neighbor_min, "node", "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("component"),
+                        F.coalesce(F.col("nbr_component"), F.col("component")),
+                    ).alias("component"),
+                )
+            )
+            # Pointer jumping: also adopt the label of my label, halving
+            # label-chain length every round.
+            by_node = stepped.select(
+                F.col("node").alias("c_node"), F.col("component").alias("c_comp")
+            )
+            new_labels = (
+                stepped.join(by_node, stepped.component == F.col("c_node"), "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("component"),
+                        F.coalesce(F.col("c_comp"), F.col("component")),
+                    ).alias("component"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "node")
+                .filter(F.col("n.component") != F.col("o.component"))
+                .limit(1)
+                .count()
+            )
+            release(labels)
+            labels = new_labels
+            if changed == 0:
+                break
+    return keep(labels)
 
 
 def star_components(
@@ -207,13 +206,17 @@ def star_components(
     # sig+banding pipeline (measured at sf100: the 139 s signature stage
     # re-evaluated per consumer). Persist the input once, truncate the
     # small rootset's lineage eagerly.
-    edges_p = edges.select(
-        F.col(member).alias("m"), F.col(root).alias("r")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    aug = edges_p.union(
-        edges_p.select(F.col("r").alias("m"), F.col("r").alias("r")).distinct()
-    )
-    try:
+    # The cached edge list (bands× the deduplicated size since
+    # dropDuplicates moved to the caller) is freed once `rs` is built,
+    # also when the checkpoint throws; `rs` is read by the result.
+    with scope():
+        edges_p = keep(
+            edges.select(F.col(member).alias("m"), F.col(root).alias("r"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        aug = edges_p.union(
+            edges_p.select(F.col("r").alias("m"), F.col("r").alias("r")).distinct()
+        )
         rs = (
             aug.groupBy("m")
             .agg(
@@ -222,11 +225,7 @@ def star_components(
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        # Unpersist even when the checkpoint throws — the cached edge
-        # list (bands× the deduplicated size since dropDuplicates moved
-        # to the caller) would otherwise leak for the session lifetime.
-        edges_p.unpersist()
+    rs = keep(rs)
     root_edges = (
         rs.select("r0", F.explode("rts").alias("r"))
         .filter(F.col("r0") != F.col("r"))
@@ -330,48 +329,47 @@ def pagerank_quantized(
     localCheckpoint so the plan stays flat instead of doubling
     (same lineage discipline as connected_components above).
     """
-    e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    und = (
-        e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    nodes = und.select(F.col("a").alias("node")).distinct().persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    n = nodes.count()
-    init = scale // n
-    base = (15 * init) // 100
-    p = nodes.withColumn("rank_q", F.lit(init).cast("long"))
-    for _ in range(iterations):
-        prev = p
-        contribs = (
-            und.join(p, und.a == p.node)
-            .join(deg, "a")
-            .select(F.col("b").alias("node"), F.expr("rank_q div deg").alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("s"))
-        )
-        p = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr("(85 * coalesce(s, 0L)) div 100")
-                ).cast("long").alias("rank_q"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        release(prev)
     # The final iterate is eagerly checkpointed, so the loop-invariant
-    # cached stages are no longer referenced by its lineage — release
-    # them instead of letting them occupy storage memory for the
-    # session (same discipline as connected_components above).
-    und.unpersist()
-    deg.unpersist()
-    nodes.unpersist()
-    return p
+    # cached stages are no longer referenced by its lineage: their scope
+    # closes before it is returned.
+    e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    with scope():
+        und = keep(
+            e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
+            .distinct()
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        deg = keep(
+            und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        nodes = keep(
+            und.select(F.col("a").alias("node")).distinct()
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        n = nodes.count()
+        init = scale // n
+        base = (15 * init) // 100
+        p = nodes.withColumn("rank_q", F.lit(init).cast("long"))
+        for _ in range(iterations):
+            prev = p
+            contribs = (
+                und.join(p, und.a == p.node)
+                .join(deg, "a")
+                .select(F.col("b").alias("node"), F.expr("rank_q div deg").alias("c"))
+                .groupBy("node")
+                .agg(F.sum("c").alias("s"))
+            )
+            p = (
+                nodes.join(contribs, "node", "left")
+                .select(
+                    "node",
+                    (
+                        F.lit(base)
+                        + F.expr("(85 * coalesce(s, 0L)) div 100")
+                    ).cast("long").alias("rank_q"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            release(prev)
+    return keep(p)

@@ -18,6 +18,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kwwhat_spark.operators.cachescope import keep
 from kwwhat_spark.operators.scaling import widen
 
 
@@ -116,7 +117,7 @@ def brute_force_topk(
     q_mat = np.array([r[vec_col] for r in qrows], dtype=np.float64)
     q_norms = np.linalg.norm(q_mat, axis=1)
     q_norms[q_norms == 0.0] = 1.0
-    bc = corpus.sparkSession.sparkContext.broadcast((q_ids, q_mat, q_norms))
+    bc = keep(corpus.sparkSession.sparkContext.broadcast((q_ids, q_mat, q_norms)))
 
     part_schema = T.StructType(
         [
@@ -244,7 +245,7 @@ def all_pairs_cosine(
     for d, grp in by_len.items():
         mat = np.array([r[1] for r in grp], dtype=np.float64)
         corpus[d] = (np.array([r[0] for r in grp]), mat, np.linalg.norm(mat, axis=1))
-    bc = df.sparkSession.sparkContext.broadcast(corpus)
+    bc = keep(df.sparkSession.sparkContext.broadcast(corpus))
 
     def pairs(batches):
         for pdf in batches:
@@ -520,7 +521,7 @@ def ivf_topk(
     cent_mat = np.array([list(vec) for vec, _ in centroids], dtype=np.float64)
     cent_norms = np.array([n for _, n in centroids], dtype=np.float64)
     sc = queries.sparkSession.sparkContext
-    bc = sc.broadcast((cent_mat, cent_norms))
+    bc = keep(sc.broadcast((cent_mat, cent_norms)))
     if block_salt is None:
         dp = sc.defaultParallelism
         n_salt = max(1, min(16, -(-dp // max(n_cells_eff, 1))))
@@ -664,7 +665,7 @@ def ivf_topk(
         # the cogroup path's multiprobe entry and the partial-probe
         # parity test).
         all_cells_probed = bool(probe_mask.all()) if len(q_ids) else False
-        bq = sc.broadcast((q_ids, qmat, qnorms, probe_mask, all_cells_probed))
+        bq = keep(sc.broadcast((q_ids, qmat, qnorms, probe_mask, all_cells_probed)))
 
         def scan_rerank(batches):
             b_qids, b_qmat, b_qnorms, b_mask, b_full = bq.value
@@ -868,7 +869,7 @@ def semdedup(
     cent_mat = np.array([centroid_vecs[i][1] for i in order], dtype=np.float64)
     cent_norms = np.linalg.norm(cent_mat, axis=1)
     cent_norms[cent_norms == 0.0] = 1.0
-    bc = df.sparkSession.sparkContext.broadcast((cent_ids, cent_mat, cent_norms))
+    bc = keep(df.sparkSession.sparkContext.broadcast((cent_ids, cent_mat, cent_norms)))
 
     id_field = df.schema[id_col]
     assign_schema = T.StructType(
@@ -1013,7 +1014,7 @@ def knn_graph(
     rows = df.select(id_col, vec_col).collect()
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     mat = np.array([r[1] for r in rows], dtype=np.float64)
-    bc = df.sparkSession.sparkContext.broadcast((ids, _unit_rows(mat)))
+    bc = keep(df.sparkSession.sparkContext.broadcast((ids, _unit_rows(mat))))
 
     def neighbors(batches):
         c_ids, c_unit = bc.value

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from kwwhat_spark.models.base import CLUSTER_BY, MODELS, UNIQUE_KEYS, Pipeline
-from kwwhat_spark.operators.cachescope import release
+from kwwhat_spark.operators.cachescope import checkpoint_rdd, keep, scope
 from kwwhat_spark.sinks import DATE_COL, with_date
 
 # Execution order for a batch: the incremental models (those @model
@@ -245,11 +245,9 @@ class ParquetStateStore:
             raise RuntimeError(f"no state for '{name}' to migrate")
         # Materialize before writing: the clustered layout overwrites
         # the same directory the lazy plan would still be scanning.
-        out = transform(cur).localCheckpoint(eager=True)
-        try:
+        with scope():
+            out = keep(transform(cur).localCheckpoint(eager=True))
             self.write(name, out, batch_id=self.last_batch_id(name))
-        finally:
-            release(out)
 
     def merge(self, name: str, new: DataFrame, keys: list[str], *,
               batch_id: int | None = None) -> None:
@@ -267,69 +265,65 @@ class ParquetStateStore:
         if existing is None:
             self.write(name, new, batch_id=batch_id)
             return
-        clustered = name in self.cluster_by
-        if clustered and set(new.columns) == set(existing.columns):
-            self._merge_partitions(name, new.select(*existing.columns), keys, batch_id)
-            return
-        # Full rewrite: every versioned merge, and a clustered one whose
-        # schema changed — partition directories cannot mix schemas
-        # (untouched partitions would keep the old footer), so an
-        # additive evolution rewrites the table once, the same cost as a
-        # warehouse ALTER TABLE + backfill.
-        existing = self._evolve(name, existing, new)
-        # Materialize the batch once: the anti-join's key-distinct and
-        # the write would otherwise each run the full model plan.
-        new = new.localCheckpoint(eager=True)
-        merged = _replace(existing, new, keys)
-        if clustered:  # the write replaces the directory `existing` scans
-            merged = merged.localCheckpoint(eager=True)
-        try:
+        with scope():
+            # Materialize the batch once: the anti-join's key-distinct,
+            # the partition collect and the write would otherwise each
+            # run the full model plan. IncrementalRunner passes a model's
+            # checkpoint already; streaming merge_sink passes a lazy plan.
+            if checkpoint_rdd(new) is None:
+                new = keep(new.localCheckpoint(eager=True))
+            clustered = name in self.cluster_by
+            if clustered and set(new.columns) == set(existing.columns):
+                self._merge_partitions(name, new.select(*existing.columns), keys, batch_id)
+                return
+            # Full rewrite: every versioned merge, and a clustered one
+            # whose schema changed — partition directories cannot mix
+            # schemas (untouched partitions would keep the old footer),
+            # so an additive evolution rewrites the table once, the same
+            # cost as a warehouse ALTER TABLE + backfill.
+            merged = _replace(self._evolve(name, existing, new), new, keys)
+            if clustered:  # the write replaces the directory `existing` scans
+                merged = keep(merged.localCheckpoint(eager=True))
             self.write(name, merged, batch_id=batch_id)
-        finally:
-            release(merged)
-            release(new)
 
     def _merge_partitions(self, name: str, new: DataFrame, keys: list[str],
                           batch_id: int | None) -> None:
         """Clustered merge: replace the date partitions ``new`` touches
-        with their merged rows; every other partition keeps its files."""
-        # ONE materialization of the batch plan: the partition collect,
-        # the anti-join and the write all read this checkpoint.
-        newp = with_date(new, self.cluster_by[name]).localCheckpoint(eager=True)
-        try:
-            # The batch's partition set: tiny (batch window + buffer
-            # dates), driver-safe to collect, and the ONLY state the
-            # merge reads.
-            affected = [r[DATE_COL] for r in newp.select(DATE_COL).distinct().collect()]
-            if not affected:
-                return  # empty batch: no partitions touched, state unchanged
-            non_null = [p for p in affected if p is not None]
-            pred = F.col(DATE_COL).isin(non_null)
-            if len(non_null) < len(affected):
-                pred = pred | F.col(DATE_COL).isNull()
-            path = self._data_path(name)
-            prior = self._scan(path)
-            out = newp if prior is None else _replace(prior.filter(pred), newp, keys)
-            (
-                # Single write pass, no intermediate checkpoint: the batch
-                # side is already materialized above, and the prior-state
-                # side is fully read by the write job's tasks BEFORE the
-                # dynamic-overwrite commit replaces any partition files.
-                # One task per date partition (dbt-spark insert_overwrite
-                # shape): without the repartition every upstream task
-                # writes a sliver into every partition dir — task_count ×
-                # partition_count small files that every later read(name)
-                # must list and footer-parse. The mart sinks keep their
-                # own policy (sort within each date).
-                out.repartition(DATE_COL)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(DATE_COL)
-                .parquet(path)
-            )
-            self._record(name, {**self._meta(name), "batch_id": batch_id})
-        finally:
-            release(newp)
+        with their merged rows; every other partition keeps its files.
+        ``new`` reads a checkpoint (``merge`` sees to it), so the
+        partition collect, the anti-join and the write each read the
+        batch's blocks, not its model plan."""
+        newp = with_date(new, self.cluster_by[name])
+        # The batch's partition set: tiny (batch window + buffer dates),
+        # driver-safe to collect, and the ONLY state the merge reads.
+        affected = [r[DATE_COL] for r in newp.select(DATE_COL).distinct().collect()]
+        if not affected:
+            return  # empty batch: no partitions touched, state unchanged
+        non_null = [p for p in affected if p is not None]
+        pred = F.col(DATE_COL).isin(non_null)
+        if len(non_null) < len(affected):
+            pred = pred | F.col(DATE_COL).isNull()
+        path = self._data_path(name)
+        prior = self._scan(path)
+        out = newp if prior is None else _replace(prior.filter(pred), newp, keys)
+        (
+            # Single write pass, no intermediate checkpoint: the batch
+            # side is already materialized, and the prior-state side is
+            # fully read by the write job's tasks BEFORE the
+            # dynamic-overwrite commit replaces any partition files.
+            # One task per date partition (dbt-spark insert_overwrite
+            # shape): without the repartition every upstream task
+            # writes a sliver into every partition dir — task_count ×
+            # partition_count small files that every later read(name)
+            # must list and footer-parse. The mart sinks keep their
+            # own policy (sort within each date).
+            out.repartition(DATE_COL)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(DATE_COL)
+            .parquet(path)
+        )
+        self._record(name, {**self._meta(name), "batch_id": batch_id})
 
 
 class IncrementalRunner:
@@ -358,26 +352,26 @@ class IncrementalRunner:
             prior = self.store.read(name)
             if prior is not None:
                 this_dfs[name] = prior
-        pipe = Pipeline(
-            spark=self.spark,
-            sources=sources,
-            vars=self.vars,
-            this_dfs=this_dfs,
-            overrides=dict(overrides or {}),
-            cache_views=("stg_ocpp_logs",),
-        )
-        # One model at a time on purpose: a later model must read the
-        # merged state of an earlier one, so overrides change between
-        # these top-level calls only. Within a call, model bodies still
-        # build their unbuilt upstream concurrently (Pipeline.refs).
-        for name in models:
-            out = pipe.ref(name)
-            self.store.merge(name, out, UNIQUE_KEYS[name])
-            # dbt semantics: downstream ref() of an incremental model sees
-            # the MERGED table, not just this batch's output rows.
-            pipe.overrides[name] = self.store.read(name)
-        # Outputs are durable in the state store; drop the batch's caches.
-        pipe.unpersist_all()
+        # Outputs are durable in the state store, so the batch's
+        # materialised models live in one scope that closes with it.
+        with scope():
+            pipe = Pipeline(
+                spark=self.spark,
+                sources=sources,
+                vars=self.vars,
+                this_dfs=this_dfs,
+                overrides=dict(overrides or {}),
+                cache_views=("stg_ocpp_logs",),
+            )
+            # One model at a time on purpose: a later model must read the
+            # merged state of an earlier one, so overrides change between
+            # these top-level calls only. Within a call, model bodies still
+            # build their unbuilt upstream concurrently (Pipeline.refs).
+            for name in models:
+                self.store.merge(name, pipe.ref(name), UNIQUE_KEYS[name])
+                # dbt semantics: downstream ref() of an incremental model
+                # sees the MERGED table, not just this batch's output rows.
+                pipe.overrides[name] = self.store.read(name)
 
     def table(self, name: str) -> DataFrame:
         df = self.store.read(name)

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kwwhat_spark.functions.text import dup_gram_frac, repetition_signals
+from kwwhat_spark.operators.cachescope import keep
 from kwwhat_spark.queries.catalog import query
 from kwwhat_spark.sources.testdata import load_table
 
@@ -1090,10 +1091,11 @@ def _logreg_replay_sql(doc_limit: int, n_buckets: int) -> str:
 
 _W_FINAL = f"w{len(_LOGREG_SHIFTS)}"
 
-# Both gate entries need the trained halves; training is 16 distributed
-# rounds, so memoize per (sf_dir) for the in-process gate run — the
-# same bounded-cache convention as the OCPP _MART_CACHE.
-_LOGREG_CACHE: dict = {}
+# Both gate entries need the trained weights; training is 16 distributed
+# rounds, so the weights (driver-side ints, no Spark storage) are
+# memoized per sf_dir for the in-process gate run. The frames are
+# rebuilt per call, and their checkpoint is kept in the caller's scope.
+_LOGREG_CACHE: dict[str, dict[int, int]] = {}
 
 
 def _logreg_spark_halves(spark: SparkSession, sf_dir: str):
@@ -1104,9 +1106,6 @@ def _logreg_spark_halves(spark: SparkSession, sf_dir: str):
         train_logreg,
     )
 
-    key = sf_dir
-    if key in _LOGREG_CACHE:
-        return _LOGREG_CACHE[key]
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _LOGREG_PARAMS["doc_limit"]
     )
@@ -1138,24 +1137,23 @@ def _logreg_spark_halves(spark: SparkSession, sf_dir: str):
             < "8000"
         ).alias("train"),
     )
-    feats = (
+    feats = keep(
         hashed_token_features(
             docs, n_buckets=_LOGREG_PARAMS["n_buckets"], normalize=True
         )
         .join(labels.select("doc_id"), "doc_id")
         .localCheckpoint(eager=True)
     )
-    train_ids = splits.filter("train").select("doc_id")
-    w = train_logreg(
-        feats.join(train_ids, "doc_id"),
-        labels.join(train_ids, "doc_id"),
-        rounds=len(_LOGREG_SHIFTS),
-        lr_shift=_LOGREG_SHIFTS,
-        dot_scale=SIG_SCALE * FREQ_SCALE,
-    )
-    out = (feats, labels, splits, w)
-    _LOGREG_CACHE[key] = out
-    return out
+    if sf_dir not in _LOGREG_CACHE:
+        train_ids = splits.filter("train").select("doc_id")
+        _LOGREG_CACHE[sf_dir] = train_logreg(
+            feats.join(train_ids, "doc_id"),
+            labels.join(train_ids, "doc_id"),
+            rounds=len(_LOGREG_SHIFTS),
+            lr_shift=_LOGREG_SHIFTS,
+            dot_scale=SIG_SCALE * FREQ_SCALE,
+        )
+    return feats, labels, splits, _LOGREG_CACHE[sf_dir]
 
 
 @query(

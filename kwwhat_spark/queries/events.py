@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from kwwhat_spark.functions.core import bucket_15min, datediff_boundary
+from kwwhat_spark.operators.cachescope import keep
 from kwwhat_spark.operators.windows import change_points, sessionize
 from kwwhat_spark.queries.catalog import query
 from kwwhat_spark.sources.testdata import load_table
@@ -581,7 +582,7 @@ def _run_to_memory(spark: SparkSession, df: DataFrame, output_mode: str) -> Data
             f"availableNow stream {name} still running after 120s; "
             "refusing to read a partially-populated memory sink"
         )
-    out = spark.table(name).localCheckpoint(eager=True)
+    out = keep(spark.table(name).localCheckpoint(eager=True))
     spark.catalog.dropTempView(name)
     return out
 
@@ -759,7 +760,7 @@ def orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("total_price"),
             )
         )
-        return out.localCheckpoint(eager=True)
+        return keep(out.localCheckpoint(eager=True))
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -838,7 +839,7 @@ def zorder_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("total_value"),
             )
         )
-        return out.localCheckpoint(eager=True)
+        return keep(out.localCheckpoint(eager=True))
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -911,6 +912,6 @@ def manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("total_value"),
             )
         )
-        return out.localCheckpoint(eager=True)
+        return keep(out.localCheckpoint(eager=True))
     finally:
         shutil.rmtree(d, ignore_errors=True)

@@ -20,6 +20,7 @@ from kwwhat_spark.functions.text import (
     quality_score,
     whitespace_token_count,
 )
+from kwwhat_spark.operators.cachescope import keep
 from kwwhat_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_components,
@@ -1239,8 +1240,8 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prefer checkpoint to cut the lineage too.)
     from pyspark.storagelevel import StorageLevel
 
-    unique_docs = qualified.join(keepers, "doc_id", "left_semi").persist(
-        StorageLevel.MEMORY_AND_DISK
+    unique_docs = keep(
+        qualified.join(keepers, "doc_id", "left_semi").persist(StorageLevel.MEMORY_AND_DISK)
     )
     pairs = ngram_jaccard_pairs(
         unique_docs, "doc_id", "text", block_col="lang", k=3, threshold=0.8
@@ -1982,7 +1983,7 @@ def decontaminate_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     e_mat = np.array([r["embedding"] for r in eval_rows], dtype=np.float64)
     e_norms = np.linalg.norm(e_mat, axis=1)
     e_norms[e_norms == 0.0] = 1.0
-    bc = spark.sparkContext.broadcast((e_ids, e_mat, e_norms))
+    bc = keep(spark.sparkContext.broadcast((e_ids, e_mat, e_norms)))
 
     schema = T.StructType(
         [

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kwwhat_spark.operators.cachescope import keep, scope
 from kwwhat_spark.queries.catalog import query
 
 SEED_DIR = "/root/reference/demo/seeds"
@@ -478,8 +479,8 @@ fact_charge_attempts AS (
 # envelope split (CSV parse + 4 JSON extractions per row) feeds every
 # mart AND both incremental lifecycle entries, which previously re-staged
 # per batch — sharing it is the gate-budget win of VERDICT r6 item 6.
-# localCheckpoint survives spark.catalog.clearCache between gate queries.
-# Both caches key on sparkContext.applicationId (not id(spark)): two
+# This and _MART_CACHE are the only storage no cache scope keeps
+# (operators/cachescope): they outlive every entry by design. Both caches key on sparkContext.applicationId (not id(spark)): two
 # sessions over one context share the checkpoint, and entries belonging
 # to a stopped/replaced context are evicted on the next miss, so a
 # long-lived process that stops and recreates sessions doesn't pin
@@ -532,11 +533,11 @@ def _mart_pipeline(spark: SparkSession):
 
 # The four mart entries share one DAG build per session: the first entry
 # computes every mart and pins the RESULTS with an eager localCheckpoint
-# (which survives spark.catalog.clearCache between gate queries, unlike
-# persist), then releases the pipeline's materialised models. The other
-# three entries are then O(checkpoint scan). The Pipeline already
-# checkpoints its non-view marts, but unpersist_all frees those, so each
-# mart gets a checkpoint of its own that outlives the Pipeline.
+# that no scope keeps (see _STAGED_CACHE), while the pipeline's own
+# materialised models live in an inner scope that closes after the
+# build. The other three entries are then O(checkpoint scan). The
+# Pipeline already checkpoints its non-view marts, but its scope frees
+# those, so each mart gets a checkpoint of its own that outlives it.
 _MART_NAMES = (
     "fact_charge_attempts", "fact_visits", "fact_uptime", "fact_interval_data",
 )
@@ -548,10 +549,10 @@ def _mart(spark: SparkSession, name: str) -> DataFrame:
     key = (app, name)
     if key not in _MART_CACHE:
         _evict_stale_apps(_MART_CACHE, app)
-        p = _mart_pipeline(spark)
-        for n in _MART_NAMES:
-            _MART_CACHE[(app, n)] = p.ref(n).localCheckpoint(eager=True)
-        p.unpersist_all()
+        with scope():
+            p = _mart_pipeline(spark)
+            for n in _MART_NAMES:
+                _MART_CACHE[(app, n)] = p.ref(n).localCheckpoint(eager=True)
     return _MART_CACHE[key]
 
 
@@ -1438,7 +1439,7 @@ def ocpp_incremental_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = store.read("int_status_changes").select(*_INC_STATUS_COLS)
         # Pin the result before the state directory disappears.
-        return out.localCheckpoint(eager=True)
+        return keep(out.localCheckpoint(eager=True))
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
 
@@ -1529,7 +1530,7 @@ def ocpp_incremental_attempts_chain(spark: SparkSession, sf_dir: str) -> DataFra
         out = mart_projection(
             "fact_charge_attempts", store.read("fact_charge_attempts")
         ).drop(*_CHAIN_SKIP_COLS)
-        return out.localCheckpoint(eager=True)
+        return keep(out.localCheckpoint(eager=True))
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
 
@@ -1602,7 +1603,7 @@ def _run_seed_stream(spark: SparkSession, build, prefix: str) -> DataFrame:
                 f"availableNow stream {name} still running after 120s; "
                 "refusing to read a partially-populated memory sink"
             )
-        out = spark.table(name).localCheckpoint(eager=True)
+        out = keep(spark.table(name).localCheckpoint(eager=True))
         spark.catalog.dropTempView(name)
         return out
     finally:
@@ -2238,7 +2239,7 @@ def ocpp_stream_visits_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "is_successful", "grouping_key", "visit_duration_minutes",
         ).localCheckpoint(eager=True)
         spark.catalog.dropTempView(name)
-        return out
+        return keep(out)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -2384,6 +2385,6 @@ def ocpp_stream_visits_finalized(spark: SparkSession, sf_dir: str) -> DataFrame:
             "is_successful", "grouping_key", "visit_duration_minutes",
         ).localCheckpoint(eager=True)
         spark.catalog.dropTempView(name)
-        return out
+        return keep(out)
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kwwhat_spark.operators.cachescope import keep
 from kwwhat_spark.queries.catalog import query
 from kwwhat_spark.sources.testdata import load_table
 
@@ -181,7 +182,7 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Two consumers (per-part min + join back) of the derived-partsupp
     # rollup; persist so the 6M-row aggregation runs once.
-    europe = europe.persist()
+    europe = keep(europe.persist())
     min_cost = europe.groupBy("ps_partkey").agg(F.min("ps_supplycost").alias("min_cost"))
     return (
         europe.join(min_cost, "ps_partkey")
@@ -239,7 +240,7 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Two consumers (cutoff scalar + final filter) would re-run the
     # derived-partsupp aggregation; persist the small per-part rollup.
-    nat = nat.persist()
+    nat = keep(nat.persist())
     total = nat.agg((F.sum("value_dec").cast("double") / F.lit(1000)).alias("cutoff"))
     return (
         nat.join(F.broadcast(total), F.col("value_dec").cast("double") > F.col("cutoff"))
@@ -925,10 +926,10 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1997-01-01")) & (F.col("l_shipdate") < _ts("1997-04-01"))
     )
-    rev = (
+    rev = keep((
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(F.sum(_rev()).alias("total_rev"))
-    ).persist()  # consumed by the max scalar AND the equality filter
+    ).persist())  # consumed by the max scalar AND the equality filter
     mx = rev.agg(F.max("total_rev").alias("max_rev"))
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (

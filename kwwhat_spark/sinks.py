@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kwwhat_spark.models.base import CLUSTER_BY, Pipeline
-from kwwhat_spark.operators.cachescope import release
+from kwwhat_spark.operators.cachescope import keep, scope
 from kwwhat_spark.threads import run_all
 
 # Partition column of every clustered table written here and by
@@ -104,11 +104,8 @@ def compact_partitioned(
         if sort_col is not None:
             df = df.sortWithinPartitions(sort_col)
         # Materialize before overwriting the directory the plan reads.
-        snapshot = df.localCheckpoint(eager=True)
-        try:
-            snapshot.write.mode("overwrite").parquet(root)
-        finally:
-            release(snapshot)
+        with scope():
+            keep(df.localCheckpoint(eager=True)).write.mode("overwrite").parquet(root)
         rewritten[root] = len(parts)
         dirs[:] = []  # partition dirs are leaves; don't descend further
     return rewritten

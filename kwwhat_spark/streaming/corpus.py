@@ -30,6 +30,7 @@ from kwwhat_spark.functions.text import (
     repetition_signals,
     whitespace_token_count,
 )
+from kwwhat_spark.operators.cachescope import scope
 from kwwhat_spark.streaming.sinks import stream_dedup
 
 
@@ -129,18 +130,19 @@ def archive_dedup_batch_handler(
         last = store.last_batch_id(f"{name}_sigs")
         if last is not None and batch_id <= last:
             return  # fully-committed replay: output dir already written
-        fresh, commit = minhash_dedup_plan(
-            batch_df, store, id_col, text_col, name=name, threshold=threshold
-        )
-        # Survivors are materialized against the pre-merge index, and the
-        # write lands BEFORE the index commit in a batch_id-scoped dir —
-        # a replayed micro-batch overwrites the same dir with the same
-        # rows (self-id archive matches are excluded from the dup
-        # verdict) instead of appending duplicates or losing survivors.
-        fresh.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-        commit(batch_id)
+        with scope():  # one cache scope per micro-batch
+            fresh, commit = minhash_dedup_plan(
+                batch_df, store, id_col, text_col, name=name, threshold=threshold
+            )
+            # Survivors are materialized against the pre-merge index, and
+            # the write lands BEFORE the index commit in a batch_id-scoped
+            # dir — a replayed micro-batch overwrites the same dir with the
+            # same rows (self-id archive matches are excluded from the dup
+            # verdict) instead of appending duplicates or losing survivors.
+            fresh.write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"batch_id={batch_id}")
+            )
+            commit(batch_id)
 
     return _dedup_batch
 
@@ -201,13 +203,14 @@ def line_dedup_batch_handler(
         last = store.last_batch_id(name)
         if last is not None and batch_id <= last:
             return  # fully-committed replay: output dir already written
-        cleaned, commit = line_dedup_plan(
-            batch_df, store, name=name, key=id_col, text_col=text_col,
-            min_chars=min_chars,
-        )
-        cleaned.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-        commit(batch_id)
+        with scope():  # one cache scope per micro-batch
+            cleaned, commit = line_dedup_plan(
+                batch_df, store, name=name, key=id_col, text_col=text_col,
+                min_chars=min_chars,
+            )
+            cleaned.write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"batch_id={batch_id}")
+            )
+            commit(batch_id)
 
     return _dedup_batch

@@ -9,12 +9,15 @@ stages) finishes sooner when independent pieces overlap.
 Workers are ``pyspark.InheritableThread``: each starts with the
 caller's local properties (job group, description, scheduler pool), so
 the jobs it submits carry the caller's labels. A plain thread starts
-with none, and its jobs fall out of every job group.
+with none, and its jobs fall out of every job group. Each worker also
+runs in a copy of the caller's ``contextvars`` context, so what it
+keeps lands in the caller's cache scope (``operators/cachescope``).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from contextvars import copy_context
 from typing import TypeVar
 
 from pyspark import InheritableThread
@@ -44,7 +47,7 @@ def run_all(calls: Sequence[Callable[[], T]]) -> list[T]:
         except BaseException as e:  # handed to the caller below
             errors[i] = e
 
-    workers = [InheritableThread(target=target, args=(i,), daemon=True)
+    workers = [InheritableThread(target=copy_context().run, args=(target, i), daemon=True)
                for i in range(len(calls))]
     for w in workers:
         w.start()

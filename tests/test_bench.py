@@ -11,6 +11,7 @@ from types import SimpleNamespace
 import pytest
 
 import bench
+from kwwhat_spark.operators.cachescope import keep
 from kwwhat_spark.queries import REGISTRY
 
 TOOLS = sorted(
@@ -24,7 +25,7 @@ def test_time_entry_rebuilds_per_trial_and_clears_cache(spark, monkeypatch):
 
     def build(spark, sf_dir):
         calls.append(sf_dir)
-        df = spark.range(10).persist()
+        df = keep(spark.range(10).persist())
         df.count()
         return df
 
@@ -53,6 +54,15 @@ def test_rig_verdict(before, after, load, verdict):
 @pytest.mark.parametrize("name", TOOLS)
 def test_tool_imports(name):
     importlib.import_module(f"tools.{name}")
+
+
+def test_settle_gate_discards_the_first_canary(monkeypatch):
+    reads = iter([0.9, 0.2, 0.25])  # a cold first read, then steady ones
+    monkeypatch.setattr(bench, "_scan_floor", lambda spark, d: next(reads))
+    gate = bench._SettleGate(0.0, "canary")
+    assert gate.wait(None) == 0.2
+    assert gate.wait(None) == 0.25
+    assert gate.gates == 2 and gate.waits == 0
 
 
 def test_bench_exports_scan_floor():

@@ -15,6 +15,7 @@ import threading
 import pytest
 
 from kwwhat_spark.models.base import CLUSTER_BY, MODELS, UNIQUE_KEYS, VIEW_MODELS, Pipeline, model
+from kwwhat_spark.operators.cachescope import scope
 from kwwhat_spark.plans.incremental import INCREMENTAL_ORDER
 from kwwhat_spark.sources.ocpp import load_ocpp_sources
 
@@ -58,10 +59,8 @@ def test_incremental_order_follows_the_dag(spark, one_charger_fleet):
     pipe = RecordingPipeline(spark=spark, sources=load_ocpp_sources(spark, one_charger_fleet),
                              cache_views=("stg_ocpp_logs",))
     pipe.reads = {}
-    try:
+    with scope():
         pipe.refs(*MODELS)
-    finally:
-        pipe.unpersist_all()
     assert set(INCREMENTAL_ORDER) <= set(pipe.reads)
 
     def upstream(name, seen):

@@ -12,7 +12,7 @@ import pytest
 
 import kwwhat_spark.models  # noqa: F401  (registers the model DAG)
 from kwwhat_spark.models import Pipeline
-from kwwhat_spark.operators.cachescope import checkpoint_rdd, release
+from kwwhat_spark.operators.cachescope import checkpoint_rdd, release, scope
 from kwwhat_spark.plans.incremental import (
     IncrementalRunner,
     ParquetStateStore,
@@ -64,14 +64,13 @@ def _status_changes(spark, start: dt.datetime):
 def pipe(spark):
     # The status chain is mocked (dbt-unit style), so the test runs no
     # OCPP log through staging; the override is the caller's checkpoint.
-    latest = Pipeline(spark=spark, sources={},
-                      overrides={"int_status_changes": _status_changes(spark, T0)})
-    latest_status = latest.ref("int_connector_latest_status")
-    p = Pipeline(spark=spark, sources=_sources(spark),
-                 overrides={"int_connector_latest_status": latest_status})
-    yield p
-    p.unpersist_all()
-    latest.unpersist_all()
+    with scope():
+        latest = Pipeline(spark=spark, sources={},
+                          overrides={"int_status_changes": _status_changes(spark, T0)})
+        latest_status = latest.ref("int_connector_latest_status")
+        p = Pipeline(spark=spark, sources=_sources(spark),
+                     overrides={"int_connector_latest_status": latest_status})
+        yield p
 
 
 def test_ref_hands_out_lineage_cut_checkpoints(pipe):
@@ -82,18 +81,18 @@ def test_ref_hands_out_lineage_cut_checkpoints(pipe):
     assert checkpoint_rdd(pipe.ref("stg_connectors")) is None
 
 
-def test_unpersist_all_releases_the_pipeline_checkpoints(spark, pipe):
-    pipe.ref("dim_connectors")
-    pipe.ref("dim_chargers")
-    owned = {n: checkpoint_rdd(df).id() for n, df in pipe._cache.items()
-             if checkpoint_rdd(df) is not None}
-    assert set(owned) == {"int_connectors", "int_ports", "int_chargers",
-                          "dim_connectors", "dim_chargers"}
-    override_id = checkpoint_rdd(pipe.overrides["int_connector_latest_status"]).id()
-    live = _persistent_ids(spark)
-    assert set(owned.values()) <= live and override_id in live
+def test_scope_releases_the_pipeline_checkpoints(spark, pipe):
+    with scope():
+        pipe.ref("dim_connectors")
+        pipe.ref("dim_chargers")
+        owned = {n: checkpoint_rdd(df).id() for n, df in pipe._cache.items()
+                 if checkpoint_rdd(df) is not None}
+        assert set(owned) == {"int_connectors", "int_ports", "int_chargers",
+                              "dim_connectors", "dim_chargers"}
+        override_id = checkpoint_rdd(pipe.overrides["int_connector_latest_status"]).id()
+        live = _persistent_ids(spark)
+        assert set(owned.values()) <= live and override_id in live
 
-    pipe.unpersist_all()
     live = _persistent_ids(spark)
     assert not set(owned.values()) & live
     assert override_id in live  # the caller's checkpoint is not the Pipeline's
@@ -172,3 +171,30 @@ def test_connected_components_keeps_only_its_labels(spark):
     assert _persistent_ids(spark) - before == {checkpoint_rdd(labels).id()}
     assert {r["component"] for r in labels.collect()} == {0}
     release(labels)
+
+
+@pytest.mark.parametrize("cluster_by", [{}, None], ids=["versioned", "clustered"])
+def test_merge_materialises_only_a_lazy_batch(spark, tmp_path, monkeypatch, cluster_by):
+    # IncrementalRunner merges a model's checkpoint: copying it again
+    # would double the batch's blocks. A lazy plan (streaming merge_sink)
+    # is still materialised once.
+    store = ParquetStateStore(spark, str(tmp_path / "s"), cluster_by=cluster_by)
+    keys = ["charger_id", "connector_id", "ingested_ts"]
+    store.merge("int_status_changes", _status_changes(spark, T0), keys)
+    calls = []
+    frame_class = type(_status_changes(spark, T0))  # the classic DataFrame
+    real = frame_class.localCheckpoint
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    with scope():
+        batch = _status_changes(spark, T0).localCheckpoint(eager=True)
+        monkeypatch.setattr(frame_class, "localCheckpoint", counted)
+        store.merge("int_status_changes", batch, keys)
+        assert calls == []
+        release(batch)
+        store.merge("int_status_changes", _status_changes(spark, T0), keys)
+        assert len(calls) == 1
+    assert store.read("int_status_changes").count() == 6

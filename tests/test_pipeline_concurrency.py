@@ -19,11 +19,14 @@ import sys
 import threading
 import time
 from collections import Counter
+from contextvars import copy_context
 
 import duckdb
+import pytest
 
 from kwwhat_spark.models import base
 from kwwhat_spark.models.base import MODELS, VIEW_MODELS, Pipeline
+from kwwhat_spark.operators.cachescope import scope
 from kwwhat_spark.queries.ocpp_pipeline import mart_oracle_for_seed_dir, mart_projection
 from kwwhat_spark.sources.ocpp import load_ocpp_sources
 from tests.oracle_harness import compare
@@ -39,12 +42,20 @@ UPSTREAM = {
 TIMEOUT_S = 120
 
 
+@pytest.fixture()
+def in_scope():
+    """A cache scope around the test: the models its Pipelines build are
+    freed when it ends."""
+    with scope():
+        yield
+
+
 def _pipeline(spark, seed_dir, cls=Pipeline):
     return cls(spark=spark, sources=load_ocpp_sources(spark, seed_dir),
                cache_views=("stg_ocpp_logs",))
 
 
-def test_concurrent_build_is_the_same_build(spark, one_charger_fleet, monkeypatch):
+def test_concurrent_build_is_the_same_build(spark, one_charger_fleet, monkeypatch, in_scope):
     sc = spark.sparkContext
     group = "pipeline-concurrency-test"
     built: list[str] = []
@@ -91,7 +102,6 @@ def test_concurrent_build_is_the_same_build(spark, one_charger_fleet, monkeypatc
         assert not problems, (mart, problems[:3])
         assert got.count() > 0, mart
     con.close()
-    pipe.unpersist_all()
 
 
 class Boom(Exception):
@@ -99,7 +109,9 @@ class Boom(Exception):
 
 
 def _in_thread(fn) -> dict:
-    """Run fn in a thread; its result or exception under 'out'/'err'."""
+    """Run fn in a thread; its result or exception under 'out'/'err'.
+    The thread runs in a copy of the caller's context, so what it keeps
+    lands in the caller's cache scope."""
     box: dict = {}
 
     def target():
@@ -108,12 +120,12 @@ def _in_thread(fn) -> dict:
         except BaseException as e:
             box["err"] = e
 
-    box["thread"] = threading.Thread(target=target, daemon=True)
+    box["thread"] = threading.Thread(target=copy_context().run, args=(target,), daemon=True)
     box["thread"].start()
     return box
 
 
-def test_refs_reraises_a_worker_failure(spark, one_charger_fleet, monkeypatch):
+def test_refs_reraises_a_worker_failure(spark, one_charger_fleet, monkeypatch, in_scope):
     started, release = threading.Event(), threading.Event()
     calls: Counter = Counter()
     int_ports = MODELS["int_ports"]
@@ -143,7 +155,6 @@ def test_refs_reraises_a_worker_failure(spark, one_charger_fleet, monkeypatch):
     assert "int_connectors" in pipe._cache
     monkeypatch.setitem(MODELS, "int_ports", int_ports)
     assert pipe.ref("int_ports").count() > 0
-    pipe.unpersist_all()
 
 
 def test_single_flight_under_contention(spark, monkeypatch):
@@ -225,14 +236,13 @@ class RecordingPipeline(Pipeline):
             top[1] = inside
 
 
-def test_model_bodies_read_through_refs(spark, one_charger_fleet, monkeypatch):
+def test_model_bodies_read_through_refs(spark, one_charger_fleet, monkeypatch, in_scope):
     pipe = _pipeline(spark, one_charger_fleet, RecordingPipeline)
     pipe.late = []
     pipe.refs(*MODELS)
     assert pipe.late == [], (
         "model bodies read these materialised models with a plain ref before "
         f"they were built, serialising their branches: {pipe.late}")
-    pipe.unpersist_all()
 
     # The recorder does see a plain ref of an unbuilt model.
     monkeypatch.setitem(MODELS, "serial_probe", lambda p: p.ref("int_connectors"))
@@ -240,4 +250,3 @@ def test_model_bodies_read_through_refs(spark, one_charger_fleet, monkeypatch):
     probe.late = []
     probe.ref("serial_probe")
     assert probe.late == [("serial_probe", "int_connectors")]
-    probe.unpersist_all()

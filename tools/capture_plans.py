@@ -20,6 +20,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from kwwhat_spark.operators.cachescope import scope  # noqa: E402
 from kwwhat_spark.queries import REGISTRY  # noqa: E402
 from kwwhat_spark.session import get_spark  # noqa: E402
 from tools.plan_sweep import JOINS, PYTHON, explain  # noqa: E402
@@ -42,7 +43,8 @@ def main() -> None:
     spark = get_spark(app_name="kwh-spark-plans")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
-        plan = explain(REGISTRY[name].spark(spark, args.sf_dir))
+        with scope():  # building a plan can persist, checkpoint or broadcast
+            plan = explain(REGISTRY[name].spark(spark, args.sf_dir))
         path = os.path.join(args.outdir, f"{name}_{args.suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
@@ -50,7 +52,6 @@ def main() -> None:
         joins = [j for j in JOINS if j in plan]
         pyn = [p for p in PYTHON if p in plan]
         print(f"{name:30s} Exchange={n_ex:2d} joins={joins} python={pyn} -> {path}")
-        spark.catalog.clearCache()
     spark.stop()
 
 

@@ -144,7 +144,6 @@ def run_batch(spark, seed_dir: str) -> dict:
         pipe.ref(name).write.format("noop").mode("overwrite").save()
         per_model[name] = round(time.perf_counter() - t1, 2)
     wall = round(time.perf_counter() - t0, 2)
-    pipe.unpersist_all()
     slowest = dict(sorted(per_model.items(), key=lambda kv: -kv[1])[:6])
     return {"step": "batch", "wall_s": wall, "n_models": len(per_model),
             "slowest": slowest}
@@ -347,7 +346,6 @@ def run_visits(spark, seed_dir: str) -> dict:
             .count()
         )
         batch_visits = pipe.ref("fact_visits").count()
-        pipe.unpersist_all()
         return {
             "step": "visits", "attempt_rows": n_attempts,
             "compile_attempts_s": compile_s,
@@ -378,6 +376,7 @@ def main() -> None:
         or not _stamp_matches(dst)
     ):
         build(n, dst)
+    from kwwhat_spark.operators.cachescope import scope
     from kwwhat_spark.session import get_spark
 
     spark = get_spark(app_name=f"fleet-{n}x")
@@ -387,7 +386,8 @@ def main() -> None:
         rec = {"n": n, "load_start": os.getloadavg()}
         fn = {"batch": run_batch, "stream": run_stream,
               "incremental": run_incremental, "visits": run_visits}[step]
-        rec.update(fn(spark, dst))
+        with scope():  # each step's models end with the step
+            rec.update(fn(spark, dst))
         rec["load_end"] = os.getloadavg()
         print(json.dumps(rec), flush=True)
 

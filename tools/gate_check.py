@@ -18,6 +18,7 @@ import time
 sys.path.insert(0, ".")
 
 from bench import _canary_dir, _loadavg, _rig_verdict, _scan_floor  # noqa: E402
+from kwwhat_spark.operators.cachescope import scope  # noqa: E402
 from kwwhat_spark.queries import REGISTRY  # noqa: E402
 from kwwhat_spark.session import get_spark  # noqa: E402
 from tests.oracle_harness import compare, duckdb_connection  # noqa: E402
@@ -52,18 +53,18 @@ def main() -> int:
     for name in names:
         q = REGISTRY[name]
         t0 = time.time()
-        try:
-            df = q.spark(spark, args.sf_dir)
-            if q.oracle is None:
-                n = df.count()
-                t_spark = time.time() - t0
-                timings[name] = round(t_spark, 2)
-                print(f"{name:40s} rows-only n={n:<8d} spark={t_spark:6.2f}s", flush=True)
-                spark.catalog.clearCache()
-                continue
-            problems = compare(df, con, q.oracle)
-        except Exception as e:  # noqa: BLE001
-            problems = [f"EXCEPTION: {e!r}"[:300]]
+        with scope():  # what the entry keeps ends with it
+            try:
+                df = q.spark(spark, args.sf_dir)
+                if q.oracle is None:
+                    n = df.count()
+                    t_spark = time.time() - t0
+                    timings[name] = round(t_spark, 2)
+                    print(f"{name:40s} rows-only n={n:<8d} spark={t_spark:6.2f}s", flush=True)
+                    continue
+                problems = compare(df, con, q.oracle)
+            except Exception as e:  # noqa: BLE001
+                problems = [f"EXCEPTION: {e!r}"[:300]]
         t_spark = time.time() - t0
         timings[name] = round(t_spark, 2)
         status = "ok" if not problems else "FAIL"
@@ -71,7 +72,6 @@ def main() -> int:
         for p in problems:
             failures.append(name)
             print(f"    {p[:400]}", flush=True)
-        spark.catalog.clearCache()
     total = time.time() - t_total
     print(f"TOTAL {total:.1f}s  failures={sorted(set(failures))}", flush=True)
     # Persist per-entry timings when the whole catalog ran: the budget

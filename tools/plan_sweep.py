@@ -20,6 +20,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from kwwhat_spark.operators.cachescope import scope  # noqa: E402
 from kwwhat_spark.queries import REGISTRY  # noqa: E402
 from kwwhat_spark.session import get_spark  # noqa: E402
 
@@ -48,7 +49,8 @@ def main() -> None:
     out: dict[str, dict] = {}
     for name in REGISTRY:
         try:
-            plan = explain(REGISTRY[name].spark(spark, args.sf_dir))
+            with scope():  # building a plan can persist, checkpoint or broadcast
+                plan = explain(REGISTRY[name].spark(spark, args.sf_dir))
             # Node counts from the numbered detail section ("(N) Op"),
             # so each operator counts once (the tree repeats them).
             nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
@@ -64,7 +66,6 @@ def main() -> None:
             }
         except Exception as e:  # noqa: BLE001 - audit must cover all entries
             out[name] = {"error": f"{type(e).__name__}: {e}"[:200]}
-        spark.catalog.clearCache()
     with open(args.outfile, "w") as f:
         json.dump(out, f, indent=1, sort_keys=False)
     errs = [n for n, v in out.items() if "error" in v]
