@@ -8,11 +8,25 @@
   literals (seeded), so the plan is reproducible across runs/engines.
 - IVF-style coarse quantization: cells from a deterministic sample of
   corpus vectors as centroids; probe the nearest cells only.
+
+The Arrow/BLAS operators (brute_force_topk, all_pairs_cosine, ivf_topk,
+semdedup, knn_graph, knn_graph_blocked, and queries/llm.py's
+decontaminate_embedding) share one vector kernel: _collect (bounded
+driver collect), _vectors (column -> matrix, norms, validity), _cosine
+(one similarity block), _topk (one (-sim, id) selection) and _row_blocks
+(one memory budget). _vectors applies the one input rule:
+
+- A null, empty or all-zero vector (or one with a null element) has no
+  cosine: it is in no pair and no top-k list.
+- A vector pairs only with vectors of its own length, as the expression
+  form's zip_with gives unequal lengths a null sim.
+- A row with no valid centroid of its length gets no IVF cell.
+
+tests/test_vector_contract.py holds every operator to the rule.
 """
 
 from __future__ import annotations
 
-import math
 import random
 
 from pyspark.sql import Column, DataFrame
@@ -50,6 +64,146 @@ def cosine(a: Column, b: Column) -> Column:
 # produce enormous codegen methods. Keep vector math in lambda form.
 
 
+# One similarity block holds at most this many float64s (4M = 32 MB),
+# so a task's memory stays bounded whatever the corpus or cluster size.
+# Operators read it on the driver, so their closures carry the value to
+# the Python workers and a test can shrink it to force the multi-block
+# path.
+_BLOCK_DOUBLES = 4 << 20
+
+
+def _collect(df: DataFrame, op: str, what: str, instead: str,
+             max_rows: int = 2_000_000) -> list:
+    """The rows of ``df`` for a driver-side matrix, at most ``max_rows``;
+    more raise a ValueError naming ``op`` and the scale path ``instead``.
+    limit(max_rows + 1) bounds the pulled rows exactly like a count()
+    first, in one job instead of two (measured r12 on brute_force_topk,
+    sf0.1, hot, min of 5: count+collect 0.30 s vs limited collect
+    0.13 s per call)."""
+    rows = df.limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
+        raise ValueError(
+            f"{op} collects more than {max_rows} {what}; use {instead}"
+        )
+    return rows
+
+
+def _vectors(col):
+    """A vector column — an Arrow batch's pandas Series or a list of
+    collected arrays — as (mat, norms, lens): a float64 matrix with
+    shorter rows zero-padded, each row's L2 norm, and each row's length,
+    0 for a row with no cosine under the module's input rule, so
+    ``lens > 0`` is the validity mask."""
+    import numpy as np
+
+    vals = list(col)
+    lens = np.array([0 if v is None else len(v) for v in vals], dtype=np.int64)
+    if len(vals) and lens.min() == lens.max() > 0:
+        mat = np.stack(vals).astype(np.float64)
+    else:
+        mat = np.zeros((len(vals), lens.max(initial=0)))
+        for i, v in enumerate(vals):
+            if lens[i]:
+                mat[i, : lens[i]] = v
+    norms = np.linalg.norm(mat, axis=1)
+    lens[~(norms > 0)] = 0  # all-zero, or NaN from a null element
+    return mat, norms, lens
+
+
+def _rows(v, idx):
+    """Rows ``idx`` (a slice or index array) of a _vectors triple."""
+    return tuple(x[idx] for x in v)
+
+
+def _row_blocks(n_rows: int, n_cols: int, budget: int) -> list:
+    """Row slices covering ``n_rows`` (at least one, so an empty input
+    still yields one empty block) whose similarity block against
+    ``n_cols`` columns holds at most ``budget`` (_BLOCK_DOUBLES) values."""
+    step = max(1, budget // max(1, n_cols))
+    return [slice(lo, lo + step) for lo in range(0, max(1, n_rows), step)]
+
+
+def _sims(a, b):
+    """Unrounded cosine of every (a row, b row) pair of two _vectors
+    triples, NaN where the input rule gives none: a row is invalid or
+    the lengths differ."""
+    import numpy as np
+
+    (am, an, al), (bm, bn, bl) = a, b
+    if am.shape[1] != bm.shape[1]:  # ragged: pairs across the cut are masked
+        w = min(am.shape[1], bm.shape[1])
+        am, bm = am[:, :w], bm[:, :w]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sims = (am @ bm.T) / (an[:, None] * bn[None, :])
+    lens = np.concatenate([al, bl])
+    if len(lens) and not lens.min() == lens.max() > 0:
+        sims[(al[:, None] != bl[None, :]) | (al[:, None] == 0)] = np.nan
+    return sims
+
+
+def _cosine(a, b):
+    """The cosine block: _sims rounded HALF_UP to 6 decimals, the
+    expression form's F.round(cosine(a, b), 6). Rounding before every
+    compare keeps thresholds and rankings equal to the oracle's except
+    on measure-zero boundaries (see _round6_half_up)."""
+    return _round6_half_up(_sims(a, b))
+
+
+def _unit(v):
+    """A _vectors triple scaled to unit rows with norms 1: knn_graph's
+    similarity is the unrounded dot of unit rows."""
+    import numpy as np
+
+    mat, norms, lens = v
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return mat / norms[:, None], np.ones_like(norms), lens
+
+
+def _topk(sims, ids, k: int, skip=None):
+    """Each row's k best columns of ``sims`` by (-sim, id), as flat
+    (rows, cols) index arrays in row-then-rank order. A NaN sim (no
+    cosine) is never selected, nor, given ``skip``, the column whose id
+    equals skip[row]."""
+    import numpy as np
+
+    if skip is not None:
+        sims = np.where(ids[None, :] == skip[:, None], np.nan, sims)
+    neg = -sims
+    # Sort only the candidates: each row's k best and every tie of its
+    # k-th (a row with fewer than k sims keeps them all). A partition is
+    # linear in the row; sorting whole rows was 4x slower per batch.
+    if neg.shape[1] > k:
+        kth = np.partition(neg, k - 1, axis=1)[:, k - 1 : k]
+        rows, cols = np.nonzero(neg <= np.where(np.isnan(kth), np.inf, kth))
+    else:
+        rows, cols = np.nonzero(~np.isnan(neg))
+    order = np.lexsort((ids[cols], neg[rows, cols], rows))
+    rows, cols = rows[order], cols[order]
+    first_k = np.arange(len(rows)) < np.searchsorted(rows, rows) + k
+    return rows[first_k], cols[first_k]
+
+
+def _round6_half_up(x):
+    """numpy replica of Spark/DuckDB round(x, 6): HALF_UP (away from
+    zero), quotient by the exactly-representable 1e6 — the same doubles
+    as BigDecimal's decimal-then-nearest-double path for 6 places.
+
+    Known boundary risk (distinct from BLAS accumulation order): Spark/
+    DuckDB apply HALF_UP to the exact decimal expansion of the double
+    via BigDecimal, while this formula applies it to |x|*1e6 computed in
+    double arithmetic. When that product rounds ONTO an n+0.5 boundary
+    whose true value lies just below it (or vice versa), the two paths
+    pick adjacent 1e-6 steps, and a threshold compare (e.g. >= 0.95) on
+    the boundary can flip a dup/contamination verdict by 1 ulp. In
+    practice cosine sims land on exact x.xxxxxx5 boundaries with
+    negligible probability; BASELINE.md records oracle-parity runs —
+    re-record whenever a threshold changes.
+    """
+    import numpy as np
+
+    return np.copysign(np.floor(np.abs(x) * 1e6 + 0.5) / 1e6, x)
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -65,6 +219,9 @@ def brute_force_topk(
     mapInPandas where each Arrow batch computes one (batch × Q) matmul
     and emits only its batch-local top-k per query; a final window over
     the ~(partitions · Q · k) survivors ranks globally.
+
+    Input rule: the module's (_vectors) — a query or corpus vector with
+    no cosine, or of another length, is in no top-k list.
 
     Exactness: similarities are rounded HALF_UP to 6 decimals (matching
     Spark round() and DuckDB) and ranked by the total order
@@ -84,40 +241,14 @@ def brute_force_topk(
     from pyspark.sql import Window as W
     from pyspark.sql import types as T
 
-    # Driver-OOM guard: the contract is a SMALL query side. The guard is
-    # folded into the collect itself — limit(max+1) bounds the pulled
-    # rows exactly like the old count()-then-collect (the driver never
-    # holds more than max_query_rows+1 rows either way) while running
-    # ONE job on the query subtree instead of two. Measured r12 (sf0.1,
-    # hot, min of 5): count+collect 0.30 s vs limited collect 0.13 s per
-    # invocation — pure driver/job-launch overhead removed from every
-    # brute-force/fullprobe call.
-    max_query_rows = 2_000_000
-    qrows = queries.select(query_id, vec_col).limit(max_query_rows + 1).collect()
-    if len(qrows) > max_query_rows:
-        raise ValueError(
-            f"brute_force_topk query side exceeds {max_query_rows} rows; "
-            "this operator broadcasts the query set — use knn_graph "
-            "(corpus-sharded), lsh_topk, or ivf_topk for large query sets"
-        )
-    if not qrows:
-        empty = corpus.sparkSession.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    queries.schema[query_id],
-                    corpus.schema[corpus_id],
-                    T.StructField("cosine_sim", T.DoubleType()),
-                    T.StructField("rank", T.IntegerType()),
-                ]
-            ),
-        )
-        return empty
-    q_ids = [r[query_id] for r in qrows]
-    q_mat = np.array([r[vec_col] for r in qrows], dtype=np.float64)
-    q_norms = np.linalg.norm(q_mat, axis=1)
-    q_norms[q_norms == 0.0] = 1.0
-    bc = keep(corpus.sparkSession.sparkContext.broadcast((q_ids, q_mat, q_norms)))
+    budget = _BLOCK_DOUBLES
+    qrows = _collect(
+        queries.select(query_id, vec_col), "brute_force_topk", "query rows",
+        "knn_graph (corpus-sharded), lsh_topk, or ivf_topk for large query sets",
+    )
+    bc = keep(corpus.sparkSession.sparkContext.broadcast(
+        (np.array([r[0] for r in qrows]), _vectors(r[1] for r in qrows))
+    ))
 
     part_schema = T.StructType(
         [
@@ -129,27 +260,16 @@ def brute_force_topk(
     qf, cf = part_schema[0].name, part_schema[1].name
 
     def local_topk(batches):
-        ids, mat, norms = bc.value
-        nq = len(ids)
+        q_ids, q = bc.value
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cvecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            c = _vectors(pdf[vec_col])
             cids = pdf[corpus_id].to_numpy()
-            cnorms = np.linalg.norm(cvecs, axis=1)
-            # Zero-norm corpus rows: sim defined as 0.0 (matches the
-            # query-side convention above), not NaN silently sorted last.
-            cnorms[cnorms == 0.0] = 1.0
-            sims = _round6_half_up(
-                (cvecs @ mat.T) / (cnorms[:, None] * norms[None, :])
-            )
-            out_q, out_c, out_s = [], [], []
-            for j in range(nq):
-                order = np.lexsort((cids, -sims[:, j]))[:k]
-                out_q.extend([ids[j]] * len(order))
-                out_c.extend(cids[order])
-                out_s.extend(sims[order, j])
-            yield pd.DataFrame({qf: out_q, cf: out_c, "cosine_sim": out_s})
+            for s in _row_blocks(len(q_ids), len(cids), budget):
+                sims = _cosine(c, _rows(q, s)).T
+                r, j = _topk(sims, cids, k)
+                yield pd.DataFrame(
+                    {qf: q_ids[s][r], cf: cids[j], "cosine_sim": sims[r, j]}
+                )
 
     survivors = corpus.select(corpus_id, vec_col).mapInPandas(
         local_topk, schema=part_schema
@@ -160,12 +280,6 @@ def brute_force_topk(
         .filter(F.col("rank") <= k)
         .select(qf, cf, "cosine_sim", "rank")
     )
-
-
-# One sims row-block of all_pairs_cosine holds this many float64s
-# (block_rows = this // corpus_rows) — 4M doubles = 32 MB. Module-level
-# so the parity test can shrink it to force the multi-block path.
-_ALL_PAIRS_BLOCK_DOUBLES = 4 << 20
 
 
 def all_pairs_cosine(
@@ -189,6 +303,10 @@ def all_pairs_cosine(
     (batch × n) BLAS matmul and emits only surviving pairs; no join, no
     shuffle, no pair materialization.
 
+    Input rule: the module's (_vectors) — a vector with no cosine, or of
+    another length, is in no pair, as the expression form's null sim
+    fails every threshold compare.
+
     Exactness (the brute_force_topk contract): similarities are rounded
     HALF_UP to 6 decimals (_round6_half_up — matches Spark round() and
     DuckDB) BEFORE the threshold compare, so the survivor set equals the
@@ -196,17 +314,7 @@ def all_pairs_cosine(
     numpy-vs-expression parity is pinned by
     tests/test_llm_ops.py::test_all_pairs_cosine_matches_expression at
     threshold 0 (every pair's rounded sim compared, not just
-    survivors). Zero-norm vectors: the expression form propagates
-    NaN through Spark's NaN-greatest ordering (NaN >= t is TRUE); this
-    path defines sim over zero norms as 0/0 = NaN and EXCLUDES it —
-    divergent only for zero-norm inputs, which the embeddings testdata
-    provably lacks (r13: zero zero-norm rows at every SF) and the
-    docstring contract forbids. Null vectors are excluded on both
-    sides, like the expression form, whose null sim fails every
-    threshold compare. Ragged vectors: a pair of unequal length has a
-    null similarity in the expression form (zip_with pads the shorter
-    array with nulls), so it never survives here either; only vectors
-    of equal length are compared.
+    survivors).
 
     Like brute_force_topk the corpus must fit the driver/broadcast
     (bounded collect guard); the all-pairs O(n²) output contract already
@@ -217,68 +325,38 @@ def all_pairs_cosine(
     import pandas as pd
     from pyspark.sql import types as T
 
-    block_doubles = _ALL_PAIRS_BLOCK_DOUBLES
-    max_rows = 2_000_000
-    vecs = df.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
-    rows = vecs.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
-        raise ValueError(
-            f"all_pairs_cosine corpus exceeds {max_rows} rows; this "
-            "operator broadcasts the corpus matrix — use "
-            "cosine_near_dup_pairs (LSH-blocked) or knn_graph at scale"
-        )
+    budget = _BLOCK_DOUBLES
+    vecs = df.select(id_col, vec_col)
+    rows = _collect(
+        vecs, "all_pairs_cosine", "corpus rows",
+        "cosine_near_dup_pairs (LSH-blocked) or knn_graph at scale",
+    )
     out_fields = [
         T.StructField("id_a", df.schema[id_col].dataType),
         T.StructField("id_b", df.schema[id_col].dataType),
     ]
     if keep_sim:
         out_fields.append(T.StructField(sim_col, T.DoubleType()))
-    schema = T.StructType(out_fields)
-    if not rows:
-        return df.sparkSession.createDataFrame([], schema)
-    # One (ids, matrix, norms) per vector length: only equal-length
-    # vectors pair (see the docstring).
-    by_len: dict[int, list] = {}
-    for r in rows:
-        by_len.setdefault(len(r[1]), []).append(r)
-    corpus = {}
-    for d, grp in by_len.items():
-        mat = np.array([r[1] for r in grp], dtype=np.float64)
-        corpus[d] = (np.array([r[0] for r in grp]), mat, np.linalg.norm(mat, axis=1))
-    bc = keep(df.sparkSession.sparkContext.broadcast(corpus))
+    bc = keep(df.sparkSession.sparkContext.broadcast(
+        (np.array([r[0] for r in rows]), _vectors(r[1] for r in rows))
+    ))
 
     def pairs(batches):
+        ids_b, b = bc.value
         for pdf in batches:
-            lens = pdf[vec_col].map(len)
-            for d in lens.unique():
-                if d in bc.value:
-                    yield from pairs_of_length(pdf[lens == d], *bc.value[d])
-
-    def pairs_of_length(pdf, ids_b, m, n):
-        ncorp = len(ids_b)
-        # Row-block each Arrow batch so one sims block stays ~32 MB
-        # (block × ncorp float64) no matter the corpus size — the
-        # semdedup batch_rows lesson; without it per-batch memory is
-        # O(batch × ncorp) and a corpus near the guard bound would OOM
-        # the worker. At test scales block ≥ the whole batch (no-op).
-        block = max(1, block_doubles // max(1, ncorp))
-        avecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        aids = pdf[id_col].to_numpy()
-        an = np.linalg.norm(avecs, axis=1)
-        for lo in range(0, len(aids), block):
-            hi = min(lo + block, len(aids))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = _round6_half_up(
-                    (avecs[lo:hi] @ m.T) / (an[lo:hi, None] * n[None, :])
+            a = _vectors(pdf[vec_col])
+            aids = pdf[id_col].to_numpy()
+            for s in _row_blocks(len(aids), len(ids_b), budget):
+                sims = _cosine(_rows(a, s), b)
+                ai, bi = np.nonzero(
+                    (sims >= threshold) & (aids[s, None] < ids_b[None, :])
                 )
-            keep = (sims >= threshold) & (aids[lo:hi, None] < ids_b[None, :])
-            ai, bi = np.nonzero(keep)
-            cols = {"id_a": aids[lo:hi][ai], "id_b": ids_b[bi]}
-            if keep_sim:
-                cols[sim_col] = sims[ai, bi]
-            yield pd.DataFrame(cols)
+                cols = {"id_a": aids[s][ai], "id_b": ids_b[bi]}
+                if keep_sim:
+                    cols[sim_col] = sims[ai, bi]
+                yield pd.DataFrame(cols)
 
-    return vecs.mapInPandas(pairs, schema=schema)
+    return vecs.mapInPandas(pairs, schema=T.StructType(out_fields))
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -382,8 +460,6 @@ def ivf_topk(
     n_probe: int = 2,
     centroid_vecs: list[list[float]] | None = None,
     replayable_hash: bool = False,
-    block_salt: int | None = None,
-    float32_shuffle: bool = False,
     broadcast_queries: bool = False,
 ) -> DataFrame:
     """IVF-style approximate top-k: coarse-quantize the corpus into
@@ -393,6 +469,9 @@ def ivf_topk(
     centroid sample by md5_52(id) (with id tiebreak) so an external
     engine can reproduce the exact cell structure (see
     similarity_ivf_multiprobe_replayable).
+
+    Input rule: the module's (_vectors) — a corpus or query row with no
+    valid centroid of its length gets no cell, so it is in no top-k list.
 
     Scale shape (rewritten r9 after the sf100 sweep measured the
     expression-lambda path at 31× DuckDB on 40M pairs): all three dense
@@ -419,7 +498,7 @@ def ivf_topk(
     correctness oracle). Queries ride a shuffle keyed by cell — query
     count never lands on the driver.
 
-    block_salt sub-partitions each cell for the re-rank cogroup: the
+    The re-rank cogroup sub-partitions each cell into S salt blocks: the
     corpus side is salted by hash(corpus_id) % S and each probe row is
     replicated S× so every (cell, salt) block still sees all its
     probing queries. Without it, re-rank parallelism is capped at
@@ -428,16 +507,13 @@ def ivf_topk(
     cell becomes one straggler task — IVF cells are never balanced, so
     this is the applyInPandas analogue of AQE skew-split. Exactness is
     unchanged: any global top-k member of a cell is top-k within its
-    own block, and the final window re-ranks the union. Default: scale
-    S so n_cells·S covers the cluster's default parallelism; pass 1 to
-    disable.
+    own block, and the final window re-ranks the union. S is scaled so
+    n_cells·S covers the cluster's default parallelism.
 
-    float32_shuffle ships __vec/__qvec through the re-rank shuffle as
-    float32 (half the dominant shuffle bytes). ONLY exact when the
-    caller's doubles are float32-representable — true for all the
-    embeddings-table entries (the parquet column IS float32; the load
-    casts to double losslessly, and downcast→upcast is the identity on
-    float32-exact values). Norms and all arithmetic stay float64.
+    Vectors ride the re-rank shuffle in the input column's own element
+    type: an array<float> column (the embeddings parquet) ships float32,
+    half the dominant shuffle bytes, and all math runs float64 after the
+    exact numpy upcast.
 
     broadcast_queries (opt-in) is the broadcast-join analogue for ANN:
     when the probing batch is small (ad-hoc search, a gate's 20-query
@@ -452,7 +528,7 @@ def ivf_topk(
     corpus shuffle — the plan a 1000-executor cluster wants for a
     small query batch against a decade-scale corpus. Exactness:
     identical rounded math; any global top-k member is top-k within
-    its scan batch (the block_salt argument, with Arrow batches as the
+    its scan batch (the salt-block argument, with Arrow batches as the
     blocks).
     """
     import numpy as np
@@ -460,15 +536,6 @@ def ivf_topk(
     from pyspark.sql import Window as W
     from pyspark.sql import types as T
 
-    if float32_shuffle:
-        # Downcast BEFORE widen: the repair repartition and the Arrow
-        # feed into assignment then move half the bytes. Exact under
-        # the flag's contract (values are float32-representable); all
-        # math still runs float64 after the numpy upcast. Norms are
-        # computed on an explicit double cast so the fold matches the
-        # oracle's double arithmetic.
-        corpus = corpus.withColumn(vec_col, F.col(vec_col).cast("array<float>"))
-        queries = queries.withColumn(vec_col, F.col(vec_col).cast("array<float>"))
     if broadcast_queries and n_probe >= n_cells:
         # n_probe ≥ n_cells makes the probe structure a CONSTANT: every
         # query probes every cell whatever the centroids are, so the
@@ -491,19 +558,8 @@ def ivf_topk(
     # cogroup machinery (identical values, so identical centroids).
     corpus_prewiden = corpus
     corpus = widen(corpus)
-    c = corpus.select(
-        F.col(corpus_id),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col).cast("array<double>")).alias("c_norm"),
-    )
-    if centroid_vecs is not None:
-        # Caller-provided (e.g. train_centroids' k-means) — norms in Python.
-        import math
-
-        centroids = [
-            (vec, math.sqrt(sum(x * x for x in vec)) or 1.0) for vec in centroid_vecs
-        ]
-    else:
+    c = corpus.select(F.col(corpus_id), F.col(vec_col).alias("c_vec"))
+    if centroid_vecs is None:
         # Deterministic centroid sample: first n_cells corpus vectors in
         # hash(id) order (at 100 TB: sample() + takeOrdered instead).
         if replayable_hash:
@@ -512,92 +568,68 @@ def ivf_topk(
             order = [md5_52(F.col(corpus_id).cast("string")), F.col(corpus_id)]
         else:
             order = [F.xxhash64(F.col(corpus_id).cast("string"))]
-        centroids = [
-            (row["c_vec"], float(row["c_norm"]))
-            for row in c.orderBy(*order).limit(n_cells).collect()
+        centroid_vecs = [
+            row["c_vec"] for row in c.orderBy(*order).limit(n_cells).collect()
         ]
 
-    n_cells_eff = len(centroids)
-    cent_mat = np.array([list(vec) for vec, _ in centroids], dtype=np.float64)
-    cent_norms = np.array([n for _, n in centroids], dtype=np.float64)
+    n_cells_eff = len(centroid_vecs)
+    budget = _BLOCK_DOUBLES
+    # _topk's id key: (sim desc, cell desc), the struct-greatest rule the
+    # oracle replays.
+    cell_key = -np.arange(n_cells_eff)
     sc = queries.sparkSession.sparkContext
-    bc = keep(sc.broadcast((cent_mat, cent_norms)))
-    if block_salt is None:
-        dp = sc.defaultParallelism
-        n_salt = max(1, min(16, -(-dp // max(n_cells_eff, 1))))
-    else:
-        n_salt = max(1, block_salt)
-    vec_np = np.float32 if float32_shuffle else np.float64
-    vec_spark = T.FloatType() if float32_shuffle else T.DoubleType()
+    bc = keep(sc.broadcast(_vectors(centroid_vecs)))
+    n_salt = max(1, min(16, -(-sc.defaultParallelism // max(n_cells_eff, 1))))
 
-    def _cell_sims(vecs: "np.ndarray") -> "np.ndarray":
-        m, nn = bc.value
-        norms = np.linalg.norm(vecs, axis=1)
-        norms[norms == 0.0] = 1.0
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return _round6_half_up((vecs @ m.T) / (norms[:, None] * nn[None, :]))
+    def cell_of(v):
+        """Each row's nearest cell, -1 for a row with no valid centroid."""
+        r, cl = _topk(_cosine(v, bc.value), cell_key, 1)
+        cell = np.full(len(v[2]), -1, dtype=np.int32)
+        cell[r] = cl
+        return cell
 
     qid_field = queries.schema[query_id]
     cid_field = corpus.schema[corpus_id]
+    qf, cf = qid_field.name, cid_field.name
     assign_schema = T.StructType(
         [
             cid_field,
-            T.StructField("__vec", T.ArrayType(vec_spark)),
-            T.StructField("__norm", T.DoubleType()),
+            T.StructField("__vec", corpus.schema[vec_col].dataType),
             T.StructField("cell", T.IntegerType()),
         ]
     )
 
     def assign(batches):
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vecs = np.stack(pdf["c_vec"].to_numpy()).astype(np.float64)
-            sims = _cell_sims(vecs)
-            # (sim desc, cell desc): argmax keeps the FIRST max, so a
-            # column-reversed argmax breaks ties toward the larger cell
-            # — the struct-greatest semantics the oracle replays.
-            cell = n_cells_eff - 1 - np.argmax(sims[:, ::-1], axis=1)
+            cell = cell_of(_vectors(pdf["c_vec"]))
+            has = cell >= 0
             yield pd.DataFrame(
                 {
-                    corpus_id: pdf[corpus_id],
-                    "__vec": list(vecs.astype(vec_np)),
-                    "__norm": np.linalg.norm(vecs, axis=1),
-                    "cell": cell.astype(np.int32),
+                    corpus_id: pdf[corpus_id].to_numpy()[has],
+                    "__vec": pdf["c_vec"].to_numpy()[has],
+                    "cell": cell[has],
                 }
             )
 
-    assigned = c.select(corpus_id, "c_vec").mapInPandas(assign, schema=assign_schema)
+    assigned = c.mapInPandas(assign, schema=assign_schema)
 
     probe_schema = T.StructType(
         [
             qid_field,
-            T.StructField("__qvec", T.ArrayType(vec_spark)),
-            T.StructField("__qnorm", T.DoubleType()),
+            T.StructField("__qvec", queries.schema[vec_col].dataType),
             T.StructField("cell", T.IntegerType()),
         ]
     )
 
     def probe(batches):
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vecs = np.stack(pdf["q_vec"].to_numpy()).astype(np.float64)
-            sims = _cell_sims(vecs)
-            norms = np.linalg.norm(vecs, axis=1)
-            ids, qv, qn, cells = [], [], [], []
-            for r in range(len(pdf)):
-                order = sorted(
-                    range(n_cells_eff), key=lambda i: (-sims[r, i], -i)
-                )[:n_probe]
-                for cl in order:
-                    ids.append(pdf[query_id].iloc[r])
-                    qv.append(vecs[r].astype(vec_np))
-                    qn.append(norms[r])
-                    cells.append(cl)
+            r, cl = _topk(_cosine(_vectors(pdf["q_vec"]), bc.value), cell_key, n_probe)
             yield pd.DataFrame(
-                {query_id: ids, "__qvec": qv, "__qnorm": qn,
-                 "cell": np.array(cells, dtype=np.int32)}
+                {
+                    query_id: pdf[query_id].to_numpy()[r],
+                    "__qvec": pdf["q_vec"].to_numpy()[r],
+                    "cell": cl.astype(np.int32),
+                }
             )
 
     q = queries.select(query_id, F.col(vec_col).alias("q_vec"))
@@ -607,98 +639,48 @@ def ivf_topk(
         [qid_field, cid_field, T.StructField("cosine_sim", T.DoubleType())]
     )
 
-    def rerank(key, cdf, qdf):
-        if len(cdf) == 0 or len(qdf) == 0:
-            return pd.DataFrame({f.name: [] for f in out_schema.fields})
-        cmat = np.stack(cdf["__vec"].to_numpy()).astype(np.float64)
-        cn = cdf["__norm"].to_numpy().copy()
-        cn[cn == 0.0] = 1.0
-        qmat = np.stack(qdf["__qvec"].to_numpy()).astype(np.float64)
-        qn = qdf["__qnorm"].to_numpy().copy()
-        qn[qn == 0.0] = 1.0
-        sims = _round6_half_up((qmat @ cmat.T) / (qn[:, None] * cn[None, :]))
-        cids = cdf[corpus_id].to_numpy()
-        out_q, out_c, out_s = [], [], []
-        kk = min(k, sims.shape[1])
-        for r in range(sims.shape[0]):
-            row = sims[r]
-            # top-k by (sim desc, corpus_id asc): lexsort primary=-sim,
-            # secondary=corpus_id; bounded candidates per probing query
-            idx = np.lexsort((cids, -row))[:kk]
-            out_q.extend([qdf[query_id].iloc[r]] * len(idx))
-            out_c.extend(cids[idx])
-            out_s.extend(row[idx])
-        return pd.DataFrame(
-            {out_schema.fields[0].name: out_q,
-             out_schema.fields[1].name: out_c,
-             "cosine_sim": out_s}
-        )
+    def topk_frames(q_ids, qv, cids, cv, allowed=None):
+        """Per query block: its top-k of the corpus rows by (sim desc,
+        corpus_id asc), restricted to ``allowed`` (queries × rows)."""
+        for s in _row_blocks(len(q_ids), len(cids), budget):
+            sims = _cosine(_rows(qv, s), cv)
+            if allowed is not None:
+                sims[~allowed[s]] = np.nan
+            r, j = _topk(sims, cids, k)
+            yield pd.DataFrame({qf: q_ids[s][r], cf: cids[j], "cosine_sim": sims[r, j]})
 
     if broadcast_queries:
-        probe_rows = probes.collect()
-        if len(probe_rows) > 100_000:
-            raise ValueError(
-                f"broadcast_queries collected {len(probe_rows)} probe rows; "
-                "the path is for small query batches — use the cogroup "
-                "shuffle path (broadcast_queries=False) for bulk probing"
-            )
         by_q: dict = {}
-        for r in probe_rows:
-            e = by_q.setdefault(
-                r[query_id],
-                [np.asarray(r["__qvec"], dtype=np.float64), r["__qnorm"], set()],
-            )
-            e[2].add(r["cell"])
-        q_ids = list(by_q)
-        qmat = np.stack([by_q[i][0] for i in q_ids]) if q_ids else np.zeros((0, 1))
-        qnorms = np.array([by_q[i][1] for i in q_ids], dtype=np.float64)
-        qnorms[qnorms == 0.0] = 1.0
-        probe_mask = np.zeros((len(q_ids), n_cells_eff), dtype=bool)
-        for r_i, qid_val in enumerate(q_ids):
-            for cl in by_q[qid_val][2]:
-                probe_mask[r_i, cl] = True
-        # All-true mask ⇒ cell assignment cannot change the output: every
-        # corpus row is allowed for every query regardless of its cell.
-        # Decide once on the driver and skip the per-batch centroid
-        # matmul + argmax entirely (dead-work elimination for the
-        # full-probe regime; assignment math stays value-hash-gated via
-        # the cogroup path's multiprobe entry and the partial-probe
-        # parity test).
-        all_cells_probed = bool(probe_mask.all()) if len(q_ids) else False
-        bq = keep(sc.broadcast((q_ids, qmat, qnorms, probe_mask, all_cells_probed)))
+        for row in _collect(
+            probes, "ivf_topk(broadcast_queries=True)", "probe rows",
+            "the cogroup shuffle path (broadcast_queries=False) for bulk probing",
+            max_rows=100_000,
+        ):
+            by_q.setdefault(row[query_id], (row["__qvec"], set()))[1].add(row["cell"])
+        # One column per cell plus a last, never-probed one that cell_of's
+        # -1 ("no cell") indexes.
+        probe_mask = np.zeros((len(by_q), n_cells_eff + 1), dtype=bool)
+        for i, (_, cells) in enumerate(by_q.values()):
+            probe_mask[i, list(cells)] = True
+        # All cells probed ⇒ cell assignment cannot change the output:
+        # every corpus row is allowed for every query regardless of its
+        # cell. Decide once on the driver and skip the per-batch centroid
+        # matmul entirely (dead-work elimination for the full-probe
+        # regime; assignment math stays value-hash-gated via the cogroup
+        # path's multiprobe entry and the partial-probe parity test).
+        all_cells_probed = bool(by_q) and bool(probe_mask[:, :-1].all())
+        bq = keep(sc.broadcast((
+            np.array(list(by_q)), _vectors(v for v, _ in by_q.values()),
+            probe_mask, all_cells_probed,
+        )))
 
         def scan_rerank(batches):
-            b_qids, b_qmat, b_qnorms, b_mask, b_full = bq.value
+            q_ids, qv, mask, full = bq.value
             for pdf in batches:
-                if len(pdf) == 0 or not b_qids:
-                    continue
-                vecs = np.stack(pdf["c_vec"].to_numpy()).astype(np.float64)
-                cn = np.linalg.norm(vecs, axis=1)
-                cn[cn == 0.0] = 1.0
-                sims = _round6_half_up(
-                    (b_qmat @ vecs.T) / (b_qnorms[:, None] * cn[None, :])
-                )
-                if b_full:
-                    allowed = np.ones((len(b_qids), len(vecs)), dtype=bool)
-                else:
-                    csims = _cell_sims(vecs)
-                    cell = n_cells_eff - 1 - np.argmax(csims[:, ::-1], axis=1)
-                    allowed = b_mask[:, cell]
-                cids = pdf[corpus_id].to_numpy()
-                out_q, out_c, out_s = [], [], []
-                for r in range(len(b_qids)):
-                    ok = np.nonzero(allowed[r])[0]
-                    if ok.size == 0:
-                        continue
-                    row = sims[r]
-                    sel = ok[np.lexsort((cids[ok], -row[ok]))[: min(k, ok.size)]]
-                    out_q.extend([b_qids[r]] * len(sel))
-                    out_c.extend(cids[sel])
-                    out_s.extend(row[sel])
-                yield pd.DataFrame(
-                    {out_schema.fields[0].name: out_q,
-                     out_schema.fields[1].name: out_c,
-                     "cosine_sim": out_s}
+                cv = _vectors(pdf["c_vec"])
+                allowed = None if full else mask[:, cell_of(cv)]
+                yield from topk_frames(
+                    q_ids, qv, pdf[corpus_id].to_numpy(), cv, allowed
                 )
 
         candidates = corpus_prewiden.select(
@@ -718,10 +700,17 @@ def ivf_topk(
             group_keys = ["cell", "__salt"]
         else:
             group_keys = ["cell"]
+
+        def rerank(cdf, qdf):
+            return pd.concat(topk_frames(
+                qdf[query_id].to_numpy(), _vectors(qdf["__qvec"]),
+                cdf[corpus_id].to_numpy(), _vectors(cdf["__vec"]),
+            ))
+
         candidates = (
             assigned.groupBy(*group_keys)
             .cogroup(probes.groupBy(*group_keys))
-            .applyInPandas(lambda key, c_, q_: rerank(key, c_, q_), schema=out_schema)
+            .applyInPandas(rerank, schema=out_schema)
         )
     w = W.partitionBy(query_id).orderBy(F.col("cosine_sim").desc(), F.col(corpus_id).asc())
     return (
@@ -797,27 +786,6 @@ def l2_normalize(vec: Column) -> Column:
     return F.when(n == 0.0, v).otherwise(F.transform(v, lambda x: x / n))
 
 
-def _round6_half_up(x):
-    """numpy replica of Spark/DuckDB round(x, 6): HALF_UP (away from
-    zero), quotient by the exactly-representable 1e6 — the same doubles
-    as BigDecimal's decimal-then-nearest-double path for 6 places.
-
-    Known boundary risk (distinct from BLAS accumulation order): Spark/
-    DuckDB apply HALF_UP to the exact decimal expansion of the double
-    via BigDecimal, while this formula applies it to |x|*1e6 computed in
-    double arithmetic. When that product rounds ONTO an n+0.5 boundary
-    whose true value lies just below it (or vice versa), the two paths
-    pick adjacent 1e-6 steps, and a threshold compare (e.g. >= 0.95) on
-    the boundary can flip a dup/contamination verdict by 1 ulp. In
-    practice cosine sims land on exact x.xxxxxx5 boundaries with
-    negligible probability; BASELINE.md records oracle-parity runs —
-    re-record whenever a threshold changes.
-    """
-    import numpy as np
-
-    return np.copysign(np.floor(np.abs(x) * 1e6 + 0.5) / 1e6, x)
-
-
 def semdedup(
     df: DataFrame,
     centroid_vecs: list[tuple[int, list[float]]],
@@ -825,7 +793,6 @@ def semdedup(
     vec_col: str = "embedding",
     *,
     threshold: float = 0.95,
-    batch_rows: int = 4096,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster embeddings, then remove
     near-duplicates only WITHIN each cluster — the clustering bounds the
@@ -836,15 +803,18 @@ def semdedup(
     dead-end note above and BASELINE.md):
 
     1. Assignment — mapInPandas against the broadcast centroid matrix:
-       one (rows × K) matmul per Arrow batch, argmax of round(cos, 6)
+       one (rows × K) matmul per Arrow batch, the best round(cos, 6)
        with ties to the smaller centroid id. Narrow; no shuffle.
     2. Pair search — applyInPandas per cluster after ONE hash shuffle on
        cluster_id: the within-cluster (n × n) cosine matrix in row
-       blocks of `batch_rows`; a row is a duplicate iff some
+       blocks (_row_blocks); a row is a duplicate iff some
        smaller-id row in its cluster reaches round(cos, 6) ≥ threshold.
        Emits (id, cluster_id, is_kept) directly — no join-back.
 
     Output: every input row with its cluster_id and an is_kept flag.
+
+    Input rule: the module's (_vectors) — a row with no valid centroid
+    of its length gets cluster_id null and is_kept true.
 
     Oracle fidelity: similarities are rounded HALF_UP to 6 decimals
     (matching Spark's round() and DuckDB's) before every comparison, so
@@ -856,26 +826,26 @@ def semdedup(
     Scale: centroids come from train_centroids() (MLlib k-means on a
     hash_sample) with K grown with N so clusters stay ~500 vectors; the
     only shuffle moves each vector once, keyed by cluster id. A skewed
-    giant cluster is bounded by `batch_rows` blocking (memory stays
-    O(batch_rows · cluster), not O(cluster²)).
+    giant cluster is bounded by the row-block budget (memory stays
+    O(block · cluster), not O(cluster²)).
     """
     import numpy as np
+    import pandas as pd
     from pyspark.sql import types as T
 
     if not centroid_vecs:
         raise ValueError("semdedup requires at least one centroid")
-    order = sorted(range(len(centroid_vecs)), key=lambda i: centroid_vecs[i][0])
-    cent_ids = np.array([int(centroid_vecs[i][0]) for i in order], dtype=np.int64)
-    cent_mat = np.array([centroid_vecs[i][1] for i in order], dtype=np.float64)
-    cent_norms = np.linalg.norm(cent_mat, axis=1)
-    cent_norms[cent_norms == 0.0] = 1.0
-    bc = keep(df.sparkSession.sparkContext.broadcast((cent_ids, cent_mat, cent_norms)))
+    budget = _BLOCK_DOUBLES
+    bc = keep(df.sparkSession.sparkContext.broadcast((
+        np.array([int(cid) for cid, _ in centroid_vecs], dtype=np.int64),
+        _vectors(vec for _, vec in centroid_vecs),
+    )))
 
     id_field = df.schema[id_col]
     assign_schema = T.StructType(
         [
             id_field,
-            T.StructField("__vec", T.ArrayType(T.DoubleType())),
+            T.StructField("__vec", df.schema[vec_col].dataType),
             T.StructField("cluster_id", T.IntegerType()),
         ]
     )
@@ -888,52 +858,32 @@ def semdedup(
     )
 
     def assign(batches):
-        import pandas as pd
-
-        c_ids, c_mat, c_norms = bc.value
+        c_ids, cents = bc.value
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(vecs, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = _round6_half_up(
-                    (vecs @ c_mat.T) / (norms[:, None] * c_norms[None, :])
-                )
-            # centroids sorted by cid → argmax's first-max = smallest cid
-            best = np.argmax(sims, axis=1)
+            r, j = _topk(_cosine(_vectors(pdf[vec_col]), cents), c_ids, 1)
+            cluster = np.zeros(len(pdf), dtype=np.int32)
+            cluster[r] = c_ids[j]
+            no_cell = np.ones(len(pdf), dtype=bool)
+            no_cell[r] = False
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
-                    "__vec": list(vecs),
-                    "cluster_id": c_ids[best].astype(np.int32),
+                    "__vec": pdf[vec_col],
+                    "cluster_id": pd.arrays.IntegerArray(cluster, no_cell),
                 }
             )
 
     def dedup_cluster(pdf):
-        import pandas as pd
-
-        ids_raw = pdf[id_col].to_numpy()
-        by_id = np.argsort(ids_raw, kind="stable")
-        ids = ids_raw[by_id]
-        vecs = np.stack(pdf["__vec"].to_numpy()[by_id]).astype(np.float64)
-        norms = np.linalg.norm(vecs, axis=1)
-        n = len(ids)
-        is_dup = np.zeros(n, dtype=bool)
-        for lo in range(0, n, batch_rows):
-            hi = min(lo + batch_rows, n)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = _round6_half_up(
-                    (vecs[lo:hi] @ vecs.T) / (norms[lo:hi, None] * norms[None, :])
-                )
-            smaller = ids[lo:hi, None] < ids[None, :]
-            is_dup |= ((sims >= threshold) & smaller).any(axis=0)
+        pdf = pdf.iloc[np.argsort(pdf[id_col].to_numpy(), kind="stable")]
+        ids = pdf[id_col].to_numpy()
+        is_dup = np.zeros(len(ids), dtype=bool)
+        if pdf["cluster_id"].notna().all():  # not the group of rows with no cell
+            v = _vectors(pdf["__vec"])
+            for s in _row_blocks(len(ids), len(ids), budget):
+                sims = _cosine(_rows(v, s), v)
+                is_dup |= ((sims >= threshold) & (ids[s, None] < ids[None, :])).any(axis=0)
         return pd.DataFrame(
-            {
-                id_col: ids,
-                "cluster_id": pdf["cluster_id"].to_numpy()[by_id],
-                "is_kept": ~is_dup,
-            }
+            {id_col: ids, "cluster_id": pdf["cluster_id"].to_numpy(), "is_kept": ~is_dup}
         )
 
     assigned = df.select(id_col, vec_col).mapInPandas(assign, schema=assign_schema)
@@ -943,40 +893,26 @@ def semdedup(
 _KNN_SCHEMA = "src_id long, dst_id long, cosine_sim double, rank int"
 
 
-def _unit_rows(mat):
-    """Rows of ``mat`` scaled to unit L2 norm; all-zero rows stay zero."""
-    import numpy as np
-
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0.0] = 1.0
-    return mat / norms[:, None]
-
-
-def _topk_edges(q_ids, q_mat, c_ids, c_unit, k: int):
+def _topk_edges(q_ids, q, c_ids, c_unit, k: int, budget: int):
     """The top-k kernel of knn_graph and knn_graph_blocked: for each
-    query row, the k corpus rows of highest cosine similarity, ordered
-    by (-sim, dst_id) with the self-edge skipped, as a (src_id, dst_id,
-    cosine_sim, rank) frame. ``c_unit`` is the corpus through
-    _unit_rows."""
+    query row of the _vectors triple ``q``, the k corpus rows of highest
+    cosine similarity, ordered by (-sim, dst_id) with the self-edge
+    skipped, as a (src_id, dst_id, cosine_sim, rank) frame. ``c_unit``
+    is the corpus through _unit."""
     import numpy as np
     import pandas as pd
 
-    sims = _unit_rows(q_mat) @ c_unit.T
-    out = {"src_id": [], "dst_id": [], "cosine_sim": [], "rank": []}
-    for i, qid in enumerate(q_ids):
-        row = sims[i]
-        taken = 0
-        for j in np.lexsort((c_ids, -row)):
-            if c_ids[j] == qid:
-                continue
-            taken += 1
-            out["src_id"].append(qid)
-            out["dst_id"].append(c_ids[j])
-            out["cosine_sim"].append(row[j])
-            out["rank"].append(taken)
-            if taken == k:
-                break
-    return pd.DataFrame(out)
+    frames = []
+    for s in _row_blocks(len(q_ids), len(c_ids), budget):
+        sims = _sims(_unit(_rows(q, s)), c_unit)
+        r, j = _topk(sims, c_ids, k, skip=q_ids[s])
+        frames.append(pd.DataFrame({
+            "src_id": q_ids[s][r],
+            "dst_id": c_ids[j],
+            "cosine_sim": sims[r, j],
+            "rank": (np.arange(len(r)) - np.searchsorted(r, r) + 1).astype(np.int32),
+        }))
+    return pd.concat(frames)
 
 
 def knn_graph(
@@ -985,7 +921,6 @@ def knn_graph(
     vec_col: str = "embedding",
     *,
     k: int = 5,
-    batch_rows: int = 4096,
 ) -> DataFrame:
     """k-nearest-neighbor graph over an embedding column via the Arrow /
     numpy path: the L2-normalized corpus matrix is broadcast once, and
@@ -1004,25 +939,34 @@ def knn_graph(
     an agreement test (rounded similarities match the expression top-k)
     instead of a value-hash oracle.
 
+    Input rule: the module's (_vectors) — a vector with no cosine, or of
+    another length, has no edge.
+
     Scale: the broadcast corpus bounds this operator at ~executor-memory
-    vectors (64-dim float64 ≈ 2 GB per 4M vectors); past that, switch to
-    knn_graph_blocked (block matmul) or the IVF/LSH entries.
+    vectors (64-dim float64 ≈ 2 GB per 4M vectors; the collect is
+    guarded at 2M rows); past that, switch to knn_graph_blocked (block
+    matmul) or the IVF/LSH entries.
     The matmul is embarrassingly parallel across input partitions.
     """
     import numpy as np
 
-    rows = df.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    bc = keep(df.sparkSession.sparkContext.broadcast((ids, _unit_rows(mat))))
+    budget = _BLOCK_DOUBLES
+    rows = _collect(
+        df.select(id_col, vec_col), "knn_graph", "corpus rows",
+        "knn_graph_blocked (executor-side block matmul)",
+    )
+    bc = keep(df.sparkSession.sparkContext.broadcast((
+        np.array([r[0] for r in rows], dtype=np.int64),
+        _unit(_vectors(r[1] for r in rows)),
+    )))
 
     def neighbors(batches):
         c_ids, c_unit = bc.value
         for pdf in batches:
-            for lo in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[lo : lo + batch_rows]
-                q = np.stack(chunk[vec_col].to_numpy()).astype(np.float64)
-                yield _topk_edges(chunk[id_col].to_numpy(), q, c_ids, c_unit, k)
+            yield _topk_edges(
+                pdf[id_col].to_numpy(), _vectors(pdf[vec_col]), c_ids, c_unit, k,
+                budget,
+            )
 
     return df.select(id_col, vec_col).mapInPandas(neighbors, _KNN_SCHEMA)
 
@@ -1053,14 +997,16 @@ def knn_graph_blocked(
     counts so a block pair fits executor memory — the standard
     distributed block-matrix-multiply layout.
 
-    Output schema and ordering semantics are identical to knn_graph
-    (src_id, dst_id, cosine_sim, rank; self-edges excluded, ties by
-    dst_id ascending); an agreement test pins the two paths together.
+    Output schema, ordering semantics and input rule are identical to
+    knn_graph (src_id, dst_id, cosine_sim, rank; self-edges excluded,
+    ties by dst_id ascending); an agreement test pins the two paths
+    together.
     """
     from pyspark.sql import Window as W
 
     if n_query_blocks is None:
         n_query_blocks = n_shards
+    budget = _BLOCK_DOUBLES
     src = df.select(id_col, vec_col)
     shard_axis = F.array(*[F.lit(s) for s in range(n_shards)])
     qblock_axis = F.array(*[F.lit(b) for b in range(n_query_blocks)])
@@ -1079,17 +1025,12 @@ def knn_graph_blocked(
 
     def block(left, right):
         import numpy as np
-        import pandas as pd
 
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame(
-                {"src_id": [], "dst_id": [], "cosine_sim": [], "rank": []}
-            )
-        c_ids = right["c_id"].to_numpy(dtype=np.int64)
-        c_mat = np.stack(right["c_vec"].to_numpy()).astype(np.float64)
-        q = np.stack(left["q_vec"].to_numpy()).astype(np.float64)
-        return _topk_edges(left["q_id"].to_numpy(dtype=np.int64), q,
-                           c_ids, _unit_rows(c_mat), k)
+        return _topk_edges(
+            left["q_id"].to_numpy(dtype=np.int64), _vectors(left["q_vec"]),
+            right["c_id"].to_numpy(dtype=np.int64), _unit(_vectors(right["c_vec"])), k,
+            budget,
+        )
 
     partials = (
         queries.groupBy("_qb", "_sh")

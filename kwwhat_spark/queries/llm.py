@@ -595,21 +595,18 @@ def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cite="LLM-ops: IVF coarse-quantized cosine top-k (multi-probe)",
 )
 def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    # The embeddings parquet column is float32: ivf_topk upcasts exactly
+    # in numpy and ships the float32 image through the re-rank shuffle.
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     queries = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     corpus = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
     from kwwhat_spark.operators.similarity import ivf_topk
 
-    # float32_shuffle is exact here: the embeddings parquet column is
-    # float32, so the load's cast to double is lossless and the re-rank
-    # shuffle can ship the float32 image of every vector bit-exactly.
     return ivf_topk(
         queries, corpus, "query_id", "corpus_id", "embedding",
-        k=5, n_cells=16, n_probe=3, float32_shuffle=True,
+        k=5, n_cells=16, n_probe=3,
     )
 
 
@@ -678,9 +675,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "centroid ordering hash)",
 )
 def similarity_ivf_multiprobe_replayable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     queries = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -690,7 +685,6 @@ def similarity_ivf_multiprobe_replayable(spark: SparkSession, sf_dir: str) -> Da
     return ivf_topk(
         queries, corpus, "query_id", "corpus_id", "embedding",
         k=5, n_cells=16, n_probe=3, replayable_hash=True,
-        float32_shuffle=True,  # exact: embeddings parquet is float32
     )
 
 
@@ -715,9 +709,7 @@ def similarity_ivf_multiprobe_replayable(spark: SparkSession, sf_dir: str) -> Da
     "value-hash gate against the brute-force oracle",
 )
 def similarity_ivf_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     queries = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -727,7 +719,6 @@ def similarity_ivf_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(
         queries, corpus, "query_id", "corpus_id", "embedding",
         k=5, n_cells=8, n_probe=8,
-        float32_shuffle=True,  # exact: embeddings parquet is float32
         # 20 queries probing the whole corpus: broadcast the queries and
         # scan — the cell shuffle moved the entire 2 GB corpus at sf100
         # (7.2 s hot) for work one narrow pass does in 3.5 s (DuckDB
@@ -1969,21 +1960,28 @@ def decontaminate_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     (batch × E) matmul, masks its own eval row if present, and emits its
     per-row max — narrow, no join. The expression-tree broadcast-join
     form of this query measured 130 s at sf1 vs ~1 s here (the
-    lambda-interpreted vector math dead end documented in BASELINE.md)."""
+    lambda-interpreted vector math dead end documented in BASELINE.md).
+    Input rule: operators/similarity.py's (_vectors) — a row with no
+    cosine to any other eval row is absent, as in the oracle's join."""
     import numpy as np
     from pyspark.sql import types as T
 
-    from kwwhat_spark.operators.similarity import _round6_half_up
+    from kwwhat_spark.operators.similarity import (
+        _BLOCK_DOUBLES, _collect, _cosine, _row_blocks, _rows, _vectors,
+    )
 
+    budget = _BLOCK_DOUBLES
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    eval_rows = emb.filter(F.col("vec_id") % 50 == 0).collect()
-    e_ids = np.array([r["vec_id"] for r in eval_rows], dtype=np.int64)
-    e_mat = np.array([r["embedding"] for r in eval_rows], dtype=np.float64)
-    e_norms = np.linalg.norm(e_mat, axis=1)
-    e_norms[e_norms == 0.0] = 1.0
-    bc = keep(spark.sparkContext.broadcast((e_ids, e_mat, e_norms)))
+    eval_rows = _collect(
+        emb.filter(F.col("vec_id") % 50 == 0), "decontaminate_embedding",
+        "eval rows", "ivf_topk with the eval set as the corpus",
+    )
+    bc = keep(spark.sparkContext.broadcast((
+        np.array([r["vec_id"] for r in eval_rows], dtype=np.int64),
+        _vectors(r["embedding"] for r in eval_rows),
+    )))
 
     schema = T.StructType(
         [
@@ -1995,19 +1993,16 @@ def decontaminate_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     def score(batches):
         import pandas as pd
 
-        ids, mat, norms = bc.value
+        ids, e = bc.value
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vecs = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            v = _vectors(pdf["embedding"])
             cids = pdf["vec_id"].to_numpy()
-            cnorms = np.linalg.norm(vecs, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = _round6_half_up(
-                    (vecs @ mat.T) / (cnorms[:, None] * norms[None, :])
-                )
-            sims[cids[:, None] == ids[None, :]] = -np.inf  # exclude self-pair
-            yield pd.DataFrame({"vec_id": cids, "max_eval_sim": sims.max(axis=1)})
+            for s in _row_blocks(len(cids), len(ids), budget):
+                sims = _cosine(_rows(v, s), e)
+                sims[cids[s, None] == ids[None, :]] = np.nan  # no self-pair
+                best = np.fmax.reduce(sims, axis=1, initial=np.nan)
+                has = ~np.isnan(best)
+                yield pd.DataFrame({"vec_id": cids[s][has], "max_eval_sim": best[has]})
 
     return emb.mapInPandas(score, schema=schema).select(
         "vec_id",

@@ -65,6 +65,23 @@ def test_settle_gate_discards_the_first_canary(monkeypatch):
     assert gate.gates == 2 and gate.waits == 0
 
 
+@pytest.mark.parametrize(
+    "reads, first",
+    [
+        ([0.48, 0.40, 0.37, 0.26, 0.3], 0.26),  # falls into the band
+        ([0.5, 0.49, 0.3], 0.49),  # settled above it: the machine is busy
+        ([1.0, 0.9, 0.8, 0.7, 0.6, 0.5, 0.3], 0.5),  # read budget spent
+    ],
+)
+def test_settle_gate_warms_the_first_canary_until_it_settles(monkeypatch, reads, first):
+    it = iter(reads)
+    monkeypatch.setattr(bench, "_scan_floor", lambda spark, d: next(it))
+    gate = bench._SettleGate(0.0, "canary")
+    assert gate.wait(None) == first
+    assert gate.wait(None) == 0.3  # later gates read once
+    assert next(it, None) is None
+
+
 def test_bench_exports_scan_floor():
     # perfbench/run.py labels the rig with it.
     assert callable(bench._scan_floor)

@@ -218,18 +218,24 @@ def test_ivf_topk_full_probe_equals_brute_force(spark, sf_dir):
 def test_ivf_topk_broadcast_queries_path_parity(spark, sf_dir):
     """The zero-shuffle broadcast-queries scan must equal the cogroup
     shuffle path row-for-row — full probe (exact regime) AND partial
-    probe (identical cell structure ⇒ identical candidate sets), with
-    and without the float32 shuffle flag."""
+    probe (identical cell structure ⇒ identical candidate sets), for
+    both an array<double> and an array<float> input (which ships its
+    vectors through the re-rank shuffle as float32)."""
     from kwwhat_spark.operators.similarity import ivf_topk
     from kwwhat_spark.sources.testdata import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    q = emb.filter(F.col("vec_id") < 7).select(F.col("vec_id").alias("query_id"), "embedding")
-    c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
+    raw = load_table(spark, sf_dir, "embeddings")
 
-    def rows(**kw):
+    def rows(f32, **kw):
+        emb = raw.select(
+            "vec_id",
+            F.col("embedding").cast("array<float>" if f32 else "array<double>")
+            .alias("embedding"),
+        )
+        q = emb.filter(F.col("vec_id") < 7).select(
+            F.col("vec_id").alias("query_id"), "embedding"
+        )
+        c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
         return {
             (r["query_id"], r["rank"]): (r["corpus_id"], r["cosine_sim"])
             for r in ivf_topk(q, c, k=5, n_cells=8, **kw).collect()
@@ -237,8 +243,8 @@ def test_ivf_topk_broadcast_queries_path_parity(spark, sf_dir):
 
     for probe_kw in ({"n_probe": 8}, {"n_probe": 3}):
         for f32 in (False, True):
-            shuffled = rows(broadcast_queries=False, float32_shuffle=f32, **probe_kw)
-            scanned = rows(broadcast_queries=True, float32_shuffle=f32, **probe_kw)
+            shuffled = rows(f32, broadcast_queries=False, **probe_kw)
+            scanned = rows(f32, broadcast_queries=True, **probe_kw)
             assert scanned == shuffled, (probe_kw, f32)
 
 
@@ -552,8 +558,8 @@ def test_all_pairs_cosine_matches_expression(spark):
     # rows per sims block for n=40): identical output.
     import kwwhat_spark.operators.similarity as sim_mod
 
-    old_block = sim_mod._ALL_PAIRS_BLOCK_DOUBLES
-    sim_mod._ALL_PAIRS_BLOCK_DOUBLES = 80
+    old_block = sim_mod._BLOCK_DOUBLES
+    sim_mod._BLOCK_DOUBLES = 80
     try:
         blocked = {
             (r.id_a, r.id_b): r.cosine_sim
@@ -562,7 +568,7 @@ def test_all_pairs_cosine_matches_expression(spark):
             ).collect()
         }
     finally:
-        sim_mod._ALL_PAIRS_BLOCK_DOUBLES = old_block
+        sim_mod._BLOCK_DOUBLES = old_block
     assert blocked == expr
 
 
