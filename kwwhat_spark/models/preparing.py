@@ -20,15 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kwwhat_spark.models.base import Pipeline, model
-from kwwhat_spark.models.payload import parsed_payload, payload_field
-
-
-def _gate(action_set, col):
-    """Per-action gate over an ALREADY-EXTRACTED scalar column (the
-    payload fields are pulled out of the bound structs in events_conf,
-    before the anchor fanout join)."""
-    actions = [action_set] if isinstance(action_set, str) else action_set
-    return F.when(F.col("action").isin(actions), F.col(col))
+from kwwhat_spark.models.payload import connector_id, correlate, extract, gate, transaction_id
 
 
 @model("int_connector_preparing", unique_key=["charger_id", "connector_id", "ingested_ts"],
@@ -77,82 +69,22 @@ def int_connector_preparing(p: Pipeline) -> DataFrame:
         & (F.col("ingested_timestamp") <= F.lit(to_ts))
     )
 
-    events = ocpp_logs.filter(
-        F.col("action").isin(list(p.vars.preparing_actions))
-        & (F.col("message_type_id") == p.vars.call_message_type_id)
-    )
-    conf = ocpp_logs.filter(
-        F.col("message_type_id") == p.vars.callresult_message_type_id
-    ).select(
-        F.col("unique_id").alias("conf_unique_id"),
-        F.col("ingested_ts").alias("conf_ingested_ts"),
-        F.col("payload").alias("conf_payload"),
-    )
-    from kwwhat_spark.operators.temporal import uid_window_join
-
-    retry_s = p.vars.transaction_message_retry_interval_seconds
-    # One from_json per side (models/payload.py), bound once (each
-    # struct is referenced 3×, so CollapseProject keeps it aliased) —
-    # and BOTH parses run BEFORE the uid correlation join (trap 4,
-    # models/payload.py): the repeated-uuid pathology fans this join to
-    # ~125M rows at the 500× fleet (370k events × ~339 same-uuid
-    # CALLRESULTs), so a parse placed after it re-parses each payload
-    # per fanout copy — measured 85.7 s after vs 5.7 s before (15×) for
-    # this stage. Only the SIX needed scalars cross the join and the
-    # later anchor interval join — not the structs, not the JSON
-    # strings (r10: carrying whole structs through the fanout join
-    # measured +25 s at the 500× fleet).
-    events_p = events.withColumn("__pj", parsed_payload()).select(
-        "charger_id",
-        "action",
-        "ingested_ts",
-        "unique_id",
-        F.col("__pj.idTag").alias("e_id_tag"),
-        F.col("__pj.transactionId").alias("e_txn_id"),
-        F.col("__pj.errorCode").alias("e_error_code"),
-        # Join key: its own pruned single-field parse (payload_field
-        # docstring) — the anchor join pushes isnotnull(key) into a
-        # per-row filter, which must not drag a full-schema parse.
-        F.when(
-            F.col("action").isin(
-                ["StatusNotification", "StartTransaction", "MeterValues",
-                 "RemoteStartTransaction"]
+    # Only StartTransaction and Authorize read confirmation values
+    # (models/payload.py).
+    events_conf = correlate(
+        extract(
+            ocpp_logs.filter(
+                F.col("action").isin(list(p.vars.preparing_actions))
+                & (F.col("message_type_id") == p.vars.call_message_type_id)
             ),
-            payload_field("connectorId"),
-        ).cast("string").alias("e_connector_id"),
-    )
-    conf_p = conf.withColumn("__conf_pj", parsed_payload("conf_payload")).select(
-        "conf_unique_id",
-        "conf_ingested_ts",
-        F.col("__conf_pj.idTagInfo.status").alias("c_id_tag_status"),
-        F.col("__conf_pj.idTagInfo.idTag").alias("c_parent_id_tag"),
-        F.col("__conf_pj.transactionId").alias("c_txn_id"),
-    )
-    # Confirmation values are consumed ONLY by StartTransaction and
-    # Authorize rows (the _gate()s over c_* below); joining them to
-    # every preparing action fans all of them ~170× through in-window
-    # retry copies (2.00B pairs measured at the 2000× fleet before the
-    # split+dedup below). Non-consuming actions bypass the join with
-    # null conf columns — identical output (their duplicates were
-    # collect_set-inert anyway), pair volume scales with
-    # |Start|+|Authorize| instead of |all preparing actions|.
-    conf_actions = ["StartTransaction", "Authorize"]
-    ev_conf_side = events_p.filter(F.col("action").isin(conf_actions))
-    ev_pass_side = events_p.filter(~F.col("action").isin(conf_actions))
-    events_conf = uid_window_join(
-        ev_conf_side, conf_p,
-        "unique_id", "conf_unique_id",
-        "ingested_ts", "conf_ingested_ts",
-        retry_s,
-    ).unionByName(
-        ev_pass_side.select(
-            "*",
-            F.lit(None).cast("string").alias("conf_unique_id"),
-            F.lit(None).cast("timestamp").alias("conf_ingested_ts"),
-            F.lit(None).cast("string").alias("c_id_tag_status"),
-            F.lit(None).cast("string").alias("c_parent_id_tag"),
-            F.lit(None).cast("string").alias("c_txn_id"),
-        )
+            ["charger_id", "action", "ingested_ts", "unique_id"],
+            {"e_id_tag": "idTag", "e_txn_id": "transactionId", "e_error_code": "errorCode"},
+            connector_id().alias("e_connector_id"),
+        ),
+        ocpp_logs, p.vars.transaction_message_retry_interval_seconds,
+        p.vars.callresult_message_type_id, consumers=["StartTransaction", "Authorize"],
+        fields={"c_id_tag_status": "idTagInfo.status", "c_parent_id_tag": "idTagInfo.idTag",
+                "c_txn_id": "transactionId"},
     ).select(
         F.col("charger_id").alias("e_charger_id"),
         "action",
@@ -160,19 +92,15 @@ def int_connector_preparing(p: Pipeline) -> DataFrame:
         "e_id_tag", "e_txn_id", "e_error_code",
         "c_id_tag_status", "c_parent_id_tag", "c_txn_id", "e_connector_id",
     ).dropDuplicates()
-    # ^ Pair-dedup BEFORE the anchor fanout join. Retried confirmations
-    # share one correlation id, so the uid window join emits one pair
-    # per (call, retry-copy) — measured 2.00 BILLION pairs at the 2000×
-    # fleet (~167 near-identical confirmations per event, the seed's
-    # own id-reuse × in-window retry bursts), and the anchor interval
-    # join then sort-merges all of them (280 s of the model's 406 s).
-    # Every downstream use is duplicate-insensitive — the details
-    # projection is row-wise and the rollup aggregates ONLY via
-    # collect_set over these exact columns — so distinct pairs are
-    # semantically identical and the dedup is a map-side-combinable
-    # groupBy on rows already partitioned by the join's uid key
-    # (duplicates co-reside, partial aggregation collapses them before
-    # the shuffle).
+    # ^ Pair dedup BEFORE the anchor fanout join. It also collapses the
+    # pairs of retried confirmations at distinct timestamps, which the
+    # confirmation-side dedup keeps: ~167 near-identical pairs per event
+    # at the 2000× fleet (2.00B pairs), which the anchor interval join
+    # then sort-merged (280 s of the model's 406 s). Every downstream use
+    # is duplicate-insensitive — the details projection is row-wise and
+    # the rollup aggregates ONLY via collect_set over these columns — and
+    # the groupBy is map-side combinable on rows already partitioned by
+    # the join's uid key.
 
     chained = anchors.join(
         events_conf,
@@ -203,16 +131,11 @@ def int_connector_preparing(p: Pipeline) -> DataFrame:
         "previous_payload_ts",
         "next_payload_ts",
         "payload_ts",
-        _gate(["StartTransaction", "RemoteStartTransaction"], "e_id_tag")
-        .cast("string").alias("id_tag"),
-        _gate(["StartTransaction", "Authorize"], "c_id_tag_status")
-        .cast("string").alias("id_tag_status"),
-        _gate("Authorize", "c_parent_id_tag").cast("string").alias("parent_id_tag"),
-        F.coalesce(
-            _gate(["StopTransaction", "RemoteStopTransaction", "MeterValues"], "e_txn_id"),
-            _gate("StartTransaction", "c_txn_id"),
-        ).cast("string").alias("transaction_id"),
-        _gate("StatusNotification", "e_error_code").cast("string").alias("error_code"),
+        gate(["StartTransaction", "RemoteStartTransaction"], "e_id_tag").alias("id_tag"),
+        gate(["StartTransaction", "Authorize"], "c_id_tag_status").alias("id_tag_status"),
+        gate("Authorize", "c_parent_id_tag").alias("parent_id_tag"),
+        transaction_id("e_txn_id", "c_txn_id").alias("transaction_id"),
+        gate("StatusNotification", "e_error_code").alias("error_code"),
     )
 
     group_keys = [

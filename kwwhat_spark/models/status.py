@@ -17,14 +17,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from kwwhat_spark.models.base import Pipeline, model
-from kwwhat_spark.models.payload import parsed_payload
-
-
-def _payload_str(path: str, when_actions: list[str] | str):
-    # Reads from the bound __pj struct (models/payload.py: one from_json
-    # per row instead of one get_json_object parse per field).
-    actions = [when_actions] if isinstance(when_actions, str) else when_actions
-    return F.when(F.col("action").isin(actions), F.col(f"__pj.{path}")).cast("string")
+from kwwhat_spark.models.payload import correlate, gate, parsed_payload
 
 
 @model("int_status_changes", unique_key=["charger_id", "connector_id", "ingested_ts"],
@@ -73,71 +66,30 @@ def int_status_changes(p: Pipeline) -> DataFrame:
         )
         .agg(F.min("payload").alias("__pl_payload"))
     )
-    req = req_all.withColumn(
-        "__pj", parsed_payload()
-    ).select(
-        "ingested_timestamp",
-        "charger_id",
-        "unique_id",
-        "action",
-        _payload_str("connectorId", "StatusNotification").alias("connector_id"),
-        _payload_str("status", "StatusNotification").alias("status"),
-        _payload_str("errorCode", "StatusNotification").alias("error_code"),
-        _payload_str("timestamp", ["StatusNotification", "StartTransaction", "StopTransaction"])
-        .cast("timestamp")
-        .alias("payload_ts"),
+    req = req_all.withColumn("__pj", parsed_payload()).select(
+        "ingested_timestamp", "charger_id", "unique_id", "action",
+        gate("StatusNotification", "__pj.connectorId").alias("connector_id"),
+        gate("StatusNotification", "__pj.status").alias("status"),
+        gate("StatusNotification", "__pj.errorCode").alias("error_code"),
+        gate(["StatusNotification", "StartTransaction", "StopTransaction"], "__pj.timestamp")
+        .cast("timestamp").alias("payload_ts"),
     )
 
     connectors = int_connectors.select("charger_id", "connector_id", "port_id")
-    # Exact-duplicate confirmations collapse BEFORE the window join (the
-    # r11 preparing/transactions treatment, extended here): a CALLRESULT
-    # contributes only (unique_id, ingested_ts), so copies of that pair
-    # — at-least-once redelivery, or dense shared-id regimes where many
-    # chargers reuse one correlation id at one timestamp — multiply the
-    # join's pair count without adding information. The reference's own
-    # join fans them out and its change filter then drops every fanout
-    # copy as a non-change (previous_status = status), so collapsing
-    # first is semantically inert: identical rows in, identical change
-    # rows out (dbt units ×3, DAG property harness incl. injected
-    # duplicate deliveries, full oracle gate). dropDuplicates here is
-    # map-side combinable on the join key; pair count drops n² → n on
-    # the shared-id bomb regime. Distinct-timestamp retries of one uid
-    # are NOT collapsed — their (rare, tie-broken) fanout matches the
-    # reference row-for-row.
-    conf = (
-        ocpp_logs.filter(
-            F.col("message_type_id") == p.vars.callresult_message_type_id
-        )
-        .select(
-            F.col("unique_id").alias("conf_unique_id"),
-            F.col("ingested_timestamp").alias("confirmation_ingested_ts"),
-        )
-        .dropDuplicates(["conf_unique_id", "confirmation_ingested_ts"])
-    )
-
-    from kwwhat_spark.operators.temporal import uid_window_join
-
-    with_conf = (
-        uid_window_join(
-            req.join(F.broadcast(connectors), ["charger_id", "connector_id"], "left"),
-            conf,
-            "unique_id",
-            "conf_unique_id",
-            "ingested_timestamp",
-            "confirmation_ingested_ts",
-            p.vars.message_response_interval_seconds,
-        )
-        .select(
-            "charger_id",
-            "connector_id",
-            "port_id",
-            F.col("ingested_timestamp").alias("ingested_ts"),
-            "unique_id",
-            "status",
-            "error_code",
-            "payload_ts",
-            "confirmation_ingested_ts",
-        )
+    with_conf = correlate(
+        req.join(F.broadcast(connectors), ["charger_id", "connector_id"], "left"),
+        ocpp_logs, p.vars.message_response_interval_seconds,
+        p.vars.callresult_message_type_id, ts="ingested_timestamp",
+    ).select(
+        "charger_id",
+        "connector_id",
+        "port_id",
+        F.col("ingested_timestamp").alias("ingested_ts"),
+        "unique_id",
+        "status",
+        "error_code",
+        "payload_ts",
+        F.col("conf_ingested_ts").alias("confirmation_ingested_ts"),
     )
 
     # New rows carry null previous_*; in incremental mode the buffer

@@ -19,7 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kwwhat_spark.models.base import Pipeline, model
-from kwwhat_spark.models.payload import parsed_payload, payload_field
+from kwwhat_spark.models.payload import (
+    connector_id, correlate, extract, gate, payload_field, transaction_id)
 
 _NUMERIC = "decimal(28,6)"
 
@@ -44,135 +45,35 @@ def int_transactions(p: Pipeline) -> DataFrame:
     )
     incremental_ts = p.scalar_max(ocpp_logs, "ingested_ts")
 
-    # Parse the request payload ONCE per row; the raw string is dropped
-    # before the correlation join so the shuffle carries the pruned
-    # struct, not the JSON text.
-    # Extract the SIX request scalars the details projection needs
-    # BEFORE the correlation join instead of carrying the whole bound
-    # struct through it (trap 3 one join later than r10 caught it): the
-    # uid window join fans each event to one row per in-window retry
-    # copy of its confirmation (~273M pairs at the 2000× fleet), and a
-    # struct column is physically materialized into every copy.
-    tx_events = (
-        ocpp_logs.filter(F.col("action").isin(list(p.vars.transaction_actions)))
-        .withColumn("__pj", parsed_payload())
-        .select(
-            "charger_id",
-            "action",
-            "ingested_ts",
-            "unique_id",
-            F.col("__pj.transactionId").alias("e_txn_id"),
-            F.col("__pj.idTag").alias("e_id_tag"),
-            F.col("__pj.timestamp").alias("e_payload_ts"),
-            F.col("__pj.reason").alias("e_stop_reason"),
-            F.col("__pj.meterStart").alias("e_meter_start"),
-            F.col("__pj.meterStop").alias("e_meter_stop"),
-            # Pruned parse, NOT __pj.connectorId: beside the kept struct
-            # a field read is duplicated into a second full parse by
-            # projection pushdown (payload_field docstring).
-            F.when(
-                F.col("action").isin(
-                    ["StatusNotification", "StartTransaction", "MeterValues",
-                     "RemoteStartTransaction"]
-                ),
-                payload_field("connectorId"),
-            ).cast("string").alias("connector_id"),
-        )
+    # Only StartTransaction reads confirmation values (models/payload.py).
+    events_conf = correlate(
+        extract(
+            ocpp_logs.filter(F.col("action").isin(list(p.vars.transaction_actions))),
+            ["charger_id", "action", "ingested_ts", "unique_id"],
+            {"e_txn_id": "transactionId", "e_id_tag": "idTag", "e_payload_ts": "timestamp",
+             "e_stop_reason": "reason", "e_meter_start": "meterStart",
+             "e_meter_stop": "meterStop"},
+            connector_id().alias("connector_id"),
+        ),
+        ocpp_logs, p.vars.message_response_interval_seconds,
+        p.vars.callresult_message_type_id, consumers=["StartTransaction"],
+        fields={"__conf_txn_id": "transactionId", "__conf_id_tag_status": "idTagInfo.status"},
     )
-
-    conf = ocpp_logs.filter(
-        F.col("message_type_id") == p.vars.callresult_message_type_id
-    ).select(
-        F.col("unique_id").alias("conf_unique_id"),
-        F.col("ingested_ts").alias("conf_ingested_ts"),
-        F.col("payload").alias("conf_payload"),
-    )
-    from kwwhat_spark.operators.temporal import uid_window_join
-
-    # CALLRESULT payloads parse BEFORE the correlation join (trap 4,
-    # models/payload.py). The r1-r10 rationale — "only confirmations
-    # that matched pay the parse" — inverts under the repeated-uuid
-    # fanout: the join multiplies matched rows (~68M from 136k events ×
-    # same-uuid CALLRESULTs at the 500× fleet), so a post-join parse
-    # runs once per COPY. Parsing all 4.4M CALLRESULTs once, then
-    # joining the two extracted scalars, measured 25.0 -> 5.1 s (5×).
-    conf_parsed = (
-        conf.withColumn("__conf_pj", parsed_payload("conf_payload"))
-        .select(
-            "conf_unique_id",
-            "conf_ingested_ts",
-            F.col("__conf_pj.transactionId").alias("__conf_txn_id"),
-            F.col("__conf_pj.idTagInfo.status").alias("__conf_id_tag_status"),
-        )
-        # Exact-duplicate confirmations collapse BEFORE the correlation
-        # join (the status/preparing treatment): a CALLRESULT contributes
-        # only these four values, so verbatim copies — at-least-once
-        # redelivery, dense shared-id regimes — multiply join pair count
-        # and skew the shuffle key without adding information. Inert
-        # downstream: the transaction rollup is min/max/collect_set only,
-        # so the reference's fanout copies collapse there anyway (dbt
-        # units, DAG property harness, full-vs-incremental replays).
-        # Map-side combinable; distinct-value confs are NOT collapsed.
-        .dropDuplicates(
-            ["conf_unique_id", "conf_ingested_ts",
-             "__conf_txn_id", "__conf_id_tag_status"]
-        )
-    )
-    # Only StartTransaction consumes confirmation values (__conf_txn_id,
-    # __conf_id_tag_status are gated on action == 'StartTransaction' in
-    # the details projection below), yet a blanket left join fans EVERY
-    # event to one row per in-window retry copy of its confirmation —
-    # semantically-inert duplicates (the rollup is min/max/collect_set
-    # only) that still cost a 1.09B-pair scan at the 2000× fleet
-    # (measured; ~176 same-id confirmations per call in the seed's
-    # dense retry bursts). Join confirmations to the Start events only;
-    # everything else passes through with null conf columns — identical
-    # model output, pair volume scales with |StartTransaction| instead
-    # of |all tx actions|.
-    start_events = tx_events.filter(F.col("action") == "StartTransaction")
-    other_events = tx_events.filter(F.col("action") != "StartTransaction")
-    events_conf = uid_window_join(
-        start_events, conf_parsed,
-        "unique_id", "conf_unique_id",
-        "ingested_ts", "conf_ingested_ts",
-        p.vars.message_response_interval_seconds,
-    ).unionByName(
-        other_events.select(
-            "*",
-            F.lit(None).cast("string").alias("conf_unique_id"),
-            F.lit(None).cast("timestamp").alias("conf_ingested_ts"),
-            F.lit(None).cast("string").alias("__conf_txn_id"),
-            F.lit(None).cast("string").alias("__conf_id_tag_status"),
-        )
-    )
-
-    def _gate(action_set, col):
-        actions = [action_set] if isinstance(action_set, str) else action_set
-        return F.when(F.col("action").isin(actions), F.col(col))
 
     details = events_conf.select(
         "charger_id",
         "connector_id",
         "ingested_ts",
-        # transactionId: CALLRESULT for StartTransaction, request payload for
-        # Stop/RemoteStop/MeterValues (payload_extractions.sql:67-75).
-        F.coalesce(
-            _gate(["StopTransaction", "RemoteStopTransaction", "MeterValues"], "e_txn_id"),
-            F.when(F.col("action") == "StartTransaction", F.col("__conf_txn_id")),
-        ).cast("string").alias("transaction_id"),
-        _gate(["StartTransaction", "RemoteStartTransaction"], "e_id_tag")
-        .cast("string").alias("id_tag"),
-        F.when(F.col("action") == "StartTransaction", F.col("__conf_id_tag_status"))
-        .cast("string").alias("id_tag_status"),
-        _gate("StartTransaction", "e_payload_ts").cast("timestamp").alias("transaction_start_ts"),
-        _gate("StopTransaction", "e_payload_ts").cast("timestamp").alias("transaction_stop_ts"),
+        transaction_id("e_txn_id", "__conf_txn_id").alias("transaction_id"),
+        gate(["StartTransaction", "RemoteStartTransaction"], "e_id_tag").alias("id_tag"),
+        gate("StartTransaction", "__conf_id_tag_status").alias("id_tag_status"),
+        gate("StartTransaction", "e_payload_ts").cast("timestamp").alias("transaction_start_ts"),
+        gate("StopTransaction", "e_payload_ts").cast("timestamp").alias("transaction_stop_ts"),
         # Reason omitted ⇒ 'Local' (payload_extractions.sql:57-65).
-        F.when(
-            F.col("action") == "StopTransaction",
-            F.coalesce(F.col("e_stop_reason"), F.lit("Local")),
-        ).cast("string").alias("transaction_stop_reason"),
-        _gate("StartTransaction", "e_meter_start").cast(_NUMERIC).alias("meter_start"),
-        _gate("StopTransaction", "e_meter_stop").cast(_NUMERIC).alias("meter_stop"),
+        gate("StopTransaction", F.coalesce(F.col("e_stop_reason"), F.lit("Local")))
+        .alias("transaction_stop_reason"),
+        gate("StartTransaction", "e_meter_start").cast(_NUMERIC).alias("meter_start"),
+        gate("StopTransaction", "e_meter_stop").cast(_NUMERIC).alias("meter_stop"),
     )
 
     transactions = (

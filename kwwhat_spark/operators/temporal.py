@@ -147,9 +147,8 @@ def uid_window_join(
     ts_left: str,
     ts_right: str,
     window_s: int,
-    join_type: str = "left",
 ) -> DataFrame:
-    """``req JOIN conf ON uid AND ts_right IN [ts_left, ts_left+window_s]``
+    """``req LEFT JOIN conf ON uid AND ts_right IN [ts_left, ts_left+window_s]``
     with the window folded into the join KEY: conf rows replicate to the
     (at most two) window-wide time buckets they can serve, so the join
     is an equi-join on (uid, bucket) and the exact range predicate only
@@ -187,6 +186,6 @@ def uid_window_join(
             F.col(ts_right)
             <= F.col(ts_left) + F.expr(f"interval {int(window_s)} seconds")
         ),
-        join_type,
+        "left",
     )
     return out.drop("__uwb")

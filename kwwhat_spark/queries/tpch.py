@@ -111,7 +111,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT o_orderkey, o_custkey, o_totalprice
     FROM orders
-    WHERE o_orderstatus = 'F' AND o_orderdate < TIMESTAMP '1995-01-01'
+    WHERE o_orderstatus = 'F' AND o_orderdate < TIMESTAMP '1996-01-01'
       AND o_orderpriority IN ('1-URGENT', '2-HIGH')
     """,
     cite="int_status_changes.sql:54-56; int_transactions.sql:10-13 (IN filter)",
@@ -121,7 +121,7 @@ def filter_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         o.filter(
             (F.col("o_orderstatus") == "F")
-            & (F.col("o_orderdate") < F.lit("1995-01-01").cast("timestamp"))
+            & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp"))
             & F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
         )
         .select("o_orderkey", "o_custkey", "o_totalprice")

@@ -11,25 +11,11 @@ can regress a 100 TB run.
 
 from __future__ import annotations
 
-import re
-
 import pytest
 
 from kwwhat_spark.queries import REGISTRY
+from tools.plan_sweep import entry_plan, numbered_nodes
 
-
-def _formatted_plan(spark, sf_dir: str, name: str) -> str:
-    df = REGISTRY[name].spark(spark, sf_dir)
-    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def _numbered_nodes(plan: str) -> list[str]:
-    # Node names from the numbered detail section ("(N) Op"), so each
-    # operator counts once even though the tree repeats shared subtrees
-    # (same counting as tools/plan_sweep.py).
-    return re.findall(r"^\(\d+\) (\w+)", plan, re.M)
 
 # query -> reason the nested loop is acceptable
 WHITELIST = {
@@ -61,7 +47,7 @@ WHITELIST = {
 def test_clean_corpus_exchange_budget(spark, sf_dir):
     # r12 change 1 (hashed shingles) + change 8: 18 -> 7 shuffle
     # exchanges cumulative over the round.
-    nodes = _numbered_nodes(_formatted_plan(spark, sf_dir, "pipeline_clean_corpus"))
+    nodes = numbered_nodes(entry_plan(spark, sf_dir, "pipeline_clean_corpus"))
     assert nodes.count("Exchange") <= 7
 
 
@@ -69,8 +55,8 @@ def test_curation_exchange_and_scan_budget(spark, sf_dir):
     # r12 change 5 (carry_cols): the strip's join-back + second gated
     # corpus scan are gone. Reverting it re-adds a broadcast join over
     # a second scan and its exchange.
-    plan = _formatted_plan(spark, sf_dir, "curation_pipeline")
-    nodes = _numbered_nodes(plan)
+    plan = entry_plan(spark, sf_dir, "curation_pipeline")
+    nodes = numbered_nodes(plan)
     assert nodes.count("Exchange") <= 4
     assert nodes.count("Scan") <= 1
 
@@ -80,8 +66,8 @@ def test_minhash_single_signature_pass(spark, sf_dir):
     # banded rows consumed on both sides of the self-join. A second
     # MapInPandas in the numbered section means the banded persist was
     # dropped and the signature is computed twice.
-    plan = _formatted_plan(spark, sf_dir, "dedup_minhash_lsh")
-    nodes = _numbered_nodes(plan)
+    plan = entry_plan(spark, sf_dir, "dedup_minhash_lsh")
+    nodes = numbered_nodes(plan)
     assert nodes.count("MapInPandas") == 1
     assert "BatchEvalPython" not in plan
 
@@ -89,10 +75,10 @@ def test_minhash_single_signature_pass(spark, sf_dir):
 def test_spans_gram_keys_are_xxhash(spark, sf_dir):
     # r12 change 6: gram keys are xxhash64 over the sliced token array;
     # no md5 string build anywhere in the plan.
-    plan = _formatted_plan(spark, sf_dir, "dedup_substring_spans")
+    plan = entry_plan(spark, sf_dir, "dedup_substring_spans")
     assert "xxhash64(slice(" in plan
     assert "md5(" not in plan
-    assert _numbered_nodes(plan).count("Exchange") <= 3
+    assert numbered_nodes(plan).count("Exchange") <= 3
 
 
 @pytest.mark.full

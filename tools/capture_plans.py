@@ -20,10 +20,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kwwhat_spark.operators.cachescope import scope  # noqa: E402
 from kwwhat_spark.queries import REGISTRY  # noqa: E402
 from kwwhat_spark.session import get_spark  # noqa: E402
-from tools.plan_sweep import JOINS, PYTHON, explain  # noqa: E402
+from tools.plan_sweep import JOINS, PYTHON, entry_plan  # noqa: E402
 
 
 def main() -> None:
@@ -43,8 +42,7 @@ def main() -> None:
     spark = get_spark(app_name="kwh-spark-plans")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
-        with scope():  # building a plan can persist, checkpoint or broadcast
-            plan = explain(REGISTRY[name].spark(spark, args.sf_dir))
+        plan = entry_plan(spark, args.sf_dir, name)
         path = os.path.join(args.outdir, f"{name}_{args.suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)

@@ -1,13 +1,14 @@
 #!/usr/bin/env python
 """Static-plan audit over every registry entry (guide §1.3).
 
-Writes plans/r12/plan_sweep_all_entries.json: per entry the Exchange
-count, join/python node inventories, whether any scan shows
-PushedFilters, and the parquet-scan count — the artifact
-OPTIMIZATION_r12.md's full-catalog audit cites. Explain-only: no
-query execution.
+Writes OUTFILE: per entry the Exchange count, join/python node
+inventories, whether any scan shows PushedFilters, and the parquet-scan
+count. plans/r12/plan_sweep_all_entries.json is one such sweep: the
+artifact OPTIMIZATION_r12.md's full-catalog audit and the bounds in
+tests/test_plan_audit.py cite it, so OUTFILE has no default and a rerun
+never overwrites it unasked. Explain-only: no query execution.
 
-Usage: python tools/plan_sweep.py [outfile] [--sf-dir DIR]
+Usage: python tools/plan_sweep.py OUTFILE [--sf-dir DIR]
 """
 
 from __future__ import annotations
@@ -30,17 +31,27 @@ PYTHON = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
           "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas")
 
 
-def explain(df) -> str:
-    """The static physical plan, as ``df.explain("formatted")`` prints it."""
-    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "formatted"
-    )
+def entry_plan(spark, sf_dir: str, name: str) -> str:
+    """Registry entry `name`'s static physical plan, as
+    ``df.explain("formatted")`` prints it. Building a plan can persist,
+    checkpoint or broadcast; all of it is released before this returns."""
+    with scope():
+        df = REGISTRY[name].spark(spark, sf_dir)
+        return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
+            df._jdf.queryExecution(), "formatted"
+        )
+
+
+def numbered_nodes(plan: str) -> list[str]:
+    """Operator names from the numbered detail section ("(N) Op") of an
+    `explain` plan, so each operator counts once (the tree repeats shared
+    subtrees)."""
+    return re.findall(r"^\(\d+\) (\w+)", plan, re.M)
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("outfile", nargs="?",
-                    default="plans/r12/plan_sweep_all_entries.json")
+    ap.add_argument("outfile")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
@@ -49,11 +60,8 @@ def main() -> None:
     out: dict[str, dict] = {}
     for name in REGISTRY:
         try:
-            with scope():  # building a plan can persist, checkpoint or broadcast
-                plan = explain(REGISTRY[name].spark(spark, args.sf_dir))
-            # Node counts from the numbered detail section ("(N) Op"),
-            # so each operator counts once (the tree repeats them).
-            nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+            plan = entry_plan(spark, args.sf_dir, name)
+            nodes = numbered_nodes(plan)
             out[name] = {
                 "exchanges": sum(1 for n in nodes if n == "Exchange"),
                 "broadcasts": sum(1 for n in nodes if n == "BroadcastExchange"),
