@@ -16,7 +16,9 @@ the whole mart is two shuffles over the attempts table plus the rollup.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+import datetime as dt
+
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from kwwhat_spark.functions.core import (
@@ -117,10 +119,13 @@ def _merge_with_buffer(p: Pipeline, new_visits: DataFrame, buffer_from) -> DataF
     )
 
 
-@model("fact_visits",
-       unique_key=["location_id", "first_charger_id", "first_port_id", "visit_start_ts"],
-       cluster_by="visit_start_ts")
-def fact_visits(p: Pipeline) -> DataFrame:
+def visit_attempts(p: Pipeline) -> tuple[DataFrame, dt.datetime]:
+    """The attempts every visit is built from, and fact_visits' window
+    ``buffer_from``: ``fact_charge_attempts`` in fact_visits' batch
+    window, joined to ``dim_connectors`` (port_id) and ``dim_chargers``
+    (location_id), attempts with no start dropped. The batch mart and
+    the visit stream (streaming/ocpp.py run_visit_stream) both read
+    exactly these rows."""
     attempts_src, dim_connectors, dim_chargers = p.refs(
         "fact_charge_attempts", "dim_connectors", "dim_chargers")
     from_ts, buffer_from, to_ts = p.window(
@@ -176,6 +181,49 @@ def fact_visits(p: Pipeline) -> DataFrame:
         # the generated-fleet harness, tests/test_ocpp_dag_property.py).
         .filter(F.col("charge_attempt_start_ts").isNotNull())
     )
+    return att, buffer_from
+
+
+def mart_columns() -> list[Column]:
+    """The mart's projection of rolled-up visits: the five surrogate
+    keys, then the mart's columns in order, with the duration in
+    boundary minutes. fact_visits appends its incremental_ts; the
+    visit stream emits exactly these columns (its id lists stay
+    '|'-joined strings, the mart's are arrays)."""
+    return [
+        surrogate_key("location_id", "first_charger_id", "first_port_id", "visit_start_ts")
+        .alias("visit_id"),
+        surrogate_key("location_id").alias("location_key"),
+        surrogate_key(F.coalesce(F.col("id_tag"), F.lit("UNKNOWN"))).alias("driver_key"),
+        surrogate_key("first_charger_id", "first_port_id").alias("first_port_key"),
+        surrogate_key("last_charger_id", "last_port_id").alias("last_port_key"),
+        "location_id",
+        "charger_ids",
+        "id_tag",
+        "visit_start_ts",
+        "visit_end_ts",
+        "charge_attempt_count",
+        "charge_attempt_ids",
+        "total_energy_transferred_kwh",
+        "first_charge_attempt_id",
+        "last_charge_attempt_id",
+        "first_charger_id",
+        "last_charger_id",
+        "first_port_id",
+        "last_port_id",
+        "is_successful",
+        "grouping_key",
+        datediff_boundary("minute", F.col("visit_start_ts"), F.col("visit_end_ts")).alias(
+            "visit_duration_minutes"
+        ),
+    ]
+
+
+@model("fact_visits",
+       unique_key=["location_id", "first_charger_id", "first_port_id", "visit_start_ts"],
+       cluster_by="visit_start_ts")
+def fact_visits(p: Pipeline) -> DataFrame:
+    att, buffer_from = visit_attempts(p)
     incremental_ts = p.scalar_max(att, "preparing_ingested_ts")
 
     # ---- Step 1: id-tag inference chains per (charger, port) ----
@@ -292,30 +340,6 @@ def fact_visits(p: Pipeline) -> DataFrame:
         new_visits = _merge_with_buffer(p, new_visits, buffer_from=buffer_from)
 
     return new_visits.select(
-        surrogate_key("location_id", "first_charger_id", "first_port_id", "visit_start_ts")
-        .alias("visit_id"),
-        surrogate_key("location_id").alias("location_key"),
-        surrogate_key(F.coalesce(F.col("id_tag"), F.lit("UNKNOWN"))).alias("driver_key"),
-        surrogate_key("first_charger_id", "first_port_id").alias("first_port_key"),
-        surrogate_key("last_charger_id", "last_port_id").alias("last_port_key"),
-        "location_id",
-        "charger_ids",
-        "id_tag",
-        "visit_start_ts",
-        "visit_end_ts",
-        "charge_attempt_count",
-        "charge_attempt_ids",
-        "total_energy_transferred_kwh",
-        "first_charge_attempt_id",
-        "last_charge_attempt_id",
-        "first_charger_id",
-        "last_charger_id",
-        "first_port_id",
-        "last_port_id",
-        "is_successful",
-        "grouping_key",
-        datediff_boundary("minute", F.col("visit_start_ts"), F.col("visit_end_ts")).alias(
-            "visit_duration_minutes"
-        ),
+        *mart_columns(),
         F.lit(incremental_ts).cast("timestamp").alias("incremental_ts"),
     )

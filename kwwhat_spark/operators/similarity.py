@@ -149,16 +149,6 @@ def _cosine(a, b):
     return _round6_half_up(_sims(a, b))
 
 
-def _unit(v):
-    """A _vectors triple scaled to unit rows with norms 1: knn_graph's
-    similarity is the unrounded dot of unit rows."""
-    import numpy as np
-
-    mat, norms, lens = v
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return mat / norms[:, None], np.ones_like(norms), lens
-
-
 def _topk(sims, ids, k: int, skip=None):
     """Each row's k best columns of ``sims`` by (-sim, id), as flat
     (rows, cols) index arrays in row-then-rank order. A NaN sim (no
@@ -893,18 +883,17 @@ def semdedup(
 _KNN_SCHEMA = "src_id long, dst_id long, cosine_sim double, rank int"
 
 
-def _topk_edges(q_ids, q, c_ids, c_unit, k: int, budget: int):
+def _topk_edges(q_ids, q, c_ids, c, k: int, budget: int):
     """The top-k kernel of knn_graph and knn_graph_blocked: for each
-    query row of the _vectors triple ``q``, the k corpus rows of highest
-    cosine similarity, ordered by (-sim, dst_id) with the self-edge
-    skipped, as a (src_id, dst_id, cosine_sim, rank) frame. ``c_unit``
-    is the corpus through _unit."""
+    query row of the _vectors triple ``q``, the k rows of the corpus
+    triple ``c`` of highest _cosine, ordered by (-sim, dst_id) with the
+    self-edge skipped, as a (src_id, dst_id, cosine_sim, rank) frame."""
     import numpy as np
     import pandas as pd
 
     frames = []
     for s in _row_blocks(len(q_ids), len(c_ids), budget):
-        sims = _sims(_unit(_rows(q, s)), c_unit)
+        sims = _cosine(_rows(q, s), c)
         r, j = _topk(sims, c_ids, k, skip=q_ids[s])
         frames.append(pd.DataFrame({
             "src_id": q_ids[s][r],
@@ -923,7 +912,7 @@ def knn_graph(
     k: int = 5,
 ) -> DataFrame:
     """k-nearest-neighbor graph over an embedding column via the Arrow /
-    numpy path: the L2-normalized corpus matrix is broadcast once, and
+    numpy path: the corpus matrix and its norms are broadcast once, and
     each Arrow batch of rows computes its similarities against it with a
     BLAS matmul inside mapInPandas. This is the documented "Pandas UDF
     when expression math can't compete" escape hatch: an all-pairs
@@ -933,10 +922,12 @@ def knn_graph(
     hardware throughput).
 
     Output: (src_id, dst_id, cosine_sim float64, rank 1..k), excluding
-    self-edges; ties broken by dst_id ascending. Results are float-exact
-    per BLAS accumulation order, NOT bit-identical to the sequential
-    fold of the expression path — hence a rows-only catalog entry with
-    an agreement test (rounded similarities match the expression top-k)
+    self-edges; ties broken by dst_id ascending. cosine_sim is _cosine's
+    (rounded to 6 decimals, as in every kernel operator), so a pair's
+    sim and rank do not depend on the block, Arrow batch or partition
+    it is computed in: unrounded, a block's BLAS product differs in the
+    last bits from the same rows of the whole product. The rows-only
+    catalog entry keeps an agreement test against the expression top-k
     instead of a value-hash oracle.
 
     Input rule: the module's (_vectors) — a vector with no cosine, or of
@@ -957,14 +948,14 @@ def knn_graph(
     )
     bc = keep(df.sparkSession.sparkContext.broadcast((
         np.array([r[0] for r in rows], dtype=np.int64),
-        _unit(_vectors(r[1] for r in rows)),
+        _vectors(r[1] for r in rows),
     )))
 
     def neighbors(batches):
-        c_ids, c_unit = bc.value
+        c_ids, c = bc.value
         for pdf in batches:
             yield _topk_edges(
-                pdf[id_col].to_numpy(), _vectors(pdf[vec_col]), c_ids, c_unit, k,
+                pdf[id_col].to_numpy(), _vectors(pdf[vec_col]), c_ids, c, k,
                 budget,
             )
 
@@ -1028,7 +1019,7 @@ def knn_graph_blocked(
 
         return _topk_edges(
             left["q_id"].to_numpy(dtype=np.int64), _vectors(left["q_vec"]),
-            right["c_id"].to_numpy(dtype=np.int64), _unit(_vectors(right["c_vec"])), k,
+            right["c_id"].to_numpy(dtype=np.int64), _vectors(right["c_vec"]), k,
             budget,
         )
 
@@ -1062,8 +1053,9 @@ def knn_graph_quantized(
     sums over quantized codes (exact); sim = dot / (sqrt(na)*sqrt(nb))
     is then three exactly-rounded IEEE-754 ops on exactly-representable
     integers (|codes|<=127, 64-dim => na <= 64*127^2 ~ 1.03e6 << 2^53),
-    so both engines produce the same double bit pattern and the same
-    (-sim, dst_id) order. Semantics mirror knn_graph: top-k per src,
+    so both engines produce the same double bit pattern. It is then
+    rounded to 6 decimals, as knn_graph's _cosine is, and ranked by
+    (-sim, dst_id). Semantics mirror knn_graph: top-k per src,
     self-edges excluded, ties by dst_id ascending.
 
     This is the ORACLE TWIN shape — an all-pairs join meant for a
@@ -1102,7 +1094,7 @@ def knn_graph_quantized(
         a.crossJoin(b)
         .filter(F.col("src_id") != F.col("dst_id"))
         .withColumn("_dot", dot)
-        .select("src_id", "dst_id", sim.alias("cosine_sim"), "_na", "_nb")
+        .select("src_id", "dst_id", F.round(sim, 6).alias("cosine_sim"), "_na", "_nb")
     )
     w = W.partitionBy("src_id").orderBy(F.desc("cosine_sim"), F.asc("dst_id"))
     return (

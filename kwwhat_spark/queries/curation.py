@@ -566,8 +566,8 @@ def knn_graph_sharded_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Replayable twin of the kNN graph: int8-quantized vectors, exact
 # integer dot products, sim = dot/(sqrt(na)*sqrt(nb)) — three
 # exactly-rounded IEEE ops on exactly-representable integers, so the
-# doubles (and therefore the top-k order) are bit-identical
-# cross-engine. Bounded to the lowest-200 vec_ids: this is the oracle
+# doubles are bit-identical cross-engine; rounded to 6 decimals like the
+# BLAS path's sims, they give the same top-k order. Bounded to the lowest-200 vec_ids: this is the oracle
 # shape; production kNN is the BLAS broadcast/sharded path, bound to
 # this twin by an agreement test (tests/test_llm_ops.py).
 # ---------------------------------------------------------------------------
@@ -598,7 +598,7 @@ def knn_graph_sharded_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), scored AS (
       SELECT src_id, dst_id,
              CASE WHEN na > 0 AND nb > 0
-                  THEN dot / (sqrt(na) * sqrt(nb))
+                  THEN round(dot / (sqrt(na) * sqrt(nb)), 6)
                   ELSE 0.0 END AS cosine_sim
       FROM pairs
     ), ranked AS (

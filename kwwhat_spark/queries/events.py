@@ -568,6 +568,8 @@ def _stream_events(spark: SparkSession, sf_dir: str):
 def _run_to_memory(spark: SparkSession, df: DataFrame, output_mode: str) -> DataFrame:
     import uuid
 
+    from kwwhat_spark.streaming.ocpp import await_available_now
+
     name = f"stream_gate_{uuid.uuid4().hex[:8]}"
     q = (
         df.writeStream.format("memory")
@@ -576,12 +578,7 @@ def _run_to_memory(spark: SparkSession, df: DataFrame, output_mode: str) -> Data
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError(
-            f"availableNow stream {name} still running after 120s; "
-            "refusing to read a partially-populated memory sink"
-        )
+    await_available_now(q, 120)
     out = keep(spark.table(name).localCheckpoint(eager=True))
     spark.catalog.dropTempView(name)
     return out

@@ -8,7 +8,7 @@ These entries put the mart DAG itself behind the driver's correctness
 gate — not just operator analogues. The sf_dir argument is ignored: the
 canonical input is the reference demo seed (the same fixture the
 reference's own dbt tests run on), read by both engines from
-/root/reference/demo/seeds.
+sources/ocpp.py's DEMO_SEED_DIR.
 
 Determinism contract (same as the rest of the catalog):
   - array columns are emitted as '|'-joined sorted-distinct strings;
@@ -24,8 +24,7 @@ from pyspark.sql import functions as F
 
 from kwwhat_spark.operators.cachescope import keep, scope
 from kwwhat_spark.queries.catalog import query
-
-SEED_DIR = "/root/reference/demo/seeds"
+from kwwhat_spark.sources.ocpp import DEMO_SEED_DIR
 
 # ---------------------------------------------------------------------------
 # Shared DuckDB CTE fragments (hand-compiled reference SQL, full-refresh
@@ -120,7 +119,7 @@ int_chargers AS (
 )"""
 
 
-_STG_CTES = _stg_ctes(SEED_DIR)
+_STG_CTES = _stg_ctes(DEMO_SEED_DIR)
 
 # int_status_changes.sql, full-refresh: window from = greatest(start date,
 # min(ingested)), to = from + 3 months; SN CALLs + confirmation
@@ -1578,8 +1577,11 @@ def _run_seed_stream(spark: SparkSession, build, prefix: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from kwwhat_spark.sources.ocpp import DEMO_SEED_DIR
-    from kwwhat_spark.streaming import read_ocpp_stream, stage_stream
+    from kwwhat_spark.streaming.ocpp import (
+        await_available_now,
+        read_ocpp_stream,
+        stage_stream,
+    )
 
     stream_dir = tempfile.mkdtemp(prefix=f"kwh-stream-{prefix}-")
     name = f"stream_{prefix}_gate_{uuid.uuid4().hex[:8]}"
@@ -1597,12 +1599,7 @@ def _run_seed_stream(spark: SparkSession, build, prefix: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError(
-                f"availableNow stream {name} still running after 120s; "
-                "refusing to read a partially-populated memory sink"
-            )
+        await_available_now(q, 120)
         out = keep(spark.table(name).localCheckpoint(eager=True))
         spark.catalog.dropTempView(name)
         return out
@@ -2127,6 +2124,16 @@ FROM svp_emitted v
 """
 
 
+def _seed_visit_stream(spark: SparkSession, flush: bool) -> DataFrame:
+    """The chained visit stream over the demo-seed marts, reading the
+    session's fact_charge_attempts checkpoint instead of rebuilding it."""
+    from kwwhat_spark.streaming.ocpp import run_visit_stream
+
+    pipe = _mart_pipeline(spark)
+    pipe.overrides["fact_charge_attempts"] = _mart(spark, "fact_charge_attempts")
+    return run_visit_stream(pipe, flush)[0]
+
+
 @query(
     "ocpp_stream_visits_parity",
     oracle=_STREAM_VISITS_PARITY_ORACLE,
@@ -2136,112 +2143,12 @@ FROM svp_emitted v
     "oracle replays both stages' append-mode emission boundaries",
 )
 def ocpp_stream_visits_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch-parity streaming fact_visits on the demo seed: batch
-    attempts written once as the stream input, then chains-stage and
-    visits-stage run as availableNow streaming queries (parquet topic
-    between them), memory sink, watermark 0 s. Emits the mart's full
+    """Batch-parity streaming fact_visits on the demo seed: the chained
+    visit stream (streaming/ocpp.py run_visit_stream) without the flush,
+    so watermark-open tails are withheld. Emits the mart's full
     projection minus the batch-only incremental_ts (sf_dir ignored —
     the seed is the canonical fixture)."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from kwwhat_spark.functions.core import surrogate_key
-    from kwwhat_spark.streaming.ocpp import stream_visit_chains, stream_visit_parity
-
-    attempts = _mart(spark, "fact_charge_attempts")
-    pipe = _mart_pipeline(spark)
-    conns = pipe.ref("dim_connectors").select(
-        F.col("charger_id").alias("c_charger_id"),
-        F.col("connector_id").alias("c_connector_id"),
-        "port_id",
-    )
-    chargers = pipe.ref("dim_chargers").select(
-        F.col("charger_id").alias("ch_charger_id"), "location_id"
-    )
-    from_ts = "2025-10-01 00:00:00"
-    cap = attempts.agg(F.max("incremental_ts")).first()[0]
-    to_ts = min(cap, __import__("datetime").datetime(2026, 1, 1))
-    att = (
-        attempts.filter(
-            (F.col("incremental_ts") > F.lit(from_ts).cast("timestamp"))
-            & (F.col("incremental_ts") <= F.lit(to_ts))
-        )
-        .join(
-            F.broadcast(conns),
-            (F.col("charger_id") == F.col("c_charger_id"))
-            & (F.col("connector_id") == F.col("c_connector_id")),
-        )
-        .join(F.broadcast(chargers), F.col("charger_id") == F.col("ch_charger_id"))
-        .filter(F.col("charge_attempt_start_ts").isNotNull())
-        .select(
-            "charge_attempt_id", "charger_id", "port_id", "connector_id",
-            "location_id", "charge_attempt_start_ts", "charge_attempt_stop_ts",
-            F.col("energy_transferred_kwh").cast("double").alias(
-                "energy_transferred_kwh"
-            ),
-            "is_successful", "id_tag",
-        )
-    )
-
-    root = tempfile.mkdtemp(prefix="kwh-visitparity-")
-    name = f"stream_visitparity_{uuid.uuid4().hex[:8]}"
-    try:
-        att.write.mode("overwrite").parquet(f"{root}/attempts")
-        in_schema = spark.read.parquet(f"{root}/attempts").schema
-
-        chains_q = (
-            stream_visit_chains(
-                spark.readStream.schema(in_schema).parquet(f"{root}/attempts")
-            )
-            .writeStream.format("parquet")
-            .option("path", f"{root}/chained")
-            .option("checkpointLocation", f"{root}/ckpt1")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not chains_q.awaitTermination(120):
-            chains_q.stop()
-            raise TimeoutError("visit-parity chain stage still running after 120s")
-
-        chained_schema = spark.read.parquet(f"{root}/chained").schema
-        visits_q = (
-            stream_visit_parity(
-                spark.readStream.schema(chained_schema).parquet(f"{root}/chained")
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not visits_q.awaitTermination(120):
-            visits_q.stop()
-            raise TimeoutError("visit-parity visit stage still running after 120s")
-
-        v = spark.table(name)
-        out = v.select(
-            surrogate_key(
-                "location_id", "first_charger_id", "first_port_id", "visit_start_ts"
-            ).alias("visit_id"),
-            surrogate_key("location_id").alias("location_key"),
-            surrogate_key(F.coalesce(F.col("id_tag"), F.lit("UNKNOWN"))).alias(
-                "driver_key"
-            ),
-            surrogate_key("first_charger_id", "first_port_id").alias("first_port_key"),
-            surrogate_key("last_charger_id", "last_port_id").alias("last_port_key"),
-            "location_id", "charger_ids", "id_tag", "visit_start_ts",
-            "visit_end_ts", "charge_attempt_count", "charge_attempt_ids",
-            "total_energy_transferred_kwh",
-            "first_charge_attempt_id", "last_charge_attempt_id",
-            "first_charger_id", "last_charger_id", "first_port_id", "last_port_id",
-            "is_successful", "grouping_key", "visit_duration_minutes",
-        ).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        return keep(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _seed_visit_stream(spark, flush=False)
 
 
 # The finalization pass (VERDICT r9 #6): the parity entry above
@@ -2265,126 +2172,4 @@ _FV_STREAM_FINALIZED_ORACLE = f"SELECT * EXCLUDE (incremental_ts) FROM ({_FV_ORA
     "batch-only incremental_ts)",
 )
 def ocpp_stream_visits_finalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import datetime
-    import shutil
-    import tempfile
-    import uuid
-
-    from kwwhat_spark.functions.core import surrogate_key
-    from kwwhat_spark.streaming.ocpp import stream_visit_chains, stream_visit_parity
-
-    attempts = _mart(spark, "fact_charge_attempts")
-    pipe = _mart_pipeline(spark)
-    conns = pipe.ref("dim_connectors").select(
-        F.col("charger_id").alias("c_charger_id"),
-        F.col("connector_id").alias("c_connector_id"),
-        "port_id",
-    )
-    chargers = pipe.ref("dim_chargers").select(
-        F.col("charger_id").alias("ch_charger_id"), "location_id"
-    )
-    from_ts = "2025-10-01 00:00:00"
-    cap = attempts.agg(F.max("incremental_ts")).first()[0]
-    to_ts = min(cap, datetime.datetime(2026, 1, 1))
-    att = (
-        attempts.filter(
-            (F.col("incremental_ts") > F.lit(from_ts).cast("timestamp"))
-            & (F.col("incremental_ts") <= F.lit(to_ts))
-        )
-        .join(
-            F.broadcast(conns),
-            (F.col("charger_id") == F.col("c_charger_id"))
-            & (F.col("connector_id") == F.col("c_connector_id")),
-        )
-        .join(F.broadcast(chargers), F.col("charger_id") == F.col("ch_charger_id"))
-        .filter(F.col("charge_attempt_start_ts").isNotNull())
-        .select(
-            "charge_attempt_id", "charger_id", "port_id", "connector_id",
-            "location_id", "charge_attempt_start_ts", "charge_attempt_stop_ts",
-            F.col("energy_transferred_kwh").cast("double").alias(
-                "energy_transferred_kwh"
-            ),
-            "is_successful", "id_tag",
-        )
-    )
-    flush_ts = to_ts + datetime.timedelta(days=2)
-
-    root = tempfile.mkdtemp(prefix="kwh-visitfinal-")
-    name = f"stream_visitfinal_{uuid.uuid4().hex[:8]}"
-    try:
-        att.write.mode("overwrite").parquet(f"{root}/attempts")
-        in_schema = spark.read.parquet(f"{root}/attempts").schema
-        sentinel = spark.createDataFrame(
-            [("__FLUSH__", "__FLUSH__", "__FLUSH__", "0", "__FLUSH__",
-              flush_ts, flush_ts, 0.0, False, None)],
-            in_schema,
-        )
-        sentinel.write.mode("append").parquet(f"{root}/attempts")
-
-        chains_q = (
-            stream_visit_chains(
-                spark.readStream.schema(in_schema).parquet(f"{root}/attempts")
-            )
-            .writeStream.format("parquet")
-            .option("path", f"{root}/chained")
-            .option("checkpointLocation", f"{root}/ckpt1")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not chains_q.awaitTermination(120):
-            chains_q.stop()
-            raise TimeoutError("visit-final chain stage still running after 120s")
-
-        # The chain stage never emits the sentinel's own (open) chain, so
-        # stage 2 needs its own watermark-advancer. It cannot be dropped
-        # into the sink directory: a file STREAM source reads the sink's
-        # _spark_metadata log when one is present (exactly-once
-        # sink-to-source chaining) and would never see a foreign file —
-        # found live, two tail visits stayed open. Re-stage the topic
-        # into a plain directory and append the sentinel there.
-        chained = spark.read.parquet(f"{root}/chained")
-        chained_schema = chained.schema
-        chained.write.mode("overwrite").parquet(f"{root}/chained_in")
-        spark.createDataFrame(
-            [("__FLUSH__", "__FLUSH__", "__FLUSH__", "0", "__FLUSH__",
-              flush_ts, flush_ts, 0.0, False, None)],
-            chained_schema,
-        ).write.mode("append").parquet(f"{root}/chained_in")
-
-        visits_q = (
-            stream_visit_parity(
-                spark.readStream.schema(chained_schema).parquet(f"{root}/chained_in")
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not visits_q.awaitTermination(120):
-            visits_q.stop()
-            raise TimeoutError("visit-final visit stage still running after 120s")
-
-        v = spark.table(name).filter(F.col("location_id") != "__FLUSH__")
-        out = v.select(
-            surrogate_key(
-                "location_id", "first_charger_id", "first_port_id", "visit_start_ts"
-            ).alias("visit_id"),
-            surrogate_key("location_id").alias("location_key"),
-            surrogate_key(F.coalesce(F.col("id_tag"), F.lit("UNKNOWN"))).alias(
-                "driver_key"
-            ),
-            surrogate_key("first_charger_id", "first_port_id").alias("first_port_key"),
-            surrogate_key("last_charger_id", "last_port_id").alias("last_port_key"),
-            "location_id", "charger_ids", "id_tag", "visit_start_ts",
-            "visit_end_ts", "charge_attempt_count", "charge_attempt_ids",
-            "total_energy_transferred_kwh",
-            "first_charge_attempt_id", "last_charge_attempt_id",
-            "first_charger_id", "last_charger_id", "first_port_id", "last_port_id",
-            "is_successful", "grouping_key", "visit_duration_minutes",
-        ).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
-        return keep(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _seed_visit_stream(spark, flush=True)

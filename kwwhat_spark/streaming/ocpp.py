@@ -23,16 +23,21 @@ bounded by (rate × watermark).
 
 from __future__ import annotations
 
+from decimal import Decimal
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from kwwhat_spark.config import VARS, PipelineVars
+from kwwhat_spark.models.base import Pipeline
 from kwwhat_spark.models.meter_values import _meter_measurements
 from kwwhat_spark.models.payload import parsed_payload
+from kwwhat_spark.models.visits import mart_columns, visit_attempts
+from kwwhat_spark.operators.cachescope import keep
 from kwwhat_spark.sources.ocpp import OCPP_LOGS_SCHEMA
 
 
@@ -334,6 +339,7 @@ def stream_interval_data(
 #     a visit when its successor starts or on timeout past
 #     last-event + window.
 #
+# Both stages are one skeleton (_sessions) with their own split rule.
 # State is a JSON-encoded attempt buffer (bounded by one open
 # chain/visit per key); timestamps ride as epoch microseconds. The gap
 # uses MINUTE-BOUNDARY crossings (datediff_boundary semantics:
@@ -344,8 +350,14 @@ _PARITY_ATT_FIELDS = [
     "charge_attempt_id", "charger_id", "port_id", "connector_id",
     "location_id", "start_us", "stop_us", "energy", "ok", "id_tag",
 ]
+_PARITY_ATT_COLUMNS = {
+    "start_us": "charge_attempt_start_ts", "stop_us": "charge_attempt_stop_ts",
+    "energy": "energy_transferred_kwh", "ok": "is_successful",
+}
 
-_CHAIN_OUT_SCHEMA = (
+# An attempt row of either topic: the input of both stages, and the
+# output of stage 1 (the id_tag then being its chain's inferred one).
+_ATTEMPT_SCHEMA = (
     "charge_attempt_id string, charger_id string, port_id string, "
     "connector_id string, location_id string, "
     "charge_attempt_start_ts timestamp, charge_attempt_stop_ts timestamp, "
@@ -368,64 +380,65 @@ def _minute_gap(prev_stop_us: int, start_us: int) -> int:
     return start_us // 60_000_000 - prev_stop_us // 60_000_000
 
 
-def _rows_from_batches(pdfs, ts_cols: dict[str, str], cols: list[str]):
+def _rows_from_batches(pdfs, cols: list[str]):
     out = []
     for pdf in pdfs:
         for row in pdf.itertuples(index=False):
             d = {}
             for c in cols:
-                v = getattr(row, ts_cols.get(c, c))
+                v = getattr(row, _PARITY_ATT_COLUMNS.get(c, c))
                 d[c] = _ts_us(v) if c.endswith("_us") else (None if pd.isna(v) else v)
             out.append(d)
     return out
 
 
-def _chain_fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    """Stage 1: emit closed id-tag-inference chains (every member
-    attempt with the chain's max id_tag fused on)."""
+def _gap_over(prev: dict, r: dict, minutes: int) -> bool:
+    """No chain from ``prev`` to ``r``: ``prev`` never stopped, or more
+    than ``minutes`` minute boundaries lie between its stop and r's start."""
+    return prev["stop_us"] is None or _minute_gap(prev["stop_us"], r["start_us"]) > minutes
+
+
+def _sessions(pdfs, state: GroupState, cols: list[str], is_start, hold_minutes):
+    """One key's step of either stage: merge the buffered open group with
+    this batch's rows (ALL Arrow chunks before the sort), sort by start,
+    split before every row where ``is_start(prev, row)``, and return the
+    closed groups. The last group stays open in state with an event-time
+    timeout at its last event + ``hold_minutes(group)``; when that
+    timeout fires, every group closes."""
     import json
 
     buf = json.loads(state.get[0]) if state.exists else []
-    new = _rows_from_batches(
-        pdfs,
-        {"start_us": "charge_attempt_start_ts", "stop_us": "charge_attempt_stop_ts",
-         "energy": "energy_transferred_kwh", "ok": "is_successful"},
-        _PARITY_ATT_FIELDS,
-    )
-    rows = sorted(buf + new, key=lambda r: r["start_us"])
-
-    chains: list[list[dict]] = []
+    rows = sorted(buf + _rows_from_batches(pdfs, cols), key=lambda r: r["start_us"])
+    groups: list[list[dict]] = []
     for r in rows:
-        prev = chains[-1][-1] if chains else None
-        is_start = (
-            prev is None
-            or prev["stop_us"] is None
-            or _minute_gap(prev["stop_us"], r["start_us"]) > 2
-            or (
-                r["id_tag"] is not None
-                and prev["id_tag"] is not None
-                and r["id_tag"] != prev["id_tag"]
-            )
-        )
-        if is_start:
-            chains.append([r])
+        if groups and not is_start(groups[-1][-1], r):
+            groups[-1].append(r)
         else:
-            chains[-1].append(r)
-
-    if state.hasTimedOut:
-        closed, open_chain = chains, None
-    else:
-        closed, open_chain = chains[:-1], (chains[-1] if chains else None)
-
-    if open_chain is not None:
-        state.update((json.dumps(open_chain),))
-        last_ev = max(r["stop_us"] or r["start_us"] for r in open_chain)
-        state.setTimeoutTimestamp(last_ev // 1000 + 2 * 60 * 1000)
-    else:
+            groups.append([r])
+    if state.hasTimedOut or not groups:
         state.remove()
+        return groups
+    open_group = groups.pop()
+    state.update((json.dumps(open_group),))
+    last_ev = max(r["stop_us"] or r["start_us"] for r in open_group)
+    state.setTimeoutTimestamp(last_ev // 1000 + hold_minutes(open_group) * 60 * 1000)
+    return groups
 
+
+def _chain_fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    """Stage 1: emit closed id-tag-inference chains (every member
+    attempt with the chain's max id_tag fused on)."""
+    chains = _sessions(
+        pdfs, state, _PARITY_ATT_FIELDS,
+        lambda prev, r: _gap_over(prev, r, 2) or (
+            r["id_tag"] is not None
+            and prev["id_tag"] is not None
+            and r["id_tag"] != prev["id_tag"]
+        ),
+        lambda chain: 2,
+    )
     out = []
-    for chain in closed:
+    for chain in chains:
         tags = [r["id_tag"] for r in chain if r["id_tag"] is not None]
         inferred = max(tags) if tags else None
         for r in chain:
@@ -438,15 +451,7 @@ def _chain_fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
                 )
             )
     if out:
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "charge_attempt_id", "charger_id", "port_id", "connector_id",
-                "location_id", "charge_attempt_start_ts",
-                "charge_attempt_stop_ts", "energy_transferred_kwh",
-                "is_successful", "id_tag",
-            ],
-        )
+        yield pd.DataFrame(out, columns=_schema_names(_ATTEMPT_SCHEMA))
 
 
 _VISIT_OUT_SCHEMA = (
@@ -456,33 +461,42 @@ _VISIT_OUT_SCHEMA = (
     "total_energy_transferred_kwh double, is_successful boolean, "
     "first_charge_attempt_id string, last_charge_attempt_id string, "
     "first_charger_id string, last_charger_id string, "
-    "first_port_id string, last_port_id string, visit_duration_minutes long"
+    "first_port_id string, last_port_id string"
 )
 
 
-def _visit_rollup(key_gk: str, window_min: int, visit: list[dict]) -> tuple:
+def _schema_fields(ddl: str) -> list[list[str]]:
+    return [f.split(" ") for f in ddl.split(", ")]
+
+
+def _schema_names(ddl: str) -> list[str]:
+    return [name for name, _ in _schema_fields(ddl)]
+
+
+def _visit_rollup(key_gk: str, visit: list[dict]) -> tuple:
     """One closed visit -> the batch mart's rollup row
     (fact_visits.sql:141-273 aggregate semantics)."""
-    visit = sorted(visit, key=lambda r: r["start_us"])
     start_us = visit[0]["start_us"]
     firsts = [r for r in visit if r["start_us"] == start_us]
     last = visit[-1]
     stops = [r["stop_us"] for r in visit if r["stop_us"] is not None]
-    end_us = max(stops) if stops else None
     tags = [r["id_tag"] for r in visit if r["id_tag"] is not None]
     att_ids = sorted({r["charge_attempt_id"] for r in visit})
     charger_ids = sorted({r["charger_id"] for r in visit})
     return (
         key_gk,
-        window_min,
+        visit[0]["window_min"],
         _us_ts(start_us),
         max(tags) if tags else None,
         max(r["location_id"] for r in visit),
-        _us_ts(end_us),
+        _us_ts(max(stops) if stops else None),
         len(visit),
         "|".join(att_ids),
         "|".join(charger_ids),
-        float(sum(r["energy"] or 0.0 for r in visit)),
+        # The mart sums the attempts' decimal kWh exactly, then rounds
+        # once; a float sum is off by an ulp on some visits. str() gives
+        # back the decimal each topic double was cast from.
+        float(sum(Decimal(str(r["energy"])) for r in visit if r["energy"] is not None)),
         last["ok"],
         min(r["charge_attempt_id"] for r in firsts),
         last["charge_attempt_id"],
@@ -490,58 +504,19 @@ def _visit_rollup(key_gk: str, window_min: int, visit: list[dict]) -> tuple:
         last["charger_id"],
         min(r["port_id"] for r in firsts),
         last["port_id"],
-        None if end_us is None else _minute_gap(start_us, end_us),
     )
 
 
 def _visit_fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
     """Stage 2: roll chained attempts into visits per grouping_key."""
-    import json
-
-    gk = key[0]
-    if state.exists:
-        st = json.loads(state.get[0])
-        buf, window_min = st["buf"], st["w"]
-    else:
-        buf, window_min = [], None
-    new = _rows_from_batches(
-        pdfs,
-        {"start_us": "charge_attempt_start_ts", "stop_us": "charge_attempt_stop_ts",
-         "energy": "energy_transferred_kwh", "ok": "is_successful"},
-        _PARITY_ATT_FIELDS + ["window_min"],
+    visits = _sessions(
+        pdfs, state, _PARITY_ATT_FIELDS + ["window_min"],
+        lambda prev, r: _gap_over(prev, r, r["window_min"]),
+        lambda visit: visit[0]["window_min"],
     )
-    if new:
-        window_min = int(new[0]["window_min"])
-    rows = sorted(buf + new, key=lambda r: r["start_us"])
-
-    visits: list[list[dict]] = []
-    for r in rows:
-        prev = visits[-1][-1] if visits else None
-        is_start = (
-            prev is None
-            or prev["stop_us"] is None
-            or _minute_gap(prev["stop_us"], r["start_us"]) > window_min
-        )
-        if is_start:
-            visits.append([r])
-        else:
-            visits[-1].append(r)
-
-    if state.hasTimedOut:
-        closed, open_visit = visits, None
-    else:
-        closed, open_visit = visits[:-1], (visits[-1] if visits else None)
-
-    if open_visit is not None:
-        state.update((json.dumps({"buf": open_visit, "w": window_min}),))
-        last_ev = max(r["stop_us"] or r["start_us"] for r in open_visit)
-        state.setTimeoutTimestamp(last_ev // 1000 + window_min * 60 * 1000)
-    else:
-        state.remove()
-
-    out = [_visit_rollup(gk, window_min, v) for v in closed]
+    out = [_visit_rollup(key[0], v) for v in visits]
     if out:
-        yield pd.DataFrame(out, columns=[f.split(" ")[0] for f in _VISIT_OUT_SCHEMA.split(", ")])
+        yield pd.DataFrame(out, columns=_schema_names(_VISIT_OUT_SCHEMA))
 
 
 def stream_visit_chains(attempts: DataFrame) -> DataFrame:
@@ -552,7 +527,7 @@ def stream_visit_chains(attempts: DataFrame) -> DataFrame:
     ).withWatermark("ev_ts", "0 seconds")
     return wm.groupBy("charger_id", "port_id").applyInPandasWithState(
         _chain_fn,
-        outputStructType=_CHAIN_OUT_SCHEMA,
+        outputStructType=_ATTEMPT_SCHEMA,
         stateStructType=_JS_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
@@ -584,3 +559,115 @@ def stream_visit_parity(chained: DataFrame) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
+
+
+def await_available_now(q: StreamingQuery, timeout_s: int) -> None:
+    """Wait for the availableNow query ``q`` to finish. On timeout stop
+    it and raise TimeoutError, so no caller reads a partial sink."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"availableNow stream {q.name or q.id} still running after {timeout_s}s; "
+            "refusing to read a partially-populated sink"
+        )
+
+
+# One bound for both visit stages: a fleet-scale stage runs for minutes.
+_VISIT_STAGE_TIMEOUT_S = 1800
+_FLUSH = "__FLUSH__"
+
+
+def _append_flush_row(spark: SparkSession, path: str, ts) -> None:
+    """Append the finalization sentinel to the attempt topic at ``path``:
+    one attempt of its own charger, port and location at event time
+    ``ts``. Its chain or visit stays open, so it never reaches a sink."""
+    spark.createDataFrame(
+        [(_FLUSH, _FLUSH, _FLUSH, "0", _FLUSH, ts, ts, 0.0, False, None)], _ATTEMPT_SCHEMA
+    ).write.mode("append").parquet(path)
+
+
+def _peak_state_rows(q: StreamingQuery) -> int:
+    """Peak state rows over ALL of ``q``'s progress events: with the
+    flush, the last batch has emptied the state."""
+    return max(
+        [s.get("numRowsTotal", 0)
+         for pr in q.recentProgress or [] for s in pr.get("stateOperators") or []],
+        default=0,
+    )
+
+
+def run_visit_stream(p: Pipeline, flush: bool) -> tuple[DataFrame, dict]:
+    """fact_visits as the chained visit stream: ``p``'s visit attempts
+    (models/visits.py visit_attempts) written as a parquet topic ->
+    stream_visit_chains -> the chains re-staged into a plain directory
+    -> stream_visit_parity -> memory sink, each stage one availableNow
+    run with watermark 0 s, projected to mart_columns and checkpointed.
+
+    Without ``flush`` the output is append mode's: a chain or visit
+    still open at the final watermark is withheld. With ``flush`` a
+    sentinel attempt two days past the last event is appended to each
+    stage's input; it moves the watermark past every real tail, the
+    no-data batch fires every timeout, and the output equals
+    fact_visits minus incremental_ts. Stage 2 gets its own sentinel
+    (the chain stage never emits the sentinel's open chain), and it
+    cannot go into the stage-1 sink directory: a file stream source
+    reads the sink's _spark_metadata log when one is present and would
+    never see a foreign file (found live: two tail visits stayed open).
+    Hence the re-staged topic.
+
+    Also returns the run's figures: ``attempt_rows``,
+    ``compile_attempts_s`` (attempts built and written), the stage
+    walls ``chains_s`` / ``visits_s`` and their peak state rows
+    ``chains_state_rows`` / ``visits_state_rows``."""
+    import datetime
+    import shutil
+    import tempfile
+    import time
+    import uuid
+
+    spark = p.spark
+    root = tempfile.mkdtemp(prefix="kwh-visits-")
+    name = f"stream_visits_{uuid.uuid4().hex[:8]}"
+    try:
+        t0 = time.perf_counter()
+        att, _ = visit_attempts(p)
+        att.select(
+            *[F.col(c).cast(t).alias(c) for c, t in _schema_fields(_ATTEMPT_SCHEMA)]
+        ).write.parquet(f"{root}/attempts")
+        n_attempts, last_ev = spark.read.parquet(f"{root}/attempts").agg(
+            F.count(F.lit(1)),
+            F.max(F.coalesce("charge_attempt_stop_ts", "charge_attempt_start_ts")),
+        ).first()
+        flush_ts = last_ev + datetime.timedelta(days=2) if flush and last_ev else None
+        if flush_ts:
+            _append_flush_row(spark, f"{root}/attempts", flush_ts)
+        stats = {"attempt_rows": n_attempts,
+                 "compile_attempts_s": round(time.perf_counter() - t0, 2)}
+
+        def stage(label, transform, src, sink):
+            t = time.perf_counter()
+            q = sink(transform(
+                spark.readStream.schema(_ATTEMPT_SCHEMA).parquet(src)
+            ).writeStream.outputMode("append").trigger(availableNow=True)).start()
+            await_available_now(q, _VISIT_STAGE_TIMEOUT_S)
+            stats[f"{label}_s"] = round(time.perf_counter() - t, 2)
+            stats[f"{label}_state_rows"] = _peak_state_rows(q)
+
+        stage("chains", stream_visit_chains, f"{root}/attempts",
+              lambda w: w.format("parquet").option("path", f"{root}/chained")
+              .option("checkpointLocation", f"{root}/ckpt1"))
+        spark.read.schema(_ATTEMPT_SCHEMA).parquet(f"{root}/chained").write.parquet(
+            f"{root}/chained_in")
+        if flush_ts:
+            _append_flush_row(spark, f"{root}/chained_in", flush_ts)
+        stage("visits", stream_visit_parity, f"{root}/chained_in",
+              lambda w: w.format("memory").queryName(name))
+
+        out = keep(
+            spark.table(name).filter(F.col("location_id") != _FLUSH)
+            .select(*mart_columns()).localCheckpoint(eager=True)
+        )
+        spark.catalog.dropTempView(name)
+        return out, stats
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

@@ -16,9 +16,10 @@ retags each message uuid's first segment so request↔confirmation
 correlation ids stay replica-unique.
 
 The `visits` step (r11) measures the chained stateful visit stream at
-fleet scale: batch-compiled attempts -> stream_visit_chains ->
-stream_visit_parity with sentinel finalization, recording per-stage
-wall, msgs/s, peak state rows, and emitted+flushed vs the batch mart.
+fleet scale through streaming/ocpp.py run_visit_stream with the
+sentinel flush (batch-compiled attempts -> stream_visit_chains ->
+stream_visit_parity), recording per-stage wall, msgs/s, peak state
+rows, and emitted+flushed vs the batch mart.
 
 Usage: python tools/fleet_scale.py [N] [build|batch|stream|incremental|visits|all]
 Seed CSVs land in /tmp/fleet_{N}x; results print as JSON lines.
@@ -33,7 +34,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SEED = "/root/reference/demo/seeds"
+from kwwhat_spark.sources.ocpp import DEMO_SEED_DIR  # noqa: E402
 
 # Bump whenever build()'s retag logic changes. Stamped into the built
 # dir and checked in 'all' mode, so a stale /tmp/fleet_Nx seed from an
@@ -85,7 +86,7 @@ def build(n: int, dst: str, bomb: bool = False) -> None:
     con.execute(
         f"""COPY (
           SELECT timestamp, {retag_id} AS id, action, {retag_msg} AS msg
-          FROM read_csv('{SEED}/ocpp_1_6_synthetic_logs_14d.csv', header=true,
+          FROM read_csv('{DEMO_SEED_DIR}/ocpp_1_6_synthetic_logs_14d.csv', header=true,
                         auto_detect=true, all_varchar=true)
           CROSS JOIN (SELECT UNNEST(range({n})) AS r)
         ) TO '{dst}/ocpp_1_6_synthetic_logs_14d.csv' (HEADER, QUOTE '"')"""
@@ -94,21 +95,21 @@ def build(n: int, dst: str, bomb: bool = False) -> None:
         f"""COPY (
           SELECT {retag_cp} AS charge_point_id, {retag_loc} AS location_id,
                  commissioned_ts, decommissioned_ts
-          FROM read_csv('{SEED}/chargers.csv', header=true, all_varchar=true)
+          FROM read_csv('{DEMO_SEED_DIR}/chargers.csv', header=true, all_varchar=true)
           CROSS JOIN (SELECT UNNEST(range({n})) AS r)
         ) TO '{dst}/chargers.csv' (HEADER)"""
     )
     con.execute(
         f"""COPY (
           SELECT {retag_cp} AS charge_point_id, port_id
-          FROM read_csv('{SEED}/ports.csv', header=true, all_varchar=true)
+          FROM read_csv('{DEMO_SEED_DIR}/ports.csv', header=true, all_varchar=true)
           CROSS JOIN (SELECT UNNEST(range({n})) AS r)
         ) TO '{dst}/ports.csv' (HEADER)"""
     )
     con.execute(
         f"""COPY (
           SELECT {retag_cp} AS charge_point_id, port_id, connector_id, connector_type
-          FROM read_csv('{SEED}/connectors.csv', header=true, all_varchar=true)
+          FROM read_csv('{DEMO_SEED_DIR}/connectors.csv', header=true, all_varchar=true)
           CROSS JOIN (SELECT UNNEST(range({n})) AS r)
         ) TO '{dst}/connectors.csv' (HEADER)"""
     )
@@ -154,6 +155,7 @@ def run_stream(spark, seed_dir: str) -> dict:
     import tempfile
 
     from kwwhat_spark.streaming.ocpp import (
+        await_available_now,
         read_ocpp_stream,
         stage_stream,
         stream_status_changes,
@@ -175,7 +177,7 @@ def run_stream(spark, seed_dir: str) -> dict:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        await_available_now(q, 1800)
         wall = round(time.perf_counter() - t0, 2)
         return {"step": "stream", "wall_s": wall}
     finally:
@@ -220,142 +222,30 @@ def run_incremental(spark, seed_dir: str) -> dict:
 
 
 def run_visits(spark, seed_dir: str) -> dict:
-    """Streaming visits at fleet scale (VERDICT r10 #4): batch-compile
-    fact_charge_attempts from the replicated seed, feed it through the
-    two chained stateful stages (stream_visit_chains ->
-    stream_visit_parity) with the sentinel finalization row, and record
+    """Streaming visits at fleet scale (VERDICT r10 #4): the chained
+    visit stream with the sentinel flush (streaming/ocpp.py
+    run_visit_stream(flush=True): batch-compiled visit attempts ->
+    stream_visit_chains -> stream_visit_parity) over the replicated
+    seed. Records the attempt compile and per-stage walls, chain-stage
     throughput (attempt rows / stage wall), peak state rows per stage
-    (stateOperators.numRowsTotal from the last progress), and the
-    emitted+flushed count vs the batch mart."""
-    import datetime
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
+    (over all progress events), and the emitted+flushed visit count vs
+    the batch fact_visits mart, which it must equal."""
     from kwwhat_spark.models import Pipeline
     from kwwhat_spark.sources.ocpp import load_ocpp_sources
-    from kwwhat_spark.streaming.ocpp import stream_visit_chains, stream_visit_parity
+    from kwwhat_spark.streaming.ocpp import run_visit_stream
 
     pipe = Pipeline(
         spark=spark,
         sources=load_ocpp_sources(spark, seed_dir=seed_dir),
         cache_views=("stg_ocpp_logs",),
     )
-    t0 = time.perf_counter()
-    attempts = pipe.ref("fact_charge_attempts")
-    conns = pipe.ref("dim_connectors").select(
-        F.col("charger_id").alias("c_charger_id"),
-        F.col("connector_id").alias("c_connector_id"),
-        "port_id",
-    )
-    chargers = pipe.ref("dim_chargers").select(
-        F.col("charger_id").alias("ch_charger_id"), "location_id"
-    )
-    att = (
-        attempts.join(
-            F.broadcast(conns),
-            (F.col("charger_id") == F.col("c_charger_id"))
-            & (F.col("connector_id") == F.col("c_connector_id")),
-        )
-        .join(F.broadcast(chargers), F.col("charger_id") == F.col("ch_charger_id"))
-        .filter(F.col("charge_attempt_start_ts").isNotNull())
-        .select(
-            "charge_attempt_id", "charger_id", "port_id", "connector_id",
-            "location_id", "charge_attempt_start_ts", "charge_attempt_stop_ts",
-            F.col("energy_transferred_kwh").cast("double").alias(
-                "energy_transferred_kwh"
-            ),
-            "is_successful", "id_tag",
-        )
-    )
-    root = tempfile.mkdtemp(prefix="fleet-visits-")
-    try:
-        att.write.mode("overwrite").parquet(f"{root}/attempts")
-        in_schema = spark.read.parquet(f"{root}/attempts").schema
-        n_attempts = spark.read.parquet(f"{root}/attempts").count()
-        cap = att.agg(F.max(F.coalesce(
-            "charge_attempt_stop_ts", "charge_attempt_start_ts"))).first()[0]
-        flush_ts = cap + datetime.timedelta(days=2)
-        sentinel = spark.createDataFrame(
-            [("__FLUSH__", "__FLUSH__", "__FLUSH__", "0", "__FLUSH__",
-              flush_ts, flush_ts, 0.0, False, None)],
-            in_schema,
-        )
-        sentinel.write.mode("append").parquet(f"{root}/attempts")
-        compile_s = round(time.perf_counter() - t0, 2)
-
-        def drain(q, timeout_s):
-            if not q.awaitTermination(timeout_s):
-                q.stop()
-                raise TimeoutError("stream stage still running")
-            # Peak state across ALL progress events — the last batch is
-            # the sentinel flush, after which state is ~empty.
-            peak = 0
-            for pr in q.recentProgress or []:
-                for s in pr.get("stateOperators") or []:
-                    peak = max(peak, s.get("numRowsTotal", 0))
-            return peak
-
-        t1 = time.perf_counter()
-        q1 = (
-            stream_visit_chains(
-                spark.readStream.schema(in_schema).parquet(f"{root}/attempts")
-            )
-            .writeStream.format("parquet")
-            .option("path", f"{root}/chained")
-            .option("checkpointLocation", f"{root}/ckpt1")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        state1 = drain(q1, 1800)
-        chains_s = round(time.perf_counter() - t1, 2)
-
-        # Stage 2 needs its own watermark-advancer, and it cannot be
-        # appended to the stage-1 sink directory (the file stream source
-        # trusts the sink's _spark_metadata log and would never see a
-        # foreign file — ocpp_stream_visits_finalized docstring). Re-stage
-        # the topic into a plain directory and append the sentinel there.
-        chained = spark.read.parquet(f"{root}/chained")
-        chained_schema = chained.schema
-        chained.write.mode("overwrite").parquet(f"{root}/chained_in")
-        spark.createDataFrame(
-            [("__FLUSH__", "__FLUSH__", "__FLUSH__", "0", "__FLUSH__",
-              flush_ts, flush_ts, 0.0, False, None)],
-            chained_schema,
-        ).write.mode("append").parquet(f"{root}/chained_in")
-        t2 = time.perf_counter()
-        q2 = (
-            stream_visit_parity(
-                spark.readStream.schema(chained_schema).parquet(f"{root}/chained_in")
-            )
-            .writeStream.format("parquet")
-            .option("path", f"{root}/visits")
-            .option("checkpointLocation", f"{root}/ckpt2")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        state2 = drain(q2, 1800)
-        visits_s = round(time.perf_counter() - t2, 2)
-
-        emitted = (
-            spark.read.parquet(f"{root}/visits")
-            .filter(F.col("location_id") != "__FLUSH__")
-            .count()
-        )
-        batch_visits = pipe.ref("fact_visits").count()
-        return {
-            "step": "visits", "attempt_rows": n_attempts,
-            "compile_attempts_s": compile_s,
-            "chains_s": chains_s, "visits_s": visits_s,
-            "chains_state_rows": state1, "visits_state_rows": state2,
-            "chains_msgs_per_s": round(n_attempts / max(chains_s, 0.01)),
-            "emitted_plus_flushed": emitted, "batch_fact_visits": batch_visits,
-        }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    visits, stats = run_visit_stream(pipe, flush=True)
+    return {
+        "step": "visits", **stats,
+        "chains_msgs_per_s": round(stats["attempt_rows"] / max(stats["chains_s"], 0.01)),
+        "emitted_plus_flushed": visits.count(),
+        "batch_fact_visits": pipe.ref("fact_visits").count(),
+    }
 
 
 def main() -> None:
